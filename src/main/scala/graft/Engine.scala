@@ -12,20 +12,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Engine {
 
   /** Session tuned for the target deployment shape: AQE re-plans skew and
-    * partition counts at runtime; 64 MB broadcast threshold catches dimension
-    * tables; shuffle partitions sized to the local harness (a real cluster
-    * overrides via spark.sql.adaptive.coalescePartitions). */
-  def createSession(appName: String = "graft", master: String = "local[32]"): SparkSession =
-    SparkSession.builder()
+    * batch-query partition counts at runtime; 64 MB broadcast threshold
+    * catches dimension tables. Per-batch fan-out follows the session's core
+    * count (`defaultParallelism`), because AQE never coalesces a stateful
+    * streaming shuffle. */
+  def createSession(appName: String = "graft", master: String = "local[32]"): SparkSession = {
+    val spark = SparkSession.builder()
       .appName(appName)
       .master(master)
       .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       .getOrCreate()
+    val cores = spark.sparkContext.defaultParallelism.toString
+    // a stateful operator's partition count is fixed in the checkpoint when
+    // the query first starts, and every micro-batch commits one state store
+    // and writes up to one sink file per hour partition for each of them
+    spark.conf.set("spark.sql.shuffle.partitions", cores)
+    // listing more than 32 paths (a file-stream batch re-stats each of its
+    // files) is a Spark job with one task per path up to this cap
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.parallelism", cores)
+    spark
+  }
 
   /** Register the ingested events table for SQL access. Partition discovery
     * happens at read (no ALTER TABLE cron); partition columns stay strings

@@ -958,16 +958,6 @@ object SimilarityQueries {
   private val adaptive = Q(
     "q_sim_adaptive",
     (s, d) => {
-      // The normalized full vector is aliased "nemb", NOT "emb": aliasing
-      // it back to the input's name while a LATER sibling expression also
-      // references col("emb") trips a Spark 4.1 lateral-column-alias
-      // hazard — the sibling's OUTER slice resolved to the input column
-      // but the lambda-bound references INSIDE its l2Normalize aggregate
-      // re-resolved to the new (normalized) sibling output, silently
-      // scaling every prefix by norm64/norm32. Invisible at 1x (all
-      // norms ~1) and caught by the r13 10x-corpus gate when replica
-      // noise spread the norms (shortlists lost true winners; see
-      // OperatorsSpec "lateral-alias shadowing" pin).
       val vecs = embeddings(s, d).select(col("vec_id"),
         l2Normalize(col("emb")).as("nemb"),
         l2Normalize(slice(col("emb"), 1, 32)).as("emb32"))

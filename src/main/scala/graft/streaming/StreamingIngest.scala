@@ -109,7 +109,10 @@ object StreamingIngest {
 
   /** Start the ingest query: landing dir -> partitioned parquet events table.
     * `trigger` defaults to the Firehose-parity 60 s micro-batch; tests pass
-    * `Trigger.AvailableNow()` to drain and stop. */
+    * `Trigger.AvailableNow()` to drain and stop. The replay-dedup state's
+    * partition count is the session's core count (`spark.sql.shuffle.partitions`
+    * under [[graft.Engine.createSession]]), fixed when the checkpoint is
+    * created; restarts keep the recorded count. */
   def start(
       spark: SparkSession,
       landingDir: String,

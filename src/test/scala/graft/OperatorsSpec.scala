@@ -52,36 +52,26 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getString(6) == "2020-07-03 01:00:00")
   }
 
-  test("lateral-alias shadowing hazard: a sibling alias reusing an input name corrupts later HOF lambdas (pin + avoidance)") {
-    // Spark 4.1 hazard caught by the r13 10x gate via q_sim_adaptive: in
-    //   select(l2norm(emb).as("emb"), l2norm(slice(emb, ...)).as("p"))
-    // the SECOND expression's outer slice resolves col("emb") to the INPUT
-    // column, but the lambda-bound references inside its aggregate
-    // re-resolve to the preceding SIBLING output (the normalized vector) —
-    // one expression, two different bindings of the same name, silently
-    // wrong numbers. The repo rule is: never alias a projection output to
-    // an input column's name when a later sibling references that name.
-    // This pin asserts (1) the clean form is mathematically right, and
-    // (2) the shadowed form still diverges on this Spark version — if (2)
-    // ever fails, Spark fixed the resolution and this pin + the scaladoc
-    // note in SimilarityQueries.adaptive can be retired.
+  test("lateral-alias shadowing hazard: a sibling alias reusing an input name rebinds a later lambda's references (pin + avoidance)") {
+    // Spark 4.1 hazard, first caught through q_sim_adaptive: in
+    //   select(transform(v, ...).as("v"), transform(slice(v, 1, 2), x -> x + v[3]).as("p"))
+    // the second expression's outer slice reads the INPUT column v, but the
+    // v inside its lambda re-resolves to the preceding SIBLING output — one
+    // expression, two bindings of the same name, silently wrong numbers.
+    // The repo rule: never alias a projection output to an input column's
+    // name when a later sibling's lambda references that name (EngineSpec
+    // lints every declared plan for it). If the shadowed assertion ever
+    // fails, Spark fixed the binding: retire this pin and that lint.
     val s = spark
     import s.implicits._
-    import graft.functions.VectorFunctions.l2Normalize
-    // prefix norm 5, full norm 13 — distinct scale factors expose mixing
     val df = Seq((1L, Seq(3.0, 4.0, 12.0))).toDF("id", "v")
-    val clean = df.select(col("id"),
-        l2Normalize(col("v")).as("nv"),
-        l2Normalize(slice(col("v"), 1, 2)).as("p"))
+    def p(doubled: String) = df.select(col("id"),
+        transform(col("v"), x => x * 2.0).as(doubled),
+        transform(slice(col("v"), 1, 2), x => x + element_at(col("v"), 3)).as("p"))
       .select(element_at(col("p"), 1)).head().getDouble(0)
-    assert(math.abs(clean - 0.6) < 1e-12, s"clean form wrong: $clean (want 3/5)")
-    val shadowed = df.select(col("id"),
-        l2Normalize(col("v")).as("v"),
-        l2Normalize(slice(col("v"), 1, 2)).as("p"))
-      .select(element_at(col("p"), 1)).head().getDouble(0)
-    assert(math.abs(shadowed - 0.6) > 1e-9,
-      s"shadowed form now equals the clean value ($shadowed) — Spark fixed " +
-        "lateral-alias lambda binding; retire this pin and the scaladoc note")
+    assert(p("v2") == 15.0, "clean form: 3 + 12")
+    assert(p("v") != 15.0, "shadowed form now equals the clean value — Spark fixed " +
+      "lateral-alias lambda binding; retire this pin and the EngineSpec lint")
   }
 
   test("window GROUPS frame mode is parser-rejected; the dense_rank RANGE rewrite is the documented equivalent") {

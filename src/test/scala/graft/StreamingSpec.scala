@@ -1818,4 +1818,58 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     DataQuality.updateDriftCurrent(spark, cur, storeDir, batchId = 0L)
     assert(rows(DataQuality.driftStatus(spark, storeDir)) == live, "replay mutated the bins")
   }
+
+  // A stateful operator's partition count is recorded in the checkpoint when
+  // the query first starts; deployments with 32-partition checkpoints rely on
+  // a restart keeping it. Both tests run last: the first re-sizes the suite's
+  // session through the factory.
+  private def statePartitions(ckpt: String): Seq[java.io.File] =
+    Option(new java.io.File(s"$ckpt/state/0").listFiles).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.forall(_.isDigit))
+
+  // state-store versions each partition committed, one per micro-batch
+  private def committedVersions(ckpt: String): Seq[Int] =
+    statePartitions(ckpt).map(_.list.count(_.endsWith(".delta")))
+
+  private def eventIds(out: String): Seq[String] = {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions._
+    spark.read.parquet(out).select(get_json_object(col("details"), "$.eventid")).as[String]
+      .collect().toSeq.sorted
+  }
+
+  test("replay-dedup state: a fresh checkpoint gets one partition per core of the factory session") {
+    val landing = s"$base/cores_landing"
+    val ckpt = s"$base/cores_ckpt"
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    // the suite's session, which the factory re-sizes to its cores
+    val s = Engine.createSession("streaming-spec", "local[4]")
+    write(landing, "a.json", """{"eventid": "cores-001", "msg": "one"}""")
+    StreamingIngest.start(s, landing, s"$base/cores_events", ckpt, Trigger.AvailableNow())
+      .awaitTermination(120000)
+    assert(statePartitions(ckpt).size == s.sparkContext.defaultParallelism)
+  }
+
+  test("replay-dedup state: a checkpoint made under 8 partitions keeps 8 on a 4-partition restart, and still dedups") {
+    val landing = s"$base/p8_landing"
+    val out = s"$base/p8_events"
+    val ckpt = s"$base/p8_ckpt"
+    val eight = spark.newSession()
+    eight.conf.set("spark.sql.shuffle.partitions", "8")
+    write(landing, "a.json", """{"eventid": "p8-001", "msg": "first"}""")
+    StreamingIngest.start(eight, landing, out, ckpt, Trigger.AvailableNow()).awaitTermination(120000)
+    val before = committedVersions(ckpt)
+    assert(before.size == 8)
+
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    write(landing, "a_replay.json", """{"eventid": "p8-001", "msg": "first"}""")
+    write(landing, "b.json", """{"eventid": "p8-002", "msg": "second"}""")
+    val q = StreamingIngest.start(spark, landing, out, ckpt, Trigger.AvailableNow())
+    q.awaitTermination(120000)
+    assert(q.exception.isEmpty, q.exception)
+    val after = committedVersions(ckpt)
+    assert(after.size == 8 && after.forall(_ > before.max), s"the restart did not commit all 8 partitions: $after")
+    assert(eventIds(out) == Seq("p8-001", "p8-002"), "the replayed file was not dropped")
+  }
 }
