@@ -14,12 +14,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     exactly one application. Publish I/O is O(delta); untouched buckets
   *     are never listed, let alone rewritten.
   *   - file counts stay bounded by per-bucket threshold compaction: at
-  *     `compactAt` files a bucket folds into one base run via the
-  *     [[Monitoring]]-style per-bucket atomic swap (the one place the
-  *     store still rewrites stored bytes — one bucket's, never the
-  *     store's; amortized O(store/compactAt) per batch, and the bucket
-  *     count is the deployment dial that keeps a single fold
-  *     executor-sized at 100 TB).
+  *     `compactAt` files a bucket folds into one base run via its own
+  *     [[StoreCommit.publish]] (the one place the store still rewrites
+  *     stored bytes — one bucket's, never the store's; amortized
+  *     O(store/compactAt) per batch, and the bucket count is the
+  *     deployment dial that keeps a single fold executor-sized at 100 TB).
   *
   * Callers provide the commit point (their own cursor swap AFTER
   * [[publishDelta]]) and run [[compactIfNeeded]] only on committed
@@ -142,36 +141,29 @@ private[operators] object BucketedRuns {
   }
 
   /** Fold one bucket's files into a single base run when the count crosses
-    * `compactAt` — the [[Monitoring]] per-bucket atomic swap: read the
+    * `compactAt` — the [[Monitoring]] per-bucket atomic publish: read the
     * bucket, write one file, swap the bucket dir. */
   def compactIfNeeded(
-      spark: SparkSession, fs: FileSystem, storeDir: Path, dataRoot: Path,
-      k: Int, compactAt: Int): Unit = {
+      spark: SparkSession, fs: FileSystem, dataRoot: Path, k: Int, compactAt: Int): Unit = {
     val bd = bucketDir(dataRoot, k)
     if (!fs.exists(bd)) return
     val files = parquetFiles(fs, bd)
     if (files.length < compactAt) return
-    val tmp = new Path(storeDir.getParent, s".${storeDir.getName}.compact$k")
-    fs.delete(tmp, true)
-    spark.read.parquet(files.map(_.getPath.toString): _*)
-      .coalesce(1) // one bucket = one base run (bucket bytes are the dial)
-      .write.parquet(tmp.toString)
-    // normalize part names so repeated compactions stay one base file
-    parquetFiles(fs, tmp).zipWithIndex.foreach { case (st, i) =>
-      fs.rename(st.getPath, new Path(tmp, s"base-$i.parquet")) }
-    StoreCommit.swap(fs, bd, tmp)
+    StoreCommit.publish(fs, bd)(tmp =>
+      writeBase(fs, spark.read.parquet(files.map(_.getPath.toString): _*), tmp))
   }
 
   /** Rewrite one bucket from a dataframe (delete-scrub path) via its
-    * atomic swap. */
-  def rewriteBucket(
-      spark: SparkSession, fs: FileSystem, storeDir: Path, dataRoot: Path,
-      k: Int, rows: DataFrame): Unit = {
-    val tmp = new Path(storeDir.getParent, s".${storeDir.getName}.scrub$k")
-    fs.delete(tmp, true)
+    * atomic publish. */
+  def rewriteBucket(fs: FileSystem, dataRoot: Path, k: Int, rows: DataFrame): Unit =
+    StoreCommit.publish(fs, bucketDir(dataRoot, k))(tmp => writeBase(fs, rows, tmp))
+
+  /** One bucket = one base run (bucket bytes are the dial); the part file
+    * is renamed to `base-<i>.parquet` so repeated compactions stay one base
+    * file. */
+  private def writeBase(fs: FileSystem, rows: DataFrame, tmp: Path): Unit = {
     rows.coalesce(1).write.parquet(tmp.toString)
     parquetFiles(fs, tmp).zipWithIndex.foreach { case (st, i) =>
       fs.rename(st.getPath, new Path(tmp, s"base-$i.parquet")) }
-    StoreCommit.swap(fs, bucketDir(dataRoot, k), tmp)
   }
 }

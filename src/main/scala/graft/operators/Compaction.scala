@@ -14,7 +14,8 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   * `compactPartition` rewrites one closed partition directory to
   * ceil(bytes / targetBytes) files — compact ONLY partitions the streaming
   * trigger has moved past (e.g. previous hours), never the one being written.
-  * The rewrite goes to a sibling temp dir then swaps via two renames, so a
+  * The rewrite publishes through [[StoreCommit.publish]] (a dot-prefixed
+  * `.building` stage, then two renames through the `.previous` aside), so a
   * concurrent reader sees either the old layout or the new one, never a
   * partial mix (rename is atomic per path on HDFS-like filesystems; on S3 a
   * real deployment would swap via the table format's metadata instead).
@@ -28,49 +29,20 @@ object Compaction {
       partitionDir: String,
       targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val path = new Path(partitionDir)
-    val fs = FileSystem.get(path.toUri, spark.sparkContext.hadoopConfiguration)
-    // crash recovery: a failure between the two swap renames leaves the data
-    // only in the hidden .precompact sibling (invisible to partition
-    // discovery) and the partition path absent — restore it before anything
-    // else, or every later call would die in listStatus below
-    val crashLeftover = new Path(path.getParent, s".${path.getName}.precompact")
-    if (!fs.exists(path) && fs.exists(crashLeftover)) {
-      if (!fs.rename(crashLeftover, path))
-        throw new java.io.IOException(
-          s"compaction: cannot restore $path from crash leftover $crashLeftover")
-    }
+    val fs = StoreCommit.fsOf(spark, path)
+    // a crash inside an earlier swap leaves the data only in the hidden
+    // aside and the partition path absent — restore it before listing
+    StoreCommit.recover(fs, path)
     val files = fs.listStatus(path).filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
     val totalBytes = files.map(_.getLen).sum
     val targetFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     if (files.length <= targetFiles) return (files.length, files.length)
 
-    // scratch dirs are DOT-prefixed siblings: partition discovery ignores
-    // `.`/`_`-led names, so readers of the table root never see the rewrite
-    // in progress or its crash leftovers (a bare `hour=05_precompact` sibling
-    // would parse as a real partition with a corrupt value)
-    val tmp = new Path(path.getParent, s".${path.getName}.compacting")
-    val old = new Path(path.getParent, s".${path.getName}.precompact")
-    fs.delete(tmp, true) // stale leftovers from a previously crashed run
-    fs.delete(old, true)
-    spark.read.parquet(partitionDir)
-      .repartition(targetFiles)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(tmp.toString)
-    // two-rename swap: readers see old or new, never both. Every rename is
-    // checked — deleting `old` on a failed swap would destroy the partition.
-    if (!fs.rename(path, old)) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"compaction: cannot move $path aside")
-    }
-    if (!fs.rename(tmp, path)) {
-      val rolledBack = fs.rename(old, path)
-      fs.delete(tmp, true)
-      throw new java.io.IOException(
-        s"compaction: swap failed for $path, " +
-          (if (rolledBack) "rolled back to the original layout"
-           else s"ROLLBACK ALSO FAILED - original data preserved at $old"))
-    }
-    fs.delete(old, true)
+    StoreCommit.publish(fs, path)(tmp =>
+      spark.read.parquet(partitionDir)
+        .repartition(targetFiles)
+        .write.mode(SaveMode.Overwrite)
+        .parquet(tmp.toString))
     val after = fs.listStatus(path).count(f => f.isFile && !f.getPath.getName.startsWith("_"))
     (files.length, after)
   }

@@ -79,11 +79,10 @@ object DataQuality {
       .unionByName(violationCounts(batch))
       .groupBy("constraint")
       .agg(sum("violations").as("violations"), sum("n_rows").as("n_rows"))
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    merged.coalesce(1).write.parquet(tmp.toString)
-    StoreCommit.writeMeta(fs, tmp, batchId)
-    StoreCommit.swap(fs, dir, tmp)
+    StoreCommit.publish(fs, dir) { tmp =>
+      merged.coalesce(1).write.parquet(tmp.toString)
+      StoreCommit.writeMeta(fs, tmp, batchId)
+    }
   }
 
   /** Scheduler-facing view of the ledger: adds the pass flag, stable order. */
@@ -120,12 +119,8 @@ object DataQuality {
     * build-once bounded table of (bin, n_ref). */
   def buildDriftReference(spark: SparkSession, events: DataFrame, storeDir: String): Unit = {
     val dir = new Path(s"$storeDir/drift_ref")
-    val fs = StoreCommit.fsOf(spark, dir)
-    StoreCommit.recover(fs, dir)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    binCounts(events, "n_ref").coalesce(1).write.parquet(tmp.toString)
-    StoreCommit.swap(fs, dir, tmp)
+    StoreCommit.publish(StoreCommit.fsOf(spark, dir), dir)(tmp =>
+      binCounts(events, "n_ref").coalesce(1).write.parquet(tmp.toString))
   }
 
   private def readBins(spark: SparkSession, dir: Path, as: String): DataFrame = {
@@ -147,11 +142,10 @@ object DataQuality {
     val merged = readBins(spark, dir, "n_cur")
       .unionByName(binCounts(batch, "n_cur"))
       .groupBy("bin").agg(sum("n_cur").as("n_cur"))
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    merged.coalesce(1).write.parquet(tmp.toString)
-    StoreCommit.writeMeta(fs, tmp, batchId)
-    StoreCommit.swap(fs, dir, tmp)
+    StoreCommit.publish(fs, dir) { tmp =>
+      merged.coalesce(1).write.parquet(tmp.toString)
+      StoreCommit.writeMeta(fs, tmp, batchId)
+    }
   }
 
   /** Per-bin drift table from the two bounded histograms — the same output

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,23 +32,17 @@ import org.apache.spark.sql.functions._
   * scratch on everything processed so far (OperatorsSpec pins it). */
 object DatasetCard {
 
-  private def fsOf(spark: SparkSession, dir: Path): FileSystem =
-    FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-
-  private def atomicSwap(fs: FileSystem, dir: Path, tmp: Path): Unit =
-    StoreCommit.swap(fs, dir, tmp) // shared two-rename discipline + recoverable aside
-
   /** Resolve the card root a READER should use — non-mutating (a reader
     * must never rename mid-swap; the writer's own recover restores the
     * main dir), falling back to the crash aside when the root is absent. */
   private def readRoot(spark: SparkSession, cardDir: String): Path = {
     val dir = new Path(cardDir)
-    StoreCommit.readableRoot(fsOf(spark, dir), dir)
+    StoreCommit.readableRoot(StoreCommit.fsOf(spark, dir), dir)
   }
 
   private def exists(spark: SparkSession, root: Path, child: String): Boolean = {
     val path = new Path(root, child)
-    fsOf(spark, path).exists(path)
+    StoreCommit.fsOf(spark, path).exists(path)
   }
 
   /** The processed-id boundary; Long.MinValue before the first update. */
@@ -64,55 +58,52 @@ object DatasetCard {
   def update(spark: SparkSession, delta: DataFrame, cardDir: String): Unit = {
     import spark.implicits._
     val dir = new Path(cardDir)
-    val fs = fsOf(spark, dir)
-    StoreCommit.recover(fs, dir) // crash-windowed swap: restore before touching
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.publish(fs, dir) { tmp =>
+      val bound = boundary(spark, cardDir)
+      val fresh = delta.filter(col("doc_id") > bound)
+        .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
+          size(split(col("text"), " ")).cast("long").as("n_toks"),
+          xxhash64(col("text")).as("th"))
+        .cache()
+      // the publish recovered the main dir, so these read it directly
+      val storedSeen =
+        if (exists(spark, dir, "firstseen")) spark.read.parquet(s"$cardDir/firstseen")
+        else spark.range(0).select(col("id").as("th"), col("id").as("first_id"))
+      val storedPartials =
+        if (exists(spark, dir, "partials")) spark.read.parquet(s"$cardDir/partials")
+        else Seq.empty[(String, String, Long, Long, Long, Long)]
+          .toDF("source", "lang", "n_docs", "n_tokens", "n_chars", "n_dups")
 
-    val bound = boundary(spark, cardDir)
-    val fresh = delta.filter(col("doc_id") > bound)
-      .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
-        size(split(col("text"), " ")).cast("long").as("n_toks"),
-        xxhash64(col("text")).as("th"))
-      .cache()
-    // the writer recovered the main dir above, so these read it directly
-    val storedSeen =
-      if (exists(spark, dir, "firstseen")) spark.read.parquet(s"$cardDir/firstseen")
-      else spark.range(0).select(col("id").as("th"), col("id").as("first_id"))
-    val storedPartials =
-      if (exists(spark, dir, "partials")) spark.read.parquet(s"$cardDir/partials")
-      else Seq.empty[(String, String, Long, Long, Long, Long)]
-        .toDF("source", "lang", "n_docs", "n_tokens", "n_chars", "n_dups")
+      // keep-first dup rule, incrementally: first seen in the STORE (ids are
+      // monotonic, so any stored sighting is earlier), else earlier in the delta
+      val marked = fresh
+        .withColumn("delta_first", min("doc_id").over(Window.partitionBy("th")))
+        .join(storedSeen.select(col("th"), col("first_id")), Seq("th"), "left")
+        .withColumn("is_dup",
+          col("first_id").isNotNull || col("delta_first") < col("doc_id"))
+      val deltaPartials = marked.groupBy("source", "lang")
+        .agg(count(lit(1)).as("n_docs"), sum("n_toks").as("n_tokens"),
+          sum("n_chars").as("n_chars"),
+          sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dups"))
+      val mergedPartials = storedPartials.unionByName(deltaPartials)
+        .groupBy("source", "lang")
+        .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
+          sum("n_chars").as("n_chars"), sum("n_dups").as("n_dups"))
+      val newSeen = marked.filter(col("first_id").isNull)
+        .groupBy("th").agg(min("doc_id").as("first_id"))
+      val newBound = fresh.agg(max("doc_id")).head().get(0) match {
+        case null => bound
+        case m => math.max(bound, m.asInstanceOf[Long])
+      }
 
-    // keep-first dup rule, incrementally: first seen in the STORE (ids are
-    // monotonic, so any stored sighting is earlier), else earlier in the delta
-    val marked = fresh
-      .withColumn("delta_first", min("doc_id").over(Window.partitionBy("th")))
-      .join(storedSeen.select(col("th"), col("first_id")), Seq("th"), "left")
-      .withColumn("is_dup",
-        col("first_id").isNotNull || col("delta_first") < col("doc_id"))
-    val deltaPartials = marked.groupBy("source", "lang")
-      .agg(count(lit(1)).as("n_docs"), sum("n_toks").as("n_tokens"),
-        sum("n_chars").as("n_chars"),
-        sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dups"))
-    val mergedPartials = storedPartials.unionByName(deltaPartials)
-      .groupBy("source", "lang")
-      .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
-        sum("n_chars").as("n_chars"), sum("n_dups").as("n_dups"))
-    val newSeen = marked.filter(col("first_id").isNull)
-      .groupBy("th").agg(min("doc_id").as("first_id"))
-    val newBound = fresh.agg(max("doc_id")).head().get(0) match {
-      case null => bound
-      case m => math.max(bound, m.asInstanceOf[Long])
+      mergedPartials.write.mode(SaveMode.Overwrite).parquet(s"$tmp/partials")
+      storedSeen.unionByName(newSeen)
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/firstseen")
+      Seq(newBound).toDF("max_doc_id")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/meta")
+      fresh.unpersist()
     }
-
-    mergedPartials.write.mode(SaveMode.Overwrite).parquet(s"$tmp/partials")
-    storedSeen.unionByName(newSeen)
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/firstseen")
-    Seq(newBound).toDF("max_doc_id")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/meta")
-    fresh.unpersist()
-    atomicSwap(fs, dir, tmp)
   }
 
   /** The datasheet, from partials alone — the `q_train_dataset_card`

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -90,25 +90,16 @@ object Decontamination {
         expr(s"${bitSet("p1")} AND ${bitSet("p2")} AND ${bitSet("p3")}"))
       .select(col("doc_id"), col("ng"), col("bloom_hit"))
 
-  private def fsOf(spark: SparkSession, dir: Path): FileSystem =
-    FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-
-  private def atomicSwap(fs: FileSystem, dir: Path, tmp: Path): Unit =
-    StoreCommit.swap(fs, dir, tmp) // shared two-rename discipline + recoverable aside
-
   /** Build and atomically publish the filter from a benchmark document
     * table: bloom words + the exact n-gram confirm set. */
   def buildFilter(spark: SparkSession, benchDocs: DataFrame, filterDir: String): Unit = {
     val dir = new Path(filterDir)
-    StoreCommit.recover(fsOf(spark, dir), dir) // crash-windowed swap
-    val fs = fsOf(spark, dir)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    val grams = docNgrams(benchDocs).select("ng").distinct()
-    grams.write.mode(SaveMode.Overwrite).parquet(s"$tmp/grams")
-    bloomTable(spark.read.parquet(s"$tmp/grams"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/bloom")
-    atomicSwap(fs, dir, tmp)
+    StoreCommit.publish(StoreCommit.fsOf(spark, dir), dir) { tmp =>
+      docNgrams(benchDocs).select("ng").distinct()
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/grams")
+      bloomTable(spark.read.parquet(s"$tmp/grams"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/bloom")
+    }
   }
 
   /** Scrub a document batch against the STORED filter: per-doc n-gram,
@@ -117,7 +108,7 @@ object Decontamination {
   def scrub(spark: SparkSession, docs: DataFrame, filterDir: String): DataFrame = {
     // non-mutating read resolution (a reader must never rename mid-swap)
     val root = StoreCommit.readableRoot(
-      fsOf(spark, new Path(filterDir)), new Path(filterDir))
+      StoreCommit.fsOf(spark, new Path(filterDir)), new Path(filterDir))
     val grams = docNgrams(docs)
     val flagged = probe(grams,
         bloomRow(spark.read.parquet(new Path(root, "bloom").toString)))

@@ -165,12 +165,10 @@ object HistoryStore {
       closed: DataFrame, open: DataFrame): Unit = {
     val dir = new Path(storeDir)
     val fs = StoreCommit.fsOf(spark, dir)
-    StoreCommit.recover(fs, dir)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    closed.write.mode(SaveMode.Overwrite).parquet(s"$tmp/closed")
-    open.write.mode(SaveMode.Overwrite).parquet(s"$tmp/open")
-    StoreCommit.writeMeta(fs, tmp, batchId)
-    StoreCommit.swap(fs, dir, tmp)
+    StoreCommit.publish(fs, dir) { tmp =>
+      closed.write.mode(SaveMode.Overwrite).parquet(s"$tmp/closed")
+      open.write.mode(SaveMode.Overwrite).parquet(s"$tmp/open")
+      StoreCommit.writeMeta(fs, tmp, batchId)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -156,36 +156,24 @@ object LanguageModel {
   private val TableNames =
     Seq("t5", "c4", "t4", "c3", "t3", "c2", "t2", "uni", "total")
 
-  private def fsOf(spark: SparkSession, dir: Path): FileSystem =
-    FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-
   /** Train on `trainDocs` and atomically publish under `lmDir`. */
   def buildLm(spark: SparkSession, trainDocs: DataFrame, lmDir: String): Unit = {
     val dir = new Path(lmDir)
-    val fs = fsOf(spark, dir)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    val aside = new Path(dir.getParent, s".${dir.getName}.previous")
-    fs.delete(tmp, true)
-    val m = tablesFrom(trainDocs)
-    val frames = Seq(m.t5, m.c4, m.t4, m.c3, m.t3, m.c2, m.t2, m.uni, m.total)
-    TableNames.zip(frames).foreach { case (n, f) =>
-      f.write.mode(SaveMode.Overwrite).parquet(s"$tmp/$n")
+    StoreCommit.publish(StoreCommit.fsOf(spark, dir), dir) { tmp =>
+      val m = tablesFrom(trainDocs)
+      val frames = Seq(m.t5, m.c4, m.t4, m.c3, m.t3, m.c2, m.t2, m.uni, m.total)
+      TableNames.zip(frames).foreach { case (n, f) =>
+        f.write.mode(SaveMode.Overwrite).parquet(s"$tmp/$n")
+      }
     }
-    fs.delete(aside, true)
-    if (fs.exists(dir) && !fs.rename(dir, aside))
-      throw new java.io.IOException(s"language model: cannot move $dir aside")
-    if (!fs.rename(tmp, dir)) {
-      val rolledBack = fs.exists(aside) && fs.rename(aside, dir)
-      throw new java.io.IOException(s"language model: swap failed for $dir, " +
-        (if (rolledBack) "rolled back to the previous model"
-         else s"no previous model to roll back to (or rollback failed - see $aside)"))
-    }
-    fs.delete(aside, true)
   }
 
-  /** The stored model tables. */
+  /** The stored model tables, read through [[StoreCommit.readableRoot]]:
+    * inside a crash window they serve the last committed model. */
   def lmTables(spark: SparkSession, lmDir: String): LmTables = {
-    def r(n: String) = spark.read.parquet(s"$lmDir/$n")
+    val dir = new Path(lmDir)
+    val root = StoreCommit.readableRoot(StoreCommit.fsOf(spark, dir), dir)
+    def r(n: String) = spark.read.parquet(s"$root/$n")
     LmTables(r("t5"), r("c4"), r("t4"), r("c3"), r("t3"), r("c2"), r("t2"),
       r("uni"), r("total"))
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{col, lit}
@@ -21,16 +21,16 @@ import org.apache.spark.sql.functions.{col, lit}
   *     LEFT ANTI join on the id (broadcastable: one update batch spread
   *     over its partitions is small per partition) and the update rows
   *     union in — one scan of the touched partition, one write.
-  *   - The rewritten partition swaps in with the same two-rename discipline
-  *     as [[Compaction]] (tmp `.merging` → aside `.premerge` → swap), so a
-  *     concurrent reader sees the old rows or the new rows, never both or
-  *     neither; a crash between the renames leaves the data in the hidden
-  *     `.premerge` sibling, restored on the next call.
+  *   - The rewritten partition publishes through [[StoreCommit.publish]]
+  *     (stage `.building` → aside `.previous` → swap), so a concurrent
+  *     reader sees the old rows or the new rows, never both or neither; a
+  *     crash between the renames leaves the data in the hidden `.previous`
+  *     sibling, restored on the next call.
   *
   * Updates must carry the partition columns; rows for partitions that do
-  * not exist yet land as fresh partition directories (insert path, single
-  * atomic rename). Table formats (Iceberg/Delta/Hudi) move this swap into
-  * a metadata commit; on a filesystem lake the rename discipline is the
+  * not exist yet land as fresh partition directories through the same
+  * publish. Table formats (Iceberg/Delta/Hudi) move this swap into a
+  * metadata commit; on a filesystem lake the rename discipline is the
   * equivalent invariant.
   */
 object Merge {
@@ -81,8 +81,7 @@ object Merge {
       updates: DataFrame,
       idCol: String,
       partitionCols: Seq[String]): Seq[(String, Long, Long)] = {
-    val root = new Path(tableDir)
-    val fs = FileSystem.get(root.toUri, spark.sparkContext.hadoopConfiguration)
+    val fs = StoreCommit.fsOf(spark, new Path(tableDir))
 
     val dupIds = updates.groupBy(col(idCol)).count().filter(col("count") > 1).limit(1).count()
     require(dupIds == 0,
@@ -101,45 +100,17 @@ object Merge {
         .drop(partitionCols: _*)
         .cache()
       try {
-        // crash recovery: a failure between the swap renames left the data
-        // only in the hidden .premerge sibling — restore before reading
-        val aside = new Path(part.getParent, s".${part.getName}.premerge")
-        if (!fs.exists(part) && fs.exists(aside) && !fs.rename(aside, part))
-          throw new java.io.IOException(s"merge: cannot restore $part from crash leftover $aside")
-
-        if (!fs.exists(part)) {
-          // brand-new partition: stage then one atomic rename into place
-          val tmp = new Path(part.getParent, s".${part.getName}.merging")
-          fs.delete(tmp, true)
-          u.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          fs.mkdirs(part.getParent)
-          if (!fs.rename(tmp, part))
-            throw new java.io.IOException(s"merge: cannot place new partition $part")
-          (part.toString, 0L, u.count())
-        } else {
-          val old = spark.read.parquet(part.toString)
-          val replaced = old.join(u, Seq(idCol), "left_semi").count()
-          val merged = old.join(u, Seq(idCol), "left_anti").unionByName(u, allowMissingColumns = false)
-          val tmp = new Path(part.getParent, s".${part.getName}.merging")
-          fs.delete(tmp, true)
-          fs.delete(aside, true)
-          merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          // two-rename swap, every rename checked (see Compaction)
-          if (!fs.rename(part, aside)) {
-            fs.delete(tmp, true)
-            throw new java.io.IOException(s"merge: cannot move $part aside")
+        StoreCommit.recover(fs, part) // a crash inside an earlier swap
+        val (merged, replaced) =
+          if (!fs.exists(part)) (u, 0L) // brand-new partition
+          else {
+            val old = spark.read.parquet(part.toString)
+            (old.join(u, Seq(idCol), "left_anti").unionByName(u, allowMissingColumns = false),
+              old.join(u, Seq(idCol), "left_semi").count())
           }
-          if (!fs.rename(tmp, part)) {
-            val rolledBack = fs.rename(aside, part)
-            fs.delete(tmp, true)
-            throw new java.io.IOException(
-              s"merge: swap failed for $part, " +
-                (if (rolledBack) "rolled back to the original layout"
-                 else s"ROLLBACK ALSO FAILED - original data preserved at $aside"))
-          }
-          fs.delete(aside, true)
-          (part.toString, replaced, u.count() - replaced)
-        }
+        StoreCommit.publish(fs, part)(tmp =>
+          merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
+        (part.toString, replaced, u.count() - replaced)
       } finally u.unpersist()
     }
   }
@@ -149,8 +120,8 @@ object Merge {
     * carries the ids to remove plus their partition columns; only touched
     * partitions rewrite (old rows leave via the same LEFT ANTI join the
     * upsert uses, with no union back), behind the same crash-safe
-    * two-rename swap. A partition whose every row dies is removed entirely
-    * rather than left as an empty directory. Returns (partitionPath,
+    * publish. A partition whose every row dies is removed entirely (through
+    * [[Retention.expirePartition]]) rather than left as an empty directory. Returns (partitionPath,
     * nDeleted) per touched partition; ids absent from the table delete
     * zero rows (idempotent replay). */
   def deletePartitioned(
@@ -159,8 +130,7 @@ object Merge {
       tombstones: DataFrame,
       idCol: String,
       partitionCols: Seq[String]): Seq[(String, Long)] = {
-    val root = new Path(tableDir)
-    val fs = FileSystem.get(root.toUri, spark.sparkContext.hadoopConfiguration)
+    val fs = StoreCommit.fsOf(spark, new Path(tableDir))
     val touched = touchedPartitions(tombstones, partitionCols)
 
     touched.toSeq.flatMap { pvals =>
@@ -169,9 +139,7 @@ object Merge {
       val ids = partitionSlice(tombstones, partitionCols, pvals)
         .select(idCol).distinct().cache()
       try {
-        val aside = new Path(part.getParent, s".${part.getName}.premerge")
-        if (!fs.exists(part) && fs.exists(aside) && !fs.rename(aside, part))
-          throw new java.io.IOException(s"delete: cannot restore $part from crash leftover $aside")
+        StoreCommit.recover(fs, part)
         if (!fs.exists(part)) None
         else {
           val old = spark.read.parquet(part.toString)
@@ -179,30 +147,12 @@ object Merge {
           if (dying == 0L) None
           else {
             val survivors = old.join(ids, Seq(idCol), "left_anti")
-            if (survivors.isEmpty) {
-              // whole partition dies: hide then delete, like Retention
-              if (!fs.rename(part, aside))
-                throw new java.io.IOException(s"delete: cannot move $part aside")
-              fs.delete(aside, true)
-            } else {
-              val tmp = new Path(part.getParent, s".${part.getName}.merging")
-              fs.delete(tmp, true)
-              fs.delete(aside, true)
-              survivors.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-              if (!fs.rename(part, aside)) {
-                fs.delete(tmp, true)
-                throw new java.io.IOException(s"delete: cannot move $part aside")
-              }
-              if (!fs.rename(tmp, part)) {
-                val rolledBack = fs.rename(aside, part)
-                fs.delete(tmp, true)
-                throw new java.io.IOException(
-                  s"delete: swap failed for $part, " +
-                    (if (rolledBack) "rolled back to the original layout"
-                     else s"ROLLBACK ALSO FAILED - original data preserved at $aside"))
-              }
-              fs.delete(aside, true)
-            }
+            // whole partition dies: hide under Retention's `.expiring` tomb,
+            // which is swept and never restored (the restorable `.previous`
+            // aside would bring the erased rows back on the next write)
+            if (survivors.isEmpty) Retention.expirePartition(spark, part.toString)
+            else StoreCommit.publish(fs, part)(tmp =>
+              survivors.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
             Some((part.toString, dying))
           }
         }

@@ -73,16 +73,10 @@ object Monitoring {
 
   // ---- persisted hourly store ----------------------------------------
 
-  // store plumbing lives in [[StoreCommit]] (shared swap/recover/cursor)
-  private def fsOf(spark: SparkSession, dir: Path) = StoreCommit.fsOf(spark, dir)
-  private def committedBatch(fs: FileSystem, dir: Path) = StoreCommit.committedBatch(fs, dir)
-  private def writeMeta(fs: FileSystem, dir: Path, batchId: Long) = StoreCommit.writeMeta(fs, dir, batchId)
-  private def atomicSwap(fs: FileSystem, dir: Path, tmp: Path) = StoreCommit.swap(fs, dir, tmp)
-
   /** The live hourly table (empty frame if nothing committed yet). */
   def readHourly(spark: SparkSession, storeDir: String): DataFrame = {
     val dir = new Path(s"$storeDir/hourly")
-    val fs = fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     val src = StoreCommit.readableRoot(fs, dir) // non-mutating: see StoreCommit
     if (fs.exists(src)) spark.read.parquet(src.toString)
     else spark.range(0).select(
@@ -96,16 +90,15 @@ object Monitoring {
   def updateHourly(
       spark: SparkSession, batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     val dir = new Path(s"$storeDir/hourly")
-    val fs = fsOf(spark, dir)
-    if (batchId <= committedBatch(fs, dir)) return // replay: already folded
+    val fs = StoreCommit.fsOf(spark, dir)
+    if (batchId <= StoreCommit.committedBatch(fs, dir)) return // replay: already folded
     val merged = readHourly(spark, storeDir)
       .unionByName(hourlyCounts(batch))
       .groupBy("event_type", "hr").agg(sum("n").as("n"))
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    merged.coalesce(1).write.parquet(tmp.toString)
-    writeMeta(fs, tmp, batchId)
-    atomicSwap(fs, dir, tmp)
+    StoreCommit.publish(fs, dir) { tmp =>
+      merged.coalesce(1).write.parquet(tmp.toString)
+      StoreCommit.writeMeta(fs, tmp, batchId)
+    }
   }
 
   /** Re-derive and atomically publish the alerts table from the stored
@@ -113,18 +106,15 @@ object Monitoring {
     * store), so it needs no replay cursor. */
   def publishAlerts(spark: SparkSession, storeDir: String): Unit = {
     val dir = new Path(s"$storeDir/alerts")
-    val fs = fsOf(spark, dir)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    anomalies(readHourly(spark, storeDir)).coalesce(1).write.parquet(tmp.toString)
-    atomicSwap(fs, dir, tmp)
+    StoreCommit.publish(StoreCommit.fsOf(spark, dir), dir)(tmp =>
+      anomalies(readHourly(spark, storeDir)).coalesce(1).write.parquet(tmp.toString))
   }
 
   /** The live alerts table. */
   def readAlerts(spark: SparkSession, storeDir: String): DataFrame = {
     val dir = new Path(s"$storeDir/alerts")
     spark.read.parquet(
-      StoreCommit.readableRoot(fsOf(spark, dir), dir).toString) // non-mutating
+      StoreCommit.readableRoot(StoreCommit.fsOf(spark, dir), dir).toString) // non-mutating
   }
 
   // ---- per-user inter-arrival regularity store (bot detection, live) ----
@@ -192,7 +182,7 @@ object Monitoring {
       spark: SparkSession, storeDir: String, ks: Seq[Int]): Seq[Path] =
     ks.flatMap { k =>
       val dir = bucketDir(storeDir, k)
-      val fs = fsOf(spark, dir)
+      val fs = StoreCommit.fsOf(spark, dir)
       val src = StoreCommit.readableRoot(fs, dir) // non-mutating
       if (fs.exists(src)) Some(src) else None
     }
@@ -220,7 +210,7 @@ object Monitoring {
   def updateRegularity(
       spark: SparkSession, batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     val root = new Path(s"$storeDir/regularity")
-    val fs = fsOf(spark, root)
+    val fs = StoreCommit.fsOf(spark, root)
     // layout guard: a store written by the pre-bucketed code has parquet
     // files directly under regularity/ — reading it as "no buckets = empty"
     // would silently drop all accumulated state AND re-fold replayed
@@ -249,7 +239,7 @@ object Monitoring {
       // per-bucket replay guard (committedBatch runs crash recover() first —
       // this is the single-writer update path)
       val touched = touchedAll.filter(k =>
-        batchId > committedBatch(fs, bucketDir(storeDir, k)))
+        batchId > StoreCommit.committedBatch(fs, bucketDir(storeDir, k)))
       if (touched.isEmpty) return // replay: every touched bucket already folded
       updateTouchedBuckets(spark, partials, storeDir, batchId, root, fs, touched)
     } finally partials.unpersist(false)
@@ -283,17 +273,15 @@ object Monitoring {
     // one job writes every touched bucket: repartition on the bucket column
     // puts each bucket wholly in one task -> ONE file per bucket dir (the
     // per-bucket replacement for the old whole-state coalesce(1))
-    val tmp = new Path(root.getParent, s".${root.getName}.building")
-    fs.delete(tmp, true)
-    merged.repartition(col("bucket"))
-      .write.partitionBy("bucket").parquet(tmp.toString)
-    touched.foreach { k =>
-      val tb = new Path(tmp, s"bucket=$k")
-      if (!fs.exists(tb)) fs.mkdirs(tb) // touched bucket always has rows; belt-and-braces
-      writeMeta(fs, tb, batchId)
-      atomicSwap(fs, bucketDir(storeDir, k), tb)
+    StoreCommit.publishEach(fs, root, touched.map(k => s"bucket=$k")) { tmp =>
+      merged.repartition(col("bucket"))
+        .write.partitionBy("bucket").parquet(tmp.toString)
+      touched.foreach { k =>
+        val tb = new Path(tmp, s"bucket=$k")
+        if (!fs.exists(tb)) fs.mkdirs(tb) // touched bucket always has rows; belt-and-braces
+        StoreCommit.writeMeta(fs, tb, batchId)
+      }
     }
-    fs.delete(tmp, true)
   }
 
   /** Scheduler-facing view: the same top-20 most-regular-users table the

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -386,62 +387,39 @@ object Multimodal {
 
   /** Build and atomically publish a pHash index: one `hashes` table
     * (doc_id, w0, w1) — 16 bytes per image; the corpus pixels never need
-    * re-decoding to dedup future crawls against it. Same aside+rename
-    * discipline as the vector indexes. */
+    * re-decoding to dedup future crawls against it. A rebuild over an
+    * existing index carries its tombstones forward and excludes them, so an
+    * erased image stays erased even while the corpus still holds it (the
+    * same rule as `VectorIndex.buildIvfPq`). Publishes through
+    * [[StoreCommit.publish]]. */
   def buildPhashIndex(spark: SparkSession, images: DataFrame, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val dir = new Path(indexDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      dir.toUri, spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    val aside = new Path(dir.getParent, s".${dir.getName}.previous")
-    fs.delete(tmp, true)
-    phashTable(images).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$tmp/hashes")
-    fs.delete(aside, true)
-    if (fs.exists(dir) && !fs.rename(dir, aside))
-      throw new java.io.IOException(s"phash index: cannot move $dir aside")
-    if (!fs.rename(tmp, dir)) {
-      val rolledBack = fs.exists(aside) && fs.rename(aside, dir)
-      throw new java.io.IOException(s"phash index: swap failed for $dir, " +
-        (if (rolledBack) "rolled back" else "no rollback available"))
+    StoreCommit.publish(StoreCommit.fsOf(spark, dir), dir) { tmp =>
+      val tombstones = phashTombstones(spark, indexDir).cache()
+      phashTable(images).join(broadcast(tombstones), Seq("doc_id"), "left_anti")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/hashes")
+      writeTombstonesIfAny(tombstones, tmp)
+      tombstones.unpersist()
     }
-    fs.delete(aside, true)
   }
 
   /** Append a new image batch to the index — idempotent on doc_id (a
     * replayed batch anti-joins to nothing), decode only the delta. */
   def appendPhashIndex(spark: SparkSession, images: DataFrame, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val dir = new Path(indexDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      dir.toUri, spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    val aside = new Path(dir.getParent, s".${dir.getName}.previous")
-    fs.delete(tmp, true)
-    fs.delete(aside, true)
-    val old = spark.read.parquet(s"$indexDir/hashes")
-    val tombstones = phashTombstones(spark, indexDir).cache()
-    // anti-join BOTH sides: existing hashes (idempotent replay) AND the
-    // tombstones (an erased image has no hash row left — without this a
-    // replayed append would silently resurrect it)
-    val fresh = phashTable(images)
-      .join(old.select("doc_id"), Seq("doc_id"), "left_anti")
-      .join(tombstones.select("doc_id"), Seq("doc_id"), "left_anti")
-    old.unionByName(fresh).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$tmp/hashes")
-    if (!tombstones.isEmpty)
-      tombstones.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$tmp/tombstones")
-    tombstones.unpersist()
-    if (!fs.rename(dir, aside))
-      throw new java.io.IOException(s"phash index: cannot move $dir aside")
-    if (!fs.rename(tmp, dir)) {
-      val rolledBack = fs.rename(aside, dir)
-      throw new java.io.IOException(s"phash index: swap failed for $dir, " +
-        (if (rolledBack) "rolled back" else "no rollback available"))
+    StoreCommit.publish(StoreCommit.fsOf(spark, dir), dir) { tmp =>
+      val old = spark.read.parquet(s"$indexDir/hashes")
+      val tombstones = phashTombstones(spark, indexDir).cache()
+      // anti-join BOTH sides: existing hashes (idempotent replay) AND the
+      // tombstones (an erased image has no hash row left — without this a
+      // replayed append would silently resurrect it)
+      val fresh = phashTable(images)
+        .join(old.select("doc_id"), Seq("doc_id"), "left_anti")
+        .join(tombstones, Seq("doc_id"), "left_anti")
+      old.unionByName(fresh).write.mode(SaveMode.Overwrite).parquet(s"$tmp/hashes")
+      writeTombstonesIfAny(tombstones, tmp)
+      tombstones.unpersist()
     }
-    fs.delete(aside, true)
   }
 
   /** GDPR delete on a pHash index: drop the hash rows and persist
@@ -450,67 +428,50 @@ object Multimodal {
     * Returns the number of hashes actually removed. */
   def deleteFromPhashIndex(
       spark: SparkSession, indexDir: String, docIds: Seq[Long]): Long = {
-    import org.apache.hadoop.fs.Path
     import spark.implicits._
     val dir = new Path(indexDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      dir.toUri, spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    val aside = new Path(dir.getParent, s".${dir.getName}.previous")
-    fs.delete(tmp, true)
-    fs.delete(aside, true)
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.recover(fs, dir)
     val requested = docIds.toDF("doc_id")
     val old = spark.read.parquet(s"$indexDir/hashes")
     val nDead = old.join(broadcast(requested), Seq("doc_id"), "left_semi").count()
+    // built inside each stage: the publish recovers the store before it runs
+    def erased(tmp: String): Unit =
+      phashTombstones(spark, indexDir).unionByName(requested).distinct()
+        .write.mode(SaveMode.Overwrite).parquet(tmp)
     if (nDead == 0L) {
       // No hash row yet — but the image may be indexed by a LATER append
       // (ingest and maintenance run on different cadences), so the erase
-      // request must still stick. Persist it via a tombstones-scoped swap.
-      val tsDir = new Path(s"$indexDir/tombstones")
-      val tsTmp = new Path(s"$indexDir/.tombstones.building")
-      val tsAside = new Path(s"$indexDir/.tombstones.previous")
-      fs.delete(tsTmp, true)
-      fs.delete(tsAside, true)
-      phashTombstones(spark, indexDir).select("doc_id")
-        .unionByName(requested).distinct()
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tsTmp.toString)
-      if (fs.exists(tsDir) && !fs.rename(tsDir, tsAside))
-        throw new java.io.IOException(s"phash index: cannot move $tsDir aside")
-      if (!fs.rename(tsTmp, tsDir)) {
-        val rolledBack = fs.exists(tsAside) && fs.rename(tsAside, tsDir)
-        throw new java.io.IOException(s"phash index: tombstone swap failed for $tsDir, " +
-          (if (rolledBack) "rolled back" else "no rollback available"))
-      }
-      fs.delete(tsAside, true)
+      // request must still stick. Persist it via a tombstones-scoped publish.
+      StoreCommit.publish(fs, new Path(dir, "tombstones"))(tsTmp => erased(tsTmp.toString))
       return 0L
     }
-    old.join(broadcast(requested), Seq("doc_id"), "left_anti")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$tmp/hashes")
-    phashTombstones(spark, indexDir).select("doc_id").unionByName(requested)
-      .distinct()
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$tmp/tombstones")
-    if (!fs.rename(dir, aside))
-      throw new java.io.IOException(s"phash index: cannot move $dir aside")
-    if (!fs.rename(tmp, dir)) {
-      val rolledBack = fs.rename(aside, dir)
-      throw new java.io.IOException(s"phash index: swap failed for $dir, " +
-        (if (rolledBack) "rolled back" else "no rollback available"))
+    StoreCommit.publish(fs, dir) { tmp =>
+      old.join(broadcast(requested), Seq("doc_id"), "left_anti")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/hashes")
+      erased(s"$tmp/tombstones")
     }
-    fs.delete(aside, true)
     nDead
   }
 
+  /** The erased doc_ids, read through [[StoreCommit.readableRoot]] at both
+    * levels (index, then its tombstones table), so a reader inside a crash
+    * window sees the last committed set and renames nothing. */
   private def phashTombstones(spark: SparkSession, indexDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val t = new Path(s"$indexDir/tombstones")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      t.toUri, spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(t)) spark.read.parquet(t.toString)
+    val dir = new Path(indexDir)
+    val fs = StoreCommit.fsOf(spark, dir)
+    val t = StoreCommit.readableRoot(fs,
+      new Path(StoreCommit.readableRoot(fs, dir), "tombstones"))
+    if (fs.exists(t)) spark.read.parquet(t.toString).select("doc_id")
     else {
       import spark.implicits._
       Seq.empty[Long].toDF("doc_id")
     }
   }
+
+  private def writeTombstonesIfAny(tombstones: DataFrame, tmp: Path): Unit =
+    if (!tombstones.isEmpty)
+      tombstones.write.mode(SaveMode.Overwrite).parquet(s"$tmp/tombstones")
 
   private def phashBands(df: DataFrame): DataFrame =
     df.select(col("doc_id"), col("w0"), col("w1"),
@@ -537,7 +498,9 @@ object Multimodal {
     // reads) the cache cannot go stale across index republishes
     val fresh = phashTable(images).cache()
     val freshBands = phashBands(fresh)
-    val storedBands = phashBands(spark.read.parquet(s"$indexDir/hashes"))
+    val dir = new Path(indexDir)
+    val root = StoreCommit.readableRoot(StoreCommit.fsOf(spark, dir), dir) // non-mutating
+    val storedBands = phashBands(spark.read.parquet(s"$root/hashes"))
       .select(col("b"), col("v"),
         col("doc_id").as("sid"), col("w0").as("s0"), col("w1").as("s1"))
     val matches = freshBands.join(storedBands, Seq("b", "v"))

@@ -180,7 +180,7 @@ object PackingStore {
       publishCursors(spark, fs, dir, batchId, newCursors)
       // maintenance AFTER the commit: bounded file counts per bucket
       touched.foreach(k =>
-        BucketedRuns.compactIfNeeded(spark, fs, dir, assignRoot(dir), k, CompactAt))
+        BucketedRuns.compactIfNeeded(spark, fs, assignRoot(dir), k, CompactAt))
     } finally delta.unpersist()
   }
 
@@ -188,11 +188,10 @@ object PackingStore {
   private def publishCursors(
       spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem, dir: Path,
       batchId: Long, cursors: DataFrame): Unit = {
-    val tmp = new Path(dir.getParent, s".${dir.getName}.cursors")
-    fs.delete(tmp, true)
-    cursors.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    StoreCommit.writeMeta(fs, tmp, batchId)
-    StoreCommit.swap(fs, cursorDir(dir), tmp)
+    StoreCommit.publish(fs, cursorDir(dir)) { tmp =>
+      cursors.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      StoreCommit.writeMeta(fs, tmp, batchId)
+    }
   }
 
   /** Whole-root publish (build / first-append init): bucketed assignments,
@@ -202,9 +201,6 @@ object PackingStore {
       assignments: DataFrame): Unit = {
     val dir = new Path(storeDir)
     val fs = StoreCommit.fsOf(spark, dir)
-    StoreCommit.recover(fs, dir)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
     val a = assignments.cache()
     try {
       // full-corpus feed invariant (r13 ADVICE): a doc_id must appear
@@ -216,15 +212,16 @@ object PackingStore {
           s"PackingStore: doc_id ${dup.head.get(0)} appears " +
             s"${dup.head.getLong(1)} times in the assignment table — " +
             "the feed violated the append-only contract; refusing to publish")
-      BucketedRuns.withBucket(a, "doc_id", Buckets)
-        .repartition(col(BucketedRuns.BucketCol))
-        .write.partitionBy(BucketedRuns.BucketCol).parquet(s"$tmp/assignments")
-      // cursor = total tokens per shard; derived from the SAME frame that
-      // was just published, so content and cursor cannot diverge
-      a.groupBy("lang").agg(sum("n_tokens").as("cum"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/cursors")
-      StoreCommit.writeMeta(fs, new Path(s"$tmp/cursors"), batchId)
-      StoreCommit.swap(fs, dir, tmp)
+      StoreCommit.publish(fs, dir) { tmp =>
+        BucketedRuns.withBucket(a, "doc_id", Buckets)
+          .repartition(col(BucketedRuns.BucketCol))
+          .write.partitionBy(BucketedRuns.BucketCol).parquet(s"$tmp/assignments")
+        // cursor = total tokens per shard; derived from the SAME frame that
+        // was just published, so content and cursor cannot diverge
+        a.groupBy("lang").agg(sum("n_tokens").as("cum"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$tmp/cursors")
+        StoreCommit.writeMeta(fs, new Path(s"$tmp/cursors"), batchId)
+      }
     } finally a.unpersist()
   }
 }

@@ -44,15 +44,12 @@ object ReplayGuard {
 
   private val MarkName = ".hwm"
 
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-
   /** The persisted mark, or None if never written / lost. A genuinely
     * unreadable file (not merely absent) propagates — silently disabling
     * the bound on a read error would be indistinguishable from first-write. */
   def highWaterMark(spark: SparkSession, sinkDir: String): Option[Long] = {
     val p = new Path(sinkDir, MarkName)
-    val fs = fsOf(spark, p)
+    val fs = StoreCommit.fsOf(spark, p)
     if (!fs.exists(p)) None
     else {
       val in = new java.io.BufferedReader(new java.io.InputStreamReader(
@@ -67,7 +64,7 @@ object ReplayGuard {
     * guard to the full anti-join (correct, just unbounded once). */
   def advance(spark: SparkSession, sinkDir: String, candidate: Long): Unit = {
     val dir = new Path(sinkDir)
-    val fs = fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     val next = math.max(highWaterMark(spark, sinkDir).getOrElse(Long.MinValue), candidate)
     if (!fs.exists(dir)) fs.mkdirs(dir)
     val tmp = new Path(sinkDir, s"$MarkName.tmp")
@@ -101,7 +98,7 @@ object ReplayGuard {
     val bMin = bounds.getLong(0)
     val bMax = bounds.getLong(1)
     val mark = highWaterMark(s, sinkDir)
-    val fs = fsOf(s, new Path(sinkDir))
+    val fs = StoreCommit.fsOf(s, new Path(sinkDir))
     val fresh = mark match {
       case Some(h) if bMin > h => batch // strictly new ids: zero sink reads
       case Some(h) =>

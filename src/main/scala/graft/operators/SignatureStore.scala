@@ -94,9 +94,6 @@ object SignatureStore {
     * turns that silent swallow into a loud error (r15 review finding). */
   private val AdhocMarker = "_graft_adhoc_cursor"
 
-  private def fsOf(spark: SparkSession, dir: Path): FileSystem =
-    FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-
   private def sigsRoot(root: Path) = new Path(root, "sigs")
   private def bucketDir(root: Path, k: Int) =
     BucketedRuns.bucketDir(sigsRoot(root), k)
@@ -117,7 +114,7 @@ object SignatureStore {
 
   private def tombstonesOf(
       spark: SparkSession, storeDir: String, idCol: String): DataFrame = {
-    val fs = fsOf(spark, new Path(storeDir))
+    val fs = StoreCommit.fsOf(spark, new Path(storeDir))
     val root = StoreCommit.readableRoot(fs, new Path(storeDir))
     val t = new Path(root, "tombstones")
     if (fs.exists(t)) spark.read.parquet(t.toString)
@@ -132,7 +129,7 @@ object SignatureStore {
     * orphaned files is ever visible to a reader (r15 review finding). */
   def read(spark: SparkSession, storeDir: String): DataFrame = {
     val dir = new Path(storeDir)
-    val fs = fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     val root = StoreCommit.readableRoot(fs, dir)
     val committed =
       StoreCommit.committedBatchReadable(fs, new Path(root, "tombstones"))
@@ -149,7 +146,7 @@ object SignatureStore {
     * the aside back inside the writer's swap window; r15 review finding). */
   def committedBatch(spark: SparkSession, storeDir: String): Long = {
     val dir = new Path(storeDir)
-    val fs = fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     val root = StoreCommit.readableRoot(fs, dir)
     StoreCommit.committedBatchReadable(fs, new Path(root, "tombstones"))
   }
@@ -161,28 +158,26 @@ object SignatureStore {
       spark: SparkSession, sigs: DataFrame, storeDir: String,
       idCol: String = "doc_id"): Unit = {
     val dir = new Path(storeDir)
-    val fs = fsOf(spark, dir)
-    writerRoot(fs, dir)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    val tombstones = tombstonesOf(spark, storeDir, idCol)
-    val batch = StoreCommit.committedBatch(fs, tombDir(dir)) // carry the cursor
-    BucketedRuns.withBucket(
-        sigs.join(broadcast(tombstones.select(idCol)), Seq(idCol), "left_anti"),
-        idCol, Buckets)
-      // one task per bucket -> ONE base file per bucket dir (Monitoring's
-      // per-bucket replacement for a whole-store coalesce)
-      .repartition(col(BucketedRuns.BucketCol))
-      .write.partitionBy(BucketedRuns.BucketCol)
-      .mode(SaveMode.Overwrite).parquet(s"$tmp/sigs")
-    // a bucket with no rows still needs its dir so later appends/compactions
-    // find a swap target parent
-    (0 until Buckets).foreach(k =>
-      fs.mkdirs(BucketedRuns.bucketDir(new Path(s"$tmp/sigs"), k)))
-    tombstones.select(idCol)
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/tombstones")
-    if (batch >= 0) StoreCommit.writeMeta(fs, new Path(s"$tmp/tombstones"), batch)
-    StoreCommit.swap(fs, dir, tmp)
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.publish(fs, dir) { tmp =>
+      val tombstones = tombstonesOf(spark, storeDir, idCol)
+      val batch = StoreCommit.committedBatch(fs, tombDir(dir)) // carry the cursor
+      BucketedRuns.withBucket(
+          sigs.join(broadcast(tombstones.select(idCol)), Seq(idCol), "left_anti"),
+          idCol, Buckets)
+        // one task per bucket -> ONE base file per bucket dir (Monitoring's
+        // per-bucket replacement for a whole-store coalesce)
+        .repartition(col(BucketedRuns.BucketCol))
+        .write.partitionBy(BucketedRuns.BucketCol)
+        .mode(SaveMode.Overwrite).parquet(s"$tmp/sigs")
+      // a bucket with no rows still needs its dir so later appends/compactions
+      // find a swap target parent
+      (0 until Buckets).foreach(k =>
+        fs.mkdirs(BucketedRuns.bucketDir(new Path(s"$tmp/sigs"), k)))
+      tombstones.select(idCol)
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/tombstones")
+      if (batch >= 0) StoreCommit.writeMeta(fs, new Path(s"$tmp/tombstones"), batch)
+    }
   }
 
   /** Append a delta of signatures — replay-idempotent and
@@ -198,7 +193,7 @@ object SignatureStore {
       spark: SparkSession, sigs: DataFrame, storeDir: String,
       idCol: String = "doc_id", batchId: Option[Long] = None): Unit = {
     val dir = new Path(storeDir)
-    val fs = fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     writerRoot(fs, dir)
     requireBucketed(fs, dir, "append")
     val committed = StoreCommit.committedBatch(fs, tombDir(dir))
@@ -237,24 +232,23 @@ object SignatureStore {
     val touched = BucketedRuns.publishDelta(spark, fs, dir, sigsRoot(dir),
       BucketedRuns.withBucket(fresh, idCol, Buckets), thisBatch, Buckets)
     if (touched.isEmpty && batchId.isEmpty) return // ad-hoc replay: nothing new
-    // COMMIT POINT: the tombstones swap moves the cursor atomically
-    val tt = new Path(dir.getParent, s".${dir.getName}.tombs")
-    fs.delete(tt, true)
-    tombstones.select(idCol).write.mode(SaveMode.Overwrite).parquet(tt.toString)
-    StoreCommit.writeMeta(fs, tt, thisBatch)
-    // stamp the ad-hoc-cursor marker atomically with the cursor. The marker
-    // is STICKY: once ANY ad-hoc append has advanced this store's cursor,
-    // a later batch-stamped append must carry it forward — clearing it here
-    // would let a still-unapplied lower batchId slip past the mixing guard
-    // above as a silent "replay" (r16 ADVICE). Only build()'s whole-root
-    // swap retires the marker.
-    if (batchId.isEmpty || fs.exists(new Path(tombDir(dir), AdhocMarker)))
-      fs.create(new Path(tt, AdhocMarker), true).close()
-    StoreCommit.swap(fs, tombDir(dir), tt)
+    // COMMIT POINT: the tombstones publish moves the cursor atomically
+    StoreCommit.publish(fs, tombDir(dir)) { tt =>
+      tombstones.select(idCol).write.mode(SaveMode.Overwrite).parquet(tt.toString)
+      StoreCommit.writeMeta(fs, tt, thisBatch)
+      // stamp the ad-hoc-cursor marker atomically with the cursor. The marker
+      // is STICKY: once ANY ad-hoc append has advanced this store's cursor,
+      // a later batch-stamped append must carry it forward — clearing it here
+      // would let a still-unapplied lower batchId slip past the mixing guard
+      // above as a silent "replay" (r16 ADVICE). Only build()'s whole-root
+      // swap retires the marker.
+      if (batchId.isEmpty || fs.exists(new Path(tombDir(dir), AdhocMarker)))
+        fs.create(new Path(tt, AdhocMarker), true).close()
+    }
     // maintenance AFTER the commit (so a replayed batch can never observe
     // its delta file compacted away): fold buckets over the threshold
     touched.foreach(k =>
-      BucketedRuns.compactIfNeeded(spark, fs, dir, sigsRoot(dir), k, CompactAt))
+      BucketedRuns.compactIfNeeded(spark, fs, sigsRoot(dir), k, CompactAt))
   }
 
   /** GDPR erase: drop the ids' signature rows and persist the ids as
@@ -273,21 +267,20 @@ object SignatureStore {
       idCol: String = "doc_id"): Long = {
     import spark.implicits._
     val dir = new Path(storeDir)
-    val fs = fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     writerRoot(fs, dir)
     requireBucketed(fs, dir, "delete")
     val requested = ids.toDF(idCol)
     // pin first: tombstones swap (cursor AND ad-hoc marker carried through)
     val committed = StoreCommit.committedBatch(fs, tombDir(dir))
     val adhocCursor = fs.exists(new Path(tombDir(dir), AdhocMarker))
-    val tt = new Path(dir.getParent, s".${dir.getName}.tombs")
-    fs.delete(tt, true)
-    tombstonesOf(spark, storeDir, idCol).select(idCol)
-      .unionByName(requested).distinct()
-      .write.mode(SaveMode.Overwrite).parquet(tt.toString)
-    if (committed >= 0) StoreCommit.writeMeta(fs, tt, committed)
-    if (adhocCursor) fs.create(new Path(tt, AdhocMarker), true).close()
-    StoreCommit.swap(fs, tombDir(dir), tt)
+    StoreCommit.publish(fs, tombDir(dir)) { tt =>
+      tombstonesOf(spark, storeDir, idCol).select(idCol)
+        .unionByName(requested).distinct()
+        .write.mode(SaveMode.Overwrite).parquet(tt.toString)
+      if (committed >= 0) StoreCommit.writeMeta(fs, tt, committed)
+      if (adhocCursor) fs.create(new Path(tt, AdhocMarker), true).close()
+    }
     // drop any uncommitted orphan delta files first, so the per-bucket
     // rewrite below can never fold a dead publish's rows into a base run
     BucketedRuns.scrubUncommitted(fs, sigsRoot(dir), Buckets, committed)
@@ -308,7 +301,7 @@ object SignatureStore {
           val dead = stored.join(broadcast(requested), Seq(idCol), "left_semi").count()
           if (dead > 0) {
             nDead += dead
-            BucketedRuns.rewriteBucket(spark, fs, dir, sigsRoot(dir), k,
+            BucketedRuns.rewriteBucket(fs, sigsRoot(dir), k,
               stored.join(broadcast(requested), Seq(idCol), "left_anti"))
           }
         } finally stored.unpersist()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
@@ -78,15 +78,10 @@ object Sketches {
 
   // ---- persisted streaming sketch (the top-talkers monitor state) -------
 
-  // store plumbing lives in [[StoreCommit]] (shared swap/recover/cursor)
-  private def fsOf(spark: SparkSession, dir: Path) = StoreCommit.fsOf(spark, dir)
-  private def committedBatch(fs: FileSystem, dir: Path) = StoreCommit.committedBatch(fs, dir)
-  private def atomicSwap(fs: FileSystem, dir: Path, tmp: Path) = StoreCommit.swap(fs, dir, tmp)
-
   /** The stored MG summary as (key, cnt) rows (empty if never committed). */
   def readSketch(spark: SparkSession, storeDir: String): Map[Long, Long] = {
     val dir = new Path(s"$storeDir/sketch")
-    val fs = fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     val src = StoreCommit.readableRoot(fs, dir) // non-mutating: see StoreCommit
     if (!fs.exists(src)) Map.empty
     else spark.read.parquet(src.toString)
@@ -116,7 +111,7 @@ object Sketches {
   /** The stored CM cell table (empty if never committed). */
   def readCountMin(spark: SparkSession, storeDir: String): DataFrame = {
     val dir = new Path(s"$storeDir/cm")
-    val fs = fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     val src = StoreCommit.readableRoot(fs, dir) // non-mutating: see StoreCommit
     if (fs.exists(src)) spark.read.parquet(src.toString)
     else spark.range(0).select(lit(0).as("j"), lit(0L).as("c"), lit(0L).as("cell"))
@@ -131,16 +126,15 @@ object Sketches {
   def updateStoredCountMin(
       spark: SparkSession, keys: DataFrame, storeDir: String, batchId: Long): Unit = {
     val dir = new Path(s"$storeDir/cm")
-    val fs = fsOf(spark, dir)
-    if (batchId <= committedBatch(fs, dir)) return // crash replay: already folded
+    val fs = StoreCommit.fsOf(spark, dir)
+    if (batchId <= StoreCommit.committedBatch(fs, dir)) return // crash replay: already folded
     val merged = readCountMin(spark, storeDir)
       .unionByName(countMinCells(keys))
       .groupBy("j", "c").agg(sum("cell").as("cell"))
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    merged.coalesce(1).write.parquet(tmp.toString)
-    StoreCommit.writeMeta(fs, tmp, batchId)
-    atomicSwap(fs, dir, tmp)
+    StoreCommit.publish(fs, dir) { tmp =>
+      merged.coalesce(1).write.parquet(tmp.toString)
+      StoreCommit.writeMeta(fs, tmp, batchId)
+    }
   }
 
   /** KMV (k-minimum-values / bottom-k) sketch of a (single long-column)
@@ -167,7 +161,7 @@ object Sketches {
   /** The stored KMV sketch (empty if never committed). */
   def readKmv(spark: SparkSession, storeDir: String): DataFrame = {
     val dir = new Path(s"$storeDir/kmv")
-    val fs = fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     val src = StoreCommit.readableRoot(fs, dir) // non-mutating: see StoreCommit
     if (fs.exists(src)) spark.read.parquet(src.toString)
     else spark.range(0).select(lit(0L).as("h"), lit(0L).as("sample_key"))
@@ -181,17 +175,16 @@ object Sketches {
       spark: SparkSession, keys: DataFrame, storeDir: String,
       k: Int, batchId: Long): Unit = {
     val dir = new Path(s"$storeDir/kmv")
-    val fs = fsOf(spark, dir)
-    if (batchId <= committedBatch(fs, dir)) return // crash replay: already folded
+    val fs = StoreCommit.fsOf(spark, dir)
+    if (batchId <= StoreCommit.committedBatch(fs, dir)) return // crash replay: already folded
     val merged = readKmv(spark, storeDir)
       .unionByName(kmvSketch(keys, k))
       .groupBy("h").agg(min("sample_key").as("sample_key"))
       .orderBy("h").limit(k)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    merged.coalesce(1).write.parquet(tmp.toString)
-    StoreCommit.writeMeta(fs, tmp, batchId)
-    atomicSwap(fs, dir, tmp)
+    StoreCommit.publish(fs, dir) { tmp =>
+      merged.coalesce(1).write.parquet(tmp.toString)
+      StoreCommit.writeMeta(fs, tmp, batchId)
+    }
   }
 
   /** Fold one micro-batch of keys into the stored MG summary — the
@@ -205,14 +198,13 @@ object Sketches {
       spark: SparkSession, keys: DataFrame, storeDir: String,
       k: Int, batchId: Long): Unit = {
     val dir = new Path(s"$storeDir/sketch")
-    val fs = fsOf(spark, dir)
-    if (batchId <= committedBatch(fs, dir)) return // crash replay: already folded
+    val fs = StoreCommit.fsOf(spark, dir)
+    if (batchId <= StoreCommit.committedBatch(fs, dir)) return // crash replay: already folded
     val merged = mergeMisraGries(readSketch(spark, storeDir), summarize(keys, k), k)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
     import spark.implicits._
-    merged.toSeq.toDF("key", "cnt").coalesce(1).write.parquet(tmp.toString)
-    StoreCommit.writeMeta(fs, tmp, batchId)
-    atomicSwap(fs, dir, tmp)
+    StoreCommit.publish(fs, dir) { tmp =>
+      merged.toSeq.toDF("key", "cnt").coalesce(1).write.parquet(tmp.toString)
+      StoreCommit.writeMeta(fs, tmp, batchId)
+    }
   }
 }

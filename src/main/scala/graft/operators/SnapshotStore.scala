@@ -147,11 +147,9 @@ object SnapshotStore {
       snapshot: DataFrame): Unit = {
     val dir = new Path(storeDir)
     val fs = StoreCommit.fsOf(spark, dir)
-    StoreCommit.recover(fs, dir)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    snapshot.write.mode(SaveMode.Overwrite).parquet(s"$tmp/snapshot")
-    StoreCommit.writeMeta(fs, tmp, batchId)
-    StoreCommit.swap(fs, dir, tmp)
+    StoreCommit.publish(fs, dir) { tmp =>
+      snapshot.write.mode(SaveMode.Overwrite).parquet(s"$tmp/snapshot")
+      StoreCommit.writeMeta(fs, tmp, batchId)
+    }
   }
 }

@@ -3,23 +3,32 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** The persisted-store commit discipline shared by every incremental store
-  * (monitor ledgers, sketches, hourly tables): build the new version in a
-  * dot-prefixed `.building` sibling (invisible to partition discovery),
-  * write the committed micro-batch id INSIDE it (so store content and
-  * replay cursor move as one), then publish via two renames through a
-  * `.previous` aside.
+/** The one publish protocol of every persisted store that rewrites itself
+  * in place (monitor ledgers, sketches, vector and pHash indexes, LM and
+  * tokenizer artifacts, merged/compacted/clustered lake partitions):
   *
-  * Plain renames cannot atomically exchange two directories, so there is an
-  * unavoidable instant between "dir moved aside" and "tmp renamed in" where
-  * the store path is ABSENT. [[recover]] closes that window: every reader
-  * and every replay-guard check first restores the aside if the main dir is
-  * missing — the same crash discipline [[Compaction]]/[[Zorder]] use for
-  * their rewrite swaps. Before this was factored out, six near-identical
-  * copies of the swap existed and NONE of the monitor stores recovered the
-  * aside, so a crash inside the window silently reset the store to empty
-  * and the next fold re-counted from zero.
-  */
+  *   1. [[recover]] the store (a crash inside a previous swap window);
+  *   2. delete a stale stage dir `.<name>.building` (a crashed build);
+  *   3. write the new version into that stage — dot-prefixed, so partition
+  *      discovery never lists it — including the committed micro-batch id
+  *      ([[writeMeta]]) where the store has a replay cursor, so content and
+  *      cursor move as one;
+  *   4. [[swap]]: move the live dir to the aside `.<name>.previous`, rename
+  *      the stage in, delete the aside.
+  *
+  * [[publish]] runs all four; callers only say what the stage holds. Plain
+  * renames cannot atomically exchange two directories, so between the two
+  * renames of step 4 the store path is ABSENT. A crash there leaves the
+  * last committed version whole in the aside: writers restore it in step
+  * 1, readers serve it in place through [[readableRoot]] without renaming
+  * anything.
+  *
+  * Renames outside this object are deliberate exceptions, none of which
+  * republishes a store: `Retention.expirePartition` hides a partition
+  * under a `.expiring` tomb that is swept, never restored;
+  * `BucketedRuns.publishDelta` renames immutable delta files in under
+  * deterministic names and its compactions name their base files; and
+  * `ReplayGuard.advance` republishes a mark whose loss is harmless. */
 object StoreCommit {
 
   /** '_' prefix: invisible to Spark's parquet FileIndex, so the replay
@@ -29,7 +38,9 @@ object StoreCommit {
   def fsOf(spark: SparkSession, dir: Path): FileSystem =
     FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
 
-  private def asideOf(dir: Path) = new Path(dir.getParent, s".${dir.getName}.previous")
+  private def stageOf(dir: Path) = new Path(dir.getParent, s".${dir.getName}.building")
+
+  private[graft] def asideOf(dir: Path) = new Path(dir.getParent, s".${dir.getName}.previous")
 
   /** Crash restore: if the store dir is absent but the swap aside exists,
     * the process died inside the rename window — put the last committed
@@ -98,6 +109,35 @@ object StoreCommit {
     val out = fs.create(new Path(dir, MetaFile), true)
     try out.write(batchId.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+  }
+
+  /** Publish a new version of the store at `dir`: recover, clear a stale
+    * stage, let `stage` write the new version into the stage dir it is
+    * handed, then [[swap]] it in. `stage` may read the store: it runs after
+    * the recovery, against the live dir. Early exits (replay cursors,
+    * nothing-to-do checks) belong BEFORE the call — once `stage` returns,
+    * the stage is published. */
+  def publish(fs: FileSystem, dir: Path)(stage: Path => Unit): Unit = {
+    recover(fs, dir)
+    val tmp = stageOf(dir)
+    fs.delete(tmp, true)
+    stage(tmp)
+    swap(fs, dir, tmp)
+  }
+
+  /** [[publish]] for sibling stores `parent/<name>` that ONE job stages
+    * together (a `partitionBy` write whose subdirs are the names): `stage`
+    * writes `<tmp>/<name>` for every name, then each swaps in on its own.
+    * A crash between two swaps leaves some stores at the new version, so
+    * each store needs its own replay cursor. */
+  def publishEach(fs: FileSystem, parent: Path, names: Seq[String])(
+      stage: Path => Unit): Unit = {
+    names.foreach(n => recover(fs, new Path(parent, n)))
+    val tmp = stageOf(parent)
+    fs.delete(tmp, true)
+    stage(tmp)
+    names.foreach(n => swap(fs, new Path(parent, n), new Path(tmp, n)))
+    fs.delete(tmp, true)
   }
 
   /** Publish `tmp` as `dir` via the two-rename aside swap. A reader sees

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -114,9 +114,6 @@ object Tokenizer {
       .toSeq.toDF("w", "n", "s")
     (vocab, merges.toSeq)
   }
-
-  private def fsOf(spark: SparkSession, dir: Path): FileSystem =
-    FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
 
   /** UNIGRAM-LM trainer (Kudo 2018, the SentencePiece `--model_type=unigram`
     * family) beside the BPE trainer — Viterbi hard-EM over a seeded
@@ -259,19 +256,17 @@ object Tokenizer {
       minFreq: Long = 1L, maxWordLen: Int = 12): Unit = {
     import spark.implicits._
     val dir = new Path(tokDir)
-    val fs = fsOf(spark, dir)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    val words = docs.select(explode(split(col("text"), " ")).as("w"))
-    val (vocab, wordCounts) =
-      unigramCore(words, maxPieceLen, seedSize, iters, minFreq, maxWordLen)
-    vocab.toSeq.sortBy { case (p, c) => (-c, p) }.toDF("piece", "cnt")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$tmp/vocab")
-    wordCounts.map { case (w, _) =>
-      (w, viterbi(w, vocab, maxPieceLen).length.toLong)
-    }.toSeq.toDF("w", "n_sym")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$tmp/enc")
-    StoreCommit.swap(fs, dir, tmp)
+    StoreCommit.publish(StoreCommit.fsOf(spark, dir), dir) { tmp =>
+      val words = docs.select(explode(split(col("text"), " ")).as("w"))
+      val (vocab, wordCounts) =
+        unigramCore(words, maxPieceLen, seedSize, iters, minFreq, maxWordLen)
+      vocab.toSeq.sortBy { case (p, c) => (-c, p) }.toDF("piece", "cnt")
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$tmp/vocab")
+      wordCounts.map { case (w, _) =>
+        (w, viterbi(w, vocab, maxPieceLen).length.toLong)
+      }.toSeq.toDF("w", "n_sym")
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$tmp/enc")
+    }
   }
 
   /** Tokenize a document table against the STORED unigram artifact (the
@@ -285,9 +280,10 @@ object Tokenizer {
   def unigramEncodeAgainst(
       spark: SparkSession, docs: DataFrame, tokDir: String,
       maxPieceLen: Int = 4, maxWordLen: Int = 12): DataFrame = {
-    val vocab: Map[String, Long] = spark.read.parquet(s"$tokDir/vocab")
+    val root = readRoot(spark, tokDir)
+    val vocab: Map[String, Long] = spark.read.parquet(s"$root/vocab")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val known = spark.read.parquet(s"$tokDir/enc")
+    val known = spark.read.parquet(s"$root/enc")
     val novelCount = udf((w: String) =>
       // a novel word may contain chars the training corpus never saw —
       // those positions can't be covered by the stored vocab, so fall
@@ -320,25 +316,20 @@ object Tokenizer {
       nMerges: Int = 256, minFreq: Long = 1L): Unit = {
     import spark.implicits._
     val dir = new Path(tokDir)
-    val fs = fsOf(spark, dir)
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    val aside = new Path(dir.getParent, s".${dir.getName}.previous")
-    fs.delete(tmp, true)
-    val (vocab, merges) = trainLoop(
-      docs.select(explode(split(col("text"), " ")).as("w")), nMerges, minFreq)
-    merges.toDF("step", "l", "r", "cnt")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/merges")
-    vocab.write.mode(SaveMode.Overwrite).parquet(s"$tmp/vocab")
-    fs.delete(aside, true)
-    if (fs.exists(dir) && !fs.rename(dir, aside))
-      throw new java.io.IOException(s"tokenizer: cannot move $dir aside")
-    if (!fs.rename(tmp, dir)) {
-      val rolledBack = fs.exists(aside) && fs.rename(aside, dir)
-      throw new java.io.IOException(s"tokenizer: swap failed for $dir, " +
-        (if (rolledBack) "rolled back to the previous tokenizer"
-         else s"no previous tokenizer to roll back to (or rollback failed - see $aside)"))
+    StoreCommit.publish(StoreCommit.fsOf(spark, dir), dir) { tmp =>
+      val (vocab, merges) = trainLoop(
+        docs.select(explode(split(col("text"), " ")).as("w")), nMerges, minFreq)
+      merges.toDF("step", "l", "r", "cnt")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/merges")
+      vocab.write.mode(SaveMode.Overwrite).parquet(s"$tmp/vocab")
     }
-    fs.delete(aside, true)
+  }
+
+  /** Non-mutating read-side root of a stored tokenizer: inside a crash
+    * window, the last committed artifact (see [[StoreCommit.readableRoot]]). */
+  private def readRoot(spark: SparkSession, tokDir: String): Path = {
+    val dir = new Path(tokDir)
+    StoreCommit.readableRoot(StoreCommit.fsOf(spark, dir), dir)
   }
 
   /** Tokenize a document table against the STORED artifact — the
@@ -348,10 +339,11 @@ object Tokenizer {
     * merge list (ordered, driver-collected — vocabulary-sized) once per
     * DISTINCT novel word. */
   def encodeAgainst(spark: SparkSession, docs: DataFrame, tokDir: String): DataFrame = {
-    val merges = spark.read.parquet(s"$tokDir/merges")
+    val root = readRoot(spark, tokDir)
+    val merges = spark.read.parquet(s"$root/merges")
       .orderBy("step").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
-    val known = spark.read.parquet(s"$tokDir/vocab")
+    val known = spark.read.parquet(s"$root/vocab")
       .select(col("w"), size(split(col("s"), " ")).cast("long").as("n_sym"))
     val novelCount = udf((w: String) => encodeWord(w, merges).length.toLong)
     val toks = docs

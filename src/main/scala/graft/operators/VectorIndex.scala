@@ -28,11 +28,11 @@ import org.apache.spark.sql.functions._
   * At 100 TB the stored footprint is what matters: `codes` + `cells` are a
   * few bytes per vector (vs 512 for raw doubles), the codebooks are
   * constant-size broadcasts, and a search touches nprobe/NCells of the
-  * codes. The index publishes ATOMICALLY: tables build under a hidden
-  * `.building` sibling, then one rename — searchers see the old index or
-  * the new one, never a half-written mix (same discipline as the lake
-  * maintenance operators). QuantSpec pins that a search served from the
-  * stored index is row-identical to the in-query training path. */
+  * codes. The index publishes ATOMICALLY through [[StoreCommit.publish]]
+  * — searchers see the old index or the new one, never a half-written mix
+  * (same discipline as the lake maintenance operators). QuantSpec pins
+  * that a search served from the stored index is row-identical to the
+  * in-query training path. */
 object VectorIndex {
 
   import graft.queries.QuantQueries._
@@ -46,20 +46,17 @@ object VectorIndex {
   // meta / tombstones plumbing
   // ---------------------------------------------------------------------
 
-  private def fsOf(spark: SparkSession, dir: Path): FileSystem =
-    FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-
   /** Non-mutating read-side root: the index dir, or its crash aside when a
     * swap died mid-window (see [[StoreCommit.readableRoot]] — a READER must
     * never rename; the writers recover the main dir at their own entry). */
   private def readRootOf(spark: SparkSession, indexDir: String): String = {
     val dir = new Path(indexDir)
-    StoreCommit.readableRoot(fsOf(spark, dir), dir).toString
+    StoreCommit.readableRoot(StoreCommit.fsOf(spark, dir), dir).toString
   }
 
   private def readMetaOpt(spark: SparkSession, indexDir: String): Option[Row] = {
     val meta = new Path(readRootOf(spark, indexDir), "meta")
-    if (!fsOf(spark, meta).exists(meta)) None
+    if (!StoreCommit.fsOf(spark, meta).exists(meta)) None
     else spark.read.parquet(meta.toString).collect().headOption
   }
 
@@ -116,8 +113,8 @@ object VectorIndex {
     * purged on a different cadence). Empty frame when none recorded. */
   private def tombstonesOf(spark: SparkSession, indexDir: String): DataFrame = {
     val t0 = new Path(s"$indexDir/tombstones")
-    val t = StoreCommit.readableRoot(fsOf(spark, t0), t0) // non-mutating
-    if (fsOf(spark, t).exists(t)) spark.read.parquet(t.toString)
+    val t = StoreCommit.readableRoot(StoreCommit.fsOf(spark, t0), t0) // non-mutating
+    if (StoreCommit.fsOf(spark, t).exists(t)) spark.read.parquet(t.toString)
     else spark.range(0).select(col("id").as("vec_id"))
   }
 
@@ -135,19 +132,15 @@ object VectorIndex {
     * and index maintenance run on different cadences); dropping the request
     * because no index row matches would let a later append/rebuild index it,
     * reopening the resurrection window tombstones exist to close. Publishes
-    * through a tombstones-scoped aside + rename + rollback swap, so searchers
-    * never see a partial table. */
+    * through a tombstones-scoped [[StoreCommit.publish]], so searchers never
+    * see a partial table. */
   private def persistTombstoneRequests(
       spark: SparkSession, fs: FileSystem, indexDir: String,
       requested: DataFrame): Unit = {
-    val tsDir = new Path(s"$indexDir/tombstones")
-    StoreCommit.recover(fsOf(spark, tsDir), tsDir)
-    val tsTmp = new Path(s"$indexDir/.tombstones.building")
-    fs.delete(tsTmp, true)
-    tombstonesOf(spark, indexDir).select("vec_id")
-      .unionByName(requested.select("vec_id")).distinct()
-      .write.mode(SaveMode.Overwrite).parquet(tsTmp.toString)
-    atomicSwap(fs, tsDir, tsTmp)
+    StoreCommit.publish(fs, new Path(s"$indexDir/tombstones"))(tsTmp =>
+      tombstonesOf(spark, indexDir).select("vec_id")
+        .unionByName(requested.select("vec_id")).distinct()
+        .write.mode(SaveMode.Overwrite).parquet(tsTmp.toString))
   }
 
   /** Drop tombstoned ids from a (vec_id, ...) frame. The tombstone set is
@@ -155,11 +148,6 @@ object VectorIndex {
     * anti-join inside the same stage — free at any corpus size. */
   private def notTombstoned(df: DataFrame, tombstones: DataFrame): DataFrame =
     df.join(broadcast(tombstones.select("vec_id")), Seq("vec_id"), "left_anti")
-
-  /** Atomic publish: move the live index aside, swap the staged one in,
-    * roll back on failure. Tolerates a missing live dir (first build). */
-  private def atomicSwap(fs: FileSystem, dir: Path, tmp: Path): Unit =
-    StoreCommit.swap(fs, dir, tmp) // shared two-rename discipline + recoverable aside
 
   // ---------------------------------------------------------------------
   // build
@@ -178,33 +166,30 @@ object VectorIndex {
       spark: SparkSession, sfDir: String, indexDir: String,
       trainBound: Long = Long.MaxValue): Unit = {
     val dir = new Path(indexDir)
-    val fs = fsOf(spark, dir)
-    StoreCommit.recover(fs, dir) // crash-windowed swap: restore before touching
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    val tombstones = tombstonesOf(spark, indexDir).cache()
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.publish(fs, dir) { tmp =>
+      val tombstones = tombstonesOf(spark, indexDir).cache()
 
-    val e = notTombstoned(
-      normalizedEmbeddings(spark, sfDir).filter(col("vec_id") < trainBound),
-      tombstones).cache()
-    val c2 = trainedCodebook(e).cache()
-    val em = notTombstoned(
-      microEmbeddings(spark, sfDir).filter(col("vec_id") < trainBound), tombstones)
-    val subs = subVectors(em).cache()
-    val pqc1 = pqCodebook(subs, em).cache()
-    val assigned = pqAssign(subs, pqc1).cache()
+      val e = notTombstoned(
+        normalizedEmbeddings(spark, sfDir).filter(col("vec_id") < trainBound),
+        tombstones).cache()
+      val c2 = trainedCodebook(e).cache()
+      val em = notTombstoned(
+        microEmbeddings(spark, sfDir).filter(col("vec_id") < trainBound), tombstones)
+      val subs = subVectors(em).cache()
+      val pqc1 = pqCodebook(subs, em).cache()
+      val assigned = pqAssign(subs, pqc1).cache()
 
-    c2.write.mode(SaveMode.Overwrite).parquet(s"$tmp/coarse")
-    kmeansAssign(e, c2).select(col("vec_id"), col("cent_id").as("cell"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/cells")
-    pqc1.write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
-    assigned.select("vec_id", "m", "cent_id")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-    writeMeta(spark, tmp, assigned, trainBound, FlavorPlain)
-    writeTombstonesIfAny(spark, fs, tmp, tombstones)
-    Seq(e, c2, subs, pqc1, assigned, tombstones).foreach(_.unpersist())
-
-    atomicSwap(fs, dir, tmp)
+      c2.write.mode(SaveMode.Overwrite).parquet(s"$tmp/coarse")
+      kmeansAssign(e, c2).select(col("vec_id"), col("cent_id").as("cell"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/cells")
+      pqc1.write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
+      assigned.select("vec_id", "m", "cent_id")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
+      writeMeta(spark, tmp, assigned, trainBound, FlavorPlain)
+      writeTombstonesIfAny(spark, fs, tmp, tombstones)
+      Seq(e, c2, subs, pqc1, assigned, tombstones).foreach(_.unpersist())
+    }
   }
 
   /** Residual-PQ index build (FAISS `by_residual=true`, its default): same
@@ -219,37 +204,34 @@ object VectorIndex {
       spark: SparkSession, sfDir: String, indexDir: String,
       trainBound: Long = Long.MaxValue): Unit = {
     val dir = new Path(indexDir)
-    val fs = fsOf(spark, dir)
-    StoreCommit.recover(fs, dir) // crash-windowed swap: restore before touching
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    val tombstones = tombstonesOf(spark, indexDir).cache()
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.publish(fs, dir) { tmp =>
+      val tombstones = tombstonesOf(spark, indexDir).cache()
 
-    val e = notTombstoned(
-      normalizedEmbeddings(spark, sfDir).filter(col("vec_id") < trainBound),
-      tombstones).cache()
-    val c2 = trainedCodebook(e).cache()
-    val cells = kmeansAssign(e, c2).select(col("vec_id"), col("cent_id").as("cell")).cache()
-    val em = notTombstoned(
-      microEmbeddings(spark, sfDir).filter(col("vec_id") < trainBound), tombstones)
-    val resid = em.join(cells, "vec_id")
-      .join(broadcast(c2.select(col("cent_id").as("cell"), col("cmm"))), "cell")
-      .select(col("vec_id"), zip_with(col("xm"), col("cmm"), (x, c) => x - c).as("xm"))
-      .cache()
-    val subs = subVectors(resid).cache()
-    val pqc1 = pqCodebook(subs, resid).cache()
-    val assigned = pqAssign(subs, pqc1).cache()
+      val e = notTombstoned(
+        normalizedEmbeddings(spark, sfDir).filter(col("vec_id") < trainBound),
+        tombstones).cache()
+      val c2 = trainedCodebook(e).cache()
+      val cells = kmeansAssign(e, c2).select(col("vec_id"), col("cent_id").as("cell")).cache()
+      val em = notTombstoned(
+        microEmbeddings(spark, sfDir).filter(col("vec_id") < trainBound), tombstones)
+      val resid = em.join(cells, "vec_id")
+        .join(broadcast(c2.select(col("cent_id").as("cell"), col("cmm"))), "cell")
+        .select(col("vec_id"), zip_with(col("xm"), col("cmm"), (x, c) => x - c).as("xm"))
+        .cache()
+      val subs = subVectors(resid).cache()
+      val pqc1 = pqCodebook(subs, resid).cache()
+      val assigned = pqAssign(subs, pqc1).cache()
 
-    c2.write.mode(SaveMode.Overwrite).parquet(s"$tmp/coarse")
-    cells.write.mode(SaveMode.Overwrite).parquet(s"$tmp/cells")
-    pqc1.write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
-    assigned.select("vec_id", "m", "cent_id")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-    writeMeta(spark, tmp, assigned, trainBound, FlavorResidual)
-    writeTombstonesIfAny(spark, fs, tmp, tombstones)
-    Seq(e, c2, cells, resid, subs, pqc1, assigned, tombstones).foreach(_.unpersist())
-
-    atomicSwap(fs, dir, tmp)
+      c2.write.mode(SaveMode.Overwrite).parquet(s"$tmp/coarse")
+      cells.write.mode(SaveMode.Overwrite).parquet(s"$tmp/cells")
+      pqc1.write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
+      assigned.select("vec_id", "m", "cent_id")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
+      writeMeta(spark, tmp, assigned, trainBound, FlavorResidual)
+      writeTombstonesIfAny(spark, fs, tmp, tombstones)
+      Seq(e, c2, cells, resid, subs, pqc1, assigned, tombstones).foreach(_.unpersist())
+    }
   }
 
   /** One bounded collect over the already-cached code assignment: the
@@ -311,46 +293,42 @@ object VectorIndex {
   def appendIvfPqRows(
       spark: SparkSession, rows: DataFrame, indexDir: String, minVecId: Long): Unit = {
     val dir = new Path(indexDir)
-    val fs = fsOf(spark, dir)
-    StoreCommit.recover(fs, dir) // crash-windowed swap: restore before touching
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.publish(fs, dir) { tmp =>
+      val flavor = flavorOf(spark, indexDir)
+      val tombstones = tombstonesOf(spark, indexDir).cache()
+      val coarse = spark.read.parquet(s"$indexDir/coarse").cache()
+      val pqc1 = spark.read.parquet(s"$indexDir/pq_codebook").cache()
+      // idempotent replay guard: if a crash landed AFTER the publish but before
+      // the caller observed it, re-running the same append must not union the
+      // delta's rows in twice (duplicate codes double ADC sums and corrupt
+      // rankings) — the old side keeps only rows below the delta boundary
+      val oldCells = spark.read.parquet(s"$indexDir/cells").filter(col("vec_id") < minVecId)
+      val oldCodes = spark.read.parquet(s"$indexDir/codes").filter(col("vec_id") < minVecId)
 
-    val flavor = flavorOf(spark, indexDir)
-    val tombstones = tombstonesOf(spark, indexDir).cache()
-    val coarse = spark.read.parquet(s"$indexDir/coarse").cache()
-    val pqc1 = spark.read.parquet(s"$indexDir/pq_codebook").cache()
-    // idempotent replay guard: if a crash landed AFTER the publish but before
-    // the caller observed it, re-running the same append must not union the
-    // delta's rows in twice (duplicate codes double ADC sums and corrupt
-    // rankings) — the old side keeps only rows below the delta boundary
-    val oldCells = spark.read.parquet(s"$indexDir/cells").filter(col("vec_id") < minVecId)
-    val oldCodes = spark.read.parquet(s"$indexDir/codes").filter(col("vec_id") < minVecId)
+      val e = notTombstoned(
+        normalizedEmbeddingRows(rows).filter(col("vec_id") >= minVecId), tombstones)
+      val newCells =
+        kmeansAssign(e, coarse).select(col("vec_id"), col("cent_id").as("cell")).cache()
+      val em = notTombstoned(
+        microEmbeddingRows(rows).filter(col("vec_id") >= minVecId), tombstones)
+      val subs = flavor match {
+        case FlavorResidual =>
+          subVectors(em.join(newCells, "vec_id")
+            .join(broadcast(coarse.select(col("cent_id").as("cell"), col("cmm"))), "cell")
+            .select(col("vec_id"), zip_with(col("xm"), col("cmm"), (x, c) => x - c).as("xm")))
+        case _ => subVectors(em)
+      }
+      val newCodes = pqAssign(subs, pqc1).select("vec_id", "m", "cent_id")
 
-    val e = notTombstoned(
-      normalizedEmbeddingRows(rows).filter(col("vec_id") >= minVecId), tombstones)
-    val newCells =
-      kmeansAssign(e, coarse).select(col("vec_id"), col("cent_id").as("cell")).cache()
-    val em = notTombstoned(
-      microEmbeddingRows(rows).filter(col("vec_id") >= minVecId), tombstones)
-    val subs = flavor match {
-      case FlavorResidual =>
-        subVectors(em.join(newCells, "vec_id")
-          .join(broadcast(coarse.select(col("cent_id").as("cell"), col("cmm"))), "cell")
-          .select(col("vec_id"), zip_with(col("xm"), col("cmm"), (x, c) => x - c).as("xm")))
-      case _ => subVectors(em)
+      coarse.write.mode(SaveMode.Overwrite).parquet(s"$tmp/coarse")
+      pqc1.write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
+      oldCells.unionByName(newCells).write.mode(SaveMode.Overwrite).parquet(s"$tmp/cells")
+      oldCodes.unionByName(newCodes).write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
+      copyMetaIfPresent(spark, fs, indexDir, tmp)
+      copyTombstonesIfPresent(spark, fs, indexDir, tmp)
+      Seq(coarse, pqc1, newCells, tombstones).foreach(_.unpersist())
     }
-    val newCodes = pqAssign(subs, pqc1).select("vec_id", "m", "cent_id")
-
-    coarse.write.mode(SaveMode.Overwrite).parquet(s"$tmp/coarse")
-    pqc1.write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
-    oldCells.unionByName(newCells).write.mode(SaveMode.Overwrite).parquet(s"$tmp/cells")
-    oldCodes.unionByName(newCodes).write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-    copyMetaIfPresent(spark, fs, indexDir, tmp)
-    copyTombstonesIfPresent(spark, fs, indexDir, tmp)
-    Seq(coarse, pqc1, newCells, tombstones).foreach(_.unpersist())
-
-    atomicSwap(fs, dir, tmp)
   }
 
   // ---------------------------------------------------------------------
@@ -617,31 +595,27 @@ object VectorIndex {
       spark: SparkSession, indexDir: String, vecIds: Seq[Long]): Long = {
     import spark.implicits._
     val dir = new Path(indexDir)
-    val fs = fsOf(spark, dir)
-    StoreCommit.recover(fs, dir) // crash-windowed swap: restore before touching
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.recover(fs, dir) // before the nDead read and the tombstone-only path
     val requested = vecIds.toDF("vec_id")
     val oldCells = spark.read.parquet(s"$indexDir/cells")
     val nDead = oldCells.join(broadcast(requested), Seq("vec_id"), "left_semi").count()
     if (nDead == 0L) { persistTombstoneRequests(spark, fs, indexDir, requested); return 0L }
-
-    spark.read.parquet(s"$indexDir/coarse")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/coarse")
-    spark.read.parquet(s"$indexDir/pq_codebook")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
-    oldCells.join(broadcast(requested), Seq("vec_id"), "left_anti")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/cells")
-    spark.read.parquet(s"$indexDir/codes")
-      .join(broadcast(requested), Seq("vec_id"), "left_anti")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-    copyMetaIfPresent(spark, fs, indexDir, tmp)
-    tombstonesOf(spark, indexDir).select("vec_id").unionByName(requested)
-      .distinct()
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/tombstones")
-
-    atomicSwap(fs, dir, tmp)
+    StoreCommit.publish(fs, dir) { tmp =>
+      spark.read.parquet(s"$indexDir/coarse")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/coarse")
+      spark.read.parquet(s"$indexDir/pq_codebook")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
+      oldCells.join(broadcast(requested), Seq("vec_id"), "left_anti")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/cells")
+      spark.read.parquet(s"$indexDir/codes")
+        .join(broadcast(requested), Seq("vec_id"), "left_anti")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
+      copyMetaIfPresent(spark, fs, indexDir, tmp)
+      tombstonesOf(spark, indexDir).select("vec_id").unionByName(requested)
+        .distinct()
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/tombstones")
+    }
     nDead
   }
 
@@ -656,23 +630,19 @@ object VectorIndex {
     * as table compaction. */
   def vacuumIndex(spark: SparkSession, indexDir: String, targetFiles: Int = 4): Unit = {
     val dir = new Path(indexDir)
-    val fs = fsOf(spark, dir)
-    StoreCommit.recover(fs, dir) // crash-windowed swap: restore before touching
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-
-    spark.read.parquet(s"$indexDir/coarse")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/coarse")
-    spark.read.parquet(s"$indexDir/pq_codebook")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
-    spark.read.parquet(s"$indexDir/cells").repartition(targetFiles)
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/cells")
-    spark.read.parquet(s"$indexDir/codes").repartition(targetFiles)
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-    copyMetaIfPresent(spark, fs, indexDir, tmp)
-    copyTombstonesIfPresent(spark, fs, indexDir, tmp)
-
-    atomicSwap(fs, dir, tmp)
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.publish(fs, dir) { tmp =>
+      spark.read.parquet(s"$indexDir/coarse")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/coarse")
+      spark.read.parquet(s"$indexDir/pq_codebook")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
+      spark.read.parquet(s"$indexDir/cells").repartition(targetFiles)
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/cells")
+      spark.read.parquet(s"$indexDir/codes").repartition(targetFiles)
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
+      copyMetaIfPresent(spark, fs, indexDir, tmp)
+      copyTombstonesIfPresent(spark, fs, indexDir, tmp)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -764,26 +734,23 @@ object VectorIndex {
       spark: SparkSession, sfDir: String, indexDir: String,
       bound: Long = Long.MaxValue): Unit = {
     val dir = new Path(indexDir)
-    val fs = fsOf(spark, dir)
-    StoreCommit.recover(fs, dir) // crash-windowed swap: restore before touching
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    val tombstones = tombstonesOf(spark, indexDir).cache()
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.publish(fs, dir) { tmp =>
+      val tombstones = tombstonesOf(spark, indexDir).cache()
 
-    val bits = binaryCodes(notTombstoned(
-      normalizedEmbeddings(spark, sfDir).filter(col("vec_id") < bound), tombstones)).cache()
-    bits.write.mode(SaveMode.Overwrite).parquet(s"$tmp/bits")
-    val effBound = bits.agg(coalesce(max(col("vec_id")) + 1L, lit(0L))).head().getLong(0)
-    spark.range(1).select(
-        lit(effBound).as("train_bound"),
-        lit(FlavorBinary).as("flavor"),
-        lit(0L).as("base_n"),
-        lit(0L).as("base_total_err"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/meta")
-    writeTombstonesIfAny(spark, fs, tmp, tombstones)
-    Seq(bits, tombstones).foreach(_.unpersist())
-
-    atomicSwap(fs, dir, tmp)
+      val bits = binaryCodes(notTombstoned(
+        normalizedEmbeddings(spark, sfDir).filter(col("vec_id") < bound), tombstones)).cache()
+      bits.write.mode(SaveMode.Overwrite).parquet(s"$tmp/bits")
+      val effBound = bits.agg(coalesce(max(col("vec_id")) + 1L, lit(0L))).head().getLong(0)
+      spark.range(1).select(
+          lit(effBound).as("train_bound"),
+          lit(FlavorBinary).as("flavor"),
+          lit(0L).as("base_n"),
+          lit(0L).as("base_total_err"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/meta")
+      writeTombstonesIfAny(spark, fs, tmp, tombstones)
+      Seq(bits, tombstones).foreach(_.unpersist())
+    }
   }
 
   /** Append vectors `vec_id >= minVecId` to a binary index: pack the delta
@@ -802,21 +769,17 @@ object VectorIndex {
       spark: SparkSession, rows: DataFrame, indexDir: String, minVecId: Long): Unit = {
     requireFlavor(spark, indexDir, FlavorBinary, "appendBinary")
     val dir = new Path(indexDir)
-    val fs = fsOf(spark, dir)
-    StoreCommit.recover(fs, dir) // crash-windowed swap: restore before touching
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-
-    val tombstones = tombstonesOf(spark, indexDir).cache()
-    val oldBits = spark.read.parquet(s"$indexDir/bits").filter(col("vec_id") < minVecId)
-    val newBits = binaryCodes(notTombstoned(
-      normalizedEmbeddingRows(rows).filter(col("vec_id") >= minVecId), tombstones))
-    oldBits.unionByName(newBits).write.mode(SaveMode.Overwrite).parquet(s"$tmp/bits")
-    copyMetaIfPresent(spark, fs, indexDir, tmp)
-    writeTombstonesIfAny(spark, fs, tmp, tombstones)
-    tombstones.unpersist()
-
-    atomicSwap(fs, dir, tmp)
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.publish(fs, dir) { tmp =>
+      val tombstones = tombstonesOf(spark, indexDir).cache()
+      val oldBits = spark.read.parquet(s"$indexDir/bits").filter(col("vec_id") < minVecId)
+      val newBits = binaryCodes(notTombstoned(
+        normalizedEmbeddingRows(rows).filter(col("vec_id") >= minVecId), tombstones))
+      oldBits.unionByName(newBits).write.mode(SaveMode.Overwrite).parquet(s"$tmp/bits")
+      copyMetaIfPresent(spark, fs, indexDir, tmp)
+      writeTombstonesIfAny(spark, fs, tmp, tombstones)
+      tombstones.unpersist()
+    }
   }
 
   /** Serve a binary search from the stored `bits` table — row-identical to
@@ -850,31 +813,28 @@ object VectorIndex {
       spark: SparkSession, sfDir: String, indexDir: String,
       bound: Long = Long.MaxValue): Unit = {
     val dir = new Path(indexDir)
-    val fs = fsOf(spark, dir)
-    StoreCommit.recover(fs, dir) // crash-windowed swap: restore before touching
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-    val tombstones = tombstonesOf(spark, indexDir).cache()
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.publish(fs, dir) { tmp =>
+      val tombstones = tombstonesOf(spark, indexDir).cache()
 
-    val e = notTombstoned(
-      normalizedEmbeddings(spark, sfDir).filter(col("vec_id") < bound), tombstones)
-      .select(col("vec_id"), col("emb").as("de"))
-    val calib = sq8Calibration(e.select(col("vec_id"), col("de"), col("de").as("emb")))
-    calib.write.mode(SaveMode.Overwrite).parquet(s"$tmp/calib")
-    val codes = sq8Encode(e, spark.read.parquet(s"$tmp/calib"))
-      .select("vec_id", "qe").cache()
-    codes.write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-    val effBound = codes.agg(coalesce(max(col("vec_id")) + 1L, lit(0L))).head().getLong(0)
-    spark.range(1).select(
-        lit(effBound).as("train_bound"),
-        lit(FlavorSq8).as("flavor"),
-        lit(0L).as("base_n"),
-        lit(0L).as("base_total_err"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/meta")
-    writeTombstonesIfAny(spark, fs, tmp, tombstones)
-    Seq(codes, tombstones).foreach(_.unpersist())
-
-    atomicSwap(fs, dir, tmp)
+      val e = notTombstoned(
+        normalizedEmbeddings(spark, sfDir).filter(col("vec_id") < bound), tombstones)
+        .select(col("vec_id"), col("emb").as("de"))
+      val calib = sq8Calibration(e.select(col("vec_id"), col("de"), col("de").as("emb")))
+      calib.write.mode(SaveMode.Overwrite).parquet(s"$tmp/calib")
+      val codes = sq8Encode(e, spark.read.parquet(s"$tmp/calib"))
+        .select("vec_id", "qe").cache()
+      codes.write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
+      val effBound = codes.agg(coalesce(max(col("vec_id")) + 1L, lit(0L))).head().getLong(0)
+      spark.range(1).select(
+          lit(effBound).as("train_bound"),
+          lit(FlavorSq8).as("flavor"),
+          lit(0L).as("base_n"),
+          lit(0L).as("base_total_err"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/meta")
+      writeTombstonesIfAny(spark, fs, tmp, tombstones)
+      Seq(codes, tombstones).foreach(_.unpersist())
+    }
   }
 
   /** Append vectors `vec_id >= minVecId` to an SQ8 index, encoding them
@@ -894,26 +854,22 @@ object VectorIndex {
       spark: SparkSession, rows: DataFrame, indexDir: String, minVecId: Long): Unit = {
     requireFlavor(spark, indexDir, FlavorSq8, "appendSq8")
     val dir = new Path(indexDir)
-    val fs = fsOf(spark, dir)
-    StoreCommit.recover(fs, dir) // crash-windowed swap: restore before touching
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-
-    val tombstones = tombstonesOf(spark, indexDir).cache()
-    val calib = spark.read.parquet(s"$indexDir/calib")
-    val oldCodes = spark.read.parquet(s"$indexDir/codes").filter(col("vec_id") < minVecId)
-    val newCodes = sq8Encode(
-      notTombstoned(
-        normalizedEmbeddingRows(rows).filter(col("vec_id") >= minVecId), tombstones)
-        .select(col("vec_id"), col("emb").as("de")),
-      calib).select("vec_id", "qe")
-    oldCodes.unionByName(newCodes).write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-    calib.write.mode(SaveMode.Overwrite).parquet(s"$tmp/calib")
-    copyMetaIfPresent(spark, fs, indexDir, tmp)
-    writeTombstonesIfAny(spark, fs, tmp, tombstones)
-    tombstones.unpersist()
-
-    atomicSwap(fs, dir, tmp)
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.publish(fs, dir) { tmp =>
+      val tombstones = tombstonesOf(spark, indexDir).cache()
+      val calib = spark.read.parquet(s"$indexDir/calib")
+      val oldCodes = spark.read.parquet(s"$indexDir/codes").filter(col("vec_id") < minVecId)
+      val newCodes = sq8Encode(
+        notTombstoned(
+          normalizedEmbeddingRows(rows).filter(col("vec_id") >= minVecId), tombstones)
+          .select(col("vec_id"), col("emb").as("de")),
+        calib).select("vec_id", "qe")
+      oldCodes.unionByName(newCodes).write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
+      calib.write.mode(SaveMode.Overwrite).parquet(s"$tmp/calib")
+      copyMetaIfPresent(spark, fs, indexDir, tmp)
+      writeTombstonesIfAny(spark, fs, tmp, tombstones)
+      tombstones.unpersist()
+    }
   }
 
   /** Serve an SQ8 search from the stored tables — row-identical to
@@ -944,26 +900,22 @@ object VectorIndex {
     requireFlavor(spark, indexDir, FlavorSq8, "deleteFromSq8")
     import spark.implicits._
     val dir = new Path(indexDir)
-    val fs = fsOf(spark, dir)
-    StoreCommit.recover(fs, dir) // crash-windowed swap: restore before touching
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.recover(fs, dir) // before the nDead read and the tombstone-only path
     val requested = vecIds.toDF("vec_id")
     val oldCodes = spark.read.parquet(s"$indexDir/codes")
     val nDead = oldCodes.join(broadcast(requested), Seq("vec_id"), "left_semi").count()
     if (nDead == 0L) { persistTombstoneRequests(spark, fs, indexDir, requested); return 0L }
-
-    oldCodes.join(broadcast(requested), Seq("vec_id"), "left_anti")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-    spark.read.parquet(s"$indexDir/calib")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/calib")
-    copyMetaIfPresent(spark, fs, indexDir, tmp)
-    tombstonesOf(spark, indexDir).select("vec_id").unionByName(requested)
-      .distinct()
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/tombstones")
-
-    atomicSwap(fs, dir, tmp)
+    StoreCommit.publish(fs, dir) { tmp =>
+      oldCodes.join(broadcast(requested), Seq("vec_id"), "left_anti")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
+      spark.read.parquet(s"$indexDir/calib")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/calib")
+      copyMetaIfPresent(spark, fs, indexDir, tmp)
+      tombstonesOf(spark, indexDir).select("vec_id").unionByName(requested)
+        .distinct()
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/tombstones")
+    }
     nDead
   }
 
@@ -975,24 +927,20 @@ object VectorIndex {
     requireFlavor(spark, indexDir, FlavorBinary, "deleteFromBinary")
     import spark.implicits._
     val dir = new Path(indexDir)
-    val fs = fsOf(spark, dir)
-    StoreCommit.recover(fs, dir) // crash-windowed swap: restore before touching
-    val tmp = new Path(dir.getParent, s".${dir.getName}.building")
-    fs.delete(tmp, true)
-
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.recover(fs, dir) // before the nDead read and the tombstone-only path
     val requested = vecIds.toDF("vec_id")
     val oldBits = spark.read.parquet(s"$indexDir/bits")
     val nDead = oldBits.join(broadcast(requested), Seq("vec_id"), "left_semi").count()
     if (nDead == 0L) { persistTombstoneRequests(spark, fs, indexDir, requested); return 0L }
-
-    oldBits.join(broadcast(requested), Seq("vec_id"), "left_anti")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/bits")
-    copyMetaIfPresent(spark, fs, indexDir, tmp)
-    tombstonesOf(spark, indexDir).select("vec_id").unionByName(requested)
-      .distinct()
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/tombstones")
-
-    atomicSwap(fs, dir, tmp)
+    StoreCommit.publish(fs, dir) { tmp =>
+      oldBits.join(broadcast(requested), Seq("vec_id"), "left_anti")
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/bits")
+      copyMetaIfPresent(spark, fs, indexDir, tmp)
+      tombstonesOf(spark, indexDir).select("vec_id").unionByName(requested)
+        .distinct()
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/tombstones")
+    }
     nDead
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * The z-value is pure bit-twiddling on built-in column ops (five
   * mask-shift spreads per key — codegen'd, no UDF), the rewrite is a
   * range-repartition + within-partition sort on z (one shuffle, no global
-  * sort), and the swap reuses the crash-safe two-rename discipline, so
+  * sort), and the rewrite publishes through [[StoreCommit.publish]], so
   * readers see the old layout or the new one, never a mix.
   */
 object Zorder {
@@ -54,35 +54,16 @@ object Zorder {
       colB: String,
       targetFiles: Int): (Int, Int) = {
     val path = new Path(partitionDir)
-    val fs = FileSystem.get(path.toUri, spark.sparkContext.hadoopConfiguration)
-    // crash recovery identical to Compaction: restore from the hidden aside
-    val aside = new Path(path.getParent, s".${path.getName}.precluster")
-    if (!fs.exists(path) && fs.exists(aside) && !fs.rename(aside, path))
-      throw new java.io.IOException(s"zorder: cannot restore $path from crash leftover $aside")
+    val fs = StoreCommit.fsOf(spark, path)
+    StoreCommit.recover(fs, path) // a crash inside an earlier swap
     val before = fs.listStatus(path).count(f => f.isFile && !f.getPath.getName.startsWith("_"))
-
-    val tmp = new Path(path.getParent, s".${path.getName}.clustering")
-    fs.delete(tmp, true)
-    fs.delete(aside, true)
-    spark.read.parquet(partitionDir)
-      .withColumn("__z", mortonCode(col(colA), col(colB)))
-      .repartitionByRange(targetFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (!fs.rename(path, aside)) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"zorder: cannot move $path aside")
-    }
-    if (!fs.rename(tmp, path)) {
-      val rolledBack = fs.rename(aside, path)
-      fs.delete(tmp, true)
-      throw new java.io.IOException(
-        s"zorder: swap failed for $path, " +
-          (if (rolledBack) "rolled back to the original layout"
-           else s"ROLLBACK ALSO FAILED - original data preserved at $aside"))
-    }
-    fs.delete(aside, true)
+    StoreCommit.publish(fs, path)(tmp =>
+      spark.read.parquet(partitionDir)
+        .withColumn("__z", mortonCode(col(colA), col(colB)))
+        .repartitionByRange(targetFiles, col("__z"))
+        .sortWithinPartitions("__z")
+        .drop("__z")
+        .write.mode(SaveMode.Overwrite).parquet(tmp.toString))
     val after = fs.listStatus(path).count(f => f.isFile && !f.getPath.getName.startsWith("_"))
     (before, after)
   }

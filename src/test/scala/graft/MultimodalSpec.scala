@@ -317,6 +317,24 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
       "append replay resurrected a tombstoned image hash")
   }
 
+  test("phash index: a rebuild keeps the tombstones, so an erased image stays out") {
+    val d = "/root/testdata/sf0.001"
+    val idx = java.nio.file.Files.createTempDirectory("graft_phrebuild").toString + "/index"
+    val imgs = Multimodal.syntheticImagesDithered(spark, d).filter(col("doc_id") < 64)
+    def ids = spark.read.parquet(s"$idx/hashes").select("doc_id").collect()
+      .map(_.getLong(0)).toSet
+    Multimodal.buildPhashIndex(spark, imgs.filter(col("doc_id") < 48), idx)
+    val victim = 7L
+    assert(Multimodal.deleteFromPhashIndex(spark, idx, Seq(victim)) == 1L)
+    // the corpus still holds the victim's image; the rebuild must not index it
+    Multimodal.buildPhashIndex(spark, imgs.filter(col("doc_id") < 48), idx)
+    assert(!ids.contains(victim), "rebuild resurrected a tombstoned image hash")
+    // ... and must carry the tombstones, or a later append re-admits it
+    Multimodal.appendPhashIndex(spark, imgs, idx)
+    assert(ids == (0L until 64L).toSet - victim,
+      "append after a rebuild resurrected a tombstoned image hash")
+  }
+
   test("JPEG at quality 95: dimensions survive, pHash stays within radius 3 of the PNG twin") {
     val sf = "/root/testdata/sf0.001"
     val png = Multimodal.phashTable(Multimodal.syntheticImagesNoisy(spark, sf))

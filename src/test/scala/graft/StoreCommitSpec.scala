@@ -1,14 +1,16 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
-import graft.operators.StoreCommit
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import graft.operators._
 
 /** Direct pins for the shared persisted-store commit discipline — the
-  * swap/recover/readableRoot/cursor contract every store builds on
-  * (previously exercised only through the stores themselves). */
+  * swap/recover/readableRoot/cursor contract every store builds on — plus
+  * a crash-injection test per store family and a source guard that keeps
+  * every publish going through [[StoreCommit]]. */
 class StoreCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -116,4 +118,187 @@ class StoreCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.operators.SignatureStore.read(spark, dir).count() == 14L * 800)
     assert(retries < reads + 10, "reader mostly failed - not a transient-window pattern")
   }
+  // ---- crash injection per store family ------------------------------
+
+  private def images(ids: Seq[Long]): DataFrame = {
+    val s = spark
+    import s.implicits._
+    ids.map { id =>
+      val px = Array.tabulate(64)(i =>
+        (((id * 2654435761L + i * (2 * id + 7) + i.toLong * i * (id % 13 + 1)) % 250 + 3)
+          & 0xff).toByte)
+      (id, Multimodal.encodeGrayPng(px, 8, 8))
+    }.toDF("doc_id", "media")
+  }
+
+  private def docs(text: String*): DataFrame = {
+    val s = spark
+    import s.implicits._
+    text.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+  }
+
+  private def longs(df: DataFrame, c: String): Set[Long] =
+    df.select(c).collect().map(_.getLong(0)).toSet
+
+  private def idPayload(dir: String): Map[Long, String] =
+    spark.read.parquet(dir).select("id", "payload").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  private def writeTable(dir: String, rows: Seq[(Long, String)], files: Int = 1): Unit = {
+    val s = spark
+    import s.implicits._
+    rows.map { case (id, p) => (id, p, "2026", "01") }
+      .toDF("id", "payload", "year", "month").repartition(files)
+      .write.partitionBy("year", "month").parquet(dir)
+  }
+
+  /** One store family: `build` commits a first version at `dir`; after the
+    * test strands it (moved to its crash aside, as a death between the two
+    * renames of a publish leaves it), `read` must serve the committed
+    * version without renaming anything, then `write` (the family's next
+    * writer) must restore it and publish, and `check` sees the committed
+    * content plus the new delta. */
+  private case class Family(
+      name: String, dir: Path, build: () => Unit, write: () => Unit,
+      check: () => Unit, read: () => Unit = () => ())
+
+  private def families(root: String): Seq[Family] = {
+    val s = spark
+    import s.implicits._
+    def table(name: String) = s"$root/$name"
+    def part(name: String) = new Path(s"${table(name)}/year=2026/month=01")
+    Seq(
+      Family("pHash append", new Path(s"$root/phash_a"),
+        () => Multimodal.buildPhashIndex(spark, images(0L until 8L), s"$root/phash_a"),
+        () => Multimodal.appendPhashIndex(spark, images(8L until 12L), s"$root/phash_a"),
+        () => assert(longs(spark.read.parquet(s"$root/phash_a/hashes"), "doc_id") ==
+          (0L until 12L).toSet),
+        () => assert(Multimodal.scrubImagesAgainstIndex(
+          spark, images(Seq(3L)), s"$root/phash_a").head().getLong(3) >= 1L)),
+      Family("pHash delete", new Path(s"$root/phash_d"),
+        () => Multimodal.buildPhashIndex(spark, images(0L until 8L), s"$root/phash_d"),
+        () => assert(Multimodal.deleteFromPhashIndex(spark, s"$root/phash_d", Seq(3L)) == 1L),
+        () => {
+          assert(longs(spark.read.parquet(s"$root/phash_d/hashes"), "doc_id") ==
+            (0L until 8L).toSet - 3L)
+          assert(longs(spark.read.parquet(s"$root/phash_d/tombstones"), "doc_id") == Set(3L))
+        }),
+      Family("LM", new Path(s"$root/lm"),
+        () => LanguageModel.buildLm(spark, docs("a b c d e f g"), s"$root/lm"),
+        () => LanguageModel.buildLm(spark, docs("p q r s t u v"), s"$root/lm"),
+        () => assert(LanguageModel.lmTables(spark, s"$root/lm").uni
+          .select("w").as[String].collect().toSet == "pqrstuv".map(_.toString).toSet),
+        () => assert(LanguageModel.scoreAgainstLm(spark, docs("a b c d e"), s"$root/lm")
+          .count() == 1L)),
+      Family("tokenizer", new Path(s"$root/tok"),
+        () => Tokenizer.buildTokenizer(spark, docs("banana band"), s"$root/tok", nMerges = 4),
+        () => Tokenizer.buildTokenizer(spark, docs("cocoa cola"), s"$root/tok", nMerges = 4),
+        () => assert(spark.read.parquet(s"$root/tok/vocab").select("w").as[String]
+          .collect().toSet == Set("cocoa", "cola")),
+        () => assert(Tokenizer.encodeAgainst(spark, docs("banana"), s"$root/tok")
+          .count() == 1L)),
+      Family("merge upsert", part("upsert"),
+        () => writeTable(table("upsert"), Seq(1L -> "a", 2L -> "b")),
+        () => Merge.upsertPartitioned(spark, table("upsert"),
+          Seq((2L, "b2", "2026", "01"), (3L, "c", "2026", "01"))
+            .toDF("id", "payload", "year", "month"), "id", Seq("year", "month")),
+        () => assert(idPayload(table("upsert")) == Map(1L -> "a", 2L -> "b2", 3L -> "c"))),
+      Family("merge delete", part("delete"),
+        () => writeTable(table("delete"), Seq(1L -> "a", 2L -> "b", 3L -> "c")),
+        () => assert(Merge.deletePartitioned(spark, table("delete"),
+          Seq((2L, "2026", "01")).toDF("id", "year", "month"), "id", Seq("year", "month"))
+          .map(_._2) == Seq(1L)),
+        () => assert(idPayload(table("delete")) == Map(1L -> "a", 3L -> "c"))),
+      Family("compaction", part("compact"),
+        () => writeTable(table("compact"), (1L to 6L).map(i => i -> s"p$i"), files = 3),
+        () => assert(Compaction.compactPartition(spark, part("compact").toString) == ((3, 1))),
+        () => assert(idPayload(table("compact")) == (1L to 6L).map(i => i -> s"p$i").toMap)),
+      Family("z-order", part("zorder"),
+        () => writeTable(table("zorder"), (1L to 6L).map(i => i -> s"p$i"), files = 3),
+        () => assert(Zorder.clusterPartition(
+          spark, part("zorder").toString, "id", "id", 1) == ((3, 1))),
+        () => assert(idPayload(table("zorder")) == (1L to 6L).map(i => i -> s"p$i").toMap)))
+  }
+
+  test("crash injection: every store family's next writer restores a stranded store and publishes") {
+    val root = s"$base/families"
+    families(root).foreach { f =>
+      val fs = StoreCommit.fsOf(spark, f.dir)
+      val aside = StoreCommit.asideOf(f.dir)
+      f.build()
+      // the crash: the live dir moved to its aside, the new version never arrived
+      assert(fs.rename(f.dir, aside), s"${f.name}: test setup")
+      f.read()
+      assert(!fs.exists(f.dir) && fs.exists(aside), s"${f.name}: a reader renamed the store")
+      f.write()
+      assert(fs.exists(f.dir), s"${f.name}: store absent after the writer")
+      assert(!fs.exists(aside), s"${f.name}: crash aside left behind")
+      f.check()
+    }
+  }
+
+  test("merge delete: a crash between hiding a dying partition and deleting it resurrects nothing") {
+    val s = spark
+    import s.implicits._
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    val table = s"crashfs://$base/erase"
+    writeTable(s"$base/erase", Seq(1L -> "a", 2L -> "b"))
+    CrashFs.armed = true
+    try intercept[java.io.IOException](Merge.deletePartitioned(spark, table,
+      Seq((1L, "2026", "01"), (2L, "2026", "01")).toDF("id", "year", "month"),
+      "id", Seq("year", "month")))
+    finally CrashFs.armed = false
+    // the next write to the partition must not bring the erased rows back
+    Merge.upsertPartitioned(spark, table,
+      Seq((3L, "c", "2026", "01")).toDF("id", "payload", "year", "month"),
+      "id", Seq("year", "month"))
+    assert(idPayload(s"$base/erase") == Map(3L -> "c"))
+  }
+
+  // ---- source guard --------------------------------------------------
+
+  /** Files allowed to rename outside [[StoreCommit]], with how many
+    * `.rename(` calls each may hold and why none of them republishes a
+    * store. */
+  private val RenameAllowList = Map(
+    "Retention.scala" -> (1, "expirePartition: hide-then-delete under a swept, never-restored tomb"),
+    "BucketedRuns.scala" -> (2, "per-file delta publish under deterministic names; base-file naming"),
+    "ReplayGuard.scala" -> (1, "advance: a mark whose loss only costs the fast path"))
+
+  test("guard: every store publish goes through StoreCommit (no stray renames or stage names)") {
+    def sources(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val files = sources(new java.io.File("src/main/scala"))
+      .filterNot(_.getName == "StoreCommit.scala")
+    assert(files.size > 20, "source tree not found - is the working dir the repo root?")
+    def count(f: java.io.File, needle: String): Int = {
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().count(_.contains(needle)) finally src.close()
+    }
+    val renames = files.map(f => f.getName -> count(f, ".rename(")).filter(_._2 > 0).toMap
+    val stray = renames.filter { case (n, c) => RenameAllowList.get(n).forall(_._1 < c) }
+    assert(stray.isEmpty, s"renames outside StoreCommit: $stray - publish through " +
+      "StoreCommit.publish, or add an allow-list entry with its reason")
+    val stages = files.filter(count(_, ".building\"") > 0).map(_.getName)
+    assert(stages.isEmpty, s"hand-computed stage dirs in $stages - use StoreCommit.publish")
+  }
+}
+
+/** Local filesystem under the `crashfs` scheme that, while armed, dies
+  * (throws) on deleting an existing dot-prefixed path — the hidden sibling
+  * a hide-then-delete has just renamed a partition to — as a process death
+  * between that rename and its delete would. */
+class CrashFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
+  override def getScheme: String = "crashfs"
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    if (CrashFs.armed && p.getName.startsWith(".") && exists(p))
+      throw new java.io.IOException(s"injected crash before deleting $p")
+    super.delete(p, recursive)
+  }
+}
+
+object CrashFs {
+  @volatile var armed = false
 }

@@ -340,7 +340,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(afterRows == beforeRows)
   }
 
-  test("compaction recovers a partition stranded in .precompact by a mid-swap crash") {
+  test("compaction recovers a partition stranded in its crash aside by a mid-swap crash") {
     val landing = s"$base/crash_compact"
     Files.createDirectories(Paths.get(landing))
     (0 until 10).foreach { i =>
@@ -351,7 +351,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.pipeline.Ingest.ingestBatch(spark, s"$landing/*.json", out)
     val beforeRows = spark.read.parquet(out).collect().map(_.toString).sorted.toSeq
     // find the leaf partition and simulate a crash between the two renames:
-    // partition moved aside to the hidden .precompact sibling, nothing put back
+    // partition moved to its hidden crash aside, nothing put back
     import org.apache.hadoop.fs.Path
     val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def leaf(p: Path): Path = {
@@ -360,7 +360,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (dirs.isEmpty) p else leaf(dirs.head)
     }
     val part = leaf(new Path(out))
-    val aside = new Path(part.getParent, s".${part.getName}.precompact")
+    val aside = graft.operators.StoreCommit.asideOf(part)
     assert(fs.rename(part, aside), "test setup: move partition aside")
     // pre-fix: listStatus(part) threw FileNotFoundException forever after
     val (before, after) = graft.operators.Compaction.compactPartition(
@@ -841,7 +841,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(out).count() == 1, "table untouched after the reject")
   }
 
-  test("merge recovers a partition stranded in .premerge by a mid-swap crash") {
+  test("merge recovers a partition stranded in its crash aside by a mid-swap crash") {
     val out = s"$base/merge_crash"
     val s = spark
     import s.implicits._
@@ -851,7 +851,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.hadoop.fs.Path
     val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val part = new Path(s"$out/year=2026/month=01")
-    val aside = new Path(part.getParent, s".${part.getName}.premerge")
+    val aside = graft.operators.StoreCommit.asideOf(part)
     assert(fs.rename(part, aside), "test setup: strand the partition")
     val results = graft.operators.Merge.upsertPartitioned(
       spark, out, Seq((2L, "b2", "2026", "01")).toDF("id", "payload", "year", "month"),
