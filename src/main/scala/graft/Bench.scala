@@ -210,7 +210,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     // isolation child runs FIRST, on a genuinely quiet box. Both r9 attempts
     // to run it after the suite read 2-10x high on the eager-construction
@@ -223,16 +222,9 @@ object Bench {
     val isolated: Seq[(String, Option[Double])] =
       isolateFreshJvm(
         isolationCandidates(new java.io.File("."))
-          .filter(SparkEntry.queries.contains), sfDir, cpus)
+          .filter(SparkEntry.queries.contains), sfDir)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.createSession("graft-bench", Engine.localMaster)
     spark.sparkContext.setLogLevel("WARN")
     // Warm up: run the FULL corpus once at the TARGET scale factor so the
     // timed passes measure steady-state execution — whole-stage codegen units
@@ -328,7 +320,7 @@ object Bench {
     val newlySlow = names
       .filter(n => stat(n)._1 >= IsolateThresholdSec && !alreadyIsolated(n))
       .sorted
-    val hotbox = isolateFreshJvm(newlySlow, sfDir, cpus)
+    val hotbox = isolateFreshJvm(newlySlow, sfDir)
 
     // artifact lineage, in-band (r16 verdict task 7): WHO produced this
     // line and from WHICH tree — r16's 214.8-vs-269.1 ambiguity (builder's
@@ -484,7 +476,7 @@ object Bench {
     * 6.5 s quiet number — same code, different JIT temperature). */
   private val IsolationWarmupPasses = 3
   private def isolateFreshJvm(
-      names: Seq[String], sfDir: String, cpus: String): Seq[(String, Option[Double])] = {
+      names: Seq[String], sfDir: String): Seq[(String, Option[Double])] = {
     if (names.isEmpty) return Seq.empty
     val passes = TimedRuns + IsolationWarmupPasses
     try {
@@ -498,8 +490,8 @@ object Bench {
         "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         "-cp", sys.props("java.class.path"),
         "graft.RunOne", names.mkString(","), sfDir, passes.toString, "settle")
+      // the child inherits this environment, so its Engine.cores is ours
       val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
       pb.redirectErrorStream(false)
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       val proc = pb.start()

@@ -11,13 +11,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
 
-  /** Session tuned for the target deployment shape: AQE re-plans skew and
-    * batch-query partition counts at runtime; 64 MB broadcast threshold
-    * catches dimension tables. Per-batch fan-out follows the session's core
-    * count (`defaultParallelism`), because AQE never coalesces a stateful
-    * streaming shuffle. */
-  def createSession(appName: String = "graft", master: String = "local[32]"): SparkSession = {
-    val spark = SparkSession.builder()
+  /** Cores of every entry point's local session: `SPARK_GRAFT_CPUS` when
+    * set, else the machine's core count. The one reader of the variable. */
+  lazy val cores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.trim.toInt)
+
+  /** `local[cores]`: the master Bench, Verify, RunOne and the probes run on. */
+  def localMaster: String = s"local[$cores]"
+
+  /** The one session of every entry point (Bench, Verify, RunOne, the
+    * probes, perfbench, the specs), tuned for the target deployment shape:
+    * AQE re-plans skew and batch-query partition counts at runtime; 64 MB
+    * broadcast threshold catches dimension tables; GraftExtensions installs
+    * the Presto dialect. Per-batch fan-out follows the session's core count
+    * (`defaultParallelism`), because AQE never coalesces a stateful
+    * streaming shuffle.
+    *
+    * `conf` carries settings that must be in place before the session
+    * exists and are the caller's subject (a scheduler mode, a Tungsten page
+    * size, a warehouse dir); a pair passed there wins over the factory's own
+    * value. Runtime settings a caller pins go through `spark.conf.set`. */
+  def createSession(appName: String, master: String, conf: (String, String)*): SparkSession = {
+    val builder = SparkSession.builder()
       .appName(appName)
       .master(master)
       .withExtensions(new graft.functions.GraftExtensions)
@@ -25,15 +40,16 @@ object Engine {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .getOrCreate()
-    val cores = spark.sparkContext.defaultParallelism.toString
+    val spark = conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    val parallelism = spark.sparkContext.defaultParallelism.toString
     // a stateful operator's partition count is fixed in the checkpoint when
     // the query first starts, and every micro-batch commits one state store
-    // and writes up to one sink file per hour partition for each of them
-    spark.conf.set("spark.sql.shuffle.partitions", cores)
+    // and writes up to one sink file per hour partition for each of them;
     // listing more than 32 paths (a file-stream batch re-stats each of its
-    // files) is a Spark job with one task per path up to this cap
-    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.parallelism", cores)
+    // files) is a Spark job with one task per path up to the second cap
+    Seq("spark.sql.shuffle.partitions", "spark.sql.sources.parallelPartitionDiscovery.parallelism")
+      .filterNot(k => conf.exists(_._1 == k))
+      .foreach(spark.conf.set(_, parallelism))
     spark
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: run ONE declared query by name, time N passes, optionally
   * dump the formatted plan. Usage:
   *   sbt "runMain graft.RunOne q_dedup_ngram /root/testdata/sf0.01 3 plan"
@@ -12,15 +10,7 @@ object RunOne {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val runs = if (args.length > 2) args(2).toInt else 1
     val showPlan = args.contains("plan")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.createSession("graft-runone", Engine.localMaster)
     spark.sparkContext.setLogLevel("WARN")
     // comma-separated names run sequentially in ONE JVM — the shape needed
     // to reproduce bench cross-talk (query B timed after query A has warmed

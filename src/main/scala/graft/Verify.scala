@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,14 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated query names for a targeted re-check
     val only = if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.createSession("graft-verify", Engine.localMaster)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()

@@ -101,6 +101,7 @@ object Merge {
         .cache()
       try {
         StoreCommit.recover(fs, part) // a crash inside an earlier swap
+        Retention.sweepTomb(fs, part) // ... or inside an earlier erase
         val (merged, replaced) =
           if (!fs.exists(part)) (u, 0L) // brand-new partition
           else {
@@ -140,6 +141,7 @@ object Merge {
         .select(idCol).distinct().cache()
       try {
         StoreCommit.recover(fs, part)
+        Retention.sweepTomb(fs, part)
         if (!fs.exists(part)) None
         else {
           val old = spark.read.parquet(part.toString)

@@ -30,6 +30,12 @@ object Retention {
   /** Suffix for the hidden rename-target; also the crash-leftover marker. */
   private def expiringSibling(p: Path) = new Path(p.getParent, s".${p.getName}.expiring")
 
+  /** Delete the tomb a crash between hide and delete left beside one
+    * partition. Every writer of the partition sweeps it before touching the
+    * partition, so an erasure's rows do not outlive the next write. */
+  private[graft] def sweepTomb(fs: FileSystem, partition: Path): Unit =
+    fs.delete(expiringSibling(partition), true)
+
   /** Expire one partition directory: rename aside (atomic hide), then
     * delete. Idempotent — a missing partition is a no-op (another run, or
     * the crash-sweep, already took it). */
@@ -37,7 +43,7 @@ object Retention {
     val path = new Path(partitionDir)
     val fs = FileSystem.get(path.toUri, spark.sparkContext.hadoopConfiguration)
     val tomb = expiringSibling(path)
-    fs.delete(tomb, true) // stale leftover from a previously crashed run
+    sweepTomb(fs, path)
     if (!fs.exists(path)) return false
     if (!fs.rename(path, tomb))
       throw new java.io.IOException(s"retention: cannot move $path aside for expiry")

@@ -18,7 +18,11 @@ import graft.json.{JLong, JString}
   */
 object PipelineQueries {
 
-  private val SamplesGlob = "/root/reference/lambdas/tests/samples/*.json"
+  /** The five reference sample events (reconstructions, see the README
+    * there), relative to the repository root that sbt runs from. Every
+    * reader of the samples goes through this path. */
+  val SamplesDir = "src/test/resources/samples"
+  private val SamplesGlob = s"$SamplesDir/*.json"
   private val EventsDir = "/tmp/graft_events"
 
   // once per JVM: Verify/Bench run many queries over the same ingest output.

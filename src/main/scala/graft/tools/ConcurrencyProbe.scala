@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   * own warmup and serial control.
   *
   * What good looks like: concurrent wall well under the serial total
-  * (idle-core recovery — local[32] rarely saturates on one small query),
+  * (idle-core recovery — many cores rarely saturate on one small query),
   * with per-query inflation bounded (no query's wall explodes because a
   * co-tenant holds the driver). A query whose concurrent wall balloons
   * past the suite total is the local signature of a driver bottleneck —
@@ -46,15 +46,8 @@ object ConcurrencyProbe {
   }
 
   private def session(mode: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.scheduler.mode", mode)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.Engine.createSession("graft-concurrency-probe", graft.Engine.localMaster,
+      "spark.scheduler.mode" -> mode)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

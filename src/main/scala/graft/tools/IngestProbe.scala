@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 import java.nio.charset.StandardCharsets
@@ -10,7 +9,7 @@ import java.nio.file.{Files, Paths}
   * parse cascade + plugin pipeline) had golden correctness and a streaming
   * e2e latency number, but NO rows/sec measurement anywhere. This probe
   * synthesizes a landing corpus from the five REFERENCE sample event shapes
-  * (`/root/reference/lambdas/tests/samples/` — cloudtrail, cloudfront,
+  * (`PipelineQueries.SamplesDir` — cloudtrail, cloudfront,
   * gsuite, syslog, vpc-flow), each landing file a `Records[]` batch of one
   * shape (the Firehose/S3 shape the reference ingests), and measures:
   *
@@ -32,27 +31,19 @@ import java.nio.file.{Files, Paths}
   */
 object IngestProbe {
 
-  private val SampleDir = "/root/reference/lambdas/tests/samples"
-
   def main(args: Array[String]): Unit = {
     val total = args.headOption.map(_.toInt).getOrElse(1000000)
     val perFile = args.lift(1).map(_.toInt).getOrElse(2000)
     val base = args.lift(2).getOrElse("/tmp/graft_ingestprobe")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.createSession("graft-ingest-probe", graft.Engine.localMaster)
     spark.sparkContext.setLogLevel("ERROR")
 
     // ---- landing corpus from the reference sample shapes ----------------
-    val samples = new java.io.File(SampleDir).listFiles().filter(_.getName.endsWith(".json"))
+    val samples = new java.io.File(graft.queries.PipelineQueries.SamplesDir).listFiles().filter(_.getName.endsWith(".json"))
       .sortBy(_.getName)
       .map(f => f.getName.stripSuffix(".json") ->
         new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8).trim)
-    require(samples.nonEmpty, s"no reference samples under $SampleDir")
+    require(samples.nonEmpty, s"no reference samples under ${graft.queries.PipelineQueries.SamplesDir}")
     val landing = Paths.get(base, "landing")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     Files.createDirectories(landing)

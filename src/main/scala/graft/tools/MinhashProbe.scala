@@ -3,7 +3,7 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** r19 optimization-round phase probe for `q_dedup_minhash` (guide §1:
@@ -17,15 +17,7 @@ object MinhashProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val passes = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.createSession("graft-minhash-probe", graft.Engine.localMaster)
     spark.sparkContext.setLogLevel("WARN")
     import graft.queries.DedupQueries._
 

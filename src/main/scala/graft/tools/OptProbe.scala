@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r18 optimization-round micro-probe: isolates the per-row cost of the
@@ -13,13 +12,7 @@ object OptProbe {
   def main(args: Array[String]): Unit = {
     val rows = if (args.length > 0) args(0).toLong else 150000L
     val passes = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.createSession("graft-opt-probe", graft.Engine.localMaster)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -157,15 +157,8 @@ object PartitionProbe {
     val base = if (args.length > 0) args(0) else "/tmp/graft_partprobe"
     val counts = (if (args.length > 1) args(1) else "1000,8760")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-partition-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", s"$base-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.createSession("graft-partition-probe", graft.Engine.localMaster,
+      "spark.sql.warehouse.dir" -> s"$base-warehouse")
     spark.sparkContext.setLogLevel("WARN")
     counts.foreach { n =>
       val dir = s"$base/h$n"

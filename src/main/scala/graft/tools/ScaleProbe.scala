@@ -314,17 +314,10 @@ object ScaleProbe {
       System.err.println("[scaleprobe] WARNING: q_join_star probed against the " +
         "UNREPLICATED supplier copy — most fact suppkeys dangle at Nx and the " +
         "wall ratio measures a distorted (mostly-empty) join; use supplier_rep")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match Bench's session: without this the 1x run can broadcast a side
-      // that the 10x run sort-merges, and the wall ratio measures a plan-
-      // shape flip instead of the operator's scaling
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Bench's session: with another broadcast threshold the 1x run can
+    // broadcast a side that the 10x run sort-merges, and the wall ratio
+    // measures a plan-shape flip instead of the operator's scaling
+    val spark = graft.Engine.createSession("graft-scale-probe", graft.Engine.localMaster)
     spark.sparkContext.setLogLevel("WARN")
     val big = s"/tmp/graft_scaleprobe_${n}x"
     buildHeavyCorpus(spark, sfDir, n, big, tables)
@@ -382,13 +375,7 @@ object ScaleProbe {
     // consistent supplier table both engines read.
     val tables = args.lift(4).map(_.split(",").toSet)
       .getOrElse(AllHeavyTables - "supplier" + "supplier_rep" + "nation" + "region")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.createSession("graft-scale-probe", graft.Engine.localMaster)
     spark.sparkContext.setLogLevel("WARN")
     buildHeavyCorpus(spark, sfDir, n, outDir, tables)
     println(s"""{"probe":"corpus_build","replication":$n,"out":"$outDir","tables":"${tables.toSeq.sorted.mkString(",")}"}""")
@@ -410,13 +397,7 @@ object ScaleProbe {
   private def lineageMain(args: Array[String]): Unit = {
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val mults = args.lift(2).map(_.split(",").toSeq.map(_.toInt)).getOrElse(Seq(1, 2, 4))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.createSession("graft-scale-probe", graft.Engine.localMaster)
     spark.sparkContext.setLogLevel("WARN")
     def run(name: String,
         frames: (SparkSession, String, Int) => (DataFrame, Seq[DataFrame]),
@@ -446,13 +427,7 @@ object ScaleProbe {
     if (args.headOption.contains("lineage")) { lineageMain(args); return }
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val n = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.createSession("graft-scale-probe", graft.Engine.localMaster)
     spark.sparkContext.setLogLevel("WARN")
 
     def replicate(df: DataFrame, k: Int): DataFrame =

@@ -23,8 +23,9 @@ import java.util.concurrent.atomic.AtomicLong
   * no green oracle row can excuse, while one that completes by spilling is
   * exhibiting exactly the graceful degradation Tungsten promises.
   *
-  * Spark-facing knobs stay at the bench defaults (32 threads, 32 shuffle
-  * partitions, default spark.memory.fraction) — the probe varies ONLY the
+  * Spark-facing knobs stay at the bench defaults (one thread and one
+  * shuffle partition per core of `Engine.cores`, default
+  * spark.memory.fraction) — the probe varies ONLY the
   * heap, so a pass/fail diff against the 32 GiB bench isolates memory
   * pressure as the cause.
   */
@@ -182,34 +183,35 @@ object SpillProbe {
     val clusterSane = sys.env.get("SPARK_GRAFT_PRESET").contains("cluster-sane")
     def dial(name: String, benchDefault: String, saneDefault: String): String =
       sys.env.getOrElse(name, if (clusterSane) saneDefault else benchDefault)
-    val spark = SparkSession.builder()
+    // every dial's non-preset value is the bench session's own
+    val cores = graft.Engine.cores.toString
+    val spark = graft.Engine.createSession("graft-spill-probe",
       // SPARK_GRAFT_CPUS dials concurrency: heap ÷ threads = per-core
       // memory, the cluster-shape invariant a pressure ladder must be able
       // to hold fixed (6 GiB/32 threads is 0.19 GB/core — below any real
-      // executor; 6 GiB/8 is a plausible tight one)
-      .master(s"local[${dial("SPARK_GRAFT_CPUS", "32", "8")}]")
+      // executor; 6 GiB/8 is a plausible tight one). The preset's 8 is why
+      // this probe reads the variable itself instead of only Engine.cores
+      s"local[${dial("SPARK_GRAFT_CPUS", cores, "8")}]",
       // SPARK_GRAFT_SHUFFLE overrides the bench default: per-task sort/agg
       // state is (rows / shuffle partitions)-bounded, so the partition
       // count is the standard cluster dial this probe must be able to turn
       // to show an operator's pressure behavior is knob-fixable rather
       // than plan-broken (the 100x dup_ngrams certification)
-      .config("spark.sql.shuffle.partitions",
-        dial("SPARK_GRAFT_SHUFFLE", "32", "256"))
+      "spark.sql.shuffle.partitions" -> dial("SPARK_GRAFT_SHUFFLE", cores, "256"),
       // SPARK_GRAFT_PAGESIZE caps the Tungsten page size: Spark's default
       // heuristic sizes pages off the pool and can request 1 GiB pages on
       // a small constrained heap (observed: the 100x dup_ngrams run at
       // 3 GiB died on a 1 GiB page allocation AFTER spilling correctly) —
       // a many-core/small-heap box needs the standard small-page knob
-      .config("spark.buffer.pageSize",
-        dial("SPARK_GRAFT_PAGESIZE", "64m", "16m"))
+      "spark.buffer.pageSize" -> dial("SPARK_GRAFT_PAGESIZE", "64m", "16m"),
       // SPARK_GRAFT_MAXPART shrinks input splits: an expansion-heavy scan
       // (the gram explode is ~10x bytes-out per byte-in) turns one 128 MB
       // split into >1 GB of map-side shuffle records — at tight per-core
       // memory the split size is the standard dial that keeps the map
       // task's working set executor-sized (the brief's
       // files.maxPartitionBytes guidance, exercised)
-      .config("spark.sql.files.maxPartitionBytes",
-        dial("SPARK_GRAFT_MAXPART", "134217728", "16777216"))
+      "spark.sql.files.maxPartitionBytes" ->
+        dial("SPARK_GRAFT_MAXPART", "134217728", "16777216"),
       // SPARK_GRAFT_BROADCAST caps the auto-broadcast threshold: the bench
       // default (64 MB) assumes the 32 GiB bench heap — on a 2 GiB
       // executor a stats-estimated 64 MB relation is several x that as
@@ -219,12 +221,8 @@ object SpillProbe {
       // cluster-sane value follows the heap-proportional rule of thumb
       // (~heap/256): big-enough for genuine dims, never a meaningful
       // fraction of the executor
-      .config("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.autoBroadcastJoinThreshold" ->
         dial("SPARK_GRAFT_BROADCAST", (64 * 1024 * 1024).toString, (8 * 1024 * 1024).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val listener = new SpillListener
     spark.sparkContext.addSparkListener(listener)

@@ -140,12 +140,7 @@ object StoreProbe {
       val batches = args.lift(1).map(_.toInt).getOrElse(60)
       val delta = args.lift(2).map(_.toInt).getOrElse(5000)
       val base = args.lift(3).getOrElse("/tmp/graft_storeprobe_rw")
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = graft.Engine.createSession("graft-store-probe", graft.Engine.localMaster)
       spark.sparkContext.setLogLevel("ERROR")
       val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new Path(base), true)
@@ -164,13 +159,7 @@ object StoreProbe {
     // optional 4th arg: comma-separated store subset for a targeted re-run
     val only = args.lift(3).map(_.split(",").toSet)
     def want(name: String): Boolean = only.forall(_.contains(name))
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.createSession("graft-store-probe", graft.Engine.localMaster)
     spark.sparkContext.setLogLevel("ERROR")
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(base), true)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Repeated runs of the bench's phase-aligned streaming-latency probe —
   * the envelope evidence that the headline stream_e2e number is stable on
   * identical code (VERDICT r6 item 5: it previously swung 2.9-52.2 s with
@@ -12,12 +10,7 @@ import org.apache.spark.sql.SparkSession
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.createSession("graft-stream-probe", graft.Engine.localMaster)
     spark.sparkContext.setLogLevel("WARN")
     val xs = (1 to n).map { i =>
       val t = graft.Bench.streamingLatencyProbe(spark)

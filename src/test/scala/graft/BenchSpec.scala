@@ -1,8 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 
 /** Guard the guard (r16 verdict task 6): `plan_regressed` had only ever been
   * EMPTY in the artifacts, so nothing proved the flag CAN fire. This spec
@@ -12,26 +10,15 @@ import org.apache.spark.sql.SparkSession
   * exact fingerprint + diff functions Bench runs, and asserts both the
   * exchange-growth branch and the new-spill branch fire, then clear when
   * reverted. */
-class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class BenchSpec extends AnyFunSuite with SparkSuite {
 
   override def beforeAll(): Unit = {
+    super.beforeAll()
     // AQE off: the test pins exact plan shapes (broadcast vs hinted SMJ);
     // Bench's production path runs WITH AQE and fingerprintOf unwraps the
     // adaptive nodes — that leg is exercised by every BENCH_PLANS.json row
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("plan_regressed fires on a broadcast->SMJ regression and on new same-sf spill, then clears") {
     import org.apache.spark.sql.functions._

@@ -1,28 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Transitive-closure canonicalization (graft.operators.Closure) + the
   * planted-twin recall of the LSH scale-path dedup. */
-class ClosureSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ClosureSpec extends AnyFunSuite with SparkSuite {
 
   test("minLabel collapses chains a single min-neighbor pass would split") {
     val s = spark

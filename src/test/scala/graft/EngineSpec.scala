@@ -1,8 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 import graft.json._
 import graft.pipeline.{GsuiteLogin, Ingest}
 
@@ -10,29 +8,20 @@ import graft.pipeline.{GsuiteLogin, Ingest}
   * spark.sql of the reference's two published README queries — exactly what
   * a pyathena user of the reference would run, minus the S3/Athena plumbing.
   * Plus gsuite edge coverage the golden fixtures don't reach. */
-class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EngineSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-  private var eventsDir: String = _
+  private val base = java.nio.file.Files.createTempDirectory("graft_engine").toString
+  private val eventsDir = base + "/events"
+
+  // registerReferenceCatalog creates a database, whose directory goes under
+  // the warehouse: keep it in this suite's temp dir, out of the working tree
+  override protected def builderConf = Seq("spark.sql.warehouse.dir" -> s"$base/warehouse")
 
   override def beforeAll(): Unit = {
-    val base = java.nio.file.Files.createTempDirectory("graft_engine").toString
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", s"$base/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    eventsDir = base + "/events"
-    Ingest.ingestBatch(spark, "/root/reference/lambdas/tests/samples/*.json", eventsDir)
+    super.beforeAll()
+    Ingest.ingestBatch(spark, s"${graft.queries.PipelineQueries.SamplesDir}/*.json", eventsDir)
     Ingest.eventsTable(spark, eventsDir).createOrReplaceTempView("events")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("driver smoke: SparkEntry.entry returns rows on a vanilla session") {
     // the driver calls entry with its own session and only checks rows > 0

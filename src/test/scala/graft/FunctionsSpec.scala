@@ -1,29 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import graft.functions.{VectorFunctions, VectorOps}
 
 /** Kernel correctness (DotProduct / BitmapJaccard) + dedup recall pins. */
-class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class FunctionsSpec extends AnyFunSuite with SparkSuite {
 
   test("TextOps.jodaToJava: coinciding letters pass, Y maps to y, week fields reject (pure JVM)") {
     import graft.functions.TextOps.jodaToJava

@@ -1,29 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Multimodal
 import graft.pipeline.Ingest
 
 /** Multimodal mapPartitions plumbing + errors-sink ingest. */
-class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class MultimodalSpec extends AnyFunSuite with SparkSuite {
 
   test("extractFeatures: L1-normalized byte histogram") {
     val f = Multimodal.extractFeatures("aaap".getBytes("UTF-8"))

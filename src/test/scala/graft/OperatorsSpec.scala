@@ -1,30 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.operators.Sessionize
 
 /** Sessionize + IVF ANN + SQL-registered kernel functions. */
-class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class OperatorsSpec extends AnyFunSuite with SparkSuite {
 
   test("Presto temporal compat: from_iso8601_timestamp verbatim; date_diff/date_add via the one-token unquoted-unit edit") {
     // from_iso8601_timestamp registers verbatim; date_diff/date_add are

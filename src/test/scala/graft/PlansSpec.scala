@@ -1,32 +1,15 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 
 /** Physical-plan pins: the optimizations the 100 TB design depends on must
   * actually appear in the plans — predicate pushdown to the parquet scan,
   * partition pruning, broadcast joins for small dims, TakeOrderedAndProject
   * for global top-k, and whole-stage codegen coverage. A plan regression
   * here is a scale bug even when results stay correct. */
-class PlansSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlansSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def plan(name: String): String = {
     // several queries .cache() shared frames ON CONSTRUCTION (q_sim_binary's

@@ -1,31 +1,15 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Behavior pins for the vector-index construction operators
   * (graft.queries.QuantQueries) and sequence packing — the exact-value check
   * is the DuckDB oracle; these pin the properties the oracle can't express.
   */
-class QuantSpec extends AnyFunSuite with BeforeAndAfterAll {
+class QuantSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 

@@ -6,13 +6,13 @@ import graft.pipeline._
 
 /** Golden sample-fixture tests: ports of
   * `test_plugin_timestamps.py`, `test_plugin_ip_addresses.py`,
-  * `test_plugin_gsuite_logins.py` (all under
-  * `/root/reference/lambdas/tests/`). Samples are read from the read-only
-  * reference checkout; each helper re-normalizes fresh (pytest setup()
-  * runs per test). */
+  * `test_plugin_gsuite_logins.py` (all under the reference's
+  * `lambdas/tests/`). Samples are the reconstructions under
+  * [[graft.queries.PipelineQueries.SamplesDir]]; each helper re-normalizes
+  * fresh (pytest setup() runs per test). */
 class SamplePluginsSpec extends AnyFunSuite {
 
-  private val samplesDir = "/root/reference/lambdas/tests/samples"
+  private val samplesDir = graft.queries.PipelineQueries.SamplesDir
   private val meta = JObject("something" -> JString("else"))
 
   private def sample(name: String): JObject = {

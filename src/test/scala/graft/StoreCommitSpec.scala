@@ -2,8 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import graft.operators._
 
@@ -11,22 +10,14 @@ import graft.operators._
   * swap/recover/readableRoot/cursor contract every store builds on — plus
   * a crash-injection test per store family and a source guard that keeps
   * every publish going through [[StoreCommit]]. */
-class StoreCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StoreCommitSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var base: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     base = java.nio.file.Files.createTempDirectory("graft_storecommit").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def writeDir(p: Path, marker: String): Unit = {
     val fs = StoreCommit.fsOf(spark, p)
@@ -248,11 +239,15 @@ class StoreCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((1L, "2026", "01"), (2L, "2026", "01")).toDF("id", "year", "month"),
       "id", Seq("year", "month")))
     finally CrashFs.armed = false
-    // the next write to the partition must not bring the erased rows back
+    // the next write to the partition must not bring the erased rows back,
+    // and sweeps the tomb that still holds them
+    val tomb = new java.io.File(s"$base/erase/year=2026/.month=01.expiring")
+    assert(tomb.exists(), "test setup: the crash left no tomb")
     Merge.upsertPartitioned(spark, table,
       Seq((3L, "c", "2026", "01")).toDF("id", "payload", "year", "month"),
       "id", Seq("year", "month"))
     assert(idPayload(s"$base/erase") == Map(3L -> "c"))
+    assert(!tomb.exists(), "the erased rows outlived the next write in their tomb")
   }
 
   // ---- source guard --------------------------------------------------
@@ -265,23 +260,46 @@ class StoreCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     "BucketedRuns.scala" -> (2, "per-file delta publish under deterministic names; base-file naming"),
     "ReplayGuard.scala" -> (1, "advance: a mark whose loss only costs the fast path"))
 
+  private def sources(d: java.io.File): Seq[java.io.File] =
+    Option(d.listFiles()).toSeq.flatten.flatMap(f =>
+      if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+
+  /** Lines of `f` that contain `needle`. */
+  private def count(f: java.io.File, needle: String): Int = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try src.getLines().count(_.contains(needle)) finally src.close()
+  }
+
   test("guard: every store publish goes through StoreCommit (no stray renames or stage names)") {
-    def sources(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f =>
-        if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
     val files = sources(new java.io.File("src/main/scala"))
       .filterNot(_.getName == "StoreCommit.scala")
     assert(files.size > 20, "source tree not found - is the working dir the repo root?")
-    def count(f: java.io.File, needle: String): Int = {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().count(_.contains(needle)) finally src.close()
-    }
     val renames = files.map(f => f.getName -> count(f, ".rename(")).filter(_._2 > 0).toMap
     val stray = renames.filter { case (n, c) => RenameAllowList.get(n).forall(_._1 < c) }
     assert(stray.isEmpty, s"renames outside StoreCommit: $stray - publish through " +
       "StoreCommit.publish, or add an allow-list entry with its reason")
     val stages = files.filter(count(_, ".building\"") > 0).map(_.getName)
     assert(stages.isEmpty, s"hand-computed stage dirs in $stages - use StoreCommit.publish")
+  }
+
+  /** Files allowed to name a session setting that the factory owns, with
+    * how many lines each may hold and why. */
+  private val SessionAllowList = Map(
+    ("SparkSession" + ".builder") -> Map(
+      "Engine.scala" -> (1, "createSession: the one session of every entry point and spec")),
+    ("\"SPARK_GRAFT_" + "CPUS\"") -> Map(
+      "Engine.scala" -> (1, "Engine.cores: the one reader, defaulting to the machine's cores"),
+      "SpillProbe.scala" -> (1, "the cluster-sane preset runs 8 threads when the variable is unset")))
+
+  test("guard: every session comes from Engine.createSession, on Engine.cores") {
+    val files = sources(new java.io.File("src/main/scala")) ++ sources(new java.io.File("src/test/scala"))
+    assert(files.size > 40, "source tree not found - is the working dir the repo root?")
+    SessionAllowList.foreach { case (needle, allowed) =>
+      val hits = files.map(f => f.getName -> count(f, needle)).filter(_._2 > 0).toMap
+      val stray = hits.filter { case (n, c) => allowed.get(n).forall(_._1 < c) }
+      assert(stray.isEmpty, s"$needle outside its allow-list: $stray - build the session " +
+        "through Engine.createSession and take its cores from Engine.cores")
+    }
   }
 }
 

@@ -1,8 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.{Files, Paths}
 import graft.streaming.StreamingIngest
@@ -10,24 +8,19 @@ import graft.streaming.StreamingIngest
 /** Streaming path: landing dir -> pipeline -> checkpointed partitioned
   * parquet, with replay dedup (SURVEY §7 step 5). Uses AvailableNow triggers
   * to drain deterministically. */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var base: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     base = Files.createTempDirectory("graft_stream").toString
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  /** The five reference samples, in name order. */
+  private def sampleFiles: Seq[java.io.File] =
+    new java.io.File(graft.queries.PipelineQueries.SamplesDir).listFiles()
+      .filter(_.getName.endsWith(".json")).sortBy(_.getName).toSeq
 
   private def write(dir: String, name: String, content: String): Unit = {
     Files.createDirectories(Paths.get(dir))
@@ -78,8 +71,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming ingest of the five reference samples matches batch goldens") {
     val landing = s"$base/landing_samples"
     Files.createDirectories(Paths.get(landing))
-    val samples = new java.io.File("/root/reference/lambdas/tests/samples").listFiles()
-    samples.foreach(f => Files.copy(f.toPath, Paths.get(landing, f.getName)))
+    sampleFiles.foreach(f => Files.copy(f.toPath, Paths.get(landing, f.getName)))
     val q = StreamingIngest.start(spark, landing, s"$base/events_samples", s"$base/ckpt_samples",
       Trigger.AvailableNow())
     q.awaitTermination(180000)
@@ -104,9 +96,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // source, must produce field-identical events including the replay key
     val s = spark
     import s.implicits._
-    val samples = new java.io.File("/root/reference/lambdas/tests/samples")
-      .listFiles().sortBy(_.getName)
-    val contents = samples.map(f => f.getName -> Files.readString(f.toPath)).toSeq
+    val contents = sampleFiles.map(f => f.getName -> Files.readString(f.toPath))
 
     val landing = s"$base/landing_producer_twin"
     Files.createDirectories(Paths.get(landing))
@@ -155,9 +145,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // format exactly like Firehose Record.data). The mapping into
     // eventsFromProducer is ONE selectExpr — everything downstream is the
     // same cascade object the file and memory paths run.
-    val samples = new java.io.File("/root/reference/lambdas/tests/samples")
-      .listFiles().sortBy(_.getName)
-    val contents = samples.map(f => f.getName -> Files.readString(f.toPath)).toSeq
+    val contents = sampleFiles.map(f => f.getName -> Files.readString(f.toPath))
 
     // expected side: the file-path cascade over the same five samples
     val landing = s"$base/landing_socket_twin"

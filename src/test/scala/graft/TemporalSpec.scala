@@ -1,8 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{AsOfJoin, RangeJoin}
 
@@ -10,21 +8,7 @@ import graft.operators.{AsOfJoin, RangeJoin}
   * data cannot exercise: timestamp ties, missing matches, NULL payloads on
   * the matched row, and bin-boundary pairs in the range join.
   */
-class TemporalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class TemporalSpec extends AnyFunSuite with SparkSuite {
 
   private def asofRows(
       left: Seq[(Long, Long, Long)],
