@@ -25,7 +25,10 @@ object Engine {
     * broadcast threshold catches dimension tables; GraftExtensions installs
     * the Presto dialect. Per-batch fan-out follows the session's core count
     * (`defaultParallelism`), because AQE never coalesces a stateful
-    * streaming shuffle.
+    * streaming shuffle. Local `file:` paths go through the spawn-free
+    * filesystem ([[SpawnFreeLocalFileSystem]], [[SpawnFreeLocalFs]]): the
+    * same files, `.crc` sidecars and permissions without a `chmod` or
+    * `readlink` process per write; other schemes are untouched.
     *
     * `conf` carries settings that must be in place before the session
     * exists and are the caller's subject (a scheduler mode, a Tungsten page
@@ -40,6 +43,8 @@ object Engine {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
+      .config("spark.hadoop.fs.file.impl", classOf[SpawnFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[SpawnFreeLocalFs].getName)
     val spark = conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
     val parallelism = spark.sparkContext.defaultParallelism.toString
     // a stateful operator's partition count is fixed in the checkpoint when

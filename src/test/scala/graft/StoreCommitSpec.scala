@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -289,7 +289,11 @@ class StoreCommitSpec extends AnyFunSuite with SparkSuite {
       "Engine.scala" -> (1, "createSession: the one session of every entry point and spec")),
     ("\"SPARK_GRAFT_" + "CPUS\"") -> Map(
       "Engine.scala" -> (1, "Engine.cores: the one reader, defaulting to the machine's cores"),
-      "SpillProbe.scala" -> (1, "the cluster-sane preset runs 8 threads when the variable is unset")))
+      "SpillProbe.scala" -> (1, "the cluster-sane preset runs 8 threads when the variable is unset")),
+    ("fs.file" + ".impl") -> Map(
+      "Engine.scala" -> (1, "createSession: the spawn-free file: FileSystem")),
+    ("fs.AbstractFileSystem.file" + ".impl") -> Map(
+      "Engine.scala" -> (1, "createSession: the spawn-free file: FileContext filesystem")))
 
   test("guard: every session comes from Engine.createSession, on Engine.cores") {
     val files = sources(new java.io.File("src/main/scala")) ++ sources(new java.io.File("src/test/scala"))
@@ -307,7 +311,7 @@ class StoreCommitSpec extends AnyFunSuite with SparkSuite {
   * (throws) on deleting an existing dot-prefixed path — the hidden sibling
   * a hide-then-delete has just renamed a partition to — as a process death
   * between that rename and its delete would. */
-class CrashFs extends RawLocalFileSystem {
+class CrashFs extends SpawnFreeRawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
   override def getScheme: String = "crashfs"
   override def delete(p: Path, recursive: Boolean): Boolean = {
