@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{ArrayContains, BinaryExpression, Expression, JsonToStructs, UnaryExpression}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.json._
 import com.fasterxml.jackson.core.{JsonParser => JacksonParser, JsonToken}
@@ -38,7 +36,7 @@ case class JsonArrayContains(left: Expression, right: Expression)
   // codegen'd with an explicit null channel (r16): NULL for non-array
   // input even when both operands are non-null, so the boxed static call
   // sets isNull itself. This keeps the PASTED readme-2 spelling inside
-  // whole-stage codegen without needing the opt-in string-probe rewrite.
+  // whole-stage codegen.
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
@@ -83,71 +81,32 @@ object JsonArrayContains {
     }
 }
 
-/** Optimizer rule (injected via SparkSessionExtensions.injectOptimizerRule):
-  * rewrites the eval-only compat expression into the codegen-native
-  * formulation whenever the probed value is a string —
-  *
-  *   json_array_contains(j, v)  ==>  array_contains(from_json(j, 'array<string>'), v)
-  *
-  * so a pasted Presto query gets whole-stage codegen instead of the
-  * interpreted fallback.
-  *
-  * OPT-IN ([[RewriteJsonArrayContains.ConfKey]], default off): the rewrite
-  * is only semantics-preserving when the probed arrays contain ONLY string
-  * elements. For mixed-type arrays, from_json to array<string> STRINGIFIES
-  * non-string elements ('[1,2]' -> ["1","2"]), so the rewritten form returns
-  * true for json_array_contains('[1,2]','1') where Presto — and the eval
-  * expression — return false. Enable per session when the probed column is
-  * known all-string (e.g. the reference's `_ipaddresses` arrays):
-  *
-  *   spark.conf.set("spark.graft.rewriteJsonArrayContains", "true")
-  *
-  * from_json still yields NULL on non-array input, and array_contains(NULL,
-  * v) is NULL — the Presto NULL-on-non-array behavior is preserved either
-  * way. Numeric/boolean probes always keep the compat expression (JSON
-  * numeric equality, 2 == 2.0, has no exact array_contains twin). */
-object RewriteJsonArrayContains extends Rule[LogicalPlan] {
-  val ConfKey = "spark.graft.rewriteJsonArrayContains"
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString(ConfKey, "false").toBoolean) plan
-    else plan.transformAllExpressions {
-      case JsonArrayContains(json, value) if value.dataType == StringType =>
-        ArrayContains(
-          JsonToStructs(ArrayType(StringType), Map.empty[String, String], json,
-            Some(conf.sessionLocalTimeZone)),
-          value)
-    }
-}
-
-/** True when the (string) child parses as a JSON object or array — used to
-  * give `json_extract_scalar` Presto's NULL-on-composite semantics on top of
-  * GetJsonObject. Deliberate edge deviation: a *string* scalar whose text is
-  * itself valid composite JSON (e.g. the two-char string "[]") is
-  * indistinguishable from a composite after GetJsonObject unquotes it, and
-  * maps to NULL here where Presto would return the string. */
-case class IsJsonComposite(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override protected def nullSafeEval(s: Any): Any =
-    IsJsonComposite.isComposite(s.asInstanceOf[UTF8String])
-  // codegen'd static call (r16): this sits under every pasted
-  // json_extract_scalar — as CodegenFallback it knocked the whole stage
-  // out of whole-stage codegen
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.functions.IsJsonComposite.isComposite($s)")
-}
-
+/** True when the string parses as a JSON object or array — used to give
+  * `json_extract_scalar` Presto's NULL-on-composite semantics on top of
+  * GetJsonObject (bound as [[Kernels.isJsonComposite]]). Deliberate edge
+  * deviation: a *string* scalar whose text is itself valid composite JSON
+  * (e.g. the two-char string "[]") is indistinguishable from a composite
+  * after GetJsonObject unquotes it, and maps to NULL here where Presto
+  * would return the string. */
 object IsJsonComposite {
-  def isComposite(s: UTF8String): Boolean =
+  /** A document is composite only when its first token opens an object or
+    * an array, so any other first character after the whitespace Jackson
+    * skips (space, tab, CR, LF) answers false without a parse: the scalars
+    * json_extract_scalar mostly sees (IPs, request ids) no longer build a
+    * tree and throw. A 0xEF lead byte (a BOM among others) takes the full
+    * parse, which decides it as before. */
+  def isComposite(s: UTF8String): Boolean = {
+    val n = s.numBytes()
+    var i = 0
+    while (i < n && { val b = s.getByte(i); b == ' ' || b == '\t' || b == '\n' || b == '\r' }) i += 1
+    if (i == n) return false
+    val first = s.getByte(i)
+    if (first != '{' && first != '[' && first != 0xEF.toByte) return false
     Json.parseOpt(s.toString) match {
       case Some(_: JObject) | Some(_: JArray) => true
       case _                                  => false
     }
+  }
 }
 
 /** Presto/Trino `json_parse(text)` — validate and CANONICALIZE a JSON text.
@@ -162,23 +121,6 @@ object IsJsonComposite {
   * float convention (JsonAst.pyFloatRepr), which can differ from Jackson's
   * for exotic exponents; integers — the reference corpus's only JSON
   * numbers — render identically. */
-case class JsonParseCanonical(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override protected def nullSafeEval(s: Any): Any =
-    JsonParseCanonical.parse(s.asInstanceOf[UTF8String])
-  // codegen'd static call (r16: the CodegenFallback form broke whole-stage
-  // codegen for the containing stage — the per-row parse itself is cheap,
-  // the fallback's interpreted-projection detour was not)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.functions.JsonParseCanonical.parse($s)")
-}
-
 object JsonParseCanonical {
   def parse(s: UTF8String): UTF8String = {
     val v =
@@ -409,8 +351,7 @@ object JsonPathWalk {
   * json_size need the GraftExtensions registry; these do not). */
 object PrestoJsonFunctions {
   import org.apache.spark.sql.{graftshim, Column}
-  def jsonParse(c: Column): Column =
-    graftshim.column(JsonParseCanonical(graftshim.expression(c)))
+  def jsonParse(c: Column): Column = Kernels.jsonParse(c)
   def jsonSize(c: Column, path: Column): Column =
     graftshim.column(JsonSizeAtPath(graftshim.expression(c), graftshim.expression(path)))
 }

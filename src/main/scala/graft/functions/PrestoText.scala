@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The Porter stemming algorithm, implemented from the public specification
@@ -25,8 +22,16 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Porter {
 
-  /** UTF8String entry point used by codegen ([[WordStem.doGenCode]]). */
-  def stem(s: UTF8String): UTF8String = UTF8String.fromString(stemWord(s.toString))
+  /** Presto `word_stem(word, lang)`, the kernel behind [[Kernels.wordStem]].
+    * Only 'en' is supported (the reference's Athena corpus is English
+    * security logs); any other language tag throws a NAMED error rather
+    * than silently returning wrong stems. */
+  def stem(word: UTF8String, lang: UTF8String): UTF8String = {
+    if (lang.toString != "en")
+      throw new IllegalArgumentException(
+        s"word_stem: unsupported language '$lang' — only 'en' (Porter) is implemented")
+    UTF8String.fromString(stemWord(word.toString))
+  }
 
   def stemWord(word: String): String = {
     val n = word.length
@@ -192,44 +197,6 @@ object Porter {
     if (w.endsWith("ll") && measure(w.dropRight(1)) > 1) w.dropRight(1) else w
 }
 
-/** Presto `word_stem(word[, lang])` — Porter stemming for English. Only
-  * 'en' is supported (the reference's Athena corpus is English security
-  * logs); any other language tag throws a NAMED error rather than silently
-  * returning wrong stems. Codegen'd: the generated code calls the static
-  * kernel directly, so a stem-then-groupBy normalization pipeline stays
-  * inside whole-stage codegen. */
-case class WordStem(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(word: Any, lang: Any): Any = {
-    WordStem.checkLang(lang.asInstanceOf[UTF8String])
-    Porter.stem(word.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (w, l) =>
-      s"graft.functions.Porter.stem(graft.functions.WordStem.checkedWord($w, $l))")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): WordStem =
-    copy(left = newLeft, right = newRight)
-}
-
-object WordStem {
-  def checkLang(lang: UTF8String): Unit =
-    if (lang == null || lang.toString != "en")
-      throw new IllegalArgumentException(
-        s"word_stem: unsupported language '$lang' — only 'en' (Porter) is implemented")
-
-  /** Codegen helper: validate the lang operand, pass the word through. */
-  def checkedWord(word: UTF8String, lang: UTF8String): UTF8String = {
-    checkLang(lang)
-    word
-  }
-}
-
 /** Presto `strpos(string, substring, instance)` — 1-based character position
   * of the instance-th occurrence of substring (0 when absent); a NEGATIVE
   * instance counts occurrences from the end of the string. instance = 0 is
@@ -245,25 +212,6 @@ object WordStem {
   * EVERY instance: strpos(s, '', k) = 1 for all k != 0 (r16 ADVICE fix —
   * the r15 scan was non-overlapping, which diverged from Trino on
   * self-overlapping needles). */
-case class StrPosInstance(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override protected def nullSafeEval(str: Any, sub: Any, inst: Any): Any =
-    StrPosInstance.strpos(
-      str.asInstanceOf[UTF8String], sub.asInstanceOf[UTF8String],
-      inst.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, sub, i) =>
-      s"graft.functions.StrPosInstance.strpos($s, $sub, $i)")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): StrPosInstance =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object StrPosInstance {
 
   def strpos(str: UTF8String, sub: UTF8String, instance: Int): Int = {

@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Presto text/temporal source-compatibility helpers that need real logic
@@ -227,33 +224,6 @@ object StringMetrics {
   }
 }
 
-/** Jaro-Winkler similarity as a codegen'd expression (record-linkage
-  * scoring beside the fuzzy join's levenshtein verify). */
-case class JaroWinklerSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    StringMetrics.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.StringMetrics.jaroWinkler($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaroWinklerSim =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Presto `hamming_distance(s1, s2)` as a codegen'd expression. */
-case class HammingDistance(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    StringMetrics.hamming(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.StringMetrics.hamming($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HammingDistance =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Column-level entry points for the DataFrame API (the declared rows run
   * under plain driver sessions where only built-ins resolve by name; the
   * SQL spellings are registered by [[GraftExtensions]] for
@@ -261,10 +231,10 @@ case class HammingDistance(left: Expression, right: Expression)
 object TextFunctions {
   import org.apache.spark.sql.{graftshim, Column}
   import org.apache.spark.sql.catalyst.expressions.Literal
+  import org.apache.spark.sql.functions.lit
 
-  /** Presto normalize(s, form) as a Column (codegen'd; see [[UnicodeNormalize]]). */
-  def normalize(s: Column, form: String = "NFC"): Column =
-    graftshim.column(UnicodeNormalize(graftshim.expression(s), Literal(form)))
+  /** Presto normalize(s, form) as a Column (see [[TextOps.normalize]]). */
+  def normalize(s: Column, form: String = "NFC"): Column = Kernels.normalize(s, lit(form))
 
   /** Presto format_datetime(ts, jodaPattern) as a Column — the pattern
     * translates ONCE here, then the call is exactly a native date_format. */
@@ -289,42 +259,17 @@ object TextFunctions {
     graftshim.column(org.apache.spark.sql.catalyst.expressions.DateFormatClass(
       graftshim.expression(ts), Literal(TextOps.mysqlToJava(mysqlPattern))))
 
-  /** Jaro-Winkler similarity (codegen'd; see [[JaroWinklerSim]]). */
-  def jaroWinkler(a: Column, b: Column): Column =
-    graftshim.column(JaroWinklerSim(graftshim.expression(a), graftshim.expression(b)))
+  /** Jaro-Winkler similarity (see [[StringMetrics.jaroWinkler]]). */
+  def jaroWinkler(a: Column, b: Column): Column = Kernels.jaroWinkler(a, b)
 
-  /** Presto hamming_distance (codegen'd; see [[HammingDistance]]). */
-  def hammingDistance(a: Column, b: Column): Column =
-    graftshim.column(HammingDistance(graftshim.expression(a), graftshim.expression(b)))
+  /** Presto hamming_distance (see [[StringMetrics.hamming]]). */
+  def hammingDistance(a: Column, b: Column): Column = Kernels.hamming(a, b)
 
-  /** Presto word_stem (English Porter; codegen'd — see [[Porter]]). */
-  def wordStem(w: Column): Column =
-    graftshim.column(WordStem(graftshim.expression(w), Literal("en")))
+  /** Presto word_stem (English Porter; see [[Porter.stem]]). */
+  def wordStem(w: Column): Column = Kernels.wordStem(w, lit("en"))
 
-  /** Presto strpos(string, substring, instance) (codegen'd; see
-    * [[StrPosInstance]] — negative instance counts from the end). */
+  /** Presto strpos(string, substring, instance) (see
+    * [[StrPosInstance.strpos]] — negative instance counts from the end). */
   def strposInstance(str: Column, sub: Column, instance: Int): Column =
-    graftshim.column(StrPosInstance(
-      graftshim.expression(str), graftshim.expression(sub), Literal(instance)))
-}
-
-/** Presto `normalize(s [, form])` — Unicode normalization (default NFC).
-  * Codegen'd so it stays inside whole-stage codegen when used as a
-  * canonicalize-before-dedup key (the dedup stack keys on raw text;
-  * NFC-canonicalization first is standard LLM-corpus practice —
-  * q_string_normalize declares exactly that shape). */
-case class UnicodeNormalize(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(s: Any, form: Any): Any =
-    TextOps.normalize(s.asInstanceOf[UTF8String], form.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, f) => s"graft.functions.TextOps.normalize($s, $f)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): UnicodeNormalize =
-    copy(left = newLeft, right = newRight)
+    Kernels.strpos(str, sub, lit(instance))
 }

@@ -12,9 +12,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * evaluates a lambda expression tree per element per row: at 12.5M candidate
   * pairs x 64 dims that's ~1.6B interpreted expression nodes and dominates
   * the query. These kernels read ArrayData primitives directly in one JIT'd
-  * loop and participate in whole-stage codegen (the generated code is a
-  * single static call), which is the custom-Expression upgrade path SURVEY §4
-  * reserved for exactly this case.
+  * loop and participate in whole-stage codegen (bound through [[Kernels]],
+  * the generated code is a single static call), which is the
+  * custom-Expression upgrade path SURVEY §4 reserved for exactly this case.
   */
 object VectorOps {
   def dot(a: ArrayData, b: ArrayData): Double = {
@@ -411,16 +411,6 @@ object VectorOps {
     ArrayData.toArrayData(Array(tok, chars))
   }
 
-  /** 46-bit polynomial string hash — acc = (acc*131 + byte) % 2^46, seed 7
-    * — the shared n-gram/word hash behind the Bloom decontamination probes
-    * and the feature-hashing vectorizer. BIT-IDENTICAL on ASCII input to
-    * the declarative fold `aggregate(transform(sequence(1, length(s)), i ->
-    * ascii(substr(s, i, 1))), 7L, (acc, c) -> (acc*131 + c) % 2^46)`
-    * (pinned in FunctionsSpec), which interprets one lambda tree per
-    * CHARACTER per row; this is one JIT'd byte loop. On non-ASCII input
-    * the fold hashes code points and this hashes UTF-8 bytes — the graft
-    * corpora are ASCII (the frames-query invariant); both sides of every
-    * caller use one form consistently. */
   /** Run-length lexical stats of a space-separated string: [distinct-token
     * count, Σ count², token count] over its token multiset — the kernel
     * twin of the declarative fold `TextQueries.lexStats` (row-identical by
@@ -452,6 +442,16 @@ object VectorOps {
       Array(types, sumc2, toks.length.toLong))
   }
 
+  /** 46-bit polynomial string hash — acc = (acc*131 + byte) % 2^46, seed 7
+    * — the shared n-gram/word hash behind the Bloom decontamination probes
+    * and the feature-hashing vectorizer. BIT-IDENTICAL on ASCII input to
+    * the declarative fold `aggregate(transform(sequence(1, length(s)), i ->
+    * ascii(substr(s, i, 1))), 7L, (acc, c) -> (acc*131 + c) % 2^46)`
+    * (pinned in FunctionsSpec), which interprets one lambda tree per
+    * CHARACTER per row; this is one JIT'd byte loop. On non-ASCII input
+    * the fold hashes code points and this hashes UTF-8 bytes — the graft
+    * corpora are ASCII (the frames-query invariant); both sides of every
+    * caller use one form consistently. */
   def polyHash46(s: org.apache.spark.unsafe.types.UTF8String): Long = {
     val n = s.numBytes()
     var acc = 7L
@@ -622,7 +622,12 @@ object VectorOps {
       Array[Any](bestS, bestC))
   }
 
-  /** |A intersect B| / |A union B| over packed 64-bit bitmap words. */
+  /** Exact Jaccard similarity of two bitmap-encoded sets (array<long> of
+    * packed 64-bit words): |A intersect B| / |A union B| as popcount(AND) /
+    * popcount(OR) in one fused pass; 0.0 when both sets are empty. With a
+    * small shingle vocabulary an inverted-index self-join degenerates
+    * (every shingle is a hot key); packing each document's shingle set into
+    * a few machine words makes even all-pairs verification a popcount loop. */
   def bitmapJaccard(a: ArrayData, b: ArrayData): Double = {
     val na = a.numElements()
     val nb = b.numElements()
@@ -641,28 +646,6 @@ object VectorOps {
   }
 }
 
-/** dot(a, b) over array<double> columns; null-safe, codegen'd. Callers are
-  * responsible for casting inputs to array<double> (no ExpectsInputTypes —
-  * that trait's AbstractDataType is private[sql]). */
-case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.dot($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Exact Jaccard similarity of two bitmap-encoded sets (array<long> of
-  * packed 64-bit words): popcount(AND)/popcount(OR) in one fused pass.
-  * With a small shingle vocabulary an inverted-index self-join degenerates
-  * (every shingle is a hot key); packing each document's shingle set into a
-  * few machine words makes even all-pairs verification a popcount loop. */
 /** cosine_similarity(m1, m2) over two map<K, double> columns; codegen'd
   * (see [[VectorOps.mapCosine]]). Value type is coerced to double at
   * registration; the key DataType rides as a codegen reference object. */
@@ -700,442 +683,68 @@ case class MapCosineSim(left: Expression, right: Expression) extends BinaryExpre
     copy(left = newLeft, right = newRight)
 }
 
-/** sortedIntersectCountStr(a, b) over two sorted array<string> columns;
-  * codegen'd (see [[VectorOps.sortedIntersectCountStr]]). */
-case class SortedIntersectCountStr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.sortedIntersectCountStr(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.sortedIntersectCountStr($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedIntersectCountStr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** sortedIntersectCount(a, b) over two sorted array<int> columns;
-  * codegen'd (see [[VectorOps.sortedIntersectCount]]). */
-case class SortedIntersectCount(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.sortedIntersectCount($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
-case class BitmapJaccard(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.bitmapJaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.bitmapJaccard($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): BitmapJaccard =
-    copy(left = newLeft, right = newRight)
-}
-
-/** minhashSig(tokens, perms) over an array<string>; codegen'd (see
-  * [[VectorOps.minhashSig]]). `perms` is a plan-time constant. */
-case class MinHashSig(child: Expression, perms: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-
-  override protected def nullSafeEval(a: Any): Any =
-    VectorOps.minhashSig(a.asInstanceOf[ArrayData], perms)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.VectorOps.minhashSig($a, $perms)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** distinctBigrams(words) over an array<string>; codegen'd (see
-  * [[VectorOps.distinctBigrams]]). */
-case class DistinctBigrams(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
-
-  override protected def nullSafeEval(a: Any): Any =
-    VectorOps.distinctBigrams(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.VectorOps.distinctBigrams($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): DistinctBigrams =
-    copy(child = newChild)
-}
-
-/** sq8EncodeCodes(de, mm) — int8 SQ codes against a calibration struct
-  * array; codegen'd (see [[VectorOps.sq8EncodeCodes]]). */
-case class Sq8EncodeCodes(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.sq8EncodeCodes(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.sq8EncodeCodes($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Sq8EncodeCodes =
-    copy(left = newLeft, right = newRight)
-}
-
-/** sq8Dequant(qe, mm) — midpoint reconstructions of SQ8 codes; codegen'd
-  * (see [[VectorOps.sq8Dequant]]). */
-case class Sq8Dequant(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = false)
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.sq8Dequant(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.sq8Dequant($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Sq8Dequant =
-    copy(left = newLeft, right = newRight)
-}
-
-/** lshBuckets(emb, planes, k) — per-table hyperplane sign buckets;
-  * codegen'd (see [[VectorOps.lshBuckets]]). */
-case class LshBuckets(left: Expression, right: Expression, k: Int) extends BinaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.lshBuckets(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.lshBuckets($a, $b, $k)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): LshBuckets =
-    copy(left = newLeft, right = newRight)
-}
-
-/** l1Dist(a, b) — exact integer L1 distance over array<long> columns;
-  * codegen'd (see [[VectorOps.l1Dist]]). */
-case class L1Dist(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.l1Dist(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.l1Dist($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): L1Dist =
-    copy(left = newLeft, right = newRight)
-}
-
-/** xxhashChain(ws) — chained xxhash64 fold over a token array; codegen'd
-  * (see [[VectorOps.xxhashChain]]). */
-case class XxhashChain(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override protected def nullSafeEval(a: Any): Any =
-    VectorOps.xxhashChain(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.VectorOps.xxhashChain($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): XxhashChain =
-    copy(child = newChild)
-}
-
-/** signWords(emb) — packed [w0, w1] sign words of a 64-dim vector;
-  * codegen'd (see [[VectorOps.signWords]]). */
-case class SignWords(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-
-  override protected def nullSafeEval(a: Any): Any =
-    VectorOps.signWords(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.VectorOps.signWords($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): SignWords =
-    copy(child = newChild)
-}
-
-/** l2normalize(a) over an array<double> column; null-safe on the array,
-  * codegen'd (see [[VectorOps.l2normalize]]). */
-case class L2Normalize(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = false)
-
-  override protected def nullSafeEval(a: Any): Any =
-    VectorOps.l2normalize(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.VectorOps.l2normalize($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): L2Normalize =
-    copy(child = newChild)
-}
-
-/** wordNgrams(ws, n) — all space-joined stride-1 n-grams of an
-  * array<string> column; null-safe, codegen'd (see
-  * [[VectorOps.wordNgrams]]). */
-case class WordNgrams(child: Expression, n: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
-
-  override protected def nullSafeEval(a: Any): Any =
-    VectorOps.wordNgrams(a.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.VectorOps.wordNgrams($a, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordNgrams =
-    copy(child = newChild)
-}
-
-/** polyHash46(s) over a string column; null-safe, codegen'd. */
-case class PolyHash46(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override protected def nullSafeEval(a: Any): Any =
-    VectorOps.polyHash46(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.VectorOps.polyHash46($a)")
-  override protected def withNewChildInternal(newChild: Expression): PolyHash46 =
-    copy(child = newChild)
-}
-
-/** lexStats(text) over a string column: [types, Σcount², n_tokens] of the
-  * token multiset; null-safe, codegen'd (see [[VectorOps.lexStats]]). */
-case class LexStats(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-
-  override protected def nullSafeEval(a: Any): Any =
-    VectorOps.lexStats(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.VectorOps.lexStats($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): LexStats =
-    copy(child = newChild)
-}
-
-/** dupNgramCoverage(text, n) -> [covered_tokens, covered_chars]; null-safe,
-  * codegen'd (see [[VectorOps.dupNgramCoverage]]). */
-case class DupNgramCoverage(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-
-  override protected def nullSafeEval(text: Any, n: Any): Any =
-    VectorOps.dupNgramCoverage(
-      text.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, n) => s"graft.functions.VectorOps.dupNgramCoverage($t, $n)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DupNgramCoverage =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Most-frequent n-gram of a token array, (count DESC, gram ASC) — struct
-  * (gram, cnt); codegen'd (see [[VectorOps.topNGram]]). Nullable: a
-  * too-short array yields NULL (callers filter size >= n first). */
-case class TopNGram(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(
-    Seq(
-      org.apache.spark.sql.types.StructField(
-        "gram", org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField(
-        "cnt", org.apache.spark.sql.types.LongType, nullable = false)))
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(words: Any, n: Any): Any =
-    VectorOps.topNGram(words.asInstanceOf[ArrayData], n.asInstanceOf[Int])
-
-  // explicit null channel (the defineCodeGen helper assumes
-  // non-null-from-non-null; a too-short array must yield NULL)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (wd, n) => {
-      s"""
-         |${ev.value} = graft.functions.VectorOps.topNGram($wd, $n);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TopNGram =
-    copy(left = newLeft, right = newRight)
-}
-
-/** l2sq(a, b) over two equal-length array<long> columns; codegen'd (see
-  * [[VectorOps.l2sq]]). */
-case class L2SqDist(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.l2sq(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.l2sq($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): L2SqDist =
-    copy(left = newLeft, right = newRight)
-}
-
-/** pqArgmin(sub, packed_codebook) -> struct(dist, c); codegen'd (see
-  * [[VectorOps.pqArgmin]]). */
-case class PqArgmin(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(
-    Seq(
-      org.apache.spark.sql.types.StructField(
-        "dist", org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(
-        "c", org.apache.spark.sql.types.LongType, nullable = false)))
-
-  override protected def nullSafeEval(sub: Any, cands: Any): Any =
-    VectorOps.pqArgmin(sub.asInstanceOf[ArrayData], cands.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, c) => s"graft.functions.VectorOps.pqArgmin($s, $c)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqArgmin =
-    copy(left = newLeft, right = newRight)
-}
-
-/** centArgmax(emb, packed_centroids) -> struct(s, c); codegen'd (see
-  * [[VectorOps.centArgmax]]). */
-case class CentArgmax(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(
-    Seq(
-      org.apache.spark.sql.types.StructField(
-        "s", DoubleType, nullable = false),
-      org.apache.spark.sql.types.StructField(
-        "c", org.apache.spark.sql.types.LongType, nullable = false)))
-
-  override protected def nullSafeEval(emb: Any, cands: Any): Any =
-    VectorOps.centArgmax(emb.asInstanceOf[ArrayData], cands.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (e, c) => s"graft.functions.VectorOps.centArgmax($e, $c)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CentArgmax =
-    copy(left = newLeft, right = newRight)
-}
-
-/** simhash64(hashes) over an array<long> of per-token hashes; codegen'd. */
-case class SimHash64(child: Expression) extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override protected def nullSafeEval(a: Any): Any =
-    VectorOps.simhash64(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.VectorOps.simhash64($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
 object VectorFunctions {
+  import org.apache.spark.sql.functions.lit
+
+  // Callers cast inputs to the kernel's argument types (array<double> for
+  // the vector kernels): the binding resolves the static method by the
+  // arguments' Catalyst types.
 
   /** Sparse-map cosine (codegen'd; see [[MapCosineSim]]). */
   def mapCosineSim(a: Column, b: Column): Column =
     graftshim.column(MapCosineSim(graftshim.expression(a), graftshim.expression(b)))
-  /** Merge-walk intersection count over sorted int-id arrays (codegen'd;
-    * see [[SortedIntersectCount]]). */
-  def sortedIntersectCount(a: Column, b: Column): Column =
-    graftshim.column(SortedIntersectCount(graftshim.expression(a), graftshim.expression(b)))
-  /** Merge-walk intersection count over sorted string arrays (codegen'd;
-    * see [[SortedIntersectCountStr]]). */
-  def sortedIntersectCountStr(a: Column, b: Column): Column =
-    graftshim.column(SortedIntersectCountStr(graftshim.expression(a), graftshim.expression(b)))
-  /** Exact set Jaccard over packed bitmaps (codegen'd; see [[BitmapJaccard]]). */
-  def bitmapJaccard(a: Column, b: Column): Column =
-    graftshim.column(BitmapJaccard(graftshim.expression(a), graftshim.expression(b)))
-  /** Column-level dot product (codegen'd; see [[DotProduct]]). */
-  def dot(a: Column, b: Column): Column =
-    graftshim.column(DotProduct(graftshim.expression(a), graftshim.expression(b)))
-  /** SimHash of an array<long> of token hashes (codegen'd; see [[SimHash64]]). */
-  def simhash64(hs: Column): Column =
-    graftshim.column(SimHash64(graftshim.expression(hs)))
-  /** MinHash signature of an array<string> token set (codegen'd; see [[MinHashSig]]). */
-  def minhashSig(ws: Column, perms: Int): Column =
-    graftshim.column(MinHashSig(graftshim.expression(ws), perms))
-  /** Distinct bigram shingles of a token array (codegen'd; see [[DistinctBigrams]]). */
-  def distinctBigrams(words: Column): Column =
-    graftshim.column(DistinctBigrams(graftshim.expression(words)))
-  /** All space-joined stride-1 word n-grams (codegen'd; see [[WordNgrams]]). */
-  def wordNgrams(words: Column, n: Int): Column =
-    graftshim.column(WordNgrams(graftshim.expression(words), n))
-  /** SQ8 int8 codes against a calibration struct array (codegen'd; see
-    * [[Sq8EncodeCodes]]). */
-  def sq8EncodeCodes(de: Column, mm: Column): Column =
-    graftshim.column(Sq8EncodeCodes(graftshim.expression(de), graftshim.expression(mm)))
-  /** SQ8 midpoint reconstructions (codegen'd; see [[Sq8Dequant]]). */
-  def sq8Dequant(qe: Column, mm: Column): Column =
-    graftshim.column(Sq8Dequant(graftshim.expression(qe), graftshim.expression(mm)))
-  /** Hyperplane-LSH per-table sign buckets (codegen'd; see [[LshBuckets]]). */
-  def lshBuckets(emb: Column, planes: Column, k: Int): Column =
-    graftshim.column(LshBuckets(graftshim.expression(emb), graftshim.expression(planes), k))
-  /** Exact integer L1 distance over array<long> (codegen'd; see [[L1Dist]]). */
-  def l1Dist(a: Column, b: Column): Column =
-    graftshim.column(L1Dist(graftshim.expression(a), graftshim.expression(b)))
-  /** Chained xxhash64 token fold (codegen'd; see [[XxhashChain]]). */
-  def xxhashChain(ws: Column): Column =
-    graftshim.column(XxhashChain(graftshim.expression(ws)))
-  /** Packed [w0, w1] sign words of a 64-dim vector (codegen'd; see
-    * [[SignWords]]). */
-  def signWords(emb: Column): Column =
-    graftshim.column(SignWords(graftshim.expression(emb)))
-  /** 46-bit polynomial string hash (codegen'd; see [[PolyHash46]]). */
-  def polyHash(s: Column): Column =
-    graftshim.column(PolyHash46(graftshim.expression(s)))
+  /** Merge-walk intersection count over sorted int-id arrays (see
+    * [[VectorOps.sortedIntersectCount]]). */
+  def sortedIntersectCount(a: Column, b: Column): Column = Kernels.sortedIntersectCount(a, b)
+  /** Merge-walk intersection count over sorted string arrays (see
+    * [[VectorOps.sortedIntersectCountStr]]). */
+  def sortedIntersectCountStr(a: Column, b: Column): Column = Kernels.sortedIntersectCountStr(a, b)
+  /** Exact set Jaccard over packed bitmaps (see [[VectorOps.bitmapJaccard]]). */
+  def bitmapJaccard(a: Column, b: Column): Column = Kernels.bitmapJaccard(a, b)
+  /** Column-level dot product over array<double> (see [[VectorOps.dot]]). */
+  def dot(a: Column, b: Column): Column = Kernels.dot(a, b)
+  /** SimHash of an array<long> of token hashes (see [[VectorOps.simhash64]]). */
+  def simhash64(hs: Column): Column = Kernels.simhash64(hs)
+  /** MinHash signature of an array<string> token set (see [[VectorOps.minhashSig]]). */
+  def minhashSig(ws: Column, perms: Int): Column = Kernels.minhashSig(ws, lit(perms))
+  /** Distinct bigram shingles of a token array (see [[VectorOps.distinctBigrams]]). */
+  def distinctBigrams(words: Column): Column = Kernels.distinctBigrams(words)
+  /** All space-joined stride-1 word n-grams (see [[VectorOps.wordNgrams]]). */
+  def wordNgrams(words: Column, n: Int): Column = Kernels.wordNgrams(words, lit(n))
+  /** SQ8 int8 codes against a calibration struct array (see
+    * [[VectorOps.sq8EncodeCodes]]). */
+  def sq8EncodeCodes(de: Column, mm: Column): Column = Kernels.sq8EncodeCodes(de, mm)
+  /** SQ8 midpoint reconstructions (see [[VectorOps.sq8Dequant]]). */
+  def sq8Dequant(qe: Column, mm: Column): Column = Kernels.sq8Dequant(qe, mm)
+  /** Hyperplane-LSH per-table sign buckets (see [[VectorOps.lshBuckets]]). */
+  def lshBuckets(emb: Column, planes: Column, k: Int): Column = Kernels.lshBuckets(emb, planes, lit(k))
+  /** Exact integer L1 distance over array<long> (see [[VectorOps.l1Dist]]). */
+  def l1Dist(a: Column, b: Column): Column = Kernels.l1Dist(a, b)
+  /** Chained xxhash64 token fold (see [[VectorOps.xxhashChain]]). */
+  def xxhashChain(ws: Column): Column = Kernels.xxhashChain(ws)
+  /** Packed [w0, w1] sign words of a 64-dim vector (see [[VectorOps.signWords]]). */
+  def signWords(emb: Column): Column = Kernels.signWords(emb)
+  /** 46-bit polynomial string hash (see [[VectorOps.polyHash46]]). */
+  def polyHash(s: Column): Column = Kernels.polyHash46(s)
   /** [types, Σcount², n_tokens] lexical stats of a space-separated string
-    * (codegen'd; see [[LexStats]]). */
-  def lexStats(text: Column): Column =
-    graftshim.column(LexStats(graftshim.expression(text)))
+    * (see [[VectorOps.lexStats]]). */
+  def lexStats(text: Column): Column = Kernels.lexStats(text)
   /** [covered_tokens, covered_chars] under within-doc duplicated n-grams
-    * (codegen'd; see [[DupNgramCoverage]]). */
-  def dupNgramCoverage(text: Column, n: Column): Column =
-    graftshim.column(DupNgramCoverage(graftshim.expression(text), graftshim.expression(n)))
-  /** struct(gram, cnt) of the most-frequent n-gram, (count DESC, gram ASC)
-    * (codegen'd; see [[TopNGram]]). */
-  def topNGram(words: Column, n: Column): Column =
-    graftshim.column(TopNGram(graftshim.expression(words), graftshim.expression(n)))
+    * (see [[VectorOps.dupNgramCoverage]]; `n` is an int column). */
+  def dupNgramCoverage(text: Column, n: Column): Column = Kernels.dupNgramCoverage(text, n)
+  /** struct(gram, cnt) of the most-frequent n-gram, (count DESC, gram ASC);
+    * NULL when the array is shorter than `n`, an int column (see
+    * [[VectorOps.topNGram]]). */
+  def topNGram(words: Column, n: Column): Column = Kernels.topNGram(words, n)
   /** Exact integer squared L2 over equal-length array<long> sub-vectors
-    * (codegen'd; see [[L2SqDist]]). */
-  def l2sqDist(a: Column, b: Column): Column =
-    graftshim.column(L2SqDist(graftshim.expression(a), graftshim.expression(b)))
-  /** struct(dist, c) argmin over a packed PQ sub-codebook (codegen'd; see
-    * [[PqArgmin]]). */
-  def pqArgmin(sub: Column, cands: Column): Column =
-    graftshim.column(PqArgmin(graftshim.expression(sub), graftshim.expression(cands)))
-  /** struct(s, c) rounded-cosine argmax over packed centroids (codegen'd;
-    * see [[CentArgmax]]). */
-  def centArgmax(emb: Column, cands: Column): Column =
-    graftshim.column(CentArgmax(graftshim.expression(emb), graftshim.expression(cands)))
+    * (see [[VectorOps.l2sq]]). */
+  def l2sqDist(a: Column, b: Column): Column = Kernels.l2sq(a, b)
+  /** struct(dist, c) argmin over a packed PQ sub-codebook (see
+    * [[VectorOps.pqArgmin]]). */
+  def pqArgmin(sub: Column, cands: Column): Column = Kernels.pqArgmin(sub, cands)
+  /** struct(s, c) rounded-cosine argmax over packed centroids (see
+    * [[VectorOps.centArgmax]]). */
+  def centArgmax(emb: Column, cands: Column): Column = Kernels.centArgmax(emb, cands)
 
   /** Bit positions -> packed bitmap words. A Scala UDF on purpose: it runs
     * once per DOCUMENT (not per candidate pair), and the equivalent nested
@@ -1161,8 +770,7 @@ object VectorFunctions {
     * expression nodes per row, on the entry path of every similarity
     * query (FunctionsSpec pins kernel == declarative bit-for-bit,
     * including the zero-vector 0/0 and x/0 IEEE edges). */
-  def l2Normalize(a: Column): Column =
-    graftshim.column(L2Normalize(graftshim.expression(a)))
+  def l2Normalize(a: Column): Column = Kernels.l2normalize(a)
 
   /** Shuffle-FREE nearest-centroid assignment, shared by the whole IVF /
     * kmeans / outlier family.
@@ -1193,7 +801,7 @@ object VectorFunctions {
       // r19: the higher-order `aggregate` fold that lived here was
       // CodegenFallback — every corpus row paid an interpreted NCells x Dim
       // lambda walk with per-step struct allocation (the r18 verdict's
-      // measured kmeans/IVF regression). CentArgmax is its codegen'd twin:
+      // measured kmeans/IVF regression). VectorOps.centArgmax is its codegen'd twin:
       // same round(dot, 6) score (VectorOps.round6 = RoundBase's
       // BigDecimal HALF_UP; same Spark double ordering via
       // SQLOrderingUtil), same strict-improvement lowest-cent_id tiebreak,

@@ -55,7 +55,7 @@ object DedupQueries {
       .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("ws"))
 
   /** MinHash signature: sig[i] = min over tokens of hash64(token, i), via
-    * the codegen'd kernel (graft.functions.MinHashSig). The declarative
+    * the codegen'd kernel (graft.functions.VectorOps.minhashSig). The declarative
     * nested-HOF twin — `transform(sequence(0, perms-1), i ->
     * array_min(transform(ws, w -> xxhash64(w, i))))` — is bit-identical
     * (pinned in FunctionsSpec) but interprets perms x tokens lambda trees
@@ -74,7 +74,7 @@ object DedupQueries {
 
   /** Pack a set-valued column (array<string>) into a dense bitmap
     * (array<long>). Exact set ops then run through the codegen'd popcount
-    * kernel (graft.functions.BitmapJaccard) instead of per-pair
+    * kernel (graft.functions.VectorOps.bitmapJaccard) instead of per-pair
     * array_intersect over strings.
     *
     * Bit numbering is partition-safe: ranks are assigned per hash bucket
@@ -409,7 +409,7 @@ object DedupQueries {
   private val simhash = Q(
     "q_dedup_simhash",
     (s, d) => {
-      // signature via the codegen'd one-pass kernel (graft.functions.SimHash64);
+      // signature via the codegen'd one-pass kernel (graft.functions.VectorOps.simhash64);
       // the declarative twin (aggregate over sequence(0,63) x tokens) is
       // pinned equivalent in FunctionsSpec but interprets 64 lambda trees
       // per token per row

@@ -369,7 +369,7 @@ object QuantQueries {
       // r19: the r18 higher-order `aggregate` fold here was CodegenFallback
       // — every (vec, m) row paid an interpreted NCells x PqSubDim lambda
       // walk with per-step struct allocation (the verdict's measured 6-31%
-      // PQ-family wall regression). PqArgmin is its codegen'd twin: same
+      // PQ-family wall regression). VectorOps.pqArgmin is its codegen'd twin: same
       // cent_id-ascending candidate order, same strictly-smaller-dist
       // replacement, same (Long.MaxValue, -1) empty accumulator.
       .withColumn("__best",

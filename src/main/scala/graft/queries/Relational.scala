@@ -2049,7 +2049,7 @@ object Relational {
     * string spellings, each registered in GraftExtensions; the declared
     * forms below are the native/Column lowerings so a plain driver session
     * runs them). The load-bearing edges: strpos with an INSTANCE argument
-    * (incl. negative = count from the end — the codegen'd StrPosInstance),
+    * (incl. negative = count from the end — the codegen'd StrPosInstance.strpos kernel),
     * split_part with negative and OVERSIZE indexes (both engines return ''
     * out of range, '' handled identically), and printf-style format. The
     * oracle replays the nth-occurrence position with DuckDB's split/rejoin

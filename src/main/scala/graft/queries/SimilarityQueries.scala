@@ -54,7 +54,7 @@ object SimilarityQueries {
     t(s, d, "embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
 
   /** Vectors L2-normalized ONCE at scan, so cosine of a candidate pair is a
-    * single codegen'd dot-product kernel call (graft.functions.DotProduct)
+    * single codegen'd dot-product kernel call (graft.functions.VectorOps.dot)
     * instead of dot + two norms per pair — the difference between 1 and 3
     * array passes on every one of the O(n*k) or O(n^2) candidate pairs. */
   private def normalizedEmbeddings(s: SparkSession, d: String): DataFrame =

@@ -603,7 +603,7 @@ object TextQueries {
     * total_bigrams, in integer basis points, with the flag at > 1500.
     * Highly repetitive text (boilerplate, keyword stuffing, degenerate
     * generations) scores high and gets filtered before training. Narrow
-    * per-row math over the codegen'd DistinctBigrams kernel — rides the
+    * per-row math over the codegen'd VectorOps.distinctBigrams kernel — rides the
     * scan, zero exchanges before the output sort. Pure integer basis
     * points, so the DuckDB twin (declarative list_distinct over the same
     * shingle transform) hash-matches exactly. */
@@ -1323,7 +1323,7 @@ object TextQueries {
       // corpus-keyed count exchange plus a (doc, n) window sort) paid two
       // exchanges for a per-document argmax — the same adverse decade
       // slope the companion q_text_rep_dupcov measured and fixed with its
-      // in-row kernel. The codegen'd TopNGram kernel (equivalence to the
+      // in-row kernel. The codegen'd VectorOps.topNGram kernel (equivalence to the
       // windowed form argued + pinned at functions/VectorExpressions and
       // FunctionsSpec) sorts the grams and keeps the longest run with the
       // (count DESC, gram ASC) tie-break in one JIT'd pass; an interim HOF
@@ -1898,7 +1898,7 @@ object TextQueries {
   private val lexDiversity = Q(
     "q_text_diversity",
     (s, d) =>
-      // the codegen'd kernel (graft.functions.LexStats) carries the hot
+      // the codegen'd kernel (graft.functions.VectorOps.lexStats) carries the hot
       // path and emits the token count too, so the text is tokenized
       // exactly once per row; the declarative fold above stays as its
       // pinned parity twin

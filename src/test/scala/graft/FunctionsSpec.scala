@@ -1108,6 +1108,26 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("IsJsonComposite.isComposite == the full-parse form it short-cuts (pure JVM)") {
+    import graft.functions.IsJsonComposite.isComposite
+    import graft.json.{JArray, JObject, Json}
+    import org.apache.spark.unsafe.types.UTF8String
+    def viaParse(s: String) = Json.parseOpt(s) match {
+      case Some(_: JObject) | Some(_: JArray) => true
+      case _                                  => false
+    }
+    def same(d: String) = assert(isComposite(UTF8String.fromString(d)) == viaParse(d), d)
+    Seq("", " ", "[]", "{}", "\"[]\"", "\"x\"", " \t\r\n[1, 2]", "\n{\"a\": 1}\n",
+      "\uFEFF[1]", "\uFEFF{}", "\uFEFF7", "[1, 2] x", "{\"a\": 1} }", "[junk", "{junk", "[", "{",
+      "10.0.0.1", "2001:db8::1", "req-1f3a9c", "7", "-1.5e3", "true", "null", "\u0000[1]",
+      "\u000b[1]", "/* c */ []", "\u00e9", "[\"\u00e9\"]").foreach(same)
+    assert(isComposite(UTF8String.fromString(" [1]")) && !isComposite(UTF8String.fromString("10.0.0.1")))
+    // seeded fuzz over the characters that decide the first token
+    val rnd = new scala.util.Random(7)
+    val alphabet = "[]{} \t\n\r\"a1,:.\uFEFF\u00e9"
+    (0 until 3000).foreach(_ => same(Seq.fill(rnd.nextInt(9))(alphabet(rnd.nextInt(alphabet.length))).mkString))
+  }
+
   test("StrPosInstance: Presto occurrence semantics incl. negative instance (pure JVM)") {
     import graft.functions.StrPosInstance.strpos
     import org.apache.spark.unsafe.types.UTF8String.{fromString => u}

@@ -216,47 +216,28 @@ class OperatorsSpec extends AnyFunSuite with SparkSuite {
     assert(s.sql("""SELECT json_array_contains('{"a": 1}', 'a')""").head.isNullAt(0))
   }
 
-  test("optimizer rule rewrites string json_array_contains to the codegen form (opt-in)") {
+  test("json_array_contains keeps the Presto-exact expression through optimization") {
     val s = spark
     // parquet-backed input so constant folding can't pre-evaluate
     val docs = s.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def plan(expr: String) = docs.selectExpr("doc_id", "lang", expr)
-
-    // DEFAULT: rewrite off — the Presto-exact eval expression survives
-    val off = plan("json_array_contains(to_json(array(lang)), 'en') AS has_en")
-    assert(off.queryExecution.optimizedPlan.toString.toLowerCase.contains("jsonarraycontains"))
-
-    s.conf.set(graft.functions.RewriteJsonArrayContains.ConfKey, "true")
-    try {
-      val df = plan("json_array_contains(to_json(array(lang)), 'en') AS has_en")
-      val optimized = df.queryExecution.optimizedPlan.toString
-      assert(!optimized.toLowerCase.contains("jsonarraycontains"),
-        s"compat expression survived optimization:\n$optimized")
-      assert(optimized.contains("array_contains") || optimized.contains("from_json"), optimized)
-      // rewritten form computes the same answer on all-string arrays
-      df.collect().foreach(r => assert(r.getBoolean(2) == (r.getString(1) == "en")))
-      // numeric probe keeps the compat expression even when enabled
-      val num = docs.selectExpr("json_array_contains(to_json(array(doc_id)), doc_id) AS m")
-      assert(num.queryExecution.optimizedPlan.toString.toLowerCase.contains("jsonarraycontains"))
-      num.collect().foreach(r => assert(r.getBoolean(0)))
-    } finally s.conf.unset(graft.functions.RewriteJsonArrayContains.ConfKey)
+    val df = docs.selectExpr("doc_id", "lang", "json_array_contains(to_json(array(lang)), 'en') AS has_en")
+    assert(df.queryExecution.optimizedPlan.toString.toLowerCase.contains("jsonarraycontains"))
+    df.collect().foreach(r => assert(r.getBoolean(2) == (r.getString(1) == "en")))
+    // numeric probe: JSON numbers compare numerically
+    val num = docs.selectExpr("json_array_contains(to_json(array(doc_id)), doc_id) AS m")
+    assert(num.queryExecution.optimizedPlan.toString.toLowerCase.contains("jsonarraycontains"))
+    num.collect().foreach(r => assert(r.getBoolean(0)))
   }
 
-  test("json_array_contains: mixed-type arrays keep Presto semantics unless the rewrite is opted in") {
+  test("json_array_contains: mixed-type arrays keep Presto semantics") {
     val s = spark
     val docs = s.read.parquet("/root/testdata/sf0.001/documents.parquet")
     // string probe against a NUMERIC json array: Presto (and the eval
     // expression) say false — '1' is not a JSON string element of [<id>]
-    def probe() = docs
+    val probe = docs
       .selectExpr("json_array_contains(to_json(array(doc_id)), CAST(doc_id AS STRING)) AS m")
       .collect().map(_.getBoolean(0))
-    assert(probe().forall(_ == false), "default must be Presto-exact")
-    // with the opt-in rewrite, from_json(..., array<string>) stringifies the
-    // numeric element and the probe matches — the documented deviation that
-    // makes the rewrite unsafe for mixed-type arrays (hence opt-in)
-    s.conf.set(graft.functions.RewriteJsonArrayContains.ConfKey, "true")
-    try assert(probe().forall(_ == true))
-    finally s.conf.unset(graft.functions.RewriteJsonArrayContains.ConfKey)
+    assert(probe.forall(_ == false), "must be Presto-exact")
   }
 
   test("session fold: a late event more than a gap BEFORE the open session start forms its own session") {

@@ -305,6 +305,39 @@ class StoreCommitSpec extends AnyFunSuite with SparkSuite {
         "through Engine.createSession and take its cores from Engine.cores")
     }
   }
+
+  /** Expression classes allowed to hand-write generated code, and why a
+    * `Kernels` binding (StaticInvoke) cannot express each. */
+  private val CodegenAllowList = Map(
+    "MapCosineSim" -> "own type check; the map key type rides as a reference object",
+    "Hmac" -> "own type check and prettyName",
+    "JsonArrayContains" -> "a boxed-null static call feeds a primitive result",
+    "JsonSizeAtPath" -> "a boxed-null static call feeds a primitive result",
+    "TryCastIntegral" -> "a mutable parse wrapper and per-width range checks")
+
+  test("guard: generated code is hand-written only in the kept expression classes") {
+    val files = sources(new java.io.File("src/main/scala"))
+    assert(files.size > 20, "source tree not found - is the working dir the repo root?")
+    val decl = """^\s*(?:final\s+|private\S*\s+)*(?:case\s+)?(?:class|object|trait)\s+(\w+)""".r.unanchored
+    // (file, enclosing class or object) of every line that hand-writes
+    // generated code
+    val hits = files.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try {
+        var cls = "<top level>"
+        src.getLines().flatMap { line =>
+          line match { case decl(c) => cls = c; case _ => }
+          if (line.contains("defineCodeGen(") || line.contains("nullSafeCodeGen("))
+            Some(f.getName -> cls)
+          else None
+        }.toList
+      } finally src.close()
+    }
+    assert(hits.map(_._2).toSet == CodegenAllowList.keySet,
+      s"hand-written codegen in ${hits.filterNot(h => CodegenAllowList.contains(h._2))}, " +
+        s"kept classes without any: ${CodegenAllowList.keySet -- hits.map(_._2)} - bind a " +
+        "static kernel through graft.functions.Kernels instead")
+  }
 }
 
 /** Local filesystem under the `crashfs` scheme that, while armed, dies
