@@ -43,13 +43,8 @@ object Closure {
     *               for every component of diameter <= ~2^rounds
     * @return (`id`, `lbl`) with lbl = component-min id (within the bound)
     */
-  def minLabel(
-      nodes: DataFrame, edges: DataFrame, rounds: Int,
-      eagerCheckpoints: Boolean = false): DataFrame = {
-    // eagerCheckpoints exists for tools.MinhashProbe's lazy-vs-eager
-    // job-count evidence (r19, VERDICT r18 #8); production callers take
-    // the default
-    val ck = (df: DataFrame) => df.localCheckpoint(eagerCheckpoints)
+  def minLabel(nodes: DataFrame, edges: DataFrame, rounds: Int): DataFrame = {
+    val ck = (df: DataFrame) => df.localCheckpoint(eager = false)
     // CONTRACTION PREPASS: the near-dup graphs this serves are locally DENSE
     // (planted dup clusters are near-cliques — sf0.1 measured 1.8M verified
     // edges over 5k docs), and iterating the label loop directly re-shuffles
@@ -67,7 +62,8 @@ object Closure {
     // LAZY checkpoints (r18 optimization round): the plan-truncation they
     // exist for happens at wrap time either way; lazy lets the
     // contracted.isEmpty probe below materialize BOTH frames in one job
-    // instead of running two blocking materialization jobs first.
+    // instead of running two blocking materialization jobs first (r19
+    // measured lazy 46 jobs/95 stages vs eager 57/97; OPTIMIZATION_r19.md).
     val nbMin0 = edges.groupBy(col("src").as("id")).agg(min("dst").as("nbmin"))
     val m = nodes
       .join(nbMin0, Seq("id"), "left")
@@ -85,22 +81,20 @@ object Closure {
     // isEmpty, NOT count() (r19 measured): count's partial+final agg adds
     // an exchange stage per probe and always materializes every partition,
     // where take(1) usually stops after the first — the count variant read
-    // 51 jobs/113 stages vs isEmpty's 46/95 in MinhashProbe.
+    // 51 jobs/113 stages vs isEmpty's 46/95 (r19 closure-phase probe).
     if (contracted.isEmpty) {
       m.select(col("id"), col("rep").as("lbl"))
     } else {
       val repNodes = m.select(col("rep").as("id")).distinct()
-      val repLab = propagate(repNodes, contracted, rounds, eagerCheckpoints)
+      val repLab = propagate(repNodes, contracted, rounds)
       m.join(repLab.select(col("id").as("rep"), col("lbl")), "rep")
         .select(col("id"), col("lbl"))
     }
   }
 
   /** The min-label + pointer-jump loop over an (ideally contracted) graph. */
-  private def propagate(
-      nodes: DataFrame, edges: DataFrame, rounds: Int,
-      eagerCheckpoints: Boolean): DataFrame = {
-    val ck = (df: DataFrame) => df.localCheckpoint(eagerCheckpoints)
+  private def propagate(nodes: DataFrame, edges: DataFrame, rounds: Int): DataFrame = {
+    val ck = (df: DataFrame) => df.localCheckpoint(eager = false)
     // every checkpoint in this loop is LAZY (r18 optimization round): the
     // per-round convergence probe is an action anyway, so it materializes
     // the round's whole chain in ONE job where the eager form ran three

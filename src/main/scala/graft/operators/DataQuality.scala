@@ -56,7 +56,7 @@ object DataQuality {
 
   /** The stored ledger: (constraint, violations, n_rows); empty before the
     * first fold. Read-side crash tolerance is NON-mutating (readableRoot);
-    * the writer's committedBatch guard performs the actual restore. */
+    * the writer's publishBatch performs the actual restore. */
   def readLedger(spark: SparkSession, storeDir: String): DataFrame = {
     val dir = new Path(s"$storeDir/ledger")
     val fs = StoreCommit.fsOf(spark, dir)
@@ -73,15 +73,12 @@ object DataQuality {
   def updateStoredLedger(
       spark: SparkSession, batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     val dir = new Path(s"$storeDir/ledger")
-    val fs = StoreCommit.fsOf(spark, dir)
-    if (batchId <= StoreCommit.committedBatch(fs, dir)) return // replay: already folded
-    val merged = readLedger(spark, storeDir)
-      .unionByName(violationCounts(batch))
-      .groupBy("constraint")
-      .agg(sum("violations").as("violations"), sum("n_rows").as("n_rows"))
-    StoreCommit.publish(fs, dir) { tmp =>
-      merged.coalesce(1).write.parquet(tmp.toString)
-      StoreCommit.writeMeta(fs, tmp, batchId)
+    StoreCommit.publishBatch(StoreCommit.fsOf(spark, dir), dir, batchId) { tmp =>
+      readLedger(spark, storeDir)
+        .unionByName(violationCounts(batch))
+        .groupBy("constraint")
+        .agg(sum("violations").as("violations"), sum("n_rows").as("n_rows"))
+        .coalesce(1).write.parquet(tmp.toString)
     }
   }
 
@@ -137,14 +134,11 @@ object DataQuality {
   def updateDriftCurrent(
       spark: SparkSession, batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     val dir = new Path(s"$storeDir/drift_cur")
-    val fs = StoreCommit.fsOf(spark, dir)
-    if (batchId <= StoreCommit.committedBatch(fs, dir)) return // replay: already folded
-    val merged = readBins(spark, dir, "n_cur")
-      .unionByName(binCounts(batch, "n_cur"))
-      .groupBy("bin").agg(sum("n_cur").as("n_cur"))
-    StoreCommit.publish(fs, dir) { tmp =>
-      merged.coalesce(1).write.parquet(tmp.toString)
-      StoreCommit.writeMeta(fs, tmp, batchId)
+    StoreCommit.publishBatch(StoreCommit.fsOf(spark, dir), dir, batchId) { tmp =>
+      readBins(spark, dir, "n_cur")
+        .unionByName(binCounts(batch, "n_cur"))
+        .groupBy("bin").agg(sum("n_cur").as("n_cur"))
+        .coalesce(1).write.parquet(tmp.toString)
     }
   }
 

@@ -54,14 +54,17 @@ object DatasetCard {
 
   /** Fold a delta of documents (doc_id, source, lang, text, n_chars) into
     * the card state. Replay-safe: rows at or below the stored boundary are
-    * dropped, so an at-least-once redelivery is a no-op. */
+    * dropped, so an at-least-once redelivery is a no-op — a micro-batch
+    * fold needs no cursor of its own. A doc_id repeated inside the delta
+    * (overlapping deliveries drained into one micro-batch) counts once.
+    * Per-delta work is O(delta) + a languages x sources partials merge. */
   def update(spark: SparkSession, delta: DataFrame, cardDir: String): Unit = {
     import spark.implicits._
     val dir = new Path(cardDir)
     val fs = StoreCommit.fsOf(spark, dir)
     StoreCommit.publish(fs, dir) { tmp =>
       val bound = boundary(spark, cardDir)
-      val fresh = delta.filter(col("doc_id") > bound)
+      val fresh = delta.dropDuplicates("doc_id").filter(col("doc_id") > bound)
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
           size(split(col("text"), " ")).cast("long").as("n_toks"),
           xxhash64(col("text")).as("th"))

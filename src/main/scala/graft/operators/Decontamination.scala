@@ -140,18 +140,13 @@ object Decontamination {
       spark: SparkSession, docsStream: DataFrame, filterDir: String,
       outDir: String, checkpointDir: String,
       trigger: org.apache.spark.sql.streaming.Trigger): org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        val deduped = batch.toDF().dropDuplicates("doc_id").cache()
+    graft.streaming.StreamingIngest.foldEachBatch(docsStream, checkpointDir, trigger) {
+      (batch, _) =>
+        val deduped = batch.dropDuplicates("doc_id").cache()
         try {
           val fresh = ReplayGuard.freshThenAdvance(deduped, "doc_id", outDir)
-          scrub(s, fresh, filterDir)
+          scrub(batch.sparkSession, fresh, filterDir)
             .write.mode(SaveMode.Append).parquet(outDir)
         } finally deduped.unpersist()
-        ()
-      }
-      .trigger(trigger)
-      .start()
+    }
 }

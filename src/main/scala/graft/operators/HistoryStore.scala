@@ -82,93 +82,83 @@ object HistoryStore {
       batchId: Long): Unit = {
     val dir = new Path(storeDir)
     val fs = StoreCommit.fsOf(spark, dir)
-    if (StoreCommit.committedBatch(fs, dir) >= batchId) return // replay: done
+    StoreCommit.publishBatch(fs, dir, batchId) { tmp =>
+      // batch-local gaps-and-islands — the declared row's window, delta-sized
+      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+      val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val isl = events
+        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+        .withColumn("chg",
+          when(!(lag("event_type", 1).over(w) <=> col("event_type")), 1L)
+            .otherwise(0L))
+        .withColumn("vloc", sum("chg").over(cum))
+        .groupBy("user_id", "event_type", "vloc")
+        .agg(min("ts").as("vfrom"), count(lit(1)).as("n"))
 
-    // batch-local gaps-and-islands — the declared row's window, delta-sized
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val isl = events
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("chg",
-        when(!(lag("event_type", 1).over(w) <=> col("event_type")), 1L)
-          .otherwise(0L))
-      .withColumn("vloc", sum("chg").over(cum))
-      .groupBy("user_id", "event_type", "vloc")
-      .agg(min("ts").as("vfrom"), count(lit(1)).as("n"))
+      // the cursor check recovered the main dir, so the fold reads it directly
+      val hasStore = fs.exists(new Path(dir, "open"))
+      val (oldClosed, cursors) =
+        if (hasStore) (closedRows(spark, storeDir), openCursors(spark, storeDir))
+        else {
+          val emptyClosed = spark.range(0).select(
+            lit(0L).as("user_id"), lit(0L).as("version"), lit("").as("event_type"),
+            lit(null).cast("timestamp").as("valid_from"),
+            lit(null).cast("timestamp").as("valid_to"), lit(0L).as("n_events"))
+          val emptyOpen = spark.range(0).select(
+            lit(0L).as("user_id"), lit(0L).as("version"), lit("").as("event_type"),
+            lit(null).cast("timestamp").as("valid_from"), lit(0L).as("n_events"))
+          (emptyClosed, emptyOpen)
+        }
 
-    val hasStore = fs.exists(new Path(StoreCommit.readableRoot(fs, dir), "open"))
-    val (oldClosed, cursors) =
-      if (hasStore) (closedRows(spark, storeDir), openCursors(spark, storeDir))
-      else {
-        val emptyClosed = spark.range(0).select(
-          lit(0L).as("user_id"), lit(0L).as("version"), lit("").as("event_type"),
-          lit(null).cast("timestamp").as("valid_from"),
-          lit(null).cast("timestamp").as("valid_to"), lit(0L).as("n_events"))
-        val emptyOpen = spark.range(0).select(
-          lit(0L).as("user_id"), lit(0L).as("version"), lit("").as("event_type"),
-          lit(null).cast("timestamp").as("valid_from"), lit(0L).as("n_events"))
-        (emptyClosed, emptyOpen)
-      }
+      // ONE user-keyed join decides merge-vs-close for each user's first island
+      val first = isl.filter(col("vloc") === 1)
+        .select(col("user_id"), col("event_type").as("first_etype"),
+          col("vfrom").as("first_vfrom"))
+      val cur = cursors.select(
+        col("user_id"), col("version").as("cver"), col("event_type").as("cetype"),
+        col("valid_from").as("cvfrom"), col("n_events").as("cn"))
+      val plan = first.join(cur, Seq("user_id"), "left")
+        .select(col("user_id"), col("first_vfrom"),
+          (col("cver").isNotNull && col("cetype") === col("first_etype")).as("merges"),
+          coalesce(col("cver"), lit(0L)).as("base_ver"),
+          col("cvfrom"), col("cn"), col("cetype"),
+          col("cver").isNotNull.as("has_cursor"))
 
-    // ONE user-keyed join decides merge-vs-close for each user's first island
-    val first = isl.filter(col("vloc") === 1)
-      .select(col("user_id"), col("event_type").as("first_etype"),
-        col("vfrom").as("first_vfrom"))
-    val cur = cursors.select(
-      col("user_id"), col("version").as("cver"), col("event_type").as("cetype"),
-      col("valid_from").as("cvfrom"), col("n_events").as("cn"))
-    val plan = first.join(cur, Seq("user_id"), "left")
-      .select(col("user_id"), col("first_vfrom"),
-        (col("cver").isNotNull && col("cetype") === col("first_etype")).as("merges"),
-        coalesce(col("cver"), lit(0L)).as("base_ver"),
-        col("cvfrom"), col("cn"), col("cetype"),
-        col("cver").isNotNull.as("has_cursor"))
+      // islands with global versions; the merging first island inherits the
+      // open interval's version, start, and count
+      val merged = isl.join(plan, Seq("user_id"))
+        .select(
+          col("user_id"), col("event_type"),
+          (col("vloc") + col("base_ver") - when(col("merges"), 1L).otherwise(0L))
+            .as("version"),
+          when(col("vloc") === 1 && col("merges"), col("cvfrom"))
+            .otherwise(col("vfrom")).as("valid_from"),
+          (col("n") + when(col("vloc") === 1 && col("merges"), col("cn"))
+            .otherwise(lit(0L))).as("n_events"))
 
-    // islands with global versions; the merging first island inherits the
-    // open interval's version, start, and count
-    val merged = isl.join(plan, Seq("user_id"))
-      .select(
-        col("user_id"), col("event_type"),
-        (col("vloc") + col("base_ver") - when(col("merges"), 1L).otherwise(0L))
-          .as("version"),
-        when(col("vloc") === 1 && col("merges"), col("cvfrom"))
-          .otherwise(col("vfrom")).as("valid_from"),
-        (col("n") + when(col("vloc") === 1 && col("merges"), col("cn"))
-          .otherwise(lit(0L))).as("n_events"))
+      // close each user's non-final islands at the next island's start
+      val wv = Window.partitionBy("user_id").orderBy("version")
+      val withNext = merged.withColumn("valid_to", lead("valid_from", 1).over(wv))
+      val batchClosed = withNext.filter(col("valid_to").isNotNull)
+        .select("user_id", "version", "event_type", "valid_from", "valid_to", "n_events")
+      val newOpen = withNext.filter(col("valid_to").isNull)
+        .select("user_id", "version", "event_type", "valid_from", "n_events")
 
-    // close each user's non-final islands at the next island's start
-    val wv = Window.partitionBy("user_id").orderBy("version")
-    val withNext = merged.withColumn("valid_to", lead("valid_from", 1).over(wv))
-    val batchClosed = withNext.filter(col("valid_to").isNotNull)
-      .select("user_id", "version", "event_type", "valid_from", "valid_to", "n_events")
-    val newOpen = withNext.filter(col("valid_to").isNull)
-      .select("user_id", "version", "event_type", "valid_from", "n_events")
+      // a cursor whose run does NOT continue closes at the batch's first event
+      val cursorClosed = plan.filter(col("has_cursor") && !col("merges"))
+        .select(col("user_id"), col("base_ver").as("version"),
+          col("cetype").as("event_type"), col("cvfrom").as("valid_from"),
+          col("first_vfrom").as("valid_to"), col("cn").as("n_events"))
+      // cursors for users absent from this batch stay open untouched
+      val untouched = cur.join(first.select("user_id"), Seq("user_id"), "left_anti")
+        .select(col("user_id"), col("cver").as("version"),
+          col("cetype").as("event_type"), col("cvfrom").as("valid_from"),
+          col("cn").as("n_events"))
 
-    // a cursor whose run does NOT continue closes at the batch's first event
-    val cursorClosed = plan.filter(col("has_cursor") && !col("merges"))
-      .select(col("user_id"), col("base_ver").as("version"),
-        col("cetype").as("event_type"), col("cvfrom").as("valid_from"),
-        col("first_vfrom").as("valid_to"), col("cn").as("n_events"))
-    // cursors for users absent from this batch stay open untouched
-    val untouched = cur.join(first.select("user_id"), Seq("user_id"), "left_anti")
-      .select(col("user_id"), col("cver").as("version"),
-        col("cetype").as("event_type"), col("cvfrom").as("valid_from"),
-        col("cn").as("n_events"))
-
-    publish(spark, storeDir, batchId,
-      closed = oldClosed.unionByName(cursorClosed).unionByName(batchClosed),
-      open = untouched.unionByName(newOpen))
-  }
-
-  private def publish(
-      spark: SparkSession, storeDir: String, batchId: Long,
-      closed: DataFrame, open: DataFrame): Unit = {
-    val dir = new Path(storeDir)
-    val fs = StoreCommit.fsOf(spark, dir)
-    StoreCommit.publish(fs, dir) { tmp =>
-      closed.write.mode(SaveMode.Overwrite).parquet(s"$tmp/closed")
-      open.write.mode(SaveMode.Overwrite).parquet(s"$tmp/open")
-      StoreCommit.writeMeta(fs, tmp, batchId)
+      oldClosed.unionByName(cursorClosed).unionByName(batchClosed)
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/closed")
+      untouched.unionByName(newOpen)
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/open")
     }
   }
 }

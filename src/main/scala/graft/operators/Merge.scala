@@ -74,7 +74,13 @@ object Merge {
     * for one id in a single batch have no defined winner — split them across
     * batches or pre-aggregate); violations are rejected up front rather than
     * silently writing duplicate-id rows. Returns one (partitionPath,
-    * nReplaced, nInserted) per touched partition. */
+    * nReplaced, nInserted) per touched partition.
+    *
+    * Folded per micro-batch ([[graft.streaming.StreamingIngest.foldEachBatch]]),
+    * this keeps a table CURRENT under late corrections — CDC-style, which
+    * an append-only lake cannot — and is effectively-once without a
+    * transactional commit log: the merge is idempotent by id, so a
+    * crash-replayed batch replaces the same rows. */
   def upsertPartitioned(
       spark: SparkSession,
       tableDir: String,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 
 /** Event-stream monitoring: the hourly-counts → dense spine → rolling
   * z-score pipeline shared by the batch query (`q_events_anomaly`) and the
-  * streaming monitor ([[graft.streaming.StreamingIngest.startAnomalyStream]]).
+  * streaming monitor ([[updateHourly]] folded per micro-batch).
   *
   * The streaming shape: per micro-batch, fold the batch's hourly partial
   * counts into a persisted hourly table (atomic aside+rename swap, replay
@@ -84,27 +84,31 @@ object Monitoring {
   }
 
   /** Fold one micro-batch of (event_type, ts) events into the stored hourly
-    * table. Replay-safe: a batch id at or below the committed cursor (stored
-    * inside the swapped directory, so cursor and content are one atomic
-    * unit) is a crash replay and folds nothing. */
+    * table, then republish the alerts table derived from the store alone
+    * through the IDENTICAL integer z-score gate the batch query and DuckDB
+    * oracle run. Replay-safe: a batch id at or below the committed cursor
+    * (stored inside the swapped directory, so cursor and content are one
+    * atomic unit) is a crash replay and folds nothing. The alerts publish
+    * runs even then: a crash between the two publishes leaves the hourly
+    * fold committed and the alerts stale, and the replay heals them.
+    * Per-batch cost: one O(delta) hourly aggregate plus analytics over the
+    * bounded types × hours store — event volume never re-enters. */
   def updateHourly(
       spark: SparkSession, batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     val dir = new Path(s"$storeDir/hourly")
-    val fs = StoreCommit.fsOf(spark, dir)
-    if (batchId <= StoreCommit.committedBatch(fs, dir)) return // replay: already folded
-    val merged = readHourly(spark, storeDir)
-      .unionByName(hourlyCounts(batch))
-      .groupBy("event_type", "hr").agg(sum("n").as("n"))
-    StoreCommit.publish(fs, dir) { tmp =>
-      merged.coalesce(1).write.parquet(tmp.toString)
-      StoreCommit.writeMeta(fs, tmp, batchId)
+    StoreCommit.publishBatch(StoreCommit.fsOf(spark, dir), dir, batchId) { tmp =>
+      readHourly(spark, storeDir)
+        .unionByName(hourlyCounts(batch))
+        .groupBy("event_type", "hr").agg(sum("n").as("n"))
+        .coalesce(1).write.parquet(tmp.toString)
     }
+    publishAlerts(spark, storeDir)
   }
 
   /** Re-derive and atomically publish the alerts table from the stored
     * hourly counts — idempotent by construction (pure function of the
     * store), so it needs no replay cursor. */
-  def publishAlerts(spark: SparkSession, storeDir: String): Unit = {
+  private def publishAlerts(spark: SparkSession, storeDir: String): Unit = {
     val dir = new Path(s"$storeDir/alerts")
     StoreCommit.publish(StoreCommit.fsOf(spark, dir), dir)(tmp =>
       anomalies(readHourly(spark, storeDir)).coalesce(1).write.parquet(tmp.toString))

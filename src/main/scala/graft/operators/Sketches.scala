@@ -126,14 +126,11 @@ object Sketches {
   def updateStoredCountMin(
       spark: SparkSession, keys: DataFrame, storeDir: String, batchId: Long): Unit = {
     val dir = new Path(s"$storeDir/cm")
-    val fs = StoreCommit.fsOf(spark, dir)
-    if (batchId <= StoreCommit.committedBatch(fs, dir)) return // crash replay: already folded
-    val merged = readCountMin(spark, storeDir)
-      .unionByName(countMinCells(keys))
-      .groupBy("j", "c").agg(sum("cell").as("cell"))
-    StoreCommit.publish(fs, dir) { tmp =>
-      merged.coalesce(1).write.parquet(tmp.toString)
-      StoreCommit.writeMeta(fs, tmp, batchId)
+    StoreCommit.publishBatch(StoreCommit.fsOf(spark, dir), dir, batchId) { tmp =>
+      readCountMin(spark, storeDir)
+        .unionByName(countMinCells(keys))
+        .groupBy("j", "c").agg(sum("cell").as("cell"))
+        .coalesce(1).write.parquet(tmp.toString)
     }
   }
 
@@ -175,15 +172,12 @@ object Sketches {
       spark: SparkSession, keys: DataFrame, storeDir: String,
       k: Int, batchId: Long): Unit = {
     val dir = new Path(s"$storeDir/kmv")
-    val fs = StoreCommit.fsOf(spark, dir)
-    if (batchId <= StoreCommit.committedBatch(fs, dir)) return // crash replay: already folded
-    val merged = readKmv(spark, storeDir)
-      .unionByName(kmvSketch(keys, k))
-      .groupBy("h").agg(min("sample_key").as("sample_key"))
-      .orderBy("h").limit(k)
-    StoreCommit.publish(fs, dir) { tmp =>
-      merged.coalesce(1).write.parquet(tmp.toString)
-      StoreCommit.writeMeta(fs, tmp, batchId)
+    StoreCommit.publishBatch(StoreCommit.fsOf(spark, dir), dir, batchId) { tmp =>
+      readKmv(spark, storeDir)
+        .unionByName(kmvSketch(keys, k))
+        .groupBy("h").agg(min("sample_key").as("sample_key"))
+        .orderBy("h").limit(k)
+        .coalesce(1).write.parquet(tmp.toString)
     }
   }
 
@@ -198,13 +192,10 @@ object Sketches {
       spark: SparkSession, keys: DataFrame, storeDir: String,
       k: Int, batchId: Long): Unit = {
     val dir = new Path(s"$storeDir/sketch")
-    val fs = StoreCommit.fsOf(spark, dir)
-    if (batchId <= StoreCommit.committedBatch(fs, dir)) return // crash replay: already folded
-    val merged = mergeMisraGries(readSketch(spark, storeDir), summarize(keys, k), k)
     import spark.implicits._
-    StoreCommit.publish(fs, dir) { tmp =>
-      merged.toSeq.toDF("key", "cnt").coalesce(1).write.parquet(tmp.toString)
-      StoreCommit.writeMeta(fs, tmp, batchId)
+    StoreCommit.publishBatch(StoreCommit.fsOf(spark, dir), dir, batchId) { tmp =>
+      mergeMisraGries(readSketch(spark, storeDir), summarize(keys, k), k)
+        .toSeq.toDF("key", "cnt").coalesce(1).write.parquet(tmp.toString)
     }
   }
 }

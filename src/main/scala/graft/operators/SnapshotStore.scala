@@ -62,16 +62,17 @@ object SnapshotStore {
 
   /** Initialize from a base snapshot (the bulk-load before the changelog
     * stream attaches). Base rows carry `_seq` = 0, so any change with a
-    * positive sequence number supersedes them. The commit cursor is
-    * stamped −1 — the bulk load is not a micro-batch, so the stream's own
-    * batch 0 must still fold (a build-then-stream pipeline would silently
-    * drop its first micro-batch otherwise). `base` must not already
-    * contain the bookkeeping columns. */
-  def build(spark: SparkSession, base: DataFrame, storeDir: String): Unit =
-    publish(spark, storeDir, batchId = -1L,
-      snapshot = base
-        .withColumn(SeqCol, lit(0L))
-        .withColumn(TombstoneCol, lit(false)))
+    * positive sequence number supersedes them. The bulk load stamps no
+    * commit cursor, which reads as −1 — it is not a micro-batch, so the
+    * stream's own batch 0 must still fold (a build-then-stream pipeline
+    * would silently drop its first micro-batch otherwise). `base` must not
+    * already contain the bookkeeping columns. */
+  def build(spark: SparkSession, base: DataFrame, storeDir: String): Unit = {
+    val dir = new Path(storeDir)
+    StoreCommit.publish(StoreCommit.fsOf(spark, dir), dir)(tmp =>
+      base.withColumn(SeqCol, lit(0L)).withColumn(TombstoneCol, lit(false))
+        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/snapshot"))
+  }
 
   /** Fold one changelog micro-batch; replayed batchIds are a no-op. A
     * first apply on a not-yet-built store initializes from the batch
@@ -94,62 +95,54 @@ object SnapshotStore {
       opCol: String = "op", deleteOp: String = "D"): Unit = {
     val dir = new Path(storeDir)
     val fs = StoreCommit.fsOf(spark, dir)
-    if (StoreCommit.committedBatch(fs, dir) >= batchId) return // replay: done
-    val payloadCols = changes.columns.toSeq
-      .filterNot(c => c == keyCol || c == seqCol || c == opCol)
-    // batch-local latest-wins compaction — rn=1 plans as a WindowGroupLimit.
-    // seq desc alone leaves the winner NONDETERMINISTIC when two change
-    // rows inside one batch share (key, seq) — the split-invariance proof
-    // assumes per-key seq uniqueness but nothing upstream enforces it
-    // (r12 ADVICE). Deterministic tie-break: op first (a delete outranks
-    // an upsert at the same seq — the conservative read for a contract
-    // violation), then a payload hash, so any two runs over any batch
-    // split of the same duplicated changelog pick the SAME row. The
-    // delete-wins term compares against `deleteOp` DIRECTLY rather than
-    // sorting op strings lexically — "D" < "I"/"U" made the plain asc sort
-    // look right, but deleteOp is caller-supplied, and an op vocabulary
-    // like ("append", deleteOp = "delete") would have silently inverted
-    // the documented conservative rule while staying deterministic
-    // (r13 ADVICE).
-    val tieBreak = xxhash64((col(opCol) +: payloadCols.map(col)): _*)
-    val latest = changes
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(keyCol)
-          .orderBy(col(seqCol).desc, (col(opCol) === deleteOp).desc,
-            col(opCol).asc, tieBreak.asc)))
-      .filter(col("_rn") === 1)
-      .select(
-        col(keyCol) +:
-          col(seqCol).cast("long").as(SeqCol) +:
-          (col(opCol) === deleteOp).as(TombstoneCol) +:
-          payloadCols.map(col): _*)
-    val hasStore = fs.exists(
-      new Path(StoreCommit.readableRoot(fs, dir), "snapshot"))
-    if (!hasStore) { publish(spark, storeDir, batchId, latest); return }
-    val snap = readAll(spark, storeDir)
-    // ONE co-partitioned full-outer key join; the higher _seq wins, so a
-    // batch carrying only stale sequence numbers folds to a no-op
-    val win = col(s"c.$SeqCol").isNotNull &&
-      (col(s"s.$SeqCol").isNull || col(s"c.$SeqCol") > col(s"s.$SeqCol"))
-    val next = snap.as("s").join(latest.as("c"), Seq(keyCol), "full_outer")
-      .select(
-        col(keyCol) +:
-          when(win, col(s"c.$SeqCol")).otherwise(col(s"s.$SeqCol")).as(SeqCol) +:
-          when(win, col(s"c.$TombstoneCol")).otherwise(col(s"s.$TombstoneCol"))
-            .as(TombstoneCol) +:
-          payloadCols.map(p =>
-            when(win, col(s"c.$p")).otherwise(col(s"s.$p")).as(p)): _*)
-    publish(spark, storeDir, batchId, next)
-  }
-
-  private def publish(
-      spark: SparkSession, storeDir: String, batchId: Long,
-      snapshot: DataFrame): Unit = {
-    val dir = new Path(storeDir)
-    val fs = StoreCommit.fsOf(spark, dir)
-    StoreCommit.publish(fs, dir) { tmp =>
-      snapshot.write.mode(SaveMode.Overwrite).parquet(s"$tmp/snapshot")
-      StoreCommit.writeMeta(fs, tmp, batchId)
+    StoreCommit.publishBatch(fs, dir, batchId) { tmp =>
+      val payloadCols = changes.columns.toSeq
+        .filterNot(c => c == keyCol || c == seqCol || c == opCol)
+      // batch-local latest-wins compaction — rn=1 plans as a WindowGroupLimit.
+      // seq desc alone leaves the winner NONDETERMINISTIC when two change
+      // rows inside one batch share (key, seq) — the split-invariance proof
+      // assumes per-key seq uniqueness but nothing upstream enforces it
+      // (r12 ADVICE). Deterministic tie-break: op first (a delete outranks
+      // an upsert at the same seq — the conservative read for a contract
+      // violation), then a payload hash, so any two runs over any batch
+      // split of the same duplicated changelog pick the SAME row. The
+      // delete-wins term compares against `deleteOp` DIRECTLY rather than
+      // sorting op strings lexically — "D" < "I"/"U" made the plain asc sort
+      // look right, but deleteOp is caller-supplied, and an op vocabulary
+      // like ("append", deleteOp = "delete") would have silently inverted
+      // the documented conservative rule while staying deterministic
+      // (r13 ADVICE).
+      val tieBreak = xxhash64((col(opCol) +: payloadCols.map(col)): _*)
+      val latest = changes
+        .withColumn("_rn", row_number().over(
+          Window.partitionBy(keyCol)
+            .orderBy(col(seqCol).desc, (col(opCol) === deleteOp).desc,
+              col(opCol).asc, tieBreak.asc)))
+        .filter(col("_rn") === 1)
+        .select(
+          col(keyCol) +:
+            col(seqCol).cast("long").as(SeqCol) +:
+            (col(opCol) === deleteOp).as(TombstoneCol) +:
+            payloadCols.map(col): _*)
+      // the cursor check recovered the main dir, so the fold reads it directly
+      val next =
+        if (!fs.exists(new Path(dir, "snapshot"))) latest
+        else {
+          // ONE co-partitioned full-outer key join; the higher _seq wins, so
+          // a batch carrying only stale sequence numbers folds to a no-op
+          val win = col(s"c.$SeqCol").isNotNull &&
+            (col(s"s.$SeqCol").isNull || col(s"c.$SeqCol") > col(s"s.$SeqCol"))
+          readAll(spark, storeDir).as("s")
+            .join(latest.as("c"), Seq(keyCol), "full_outer")
+            .select(
+              col(keyCol) +:
+                when(win, col(s"c.$SeqCol")).otherwise(col(s"s.$SeqCol")).as(SeqCol) +:
+                when(win, col(s"c.$TombstoneCol")).otherwise(col(s"s.$TombstoneCol"))
+                  .as(TombstoneCol) +:
+                payloadCols.map(p =>
+                  when(win, col(s"c.$p")).otherwise(col(s"s.$p")).as(p)): _*)
+        }
+      next.write.mode(SaveMode.Overwrite).parquet(s"$tmp/snapshot")
     }
   }
 }

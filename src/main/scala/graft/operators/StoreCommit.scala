@@ -11,8 +11,11 @@ import org.apache.spark.sql.SparkSession
   *   2. delete a stale stage dir `.<name>.building` (a crashed build);
   *   3. write the new version into that stage — dot-prefixed, so partition
   *      discovery never lists it — including the committed micro-batch id
-  *      ([[writeMeta]]) where the store has a replay cursor, so content and
-  *      cursor move as one;
+  *      where the store has a replay cursor, so content and cursor move as
+  *      one. [[publishBatch]] is the one place that checks the cursor and
+  *      stamps it ([[writeMeta]]); only `SignatureStore` (an optional batch
+  *      id), `Monitoring.updateRegularity` (a cursor per bucket) and
+  *      `PackingStore` (a guard before its delta write) keep their own;
   *   4. [[swap]]: move the live dir to the aside `.<name>.previous`, rename
   *      the stage in, delete the aside.
   *
@@ -78,30 +81,50 @@ object StoreCommit {
   def committedBatch(fs: FileSystem, dir: Path): Long = {
     recover(fs, dir)
     val p = new Path(dir, MetaFile)
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        .trim.toLong
-      finally in.close()
-    }
+    if (!fs.exists(p)) -1L else readCursor(fs, p)
   }
+
+  private def readCursor(fs: FileSystem, p: Path): Long = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim.toLong
+    finally in.close()
+  }
+
+  /** Re-resolutions a read-side cursor lookup makes before it gives up. */
+  private val CursorReadAttempts = 8
 
   /** READ-SIDE committed batch id: resolves through [[readableRoot]]
     * instead of [[recover]], so a concurrent monitor/reader can poll the
     * cursor without ever renaming anything (recover() from a reader can
     * rename the aside back INSIDE the writer's swap window and corrupt the
-    * publish — its own scaladoc forbids it; r15 review finding). */
+    * publish — its own scaladoc forbids it; r15 review finding).
+    *
+    * A concurrent swap can move the resolved version away between the
+    * resolution and the read: the open then fails (FileNotFoundException),
+    * or pairs the cursor file with the `.crc` of another version
+    * (ChecksumException), or the cursor looks absent. Each of these
+    * re-resolves and reads again, a bounded number of times; an absent
+    * cursor counts only when two resolutions in a row see it absent at the
+    * same root, which a swap can fake only by running twice in between. */
   def committedBatchReadable(fs: FileSystem, dir: Path): Long = {
-    val d = readableRoot(fs, dir)
-    val p = new Path(d, MetaFile)
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        .trim.toLong
-      finally in.close()
+    @annotation.tailrec
+    def attempt(n: Int, absentAt: Option[Path]): Long = {
+      val root = readableRoot(fs, dir)
+      val p = new Path(root, MetaFile)
+      if (!fs.exists(p)) {
+        if (absentAt.contains(root) || n >= CursorReadAttempts) -1L
+        else attempt(n + 1, Some(root))
+      } else {
+        val cursor =
+          try Some(readCursor(fs, p))
+          catch { case _: java.io.IOException if n < CursorReadAttempts => None }
+        cursor match {
+          case Some(c) => c
+          case None => attempt(n + 1, None)
+        }
+      }
     }
+    attempt(1, None)
   }
 
   /** Stamp the batch id into a not-yet-published build dir. */
@@ -114,9 +137,9 @@ object StoreCommit {
   /** Publish a new version of the store at `dir`: recover, clear a stale
     * stage, let `stage` write the new version into the stage dir it is
     * handed, then [[swap]] it in. `stage` may read the store: it runs after
-    * the recovery, against the live dir. Early exits (replay cursors,
-    * nothing-to-do checks) belong BEFORE the call — once `stage` returns,
-    * the stage is published. */
+    * the recovery, against the live dir. Early exits (nothing-to-do checks)
+    * belong BEFORE the call — once `stage` returns, the stage is published;
+    * a replay cursor is [[publishBatch]]'s. */
   def publish(fs: FileSystem, dir: Path)(stage: Path => Unit): Unit = {
     recover(fs, dir)
     val tmp = stageOf(dir)
@@ -124,6 +147,21 @@ object StoreCommit {
     stage(tmp)
     swap(fs, dir, tmp)
   }
+
+  /** [[publish]] for a store folded once per micro-batch: foreachBatch
+    * delivers at-least-once, so a batch id at or below the committed cursor
+    * is a replay whose fold already landed, and nothing runs. Otherwise
+    * `stage` writes the folded version and the batch id is stamped into
+    * the stage beside it, so content and cursor swap in as one. `stage`
+    * must build its reads of the store inside the closure: the cursor
+    * check has recovered a crashed swap by then, so the live dir is the
+    * one to read. */
+  def publishBatch(fs: FileSystem, dir: Path, batchId: Long)(stage: Path => Unit): Unit =
+    if (batchId > committedBatch(fs, dir))
+      publish(fs, dir) { tmp =>
+        stage(tmp)
+        writeMeta(fs, tmp, batchId)
+      }
 
   /** [[publish]] for sibling stores `parent/<name>` that ONE job stages
     * together (a `partitionBy` write whose subdirs are the names): `stage`

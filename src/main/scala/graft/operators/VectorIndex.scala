@@ -186,7 +186,7 @@ object VectorIndex {
       pqc1.write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
       assigned.select("vec_id", "m", "cent_id")
         .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-      writeMeta(spark, tmp, assigned, trainBound, FlavorPlain)
+      writeIndexMeta(spark, tmp, assigned, trainBound, FlavorPlain)
       writeTombstonesIfAny(spark, fs, tmp, tombstones)
       Seq(e, c2, subs, pqc1, assigned, tombstones).foreach(_.unpersist())
     }
@@ -228,7 +228,7 @@ object VectorIndex {
       pqc1.write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
       assigned.select("vec_id", "m", "cent_id")
         .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-      writeMeta(spark, tmp, assigned, trainBound, FlavorResidual)
+      writeIndexMeta(spark, tmp, assigned, trainBound, FlavorResidual)
       writeTombstonesIfAny(spark, fs, tmp, tombstones)
       Seq(e, c2, cells, resid, subs, pqc1, assigned, tombstones).foreach(_.unpersist())
     }
@@ -238,7 +238,7 @@ object VectorIndex {
     * effective training boundary and the base slice's error stats, written
     * as the one-row meta table. Guards the empty-train-slice case (null
     * max → bound 0, stats 0) instead of writing a null row. */
-  private def writeMeta(
+  private def writeIndexMeta(
       spark: SparkSession, tmp: Path, assigned: DataFrame,
       trainBound: Long, flavor: String): Unit = {
     val s = assigned.agg(
@@ -285,7 +285,7 @@ object VectorIndex {
   /** DataFrame-based core of [[appendIvfPq]]: `rows` carries the
     * embeddings TABLE shape (vec_id, embedding). This is the entry point
     * the STREAMING index-maintenance twin
-    * ([[graft.streaming.StreamingIngest.startVectorIndexStream]]) feeds
+    * ([[graft.streaming.StreamingIngest.startIndexMaintenanceStream]]) feeds
     * micro-batches into — same replay discipline as the batch form: the
     * old side keeps only rows below `minVecId`, so an at-least-once
     * foreachBatch replay of a monotonic append-only feed re-derives the

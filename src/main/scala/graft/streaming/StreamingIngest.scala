@@ -163,29 +163,27 @@ object StreamingIngest {
       .start()
   }
 
-  /** Streaming UPSERT sink — CDC-style corrections applied continuously:
-    * each micro-batch merges into the partitioned table via
-    * [[graft.operators.Merge.upsertPartitioned]] (copy-on-write on touched
-    * partitions only, crash-safe rename swap). foreachBatch replays a batch
-    * after a crash (at-least-once), and the merge is idempotent by id —
-    * replaying replaces the same rows — so the sink is effectively-once
-    * without a transactional commit log. The stream must carry `idCol` and
-    * the partition columns. This is the capability gap between a lake that
-    * can only append (the reference: Athena has no UPDATE) and one that
-    * can keep a table CURRENT under late corrections. */
-  def startUpsertStream(
+  /** The one micro-batch fold of every store-maintaining stream: `fold`
+    * runs once per micro-batch with the batch and its id. foreachBatch
+    * delivers at-least-once — after a crash Spark re-runs the batch whose
+    * commit it had not logged, under the same id — so every fold is
+    * replay-idempotent: a batch-id cursor committed in the store's own swap
+    * ([[graft.operators.StoreCommit.publishBatch]]), a monotonic boundary
+    * ([[graft.operators.DatasetCard]], [[graft.operators.ReplayGuard]]),
+    * or a write idempotent by key ([[graft.operators.Merge.upsertPartitioned]]).
+    * This is the idempotent-sink half of Structured Streaming's
+    * effectively-once output. `trigger` defaults to the Firehose-parity
+    * 60 s micro-batch; tests pass `Trigger.AvailableNow()` to drain and
+    * stop. */
+  def foldEachBatch(
       stream: DataFrame,
-      tableDir: String,
-      idCol: String,
-      partitionCols: Seq[String],
       checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
+      trigger: Trigger = Trigger.ProcessingTime("60 seconds"))(
+      fold: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Merge.upsertPartitioned(
-          batch.sparkSession, tableDir, batch.toDF(), idCol, partitionCols)
-        ()
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        fold(batch.toDF(), batchId)
       }
       .trigger(trigger)
       .start()
@@ -227,346 +225,83 @@ object StreamingIngest {
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("60 seconds"),
       autoRebuildThreshold: Option[Double] = None): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        val embDir = s"$corpusDir/embeddings.parquet"
-        val raw = batch.toDF().dropDuplicates("vec_id").cache()
-        val rawMin = raw.agg(min(col("vec_id"))).head().get(0)
-        if (rawMin != null) {
-          // the mark BEFORE freshThenAdvance advances it — the feed's proven
-          // frontier, against which this batch's monotonicity is judged
-          val prevMark = graft.operators.ReplayGuard.highWaterMark(s, embDir)
-          // O(delta) replay guard: the high-water mark bounds the dedup scan
-          // to the one overlapping batch window (zero sink reads in the
-          // normal path) instead of re-scanning every vec_id ever written
-          // each trigger — see ReplayGuard for the crash-ordering argument
-          val fresh = graft.operators.ReplayGuard.freshThenAdvance(raw, "vec_id", embDir)
-          if (!fresh.isEmpty) fresh.write.mode("append").parquet(embDir)
-          // dispatch on the persisted flavor: one maintenance loop serves
-          // the whole index family. Binary codes have no trained codebook,
-          // so their appends cannot drift; sq8 appends inherit the trained
-          // calibration but store no per-vector error, so neither flavor
-          // gets the PQ rebuild metering below.
-          val flavor = graft.operators.VectorIndex.flavorOf(s, indexDir)
-          val unmetered = Set(
-            graft.operators.VectorIndex.FlavorBinary,
-            graft.operators.VectorIndex.FlavorSq8)
-          // the appends encode the BATCH'S OWN rows (the *Rows cores, r16):
-          // the old corpus-dir form re-listed and re-scanned the whole
-          // embeddings directory every micro-batch — at 100 TB the listing
-          // alone grows with corpus age; this path is O(delta) end to end.
-          // Replay parity is unchanged: a replayed batch re-derives the
-          // identical delta against the sub-boundary old side either way.
-          //
-          // The *Rows fast path is only SAFE on a monotonic feed: the old
-          // side keeps codes below rawMin and the new side encodes only
-          // this batch, so a LATE row (vec_id below the already-indexed
-          // frontier) would silently evict every indexed row above it
-          // (r16 ADVICE). The guard is the ReplayGuard mark read BEFORE
-          // this batch advanced it: rawMin above the mark is the normal
-          // monotonic case; anything else (crash replay of the last
-          // window, or genuinely late data) re-encodes from the CORPUS
-          // at the same boundary — identical result for a true replay
-          // (the corpus tail past rawMin IS the batch, still O(delta)),
-          // and for late data it re-encodes the overlap instead of
-          // dropping it, at a cost proportional to the lateness.
-          val rawMinL = rawMin.asInstanceOf[Long]
-          val monotonic = prevMark.forall(rawMinL > _)
-          if (!monotonic)
-            System.err.println(
-              s"[index-maintenance] batch min vec_id $rawMinL is at or below the " +
-                s"feed frontier ${prevMark.get} (crash replay or out-of-order feed); " +
-                "falling back to the corpus-boundary re-encode for this batch")
-          if (flavor == graft.operators.VectorIndex.FlavorBinary) {
-            if (monotonic)
-              graft.operators.VectorIndex.appendBinaryRows(s, raw, indexDir, rawMinL)
-            else graft.operators.VectorIndex.appendBinary(s, corpusDir, indexDir, rawMinL)
-          } else if (flavor == graft.operators.VectorIndex.FlavorSq8) {
-            if (monotonic)
-              graft.operators.VectorIndex.appendSq8Rows(s, raw, indexDir, rawMinL)
-            else graft.operators.VectorIndex.appendSq8(s, corpusDir, indexDir, rawMinL)
-          } else {
-            if (monotonic)
-              graft.operators.VectorIndex.appendIvfPqRows(s, raw, indexDir, rawMinL)
-            else graft.operators.VectorIndex.appendIvfPq(s, corpusDir, indexDir, rawMinL)
-          }
-          if (!unmetered.contains(flavor))
-            autoRebuildThreshold.foreach { threshold =>
-              graft.operators.VectorIndex.trainBoundOpt(s, indexDir).foreach { bound =>
-                if (graft.operators.VectorIndex.driftRatio(s, corpusDir, indexDir, bound)
-                    > threshold) {
-                  if (flavor == graft.operators.VectorIndex.FlavorResidual)
-                    graft.operators.VectorIndex.buildIvfPqResidual(s, corpusDir, indexDir)
-                  else graft.operators.VectorIndex.buildIvfPq(s, corpusDir, indexDir)
-                }
+    foldEachBatch(vectors, checkpointDir, trigger) { (batch, _) =>
+      val s = batch.sparkSession
+      val embDir = s"$corpusDir/embeddings.parquet"
+      val raw = batch.dropDuplicates("vec_id").cache()
+      val rawMin = raw.agg(min(col("vec_id"))).head().get(0)
+      if (rawMin != null) {
+        // the mark BEFORE freshThenAdvance advances it — the feed's proven
+        // frontier, against which this batch's monotonicity is judged
+        val prevMark = graft.operators.ReplayGuard.highWaterMark(s, embDir)
+        // O(delta) replay guard: the high-water mark bounds the dedup scan
+        // to the one overlapping batch window (zero sink reads in the
+        // normal path) instead of re-scanning every vec_id ever written
+        // each trigger — see ReplayGuard for the crash-ordering argument
+        val fresh = graft.operators.ReplayGuard.freshThenAdvance(raw, "vec_id", embDir)
+        if (!fresh.isEmpty) fresh.write.mode("append").parquet(embDir)
+        // dispatch on the persisted flavor: one maintenance loop serves
+        // the whole index family. Binary codes have no trained codebook,
+        // so their appends cannot drift; sq8 appends inherit the trained
+        // calibration but store no per-vector error, so neither flavor
+        // gets the PQ rebuild metering below.
+        val flavor = graft.operators.VectorIndex.flavorOf(s, indexDir)
+        val unmetered = Set(
+          graft.operators.VectorIndex.FlavorBinary,
+          graft.operators.VectorIndex.FlavorSq8)
+        // the appends encode the BATCH'S OWN rows (the *Rows cores, r16):
+        // the old corpus-dir form re-listed and re-scanned the whole
+        // embeddings directory every micro-batch — at 100 TB the listing
+        // alone grows with corpus age; this path is O(delta) end to end.
+        // Replay parity is unchanged: a replayed batch re-derives the
+        // identical delta against the sub-boundary old side either way.
+        //
+        // The *Rows fast path is only SAFE on a monotonic feed: the old
+        // side keeps codes below rawMin and the new side encodes only
+        // this batch, so a LATE row (vec_id below the already-indexed
+        // frontier) would silently evict every indexed row above it
+        // (r16 ADVICE). The guard is the ReplayGuard mark read BEFORE
+        // this batch advanced it: rawMin above the mark is the normal
+        // monotonic case; anything else (crash replay of the last
+        // window, or genuinely late data) re-encodes from the CORPUS
+        // at the same boundary — identical result for a true replay
+        // (the corpus tail past rawMin IS the batch, still O(delta)),
+        // and for late data it re-encodes the overlap instead of
+        // dropping it, at a cost proportional to the lateness.
+        val rawMinL = rawMin.asInstanceOf[Long]
+        val monotonic = prevMark.forall(rawMinL > _)
+        if (!monotonic)
+          System.err.println(
+            s"[index-maintenance] batch min vec_id $rawMinL is at or below the " +
+              s"feed frontier ${prevMark.get} (crash replay or out-of-order feed); " +
+              "falling back to the corpus-boundary re-encode for this batch")
+        if (flavor == graft.operators.VectorIndex.FlavorBinary) {
+          if (monotonic)
+            graft.operators.VectorIndex.appendBinaryRows(s, raw, indexDir, rawMinL)
+          else graft.operators.VectorIndex.appendBinary(s, corpusDir, indexDir, rawMinL)
+        } else if (flavor == graft.operators.VectorIndex.FlavorSq8) {
+          if (monotonic)
+            graft.operators.VectorIndex.appendSq8Rows(s, raw, indexDir, rawMinL)
+          else graft.operators.VectorIndex.appendSq8(s, corpusDir, indexDir, rawMinL)
+        } else {
+          if (monotonic)
+            graft.operators.VectorIndex.appendIvfPqRows(s, raw, indexDir, rawMinL)
+          else graft.operators.VectorIndex.appendIvfPq(s, corpusDir, indexDir, rawMinL)
+        }
+        if (!unmetered.contains(flavor))
+          autoRebuildThreshold.foreach { threshold =>
+            graft.operators.VectorIndex.trainBoundOpt(s, indexDir).foreach { bound =>
+              if (graft.operators.VectorIndex.driftRatio(s, corpusDir, indexDir, bound)
+                  > threshold) {
+                if (flavor == graft.operators.VectorIndex.FlavorResidual)
+                  graft.operators.VectorIndex.buildIvfPqResidual(s, corpusDir, indexDir)
+                else graft.operators.VectorIndex.buildIvfPq(s, corpusDir, indexDir)
               }
             }
-        }
-        raw.unpersist()
-        ()
+          }
       }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming dataset-card maintenance: fold each micro-batch of documents
-    * into the [[graft.operators.DatasetCard]] state — the datasheet stays
-    * current with ingest instead of being recomputed per release.
-    * Effectively-once for free: `DatasetCard.update` drops rows at or
-    * below its persisted monotonic boundary, so foreachBatch's
-    * at-least-once replay is a no-op (the same discipline as the index
-    * maintenance stream — no separate guard needed here). Per-batch work
-    * is O(delta) + a languages x sources partials merge. */
-  def startCardStream(
-      docsStream: DataFrame,
-      cardDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.DatasetCard.update(
-          batch.sparkSession, batch.toDF().dropDuplicates("doc_id"), cardDir)
-        ()
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Live anomaly monitor — the streaming twin of `q_events_anomaly`:
-    * per micro-batch, fold the batch's hourly partial counts into the
-    * persisted hourly store ([[graft.operators.Monitoring.updateHourly]],
-    * replay-guarded by the committed batch id swapped atomically WITH the
-    * store content) and republish the alerts table derived from the store
-    * alone through the IDENTICAL integer z-score gate the batch query and
-    * DuckDB oracle run. Per-batch cost: one O(delta) hourly aggregate plus
-    * analytics over the bounded types × hours store — event volume never
-    * re-enters. Input frame needs (event_type, ts: timestamp). */
-  def startAnomalyStream(
-      events: DataFrame,
-      storeDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Monitoring.updateHourly(
-          batch.sparkSession, batch.toDF(), storeDir, batchId)
-        graft.operators.Monitoring.publishAlerts(batch.sparkSession, storeDir)
-        ()
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming bot-regularity monitor — the live twin of
-    * `q_events_regularity`: each micro-batch of (user_id, event_id, ts)
-    * events folds into a persisted per-user (n_gaps, Σgap, Σgap², last_t)
-    * table ([[graft.operators.Monitoring.updateRegularity]]); the stored
-    * last_t recovers the cross-batch-boundary gap, so the drained store
-    * equals the one-shot aggregate bit-for-bit (StreamingSpec pins it).
-    * State is O(users), never O(events). */
-  def startRegularityStream(
-      events: DataFrame,
-      storeDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Monitoring.updateRegularity(
-          batch.sparkSession, batch.toDF(), storeDir, batchId)
-        ()
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming top-talkers monitor — the live twin of
-    * `q_agg_heavy_hitters`'s sketch phase: each micro-batch's keys fold
-    * into a persisted Misra-Gries summary of at most k counters
-    * ([[graft.operators.Sketches.updateStoredSketch]]). MG summaries merge
-    * with the additive-error bound intact, so after any number of batches
-    * the store retains every key with total frequency > n/(k+1) and
-    * undercounts by ≤ n/(k+1) — bounded state forever, no watermark, no
-    * per-key streaming state. Input frame: one long key column. */
-  def startHeavyHittersStream(
-      keys: DataFrame,
-      storeDir: String,
-      checkpointDir: String,
-      k: Int = 128,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
-    keys.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Sketches.updateStoredSketch(
-          batch.sparkSession, batch.toDF(), storeDir, k, batchId)
-        ()
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming count-min maintenance — the frequency twin of the MG
-    * top-talkers store: each micro-batch's keys fold into the persisted
-    * 768-cell table ([[graft.operators.Sketches.updateStoredCountMin]]).
-    * CM is a linear sketch, so the stored cells after any number of
-    * batches equal a one-shot build over their union BIT-FOR-BIT (pinned
-    * in StreamingSpec) — no error drift from incremental maintenance,
-    * fixed-size state forever. Input frame: one string key column. */
-  def startCountMinStream(
-      keys: DataFrame,
-      storeDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
-    keys.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Sketches.updateStoredCountMin(
-          batch.sparkSession, batch.toDF(), storeDir, batchId)
-        ()
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming KMV maintenance — the bottom-k distinct sketch kept current
-    * from a live key feed ([[graft.operators.Sketches.updateStoredKmv]]).
-    * The sketch merges as a lattice (bottom-k of bottom-ks equals the
-    * one-shot bottom-k of the union, bit-for-bit — pinned in
-    * StreamingSpec), so the stored k rows are simultaneously a live
-    * deterministic uniform sample of the distinct-key population and an
-    * integer-exact distinct-count estimator; state is k rows forever. */
-  def startKmvStream(
-      keys: DataFrame,
-      storeDir: String,
-      checkpointDir: String,
-      k: Int = 16,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
-    keys.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Sketches.updateStoredKmv(
-          batch.sparkSession, batch.toDF(), storeDir, k, batchId)
-        ()
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming sequence packing — the live twin of `q_text_packing`: each
-    * micro-batch of documents extends the persisted pack layout through
-    * [[graft.operators.PackingStore.append]] (per-shard token cursors,
-    * batch-id replay no-op, atomic swap; batch 0 initializes the store).
-    * For doc_id-monotonic feeds — the append-only log order a landing
-    * directory of crawl output naturally has — the stored assignments
-    * equal the one-shot pack of everything seen, pinned in StreamingSpec;
-    * out-of-order arrivals still pack deterministically by arrival. */
-  def startPackingStream(
-      docs: DataFrame,
-      storeDir: String,
-      checkpointDir: String,
-      budget: Long = graft.operators.PackingStore.DefaultBudget,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.PackingStore.append(
-          batch.sparkSession, batch.toDF(), storeDir, batchId, budget)
-        ()
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming CDC apply — the live twin of `q_cdc_upsert`: each
-    * micro-batch of changelog records (key, seq, op, payload) folds into
-    * the persisted snapshot through [[graft.operators.SnapshotStore.apply]]
-    * (latest-wins compaction + one full-outer key join, tombstoned
-    * deletes, batch-id replay no-op, atomic swap; batch 0 initializes the
-    * store when no bulk load preceded it). The fold is split-invariant —
-    * max-seq-per-key wins regardless of how the changelog was cut into
-    * micro-batches, even out of order — so the stored snapshot equals the
-    * one-shot merge of everything seen, pinned in StreamingSpec. */
-  def startCdcStream(
-      changes: DataFrame,
-      storeDir: String,
-      checkpointDir: String,
-      keyCol: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.SnapshotStore.apply(
-          batch.sparkSession, batch.toDF(), storeDir, batchId, keyCol)
-        ()
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming SCD2 history — the live twin of `q_scd2`: each micro-batch
-    * of events extends the persisted validity-interval table through
-    * [[graft.operators.HistoryStore.append]] (batch-local islands, ONE
-    * user-keyed cursor join, open-interval merge-or-close, batch-id replay
-    * no-op, atomic swap; batch 0 initializes the store). For ts-monotonic
-    * feeds the stored history equals the one-shot gaps-and-islands rebuild
-    * row-for-row, pinned in StreamingSpec. */
-  def startScd2Stream(
-      events: DataFrame,
-      storeDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.HistoryStore.append(
-          batch.sparkSession, batch.toDF(), storeDir, batchId)
-        ()
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming data-quality gate — the live twin of
-    * `q_profile_constraints`'s additive rules: each micro-batch's one-row
-    * violation aggregate folds into the persisted constraint ledger
-    * ([[graft.operators.DataQuality.updateStoredLedger]]). Violation
-    * counters are additive, so the cumulative ledger equals the one-shot
-    * audit of the drained union bit-for-bit (pinned in StreamingSpec);
-    * state is |rules| rows forever. A scheduler reads
-    * [[graft.operators.DataQuality.ledgerStatus]] to gate downstream jobs.
-    * Input frame needs the events columns the rules reference. */
-  def startConstraintStream(
-      events: DataFrame,
-      storeDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.DataQuality.updateStoredLedger(
-          batch.sparkSession, batch.toDF(), storeDir, batchId)
-        ()
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming drift monitor — the live twin of `q_profile_drift`: the
-    * reference histogram is frozen once
-    * ([[graft.operators.DataQuality.buildDriftReference]], e.g. over the
-    * training window), and each micro-batch's bin counts fold additively
-    * into the stored current-window histogram. Both stores are ≤bins rows
-    * forever; [[graft.operators.DataQuality.driftStatus]] re-derives the
-    * per-bin PSI table from them alone with the IDENTICAL integer-bp +
-    * decimal-routed math the batch query and DuckDB oracle run (stream ==
-    * batch pinned in StreamingSpec). Input frame needs a `value` column. */
-  def startDriftStream(
-      events: DataFrame,
-      storeDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.DataQuality.updateDriftCurrent(
-          batch.sparkSession, batch.toDF(), storeDir, batchId)
-        ()
-      }
-      .trigger(trigger)
-      .start()
+      raw.unpersist()
+    }
 
   /** Streaming analytics over the event stream (SURVEY §2B streaming row):
     * tumbling event-time window counts with late-data drop. Watermark bounds

@@ -83,12 +83,14 @@ object StoreProbe {
     * (vanished-file error) — a retry re-lists and lands on a newer
     * committed prefix. The probe counts those retries separately from
     * violations; correctness means violations = 0, with retries expected
-    * to be a small fraction of reads.
+    * to be a small fraction of reads. A failed CURSOR read is counted on
+    * its own: the read-side cursor must always serve a committed batch id,
+    * swap window or not, so that count must be 0.
     *
     * Run: sbt 'runMain graft.tools.StoreProbe rw [batches] [deltaRows] [base]'
-    * Returns (reads, transient-retries, violations). */
+    * Returns (reads, transient-retries, failed cursor reads, violations). */
   def readerWriterRun(
-      spark: SparkSession, dir: String, batches: Int, delta: Int): (Int, Int, Seq[String]) = {
+      spark: SparkSession, dir: String, batches: Int, delta: Int): (Int, Int, Int, Seq[String]) = {
     import graft.operators.SignatureStore
     def sigs(b: Int) = spark.range(delta).select(
       (lit(b.toLong * delta) + col("id")).as("doc_id"),
@@ -98,16 +100,21 @@ object StoreProbe {
     val violations = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val reads = new java.util.concurrent.atomic.AtomicInteger(0)
     val retries = new java.util.concurrent.atomic.AtomicInteger(0)
+    val cursorFailures = new java.util.concurrent.atomic.AtomicInteger(0)
+    object CursorReadFailed extends Exception
+    def cursor(): Long =
+      try SignatureStore.committedBatch(spark, dir)
+      catch { case _: Exception => cursorFailures.incrementAndGet(); throw CursorReadFailed }
     @volatile var done = false
     val reader = new Thread(() => {
       while (!done) {
-        val cBefore = SignatureStore.committedBatch(spark, dir)
         try {
+          val cBefore = cursor()
           val row = SignatureStore.read(spark, dir)
             .agg(count(lit(1)).as("n"), max("doc_id").as("mx")).collect()(0)
           val n = row.getLong(0)
           val mx = if (row.isNullAt(1)) -1L else row.getLong(1)
-          val cAfter = SignatureStore.committedBatch(spark, dir)
+          val cAfter = cursor()
           reads.incrementAndGet()
           // build alone (cursor −1) is the prefix of batch 0: one delta
           val implied = n / delta - 1
@@ -116,6 +123,7 @@ object StoreProbe {
           if (!ok) violations.add(
             s"count=$n max=$mx implied=$implied window=[$cBefore,$cAfter]")
         } catch {
+          case CursorReadFailed => // counted apart: a cursor read must never fail
           case _: Throwable => retries.incrementAndGet() // compaction-swap window
         }
       }
@@ -132,7 +140,8 @@ object StoreProbe {
     while (reads.get() <= atEnd && System.nanoTime() < deadline) Thread.sleep(10)
     done = true
     reader.join(60000)
-    (reads.get(), retries.get(), violations.toArray(Array.empty[String]).toSeq)
+    (reads.get(), retries.get(), cursorFailures.get(),
+      violations.toArray(Array.empty[String]).toSeq)
   }
 
   def main(args: Array[String]): Unit = {
@@ -144,10 +153,10 @@ object StoreProbe {
       spark.sparkContext.setLogLevel("ERROR")
       val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new Path(base), true)
-      val (reads, retries, violations) =
+      val (reads, retries, cursorFailures, violations) =
         readerWriterRun(spark, s"$base/signature", batches, delta)
       println(s"""{"probe":"store_reader_writer","batches":$batches,"delta_rows":$delta,""" +
-        s""""reads":$reads,"transient_retries":$retries,""" +
+        s""""reads":$reads,"transient_retries":$retries,"failed_cursor_reads":$cursorFailures,""" +
         s""""violations":${violations.size},"violation_samples":[${
           violations.take(5).map("\"" + _ + "\"").mkString(",")}]}""")
       spark.stop()

@@ -88,6 +88,15 @@ class StoreCommitSpec extends AnyFunSuite with SparkSuite {
       "read-side cursor lookup mutated the store (renamed the aside back)")
     // absent store: -1, still no mutation
     assert(StoreCommit.committedBatchReadable(fs, new Path(s"$base/s4/nope")) == -1L)
+    // a swap that lands between the resolution and the read: the cursor's
+    // dir moves aside just before its open, and the read re-resolves
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    val racing = new Path(s"crashfs://$base/s4/racing")
+    val cfs = StoreCommit.fsOf(spark, racing)
+    writeDir(racing, "v1")
+    StoreCommit.writeMeta(cfs, racing, 12L)
+    CrashFs.beforeOpen = () => assert(cfs.rename(racing, StoreCommit.asideOf(racing)))
+    assert(StoreCommit.committedBatchReadable(cfs, racing) == 12L)
   }
 
   test("reader WHILE writer: every successful concurrent read equals a committed prefix (r15 verdict task 6)") {
@@ -100,10 +109,12 @@ class StoreCommitSpec extends AnyFunSuite with SparkSuite {
     // torn-read and uncommitted-leak bug classes; transient vanished-file
     // retries are the documented compaction-window contract, tolerated.
     val dir = s"$base/rw/signature"
-    val (reads, retries, violations) =
+    val (reads, retries, cursorFailures, violations) =
       graft.tools.StoreProbe.readerWriterRun(spark, dir, batches = 14, delta = 800)
     assert(violations.isEmpty,
       s"non-committed-prefix reads: ${violations.take(3).mkString("; ")}")
+    // the read-side cursor serves a committed id through every swap window
+    assert(cursorFailures == 0, s"$cursorFailures cursor reads failed")
     assert(reads >= 2, s"reader landed only $reads reads — the race never ran")
     // after the dust settles, the final prefix is all 14 batches
     assert(graft.operators.SignatureStore.read(spark, dir).count() == 14L * 800)
@@ -148,10 +159,108 @@ class StoreCommitSpec extends AnyFunSuite with SparkSuite {
     * renames of a publish leaves it), `read` must serve the committed
     * version without renaming anything, then `write` (the family's next
     * writer) must restore it and publish, and `check` sees the committed
-    * content plus the new delta. */
+    * content plus the new delta.
+    *
+    * A `replays` family folds micro-batches behind a batch-id cursor:
+    * `build` delivers batch 0 and `write` batch 1, so running either again
+    * is foreachBatch's at-least-once redelivery and must leave the store's
+    * files untouched. `lose` takes away what a crash right after the
+    * cursor's publish leaves unwritten of the rest of that batch's work,
+    * before batch 1 is redelivered. */
   private case class Family(
       name: String, dir: Path, build: () => Unit, write: () => Unit,
-      check: () => Unit, read: () => Unit = () => ())
+      check: () => Unit, read: () => Unit = () => (),
+      replays: Boolean = false, lose: () => Unit = () => ())
+
+  /** Every file under `dir`, relative to it. Spark names each part file
+    * after its write job, so a republish changes this set. */
+  private def files(dir: Path): Set[String] = {
+    val fs = StoreCommit.fsOf(spark, dir)
+    val root = fs.makeQualified(dir).toString
+    val it = fs.listFiles(dir, true)
+    val names = Set.newBuilder[String]
+    while (it.hasNext) names += it.next().getPath.toString.stripPrefix(root)
+    names.result()
+  }
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  /** A store folded through [[StoreCommit.publishBatch]]: `fold(batch,
+    * storeDir, batchId)` keeps its cursor in `storeDir + sub`, and `read`
+    * is the store's reader. After batches 0 and 1 the store must equal
+    * one fold of their union into a fresh store, at cursor 1. */
+  private def batchFamily(
+      name: String, storeDir: String, sub: String, b0: DataFrame, b1: DataFrame,
+      fold: (DataFrame, String, Long) => Unit, read: String => DataFrame,
+      lose: String => Unit = _ => ()): Family = {
+    val dir = new Path(storeDir + sub)
+    var committed = Seq.empty[String]
+    Family(name, dir,
+      build = () => { fold(b0, storeDir, 0L); committed = rows(read(storeDir)) },
+      write = () => fold(b1, storeDir, 1L),
+      check = () => {
+        fold(b0.unionByName(b1), s"${storeDir}_oneshot", 0L)
+        assert(rows(read(storeDir)) == rows(read(s"${storeDir}_oneshot")),
+          s"$name: the folded store differs from the one-shot fold")
+        assert(StoreCommit.committedBatch(StoreCommit.fsOf(spark, dir), dir) == 1L)
+      },
+      read = () => assert(rows(read(storeDir)) == committed,
+        s"$name: a reader of the stranded store missed the committed version"),
+      replays = true, lose = () => lose(storeDir))
+  }
+
+  /** The eight publishBatch stores, each fed two small micro-batches. */
+  private def batchFamilies(root: String): Seq[Family] = {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{struct, timestamp_seconds, to_json}
+    def ts(h: Int) = 1767225600L + 3600L * h // 2026-01-01T00:00Z plus h hours
+    val longKeys0 = Seq(1L, 2L, 2L, 3L, 5L, 8L, 13L).toDF("k")
+    val longKeys1 = Seq(2L, 3L, 21L, 34L, 55L, 8L).toDF("k")
+    val events0 = Seq((Some(1L), "click", """{"k":1}""", 5.0), (None, "view", "{}", 45.0),
+      (Some(3L), "bogus", """{"k":2}""", -1.0)).toDF("event_id", "event_type", "props", "value")
+    val events1 = Seq((Some(4L), "login", """{"k":3}""", 130.0),
+      (Some(5L), "view", """{"k":4}""", 65.0)).toDF("event_id", "event_type", "props", "value")
+    // 30 quiet hours, then a spike the 24-hour z-score gate flags
+    val hourly0 = (0 until 30).map(h => ("api", ts(h))).toDF("event_type", "t")
+      .select($"event_type", timestamp_seconds($"t").as("ts"))
+    val hourly1 = (Seq.fill(50)(30) :+ 31).map(h => ("api", ts(h))).toDF("event_type", "t")
+      .select($"event_type", timestamp_seconds($"t").as("ts"))
+    val changes0 = Seq((1L, 1L, "I", "a"), (2L, 2L, "I", "b"), (3L, 3L, "I", "c"))
+      .toDF("key", "seq", "op", "payload")
+    val changes1 = Seq((2L, 4L, "U", "b2"), (3L, 5L, "D", "c"), (4L, 6L, "I", "d"), (1L, 0L, "U", "stale"))
+      .toDF("key", "seq", "op", "payload")
+    def history(rs: (Long, Int, Long, String)*) = rs.map { case (u, h, id, t) => (u, ts(h), id, t) }
+      .toDF("user_id", "t", "event_id", "event_type")
+      .select($"user_id", timestamp_seconds($"t").as("ts"), $"event_id", $"event_type")
+    val history0 = history((1L, 0, 1L, "view"), (1L, 1, 2L, "view"), (2L, 0, 3L, "click"))
+    val history1 = history((1L, 2, 4L, "view"), (1L, 3, 5L, "buy"), (2L, 4, 6L, "view"), (3L, 5, 7L, "view"))
+    def json(df: DataFrame) = df.select(to_json(struct(df.columns.map(col): _*)).as("row"))
+    Seq(
+      batchFamily("count-min", s"$root/cm", "/cm",
+        Seq("a", "b", "a", "c").toDF("k"), Seq("b", "d", "a").toDF("k"),
+        Sketches.updateStoredCountMin(spark, _, _, _), Sketches.readCountMin(spark, _)),
+      batchFamily("KMV", s"$root/kmv", "/kmv", longKeys0, longKeys1,
+        Sketches.updateStoredKmv(spark, _, _, 4, _), Sketches.readKmv(spark, _)),
+      batchFamily("Misra-Gries", s"$root/mg", "/sketch", longKeys0, longKeys1,
+        Sketches.updateStoredSketch(spark, _, _, 64, _),
+        sd => Sketches.readSketch(spark, sd).toSeq.toDF("key", "cnt")),
+      batchFamily("DQ ledger", s"$root/ledger", "/ledger", events0, events1,
+        DataQuality.updateStoredLedger(spark, _, _, _), DataQuality.readLedger(spark, _)),
+      batchFamily("drift current", s"$root/drift", "/drift_cur", events0, events1,
+        DataQuality.updateDriftCurrent(spark, _, _, _),
+        sd => spark.read.parquet(StoreCommit.readableRoot(
+          StoreCommit.fsOf(spark, new Path(sd)), new Path(s"$sd/drift_cur")).toString)),
+      batchFamily("hourly + alerts", s"$root/hourly", "/hourly", hourly0, hourly1,
+        Monitoring.updateHourly(spark, _, _, _),
+        sd => json(Monitoring.readHourly(spark, sd))
+          .unionByName(json(Monitoring.readAlerts(spark, sd))),
+        lose = sd => StoreCommit.fsOf(spark, new Path(sd)).delete(new Path(s"$sd/alerts"), true)),
+      batchFamily("CDC snapshot", s"$root/cdc", "", changes0, changes1,
+        SnapshotStore.apply(spark, _, _, _, keyCol = "key"), SnapshotStore.readAll(spark, _)),
+      batchFamily("SCD2 history", s"$root/scd2", "", history0, history1,
+        HistoryStore.append(spark, _, _, _), HistoryStore.read(spark, _)))
+  }
 
   private def families(root: String): Seq[Family] = {
     val s = spark
@@ -213,7 +322,7 @@ class StoreCommitSpec extends AnyFunSuite with SparkSuite {
 
   test("crash injection: every store family's next writer restores a stranded store and publishes") {
     val root = s"$base/families"
-    families(root).foreach { f =>
+    (families(root) ++ batchFamilies(root)).foreach { f =>
       val fs = StoreCommit.fsOf(spark, f.dir)
       val aside = StoreCommit.asideOf(f.dir)
       f.build()
@@ -221,9 +330,22 @@ class StoreCommitSpec extends AnyFunSuite with SparkSuite {
       assert(fs.rename(f.dir, aside), s"${f.name}: test setup")
       f.read()
       assert(!fs.exists(f.dir) && fs.exists(aside), s"${f.name}: a reader renamed the store")
+      if (f.replays) {
+        // redelivering the committed batch restores the store and folds nothing
+        val committed = files(aside)
+        f.build()
+        assert(files(f.dir) == committed, s"${f.name}: the replayed batch folded again")
+      }
       f.write()
       assert(fs.exists(f.dir), s"${f.name}: store absent after the writer")
       assert(!fs.exists(aside), s"${f.name}: crash aside left behind")
+      if (f.replays) {
+        // the next batch folded exactly once: redelivering it changes nothing
+        val once = files(f.dir)
+        f.lose()
+        f.write()
+        assert(files(f.dir) == once, s"${f.name}: the next batch folded twice")
+      }
       f.check()
     }
   }
@@ -270,6 +392,29 @@ class StoreCommitSpec extends AnyFunSuite with SparkSuite {
     try src.getLines().count(_.contains(needle)) finally src.close()
   }
 
+  /** (file name, innermost enclosing declaration that `decl` names) of
+    * every line of `files` holding one of `needles`. */
+  private def enclosing(
+      files: Seq[java.io.File], needles: Seq[String],
+      decl: scala.util.matching.UnanchoredRegex): Seq[(String, String)] =
+    files.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try {
+        var name = "<top level>"
+        src.getLines().flatMap { line =>
+          line match { case decl(n) => name = n; case _ => }
+          if (needles.exists(line.contains)) Some(f.getName -> name) else None
+        }.toList
+      } finally src.close()
+    }
+
+  /** Files allowed to stamp a replay cursor outside
+    * [[StoreCommit.publishBatch]], and why. */
+  private val WriteMetaAllowList = Map(
+    "SignatureStore.scala" -> "an optional batch id, and the build carries the cursor over",
+    "Monitoring.scala" -> "updateRegularity keeps one cursor per bucket under publishEach",
+    "PackingStore.scala" -> "append must guard before its BucketedRuns delta write")
+
   test("guard: every store publish goes through StoreCommit (no stray renames or stage names)") {
     val files = sources(new java.io.File("src/main/scala"))
       .filterNot(_.getName == "StoreCommit.scala")
@@ -280,6 +425,14 @@ class StoreCommitSpec extends AnyFunSuite with SparkSuite {
       "StoreCommit.publish, or add an allow-list entry with its reason")
     val stages = files.filter(count(_, ".building\"") > 0).map(_.getName)
     assert(stages.isEmpty, s"hand-computed stage dirs in $stages - use StoreCommit.publish")
+    val stamps = files.filter(count(_, "writeMeta(") > 0).map(_.getName).toSet
+    assert(stamps.subsetOf(WriteMetaAllowList.keySet),
+      s"replay cursors stamped in ${stamps -- WriteMetaAllowList.keySet} - fold through " +
+        "StoreCommit.publishBatch, or add an allow-list entry with its reason")
+    val folds = enclosing(files, Seq(".foreachBatch"),
+      """^\s*(?:private\S*\s+)?def\s+(\w+)""".r.unanchored)
+    assert(folds == Seq("StreamingIngest.scala" -> "foldEachBatch"),
+      s"foreachBatch sites $folds - start micro-batch folds through StreamingIngest.foldEachBatch")
   }
 
   /** Files allowed to name a session setting that the factory owns, with
@@ -321,18 +474,7 @@ class StoreCommitSpec extends AnyFunSuite with SparkSuite {
     val decl = """^\s*(?:final\s+|private\S*\s+)*(?:case\s+)?(?:class|object|trait)\s+(\w+)""".r.unanchored
     // (file, enclosing class or object) of every line that hand-writes
     // generated code
-    val hits = files.flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try {
-        var cls = "<top level>"
-        src.getLines().flatMap { line =>
-          line match { case decl(c) => cls = c; case _ => }
-          if (line.contains("defineCodeGen(") || line.contains("nullSafeCodeGen("))
-            Some(f.getName -> cls)
-          else None
-        }.toList
-      } finally src.close()
-    }
+    val hits = enclosing(files, Seq("defineCodeGen(", "nullSafeCodeGen("), decl)
     assert(hits.map(_._2).toSet == CodegenAllowList.keySet,
       s"hand-written codegen in ${hits.filterNot(h => CodegenAllowList.contains(h._2))}, " +
         s"kept classes without any: ${CodegenAllowList.keySet -- hits.map(_._2)} - bind a " +
@@ -343,7 +485,8 @@ class StoreCommitSpec extends AnyFunSuite with SparkSuite {
 /** Local filesystem under the `crashfs` scheme that, while armed, dies
   * (throws) on deleting an existing dot-prefixed path — the hidden sibling
   * a hide-then-delete has just renamed a partition to — as a process death
-  * between that rename and its delete would. */
+  * between that rename and its delete would. `beforeOpen` runs once, just
+  * before the next open, as a concurrent writer's step would. */
 class CrashFs extends SpawnFreeRawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
   override def getScheme: String = "crashfs"
@@ -352,8 +495,15 @@ class CrashFs extends SpawnFreeRawLocalFileSystem {
       throw new java.io.IOException(s"injected crash before deleting $p")
     super.delete(p, recursive)
   }
+  override def open(p: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    val hook = CrashFs.beforeOpen
+    CrashFs.beforeOpen = () => ()
+    hook()
+    super.open(p, bufferSize)
+  }
 }
 
 object CrashFs {
   @volatile var armed = false
+  @volatile var beforeOpen: () => Unit = () => ()
 }

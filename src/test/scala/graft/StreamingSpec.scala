@@ -407,10 +407,11 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     val out = s"$base/upsert_stream_out"
     val mem = MemoryStream[(Long, String, String)]
     def drain(): Unit = {
-      val q = StreamingIngest.startUpsertStream(
-        mem.toDF().toDF("id", "payload", "year"),
-        out, "id", Seq("year"), s"$base/upsert_stream_ckpt",
-        Trigger.AvailableNow())
+      val q = StreamingIngest.foldEachBatch(
+        mem.toDF().toDF("id", "payload", "year"), s"$base/upsert_stream_ckpt",
+        Trigger.AvailableNow()) { (b, _) =>
+        graft.operators.Merge.upsertPartitioned(b.sparkSession, out, b, "id", Seq("year"))
+      }
       q.awaitTermination(120000)
     }
     // batch 1: initial rows across two partitions
@@ -1122,9 +1123,11 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // two snapshots, the second delivered with an overlap (replay territory)
     mem.addData(docs.filter(_._1 < 200).toSeq: _*)
     mem.addData(docs.filter(_._1 >= 150).toSeq: _*)
-    val q = StreamingIngest.startCardStream(
+    val q = StreamingIngest.foldEachBatch(
       mem.toDF().toDF("doc_id", "source", "lang", "text", "n_chars"),
-      cardDir, s"$base/card_stream/ckpt", Trigger.AvailableNow())
+      s"$base/card_stream/ckpt", Trigger.AvailableNow()) { (b, _) =>
+      graft.operators.DatasetCard.update(b.sparkSession, b, cardDir)
+    }
     q.awaitTermination(120000)
     val streamed = graft.operators.DatasetCard.card(spark, cardDir)
       .collect().map(_.toString).toSeq
@@ -1206,8 +1209,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .select(col("event_type"), timestamp_micros(col("us")).as("ts"))
 
     val storeDir = s"$base/anomaly_store"
-    val q = StreamingIngest.startAnomalyStream(
-      stream, storeDir, s"$base/anomaly_ckpt", Trigger.AvailableNow())
+    val q = StreamingIngest.foldEachBatch(stream, s"$base/anomaly_ckpt", Trigger.AvailableNow()) {
+      (b, id) => Monitoring.updateHourly(b.sparkSession, b, storeDir, id)
+    }
     q.awaitTermination(120000)
 
     def canon(df: org.apache.spark.sql.DataFrame): Set[String] = df
@@ -1272,8 +1276,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .select(col("user_id"), col("event_id"), timestamp_micros(col("us")).as("ts"))
 
     val storeDir = s"$base/regularity_store"
-    val q = StreamingIngest.startRegularityStream(
-      stream, storeDir, s"$base/regularity_ckpt", Trigger.AvailableNow())
+    val q = StreamingIngest.foldEachBatch(stream, s"$base/regularity_ckpt", Trigger.AvailableNow()) {
+      (b, id) => Monitoring.updateRegularity(b.sparkSession, b, storeDir, id)
+    }
     q.awaitTermination(120000)
 
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -1417,8 +1422,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
 
     val storeDir = s"$base/hh_store"
     val k = 8 // below the 15 distinct users: evictions must actually happen
-    val q = StreamingIngest.startHeavyHittersStream(
-      stream, storeDir, s"$base/hh_ckpt", k, Trigger.AvailableNow())
+    val q = StreamingIngest.foldEachBatch(stream, s"$base/hh_ckpt", Trigger.AvailableNow()) {
+      (b, id) => Sketches.updateStoredSketch(b.sparkSession, b, storeDir, k, id)
+    }
     q.awaitTermination(120000)
 
     val sketch = Sketches.readSketch(spark, storeDir)
@@ -1461,8 +1467,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
 
     val storeDir = s"$base/kmv_store"
     val k = 8 // below the 15 distinct users, so the bottom-k actually prunes
-    val q = StreamingIngest.startKmvStream(
-      stream, storeDir, s"$base/kmv_ckpt", k, Trigger.AvailableNow())
+    val q = StreamingIngest.foldEachBatch(stream, s"$base/kmv_ckpt", Trigger.AvailableNow()) {
+      (b, id) => Sketches.updateStoredKmv(b.sparkSession, b, storeDir, k, id)
+    }
     q.awaitTermination(120000)
 
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
@@ -1514,8 +1521,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .option("maxFilesPerTrigger", "1").json(s"$landing/chunk*")
 
     val storeDir = s"$base/pack_store"
-    val q = StreamingIngest.startPackingStream(
-      stream, storeDir, s"$base/pack_ckpt", trigger = Trigger.AvailableNow())
+    val q = StreamingIngest.foldEachBatch(stream, s"$base/pack_ckpt", Trigger.AvailableNow()) {
+      (b, id) => PackingStore.append(b.sparkSession, b, storeDir, id)
+    }
     q.awaitTermination(120000)
 
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -1563,9 +1571,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
 
     val storeDir = s"$base/cdc_store"
     SnapshotStore.build(spark, cdcBase, storeDir) // the bulk load
-    val q = StreamingIngest.startCdcStream(
-      stream, storeDir, s"$base/cdc_ckpt", keyCol = "o_orderkey",
-      trigger = Trigger.AvailableNow())
+    val q = StreamingIngest.foldEachBatch(stream, s"$base/cdc_ckpt", Trigger.AvailableNow()) {
+      (b, id) => SnapshotStore.apply(b.sparkSession, b, storeDir, id, keyCol = "o_orderkey")
+    }
     q.awaitTermination(120000)
 
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -1617,8 +1625,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us")
 
     val storeDir = s"$base/scd2_store"
-    val q = StreamingIngest.startScd2Stream(
-      stream, storeDir, s"$base/scd2_ckpt", trigger = Trigger.AvailableNow())
+    val q = StreamingIngest.foldEachBatch(stream, s"$base/scd2_ckpt", Trigger.AvailableNow()) {
+      (b, id) => HistoryStore.append(b.sparkSession, b, storeDir, id)
+    }
     q.awaitTermination(120000)
 
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -1680,8 +1689,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .option("maxFilesPerTrigger", "1").json(s"$landing/chunk*"))
 
     val storeDir = s"$base/cm_store"
-    val q = StreamingIngest.startCountMinStream(
-      stream, storeDir, s"$base/cm_ckpt", Trigger.AvailableNow())
+    val q = StreamingIngest.foldEachBatch(stream, s"$base/cm_ckpt", Trigger.AvailableNow()) {
+      (b, id) => Sketches.updateStoredCountMin(b.sparkSession, b, storeDir, id)
+    }
     q.awaitTermination(120000)
 
     def cells(df: org.apache.spark.sql.DataFrame): Set[(Int, Long, Long)] = df
@@ -1716,8 +1726,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .option("maxFilesPerTrigger", "1").json(s"$landing/chunk*")
 
     val storeDir = s"$base/dq_store"
-    val q = StreamingIngest.startConstraintStream(
-      stream, storeDir, s"$base/dq_ckpt", Trigger.AvailableNow())
+    val q = StreamingIngest.foldEachBatch(stream, s"$base/dq_ckpt", Trigger.AvailableNow()) {
+      (b, id) => DataQuality.updateStoredLedger(b.sparkSession, b, storeDir, id)
+    }
     q.awaitTermination(120000)
 
     def rows(df: org.apache.spark.sql.DataFrame): Set[(String, Long, Long)] = df
@@ -1793,8 +1804,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // NOT "$base/drift_ckpt": the ingest-dedup test at the top of this
     // suite already owns that checkpoint, and reusing it trips Spark's
     // stateful-operator metadata check (dedupeWithinWatermark vs none)
-    val q = StreamingIngest.startDriftStream(
-      stream, storeDir, s"$base/psi_ckpt", Trigger.AvailableNow())
+    val q = StreamingIngest.foldEachBatch(stream, s"$base/psi_ckpt", Trigger.AvailableNow()) {
+      (b, id) => DataQuality.updateDriftCurrent(b.sparkSession, b, storeDir, id)
+    }
     q.awaitTermination(120000)
 
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
