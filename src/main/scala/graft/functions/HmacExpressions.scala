@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType}
 
@@ -33,8 +33,8 @@ object HmacOps {
 }
 
 /** hmac(data, key) for one fixed JCA algorithm; binary in/out (the
-  * registration/wrappers cast string inputs to their UTF-8 bytes —
-  * Presto's to_utf8 behavior), codegen'd as a single static call. */
+  * registration casts string inputs to their UTF-8 bytes — Presto's
+  * to_utf8 behavior), codegen'd as a single static call. */
 case class Hmac(left: Expression, right: Expression, algorithm: String)
     extends BinaryExpression {
 
@@ -55,21 +55,4 @@ case class Hmac(left: Expression, right: Expression, algorithm: String)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Hmac =
     copy(left = newLeft, right = newRight)
-}
-
-/** Column wrappers so the declared row runs the identical lowering on a
-  * vanilla session (the SQL names need the GraftExtensions registry). */
-object HmacFunctions {
-  import org.apache.spark.sql.{graftshim, Column}
-  /** Unconditional binary cast: strings become their UTF-8 bytes
-    * (Presto's to_utf8), binary is the identity, anything else fails the
-    * cast loudly. Unconditional because wrapper inputs may be UNRESOLVED
-    * attributes whose dataType is not yet known. */
-  private[functions] def toBin(e: Expression): Expression = Cast(e, BinaryType)
-  private def wrap(d: Column, k: Column, algo: String): Column =
-    graftshim.column(Hmac(toBin(graftshim.expression(d)), toBin(graftshim.expression(k)), algo))
-  def hmacMd5(d: Column, k: Column): Column = wrap(d, k, "HmacMD5")
-  def hmacSha1(d: Column, k: Column): Column = wrap(d, k, "HmacSHA1")
-  def hmacSha256(d: Column, k: Column): Column = wrap(d, k, "HmacSHA256")
-  def hmacSha512(d: Column, k: Column): Column = wrap(d, k, "HmacSHA512")
 }

@@ -269,19 +269,3 @@ case class PrestoHistogramAgg(
   override protected def withNewChildInternal(newChild: Expression): PrestoHistogramAgg =
     copy(child = newChild)
 }
-
-/** Column wrappers so declared queries can use the aggregates on a vanilla
-  * session (the SQL names map_agg/multimap_agg/histogram need the
-  * GraftExtensions registry; these do not). */
-object MapAggFunctions {
-  import org.apache.spark.sql.{graftshim, Column}
-  def mapAgg(k: Column, v: Column): Column =
-    graftshim.column(
-      PrestoMapAgg(graftshim.expression(k), graftshim.expression(v)).toAggregateExpression())
-  def multimapAgg(k: Column, v: Column): Column =
-    graftshim.column(
-      PrestoMultimapAgg(graftshim.expression(k), graftshim.expression(v)).toAggregateExpression())
-  def histogramAgg(c: Column): Column =
-    graftshim.column(
-      PrestoHistogramAgg(graftshim.expression(c)).toAggregateExpression())
-}

@@ -152,18 +152,3 @@ case class NAryExtremaAgg(
 final class NAryExtremaBuffer {
   val entries: mutable.ArrayBuffer[(Any, Any)] = mutable.ArrayBuffer.empty
 }
-
-/** Column wrappers so declared queries can use the n-ary forms on a vanilla
-  * session (the SQL spellings max(x, n)/max_by(x, y, n)/... need the
-  * GraftExtensions registry; these construct the identical lowering). */
-object NAryExtremaFunctions {
-  import org.apache.spark.sql.{graftshim, Column}
-  private def wrap(v: Column, o: Column, n: Int, desc: Boolean, name: String): Column =
-    graftshim.column(NAryExtremaAgg(
-      graftshim.expression(v), graftshim.expression(o), n, desc, name)
-      .toAggregateExpression())
-  def maxN(c: Column, n: Int): Column = wrap(c, c, n, desc = true, "max")
-  def minN(c: Column, n: Int): Column = wrap(c, c, n, desc = false, "min")
-  def maxByN(v: Column, o: Column, n: Int): Column = wrap(v, o, n, desc = true, "max_by")
-  def minByN(v: Column, o: Column, n: Int): Column = wrap(v, o, n, desc = false, "min_by")
-}

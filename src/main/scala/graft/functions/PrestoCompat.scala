@@ -346,12 +346,8 @@ object JsonPathWalk {
   }
 }
 
-/** Column-level wrappers for the JSON-tail kernels, so declared queries can
-  * use them on a vanilla session (the SQL spellings json_parse/json_format/
-  * json_size need the GraftExtensions registry; these do not). */
+/** Column-level wrapper for the json_parse kernel. */
 object PrestoJsonFunctions {
-  import org.apache.spark.sql.{graftshim, Column}
+  import org.apache.spark.sql.Column
   def jsonParse(c: Column): Column = Kernels.jsonParse(c)
-  def jsonSize(c: Column, path: Column): Column =
-    graftshim.column(JsonSizeAtPath(graftshim.expression(c), graftshim.expression(path)))
 }

@@ -224,40 +224,13 @@ object StringMetrics {
   }
 }
 
-/** Column-level entry points for the DataFrame API (the declared rows run
-  * under plain driver sessions where only built-ins resolve by name; the
-  * SQL spellings are registered by [[GraftExtensions]] for
-  * Engine.createSession users and pinned equivalent in FunctionsSpec). */
+/** Column-level entry points for the text kernels (see [[Kernels]]). */
 object TextFunctions {
-  import org.apache.spark.sql.{graftshim, Column}
-  import org.apache.spark.sql.catalyst.expressions.Literal
+  import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.lit
 
   /** Presto normalize(s, form) as a Column (see [[TextOps.normalize]]). */
   def normalize(s: Column, form: String = "NFC"): Column = Kernels.normalize(s, lit(form))
-
-  /** Presto format_datetime(ts, jodaPattern) as a Column — the pattern
-    * translates ONCE here, then the call is exactly a native date_format. */
-  def formatDatetime(ts: Column, jodaPattern: String): Column =
-    graftshim.column(org.apache.spark.sql.catalyst.expressions.DateFormatClass(
-      graftshim.expression(ts), Literal(TextOps.jodaToJava(jodaPattern))))
-
-  /** Presto parse_datetime(str, jodaPattern) as a Column (native to_timestamp). */
-  def parseDatetime(str: Column, jodaPattern: String): Column =
-    graftshim.column(new org.apache.spark.sql.catalyst.expressions.ParseToTimestamp(
-      graftshim.expression(str), Literal(TextOps.jodaToJava(jodaPattern))))
-
-  /** Presto date_parse(str, mysqlPattern) as a Column (native to_timestamp). */
-  def dateParse(str: Column, mysqlPattern: String): Column =
-    graftshim.column(new org.apache.spark.sql.catalyst.expressions.ParseToTimestamp(
-      graftshim.expression(str), Literal(TextOps.mysqlToJava(mysqlPattern))))
-
-  /** Presto %-dialect date_format as a Column (the SQL spelling is the
-    * non-shadowing `presto_date_format` in [[GraftExtensions]]) — the
-    * pattern translates ONCE here, then the call is a native date_format. */
-  def prestoDateFormat(ts: Column, mysqlPattern: String): Column =
-    graftshim.column(org.apache.spark.sql.catalyst.expressions.DateFormatClass(
-      graftshim.expression(ts), Literal(TextOps.mysqlToJava(mysqlPattern))))
 
   /** Jaro-Winkler similarity (see [[StringMetrics.jaroWinkler]]). */
   def jaroWinkler(a: Column, b: Column): Column = Kernels.jaroWinkler(a, b)

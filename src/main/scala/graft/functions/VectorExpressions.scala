@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{graftshim, Column}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -690,9 +690,6 @@ object VectorFunctions {
   // the vector kernels): the binding resolves the static method by the
   // arguments' Catalyst types.
 
-  /** Sparse-map cosine (codegen'd; see [[MapCosineSim]]). */
-  def mapCosineSim(a: Column, b: Column): Column =
-    graftshim.column(MapCosineSim(graftshim.expression(a), graftshim.expression(b)))
   /** Merge-walk intersection count over sorted int-id arrays (see
     * [[VectorOps.sortedIntersectCount]]). */
   def sortedIntersectCount(a: Column, b: Column): Column = Kernels.sortedIntersectCount(a, b)

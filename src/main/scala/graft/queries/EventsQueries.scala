@@ -219,9 +219,9 @@ object EventsQueries {
     * Trino's sorted-mapper kernel), json_format (serialize: identity over
     * this engine's canonical-text JSON representation) and json_size (size
     * of the value at a path: object → #keys, array → #elements, scalar →
-    * 0, missing → NULL). Declared through the kernels' Column wrappers
-    * (the SQL spellings are EngineSpec-pinned on an extensions-enabled
-    * session). The probe document is CONSTRUCTED per row with messy
+    * 0, missing → NULL). Declared through the json_parse kernel's Column
+    * wrapper and the registered json_size (both SQL spellings are
+    * EngineSpec-pinned). The probe document is CONSTRUCTED per row with messy
     * whitespace — canonicalization does real work — but with keys already
     * sorted, because DuckDB's json() minifier preserves key order: the
     * key-SORTING half of the kernel is pinned in EngineSpec where Trino's
@@ -237,11 +237,11 @@ object EventsQueries {
         .select(
           col("event_id"),
           graft.functions.PrestoJsonFunctions.jsonParse(col("doc")).as("canon"),
-          graft.functions.PrestoJsonFunctions.jsonSize(col("doc"), lit("$")).as("sz_root"),
-          graft.functions.PrestoJsonFunctions.jsonSize(col("doc"), lit("$.meta")).as("sz_meta"),
-          graft.functions.PrestoJsonFunctions.jsonSize(col("doc"), lit("$.arr")).as("sz_arr"),
-          graft.functions.PrestoJsonFunctions.jsonSize(col("doc"), lit("$.id")).as("sz_scalar"),
-          graft.functions.PrestoJsonFunctions.jsonSize(col("doc"), lit("$.nope")).as("sz_miss"))
+          call_function("json_size", col("doc"), lit("$")).as("sz_root"),
+          call_function("json_size", col("doc"), lit("$.meta")).as("sz_meta"),
+          call_function("json_size", col("doc"), lit("$.arr")).as("sz_arr"),
+          call_function("json_size", col("doc"), lit("$.id")).as("sz_scalar"),
+          call_function("json_size", col("doc"), lit("$.nope")).as("sz_miss"))
         .orderBy("event_id"),
     Some("""WITH j AS (
         SELECT event_id,

@@ -462,21 +462,20 @@ object Relational {
   /** Presto's mergeable-HLL spellings (r17 verdict missing #1) end to end:
     * per-priority `approx_set(o_custkey)`, rolled up with `merge(sk)` and
     * read with `cardinality(...)` — the pre-aggregated distinct-count
-    * dashboard idiom over security events, here through the Column wrappers
-    * that construct the exact expressions the registered SQL names lower
-    * onto (EngineSpec pins the pasted-SQL spellings on an extensions
-    * session; PlansSpec pins the partial-merge shape — sketches cross the
-    * exchange, not rows). Same 5%-of-exact declared contract as
+    * dashboard idiom over security events, here through the registered
+    * SQL names (EngineSpec pins the pasted-SQL spellings; PlansSpec pins
+    * the partial-merge shape — sketches cross the exchange, not rows).
+    * Same 5%-of-exact declared contract as
     * q_agg_hll_merge: the estimate is order-insensitive, so the boolean is
     * deterministic and DuckDB asserts the same property off its own HLL. */
   private val aggApproxSet = Q(
     "q_agg_approx_set",
     (s, d) => {
-      import graft.functions.PrestoHllFunctions._
       val o = t(s, d, "orders")
       val per = o.groupBy(col("o_orderpriority"))
-        .agg(approxSet(col("o_custkey")).as("sk"))
-      val merged = per.agg(hllCardinality(mergeHll(col("sk"))).as("est"))
+        .agg(call_function("approx_set", col("o_custkey")).as("sk"))
+      val merged = per.agg(
+        call_function("cardinality", call_function("merge", col("sk"))).as("est"))
       o.agg(countDistinct("o_custkey").as("exact_custs"))
         .crossJoin(broadcast(merged))
         .select(
@@ -493,27 +492,25 @@ object Relational {
     * spellings in one row: max(x, n) / min(x, n) rank by the value itself,
     * max_by(x, y, n) / min_by(x, y, n) rank by a separate key (here the
     * UNIQUE o_orderkey, so tie order — arbitrary in Presto — cannot enter
-    * the hash). Runs through the Column wrappers constructing the exact
-    * NAryExtremaAgg lowering the shadowed SQL names build (EngineSpec pins
-    * the pasted-SQL spellings and the array-of-n semantics). DuckDB 1.0
-    * lacks the n-ary forms, so the oracle reconstructs each array with
+    * the hash). Runs through the shadowed SQL names' NAryExtremaAgg
+    * lowering (EngineSpec pins the pasted-SQL spellings and the array-of-n
+    * semantics). DuckDB 1.0 lacks the n-ary forms, so the oracle reconstructs each array with
     * list_sort + slice — an independent formulation, not an echo. Scale
     * shape: bounded n-row partials per group per map task cross the
     * exchange (TopKByValue economics, generalized to any orderable key). */
   private val aggNaryExtrema = Q(
     "q_agg_nary_extrema",
     (s, d) => {
-      import graft.functions.NAryExtremaFunctions._
       // arrays serialize to CSV for the driver gate (atomic columns only);
       // every ranked column is BIGINT so serialization is format-exact
       def csv(c: String) = expr(s"array_join(transform($c, x -> CAST(x AS STRING)), ',')")
       t(s, d, "orders")
         .groupBy("o_orderpriority")
         .agg(
-          maxN(col("o_orderkey"), 3).as("top3a"),
-          minN(col("o_orderkey"), 3).as("bot3a"),
-          maxByN(col("o_custkey"), col("o_orderkey"), 3).as("cust_topa"),
-          minByN(col("o_custkey"), col("o_orderkey"), 3).as("cust_bota"))
+          call_function("max", col("o_orderkey"), lit(3)).as("top3a"),
+          call_function("min", col("o_orderkey"), lit(3)).as("bot3a"),
+          call_function("max_by", col("o_custkey"), col("o_orderkey"), lit(3)).as("cust_topa"),
+          call_function("min_by", col("o_custkey"), col("o_orderkey"), lit(3)).as("cust_bota"))
         .select(col("o_orderpriority"),
           csv("top3a").as("top3"), csv("bot3a").as("bot3"),
           csv("cust_topa").as("cust_of_top3_keys"),
@@ -564,11 +561,10 @@ object Relational {
 
   /** Presto's WEIGHTED approx_percentile(x, w, p) — the latency-dashboard
     * idiom — through the shadow dispatch's lowering onto Spark's EXACT
-    * Percentile-with-frequency (exact satisfies the approx contract; the
-    * Column wrapper constructs the identical expression for the vanilla
-    * Verify session, EngineSpec pins the pasted SQL shapes). The oracle
-    * reconstructs the weighted percentile from first principles: rows
-    * EXPANDED by weight, then quantile_cont — DuckDB's type-7 interpolation
+    * Percentile-with-frequency (exact satisfies the approx contract;
+    * EngineSpec pins the pasted SQL shapes). The oracle reconstructs the
+    * weighted percentile from first principles: rows EXPANDED by weight,
+    * then quantile_cont — DuckDB's type-7 interpolation
     * over the expanded multiset is exactly Percentile's
     * sorted-with-frequencies formula. Decimal-rounded on both sides (the
     * project's float-boundary convention). Scale shape: one
@@ -577,15 +573,14 @@ object Relational {
   private val aggWeightedPercentile = Q(
     "q_agg_weighted_percentile",
     (s, d) => {
-      import graft.functions.PrestoPercentileFunctions.weightedPercentile
       def r2(c: org.apache.spark.sql.Column) =
         round(c.cast("decimal(24,6)"), 2).cast("double")
       val w = (col("o_orderkey") % 5 + 1).cast("long")
       t(s, d, "orders")
         .groupBy("o_orderpriority")
         .agg(
-          r2(weightedPercentile(col("o_totalprice"), w, 0.5)).as("wp50"),
-          r2(weightedPercentile(col("o_totalprice"), w, 0.9)).as("wp90"))
+          r2(call_function("approx_percentile", col("o_totalprice"), w, lit(0.5))).as("wp50"),
+          r2(call_function("approx_percentile", col("o_totalprice"), w, lit(0.9))).as("wp90"))
         .orderBy("o_orderpriority")
     },
     Some("""WITH expanded AS (
@@ -1055,7 +1050,7 @@ object Relational {
         .groupBy(col("o_orderpriority").as("prio"), col("o_orderstatus").as("status"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy("prio")
-        .agg(graft.functions.MapAggFunctions.mapAgg(col("status"), col("cnt")).as("m"))
+        .agg(call_function("map_agg", col("status"), col("cnt")).as("m"))
         .select(
           col("prio"),
           array_join(array_sort(
@@ -1087,7 +1082,7 @@ object Relational {
     (s, d) =>
       t(s, d, "orders")
         .groupBy("o_orderpriority")
-        .agg(graft.functions.MapAggFunctions.histogramAgg(col("o_orderstatus")).as("m"))
+        .agg(call_function("histogram", col("o_orderstatus")).as("m"))
         .select(
           col("o_orderpriority"),
           array_join(array_sort(
@@ -1116,8 +1111,7 @@ object Relational {
       t(s, d, "orders")
         .filter(col("o_orderkey") < 3000)
         .groupBy(col("o_orderpriority").as("prio"))
-        .agg(graft.functions.MapAggFunctions
-          .multimapAgg(col("o_orderstatus"), col("o_orderkey")).as("mm"))
+        .agg(call_function("multimap_agg", col("o_orderstatus"), col("o_orderkey")).as("mm"))
         .select(
           col("prio"),
           array_join(array_sort(expr(
@@ -2173,12 +2167,9 @@ object Relational {
             col("o_custkey").cast("string")))
         .select(
           col("o_orderkey"),
-          array_join(graft.functions.PrestoStringFunctions
-            .prestoSplit(col("doc"), lit(".")), "/").as("parts"),
-          size(graft.functions.PrestoStringFunctions
-            .prestoSplit(col("doc"), lit("."))).cast("long").as("n_parts"),
-          graft.functions.PrestoStringFunctions
-            .prestoRegexpExtract(col("o_orderpriority"), lit("([0-9]+)-([A-Z]+)"))
+          array_join(call_function("presto_split", col("doc"), lit(".")), "/").as("parts"),
+          size(call_function("presto_split", col("doc"), lit("."))).cast("long").as("n_parts"),
+          call_function("presto_regexp_extract", col("o_orderpriority"), lit("([0-9]+)-([A-Z]+)"))
             .as("whole_match"),
           // the _all form carries the SAME default-group trap (r18):
           // Spark's 2-arg regexp_extract_all returns group 1 per match —
@@ -2187,8 +2178,8 @@ object Relational {
           // so the engines' differing no-match conventions (Spark [] vs
           // DuckDB NULL) stay out of play; the coalesce guards any corpus
           // where they would not
-          coalesce(array_join(graft.functions.PrestoStringFunctions
-            .prestoRegexpExtractAll(col("doc"), lit("([0-9]+)-([A-Z]+)")), "/"), lit(""))
+          coalesce(array_join(call_function("presto_regexp_extract_all",
+            col("doc"), lit("([0-9]+)-([A-Z]+)")), "/"), lit(""))
             .as("whole_matches"))
         .orderBy("o_orderkey"),
     Some("""WITH d AS (SELECT o_orderkey, o_orderpriority,
@@ -2204,9 +2195,7 @@ object Relational {
   /** Presto `ngrams(arr, n)` — the shingle builder a migrating text-dedup
     * pipeline types before MinHash (the registered lowering composes
     * codegen'd slice/transform/sequence; GraftExtensions — the pasted SQL
-    * spelling is pinned in EngineSpec on an extensions session, and this
-    * row runs the identical expression through the Column wrapper on the
-    * vanilla Verify session). The oracle reconstructs n-grams with
+    * spelling is pinned in EngineSpec). The oracle reconstructs n-grams with
     * DuckDB's generate_series + INCLUSIVE list_slice — an independent
     * formulation; the greatest() guard mirrors the short-input contract
     * (size < n → one n-gram: the whole array) on both engines. Narrow
@@ -2220,7 +2209,7 @@ object Relational {
           col("doc_id"),
           array_join(
             transform(
-              graft.functions.PrestoArrayFunctions.ngrams(split(col("text"), " "), 3),
+              call_function("ngrams", split(col("text"), " "), lit(3)),
               g => array_join(g, " ")), "|").as("trigrams"))
         .orderBy("doc_id"),
     Some("""SELECT doc_id,
@@ -2419,15 +2408,14 @@ object Relational {
   private val condNullExtrema = Q(
     "q_cond_null_extrema",
     (s, d) => {
-      import graft.functions.PrestoCondFunctions._
       val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
       t(s, d, "orders")
         .select(col("o_orderkey"), col("o_totalprice"),
           lag("o_totalprice", 1).over(w).as("prev"))
         .select(
           col("o_orderkey"),
-          prestoGreatest(col("o_totalprice"), col("prev")).cast("double").as("pg"),
-          prestoLeast(col("o_totalprice"), col("prev")).cast("double").as("pl"),
+          call_function("presto_greatest", col("o_totalprice"), col("prev")).cast("double").as("pg"),
+          call_function("presto_least", col("o_totalprice"), col("prev")).cast("double").as("pl"),
           greatest(col("o_totalprice"), col("prev")).as("sg"),
           least(col("o_totalprice"), col("prev")).as("sl"))
         .orderBy("o_orderkey")
@@ -2624,14 +2612,14 @@ object Relational {
         .select(col("o_orderkey"), col("o_orderdate").cast("timestamp").as("ts"))
         .select(
           col("o_orderkey"),
-          TF.dateParse(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"),
-            "%Y-%m-%d %H:%i:%s").as("iso_parsed"),
-          TF.dateParse(date_format(col("ts"), "MMMM dd, yyyy"),
-            "%M %d, %Y").as("texty_parsed"),
-          (TF.dateParse(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"),
-            "%Y-%m-%d %T") === col("ts")).as("t_ok"),
-          (TF.dateParse(date_format(col("ts"), "MMMM dd, yyyy"),
-            "%M %d, %Y") === col("ts")).as("texty_ok"))
+          call_function("date_parse", date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"),
+            lit("%Y-%m-%d %H:%i:%s")).as("iso_parsed"),
+          call_function("date_parse", date_format(col("ts"), "MMMM dd, yyyy"),
+            lit("%M %d, %Y")).as("texty_parsed"),
+          (call_function("date_parse", date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"),
+            lit("%Y-%m-%d %T")) === col("ts")).as("t_ok"),
+          (call_function("date_parse", date_format(col("ts"), "MMMM dd, yyyy"),
+            lit("%M %d, %Y")) === col("ts")).as("texty_ok"))
         .orderBy("o_orderkey"),
     Some("""SELECT o_orderkey,
         strptime(strftime(CAST(o_orderdate AS TIMESTAMP), '%Y-%m-%d %H:%M:%S'),
@@ -2665,13 +2653,14 @@ object Relational {
         .select(col("o_orderkey"), col("o_orderdate").cast("timestamp").as("ts"))
         .select(
           col("o_orderkey"),
-          TF.prestoDateFormat(col("ts"), "%Y-%m-%d %H:%i:%s").as("iso_s"),
-          TF.prestoDateFormat(col("ts"), "%M %d, %Y").as("texty_s"),
-          TF.prestoDateFormat(col("ts"), "%j/%Y %T").as("doy_s"),
-          (TF.dateParse(TF.prestoDateFormat(col("ts"), "%Y-%m-%d %H:%i:%s"),
-            "%Y-%m-%d %H:%i:%s") === col("ts")).as("rt_iso_ok"),
-          (TF.dateParse(TF.prestoDateFormat(col("ts"), "%M %d, %Y"),
-            "%M %d, %Y") === col("ts")).as("rt_texty_ok"))
+          call_function("presto_date_format", col("ts"), lit("%Y-%m-%d %H:%i:%s")).as("iso_s"),
+          call_function("presto_date_format", col("ts"), lit("%M %d, %Y")).as("texty_s"),
+          call_function("presto_date_format", col("ts"), lit("%j/%Y %T")).as("doy_s"),
+          (call_function("date_parse",
+            call_function("presto_date_format", col("ts"), lit("%Y-%m-%d %H:%i:%s")),
+            lit("%Y-%m-%d %H:%i:%s")) === col("ts")).as("rt_iso_ok"),
+          (call_function("date_parse", call_function("presto_date_format", col("ts"), lit("%M %d, %Y")),
+            lit("%M %d, %Y")) === col("ts")).as("rt_texty_ok"))
         .orderBy("o_orderkey"),
     Some("""SELECT o_orderkey,
         strftime(CAST(o_orderdate AS TIMESTAMP), '%Y-%m-%d %H:%M:%S') AS iso_s,
@@ -3506,22 +3495,22 @@ object Relational {
     * no exchange. */
   private val datePrestoFmt = Q(
     "q_date_presto_fmt",
-    (s, d) =>
+    (s, d) => {
+      def fmt(p: String) = call_function("format_datetime", col("ts"), lit(p))
+      def parse(c: org.apache.spark.sql.Column, p: String) = call_function("parse_datetime", c, lit(p))
       t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderdate").cast("timestamp").as("ts"))
         .select(
           col("o_orderkey"),
-          TF.formatDatetime(col("ts"), "yyyy-MM-dd HH:mm:ss").as("iso"),
-          TF.formatDatetime(col("ts"), "EEE, dd MMM yyyy").as("texty"),
-          TF.formatDatetime(col("ts"), "DDD").as("doy"),
-          TF.formatDatetime(col("ts"), "Y").as("year_of_era"),
-          TF.parseDatetime(
-            TF.formatDatetime(col("ts"), "yyyy-MM-dd HH:mm:ss"),
-            "yyyy-MM-dd HH:mm:ss").as("parsed_back"),
-          (TF.parseDatetime(
-            TF.formatDatetime(col("ts"), "yyyy-MM-dd HH:mm:ss"),
-            "yyyy-MM-dd HH:mm:ss") === col("ts")).as("round_trip_ok"))
-        .orderBy("o_orderkey"),
+          fmt("yyyy-MM-dd HH:mm:ss").as("iso"),
+          fmt("EEE, dd MMM yyyy").as("texty"),
+          fmt("DDD").as("doy"),
+          fmt("Y").as("year_of_era"),
+          parse(fmt("yyyy-MM-dd HH:mm:ss"), "yyyy-MM-dd HH:mm:ss").as("parsed_back"),
+          (parse(fmt("yyyy-MM-dd HH:mm:ss"), "yyyy-MM-dd HH:mm:ss") === col("ts"))
+            .as("round_trip_ok"))
+        .orderBy("o_orderkey")
+    },
     Some("""SELECT o_orderkey,
         strftime(CAST(o_orderdate AS TIMESTAMP), '%Y-%m-%d %H:%M:%S') AS iso,
         strftime(CAST(o_orderdate AS TIMESTAMP), '%a, %d %b %Y') AS texty,

@@ -256,16 +256,10 @@ object TextQueries {
   private val textHmac = Q(
     "q_string_hmac",
     (s, d) => {
-      import graft.functions.HmacFunctions._
-      val key = lit("graft-key")
-      def hx(c: org.apache.spark.sql.Column) = lower(hex(c))
+      def hx(digest: String) =
+        lower(hex(call_function(s"hmac_$digest", col("text"), lit("graft-key")))).as(s"h_$digest")
       t(s, d, "documents")
-        .select(
-          col("doc_id"),
-          hx(hmacMd5(col("text"), key)).as("h_md5"),
-          hx(hmacSha1(col("text"), key)).as("h_sha1"),
-          hx(hmacSha256(col("text"), key)).as("h_sha256"),
-          hx(hmacSha512(col("text"), key)).as("h_sha512"))
+        .select(col("doc_id"), hx("md5"), hx("sha1"), hx("sha256"), hx("sha512"))
         .orderBy("doc_id")
     },
     Some("""WITH exp AS (
@@ -293,7 +287,7 @@ object TextQueries {
         .withColumn("h2", expr("slice(ws, n div 2 + 1, n - n div 2)")))
         .select(
           col("doc_id"), col("n").cast("long").as("n"),
-          round(graft.functions.VectorFunctions.mapCosineSim(col("m1"), col("m2"))
+          round(call_function("cosine_similarity", col("m1"), col("m2"))
             .cast("decimal(24,8)"), 6).cast("double").as("self_sim"))
         .orderBy("doc_id"),
     Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),

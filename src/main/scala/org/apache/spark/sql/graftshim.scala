@@ -20,4 +20,9 @@ object graftshim {
     * canonicalization (graft.functions.PrestoMapAggLike.canonKey). */
   def normalizeFloats(e: Expression): Expression =
     catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+  /** Spark's own wrong-arity analysis error (`WRONG_NUM_ARGS`) —
+    * `private[sql]`, reached here for the registered spellings' one arity
+    * check (graft.functions.Spelling.build). */
+  def wrongNumArgsError(name: String, expected: Seq[Any], actual: Int): Throwable =
+    errors.QueryCompilationErrors.wrongNumArgsError(name, expected, actual)
 }

@@ -182,11 +182,12 @@ class CodegenParitySpec extends AnyFunSuite with SparkSuite with AdaptiveSparkPl
   private val handWritten: Seq[(String, Column)] = {
     def e(name: String) = graftshim.expression(col(name))
     Seq(
-      "MapCosineSim(m1, m2)" -> VectorFunctions.mapCosineSim(col("m1"), col("m2")),
-      "MapCosineSim(m1, m1)" -> VectorFunctions.mapCosineSim(col("m1"), col("m1"))) ++
+      "MapCosineSim(m1, m2)" -> graftshim.column(MapCosineSim(e("m1"), e("m2"))),
+      "MapCosineSim(m1, m1)" -> graftshim.column(MapCosineSim(e("m1"), e("m1")))) ++
       Seq("ps", "pl", "pd", "pb").map(p =>
         s"JsonArrayContains(ja, $p)" -> graftshim.column(JsonArrayContains(e("ja"), e(p)))) ++
-      Seq("js", "jv").map(j => s"JsonSizeAtPath($j, path)" -> PrestoJsonFunctions.jsonSize(col(j), col("path"))) ++
+      Seq("js", "jv").map(j =>
+        s"JsonSizeAtPath($j, path)" -> graftshim.column(JsonSizeAtPath(e(j), e("path")))) ++
       Seq("HmacMD5", "HmacSHA1", "HmacSHA256", "HmacSHA512").map(a =>
         s"Hmac($a)" -> graftshim.column(Hmac(e("data"), e("key"), a))) ++
       Seq(ByteType, ShortType, IntegerType, LongType).map(t =>

@@ -257,10 +257,8 @@ FROM "defenda_data_lake"."events"
   }
 
   test("Presto normalize / format_datetime / parse_datetime resolve as SQL spellings") {
-    // the declared rows use the Column wrappers (plain driver sessions);
-    // this session carries GraftExtensions, so the Presto SQL spellings
-    // must resolve and agree with the wrappers (q_string_normalize /
-    // q_date_presto_fmt semantics)
+    // the Presto SQL spellings must resolve with the q_string_normalize /
+    // q_date_presto_fmt semantics
     val decomposed = "cafe\u0301"
     val r = spark.sql(
       s"""SELECT normalize('$decomposed') AS n1,
@@ -534,9 +532,27 @@ FROM "defenda_data_lake"."events"
       """SELECT try(cast('x' AS int)) AS a, try(cast('5' AS int)) AS b,
                 try(json_parse('{oops')) AS c, try(1 div 0) AS d""").collect()(0)
     assert(t.isNullAt(0) && t.getInt(1) == 5 && t.isNullAt(2) && t.isNullAt(3))
-    // arity errors are loud at registration, matching the existing spellings
-    intercept[Exception](spark.sql("SELECT map_agg(1)").collect())
-    intercept[Exception](spark.sql("SELECT try(1, 2)").collect())
+  }
+
+  test("every registered spelling rejects a wrong argument count with WRONG_NUM_ARGS") {
+    // one argument too few and one too many for each entry, plus calls
+    // pinned before the table had one check; a wrong count used to drop
+    // the extra arguments or throw IndexOutOfBoundsException
+    val pinned = Seq("map_agg(1)", "try(1, 2)", "presto_greatest(1)", "ngrams(array(1))", "max(1, 2, 3)")
+    val calls = graft.functions.GraftExtensions.all.flatMap { f =>
+      def call(n: Int) = s"${f.name}(${Seq.fill(n)("1").mkString(", ")})"
+      (if (f.arity.min > 0) Seq(call(f.arity.min - 1)) else Nil) ++
+        (if (f.arity.variadic) Nil else Seq(call(f.arity.max + 1)))
+    } ++ pinned
+    val wrong = calls.flatMap { c =>
+      try { spark.sql(s"SELECT $c").collect(); Some(s"$c: no error") }
+      catch {
+        case e: org.apache.spark.sql.AnalysisException
+            if Option(e.getCondition).exists(_.startsWith("WRONG_NUM_ARGS")) => None
+        case e: Exception => Some(s"$c: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      }
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
   }
 
   test("map-collection aggregates canonicalize keys: -0.0/0.0, struct, binary (r17 ADVICE)") {
@@ -575,10 +591,10 @@ FROM "defenda_data_lake"."events"
     assert(err.getMessage.contains("delimiter") ||
       (err.getCause != null && err.getCause.getMessage.contains("delimiter")),
       s"expected the empty-delimiter error, got: ${err.getMessage}")
-    // the Column wrapper carries the same guard
+    // the DataFrame spelling resolves to the same guarded lowering
     val werr = intercept[Exception](
       spark.sql("SELECT 'abc' AS s").select(
-        graft.functions.PrestoStringFunctions.prestoSplit(
+        org.apache.spark.sql.functions.call_function("presto_split",
           org.apache.spark.sql.functions.col("s"),
           org.apache.spark.sql.functions.lit(""))).collect())
     assert(werr.getMessage.contains("delimiter") ||
@@ -646,7 +662,6 @@ FROM "defenda_data_lake"."events"
     assert(r.getInt(1) == 1 && r.getDouble(2) == 3.5)
     assert(r.getInt(3) == 2 && r.getInt(4) == 1,
       "Spark builtins must keep their skip-null semantics (non-shadowing)")
-    intercept[Exception](spark.sql("SELECT presto_greatest(1)").collect())
   }
 
   test("Presto cosine_similarity / array_sum / array_average resolve") {
@@ -687,7 +702,6 @@ FROM "defenda_data_lake"."events"
     assert(r.getSeq[scala.collection.Seq[String]](2).map(_.toSeq) == Seq(Seq("a")),
       "input shorter than n yields ONE n-gram: the whole array (Presto contract)")
     assert(r.isNullAt(3), "NULL array -> NULL")
-    intercept[Exception](spark.sql("SELECT ngrams(array(1))").collect())
   }
 
   test("Presto approx_set / merge / cardinality resolve as SQL spellings (r17 task 1)") {
@@ -736,8 +750,7 @@ FROM "defenda_data_lake"."events"
     assert(nulls.getSeq[String](1) == Seq(null, "e"), "NULL values ride when their key ranks")
     val empty = spark.sql("SELECT max(v, 3) FROM (SELECT 1 AS v) WHERE 1 = 0").collect()(0)
     assert(empty.isNullAt(0), "empty group -> NULL, matching 1-ary max")
-    // loud failures: bad arity, non-literal n, out-of-range n
-    intercept[Exception](spark.sql("SELECT max(1, 2, 3) FROM VALUES (1) AS t(v)").collect())
+    // loud failures: non-literal n, out-of-range n
     intercept[Exception](spark.sql("SELECT max(v, v) FROM VALUES (1) AS t(v)").collect())
     intercept[Exception](spark.sql("SELECT max(v, 0) FROM VALUES (1) AS t(v)").collect())
   }

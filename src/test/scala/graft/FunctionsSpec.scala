@@ -100,11 +100,10 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   test("parse_datetime/format_datetime round-trip through the Column API (session UTC)") {
     val s = spark
     import s.implicits._
-    import graft.functions.{TextFunctions => TF}
     val df = Seq("2024-03-05 07:08:09", "1995-12-31 23:59:59").toDF("raw")
-      .select(TF.parseDatetime(col("raw"), "yyyy-MM-dd HH:mm:ss").as("ts"))
-      .select(TF.formatDatetime(col("ts"), "yyyy-MM-dd HH:mm:ss").as("back"),
-        TF.formatDatetime(col("ts"), "EEE").as("dow"))
+      .select(call_function("parse_datetime", col("raw"), lit("yyyy-MM-dd HH:mm:ss")).as("ts"))
+      .select(call_function("format_datetime", col("ts"), lit("yyyy-MM-dd HH:mm:ss")).as("back"),
+        call_function("format_datetime", col("ts"), lit("EEE")).as("dow"))
     val rows = df.collect()
     assert(rows.map(_.getString(0)).toSeq == Seq("2024-03-05 07:08:09", "1995-12-31 23:59:59"))
     assert(rows.map(_.getString(1)).toSeq == Seq("Tue", "Sun"))
@@ -113,16 +112,16 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
   test("presto_date_format/date_parse %-dialect round-trip through the Column API (r14 verdict task 3)") {
     val s = spark
     import s.implicits._
-    import graft.functions.{TextFunctions => TF}
+    def fmt(c: org.apache.spark.sql.Column, p: String) = call_function("presto_date_format", c, lit(p))
+    def parse(c: org.apache.spark.sql.Column, p: String) = call_function("date_parse", c, lit(p))
     // parse → format → parse with the SAME %-pattern must be the identity,
     // including the %M/%i trap (month NAME vs minutes) and composite %T
     val df = Seq("2024-03-05 07:08:09", "1995-12-31 23:59:59").toDF("raw")
-      .select(TF.dateParse(col("raw"), "%Y-%m-%d %H:%i:%s").as("ts"))
+      .select(parse(col("raw"), "%Y-%m-%d %H:%i:%s").as("ts"))
       .select(
-        TF.prestoDateFormat(col("ts"), "%Y-%m-%d %H:%i:%s").as("iso"),
-        TF.prestoDateFormat(col("ts"), "%M %d, %Y").as("texty"),
-        TF.dateParse(TF.prestoDateFormat(col("ts"), "%Y-%m-%d %T"),
-          "%Y-%m-%d %T").as("rt"))
+        fmt(col("ts"), "%Y-%m-%d %H:%i:%s").as("iso"),
+        fmt(col("ts"), "%M %d, %Y").as("texty"),
+        parse(fmt(col("ts"), "%Y-%m-%d %T"), "%Y-%m-%d %T").as("rt"))
     val rows = df.collect()
     assert(rows.map(_.getString(0)).toSeq == Seq("2024-03-05 07:08:09", "1995-12-31 23:59:59"))
     assert(rows.map(_.getString(1)).toSeq == Seq("March 05, 2024", "December 31, 1995"))

@@ -459,6 +459,16 @@ class StoreCommitSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("guard: every SQL function registers through the GraftExtensions.all table") {
+    val files = sources(new java.io.File("src/main/scala"))
+    assert(files.size > 20, "source tree not found - is the working dir the repo root?")
+    Seq("injectFunction(", "FunctionIdentifier(").foreach { needle =>
+      val hits = files.map(f => f.getName -> count(f, needle)).filter(_._2 > 0).toMap
+      assert(hits == Map("GraftExtensions.scala" -> 1), s"$needle in $hits - register a " +
+        "spelling as one GraftExtensions.all entry, so the one arity check covers it")
+    }
+  }
+
   /** Expression classes allowed to hand-write generated code, and why a
     * `Kernels` binding (StaticInvoke) cannot express each. */
   private val CodegenAllowList = Map(
