@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF-PQ index — the build-once / search-many lifecycle that
@@ -30,9 +29,11 @@ import org.apache.spark.sql.functions._
   * constant-size broadcasts, and a search touches nprobe/NCells of the
   * codes. The index publishes ATOMICALLY through [[StoreCommit.publish]]
   * — searchers see the old index or the new one, never a half-written mix
-  * (same discipline as the lake maintenance operators). QuantSpec pins
-  * that a search served from the stored index is row-identical to the
-  * in-query training path. */
+  * (same discipline as the lake maintenance operators). Every search,
+  * radius, sampling and outlier operation here calls the same QuantQueries
+  * stages as its declared twin (probe, ADC, refine, ...), passing the
+  * frames it reads from the stored tables; QuantSpec pins that each is
+  * row-identical to the in-query training path. */
 object VectorIndex {
 
   import graft.queries.QuantQueries._
@@ -89,24 +90,34 @@ object VectorIndex {
       if (i < 0 || r.isNullAt(i)) None else Some(r.getString(i))
     }.getOrElse(FlavorPlain)
 
+  /** The recorded flavor, if it is one of `expected`; otherwise fails
+    * with a message naming both. */
   private def requireFlavor(
-      spark: SparkSession, indexDir: String, expected: String, op: String): Unit = {
+      spark: SparkSession, indexDir: String, op: String, expected: String*): String = {
     val actual = flavorOf(spark, indexDir)
-    require(actual == expected,
-      s"$op on $indexDir: index flavor is '$actual', expected '$expected' — " +
+    require(expected.contains(actual),
+      s"$op on $indexDir: index flavor is '$actual', expected " +
+        expected.map(f => s"'$f'").mkString(" or ") + " — " +
         "plain and residual indexes are byte-indistinguishable on disk, and " +
         "mixing them silently corrupts rankings (use the matching build/search)")
+    actual
   }
 
-  /** Copy the one-row `meta` table into a staging dir (absent on indexes
-    * built before meta existed — tolerated). */
-  private def copyMetaIfPresent(
-      spark: SparkSession, fs: FileSystem, indexDir: String, tmp: Path): Unit = {
-    val meta = new Path(s"$indexDir/meta")
-    if (fs.exists(meta))
-      spark.read.parquet(meta.toString)
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/meta")
-  }
+  /** The operations that read the IVF-PQ tables (coarse, cells,
+    * pq_codebook, codes), which only plain and residual indexes have. */
+  private def requireIvf(spark: SparkSession, indexDir: String, op: String): String =
+    requireFlavor(spark, indexDir, op, FlavorPlain, FlavorResidual)
+
+  /** Copy table `name` of the index into a staging dir. */
+  private def copyTable(spark: SparkSession, indexDir: String, tmp: Path, name: String): Unit =
+    spark.read.parquet(s"$indexDir/$name").write.mode(SaveMode.Overwrite).parquet(s"$tmp/$name")
+
+  /** [[copyTable]] for the tables an index may lack: `meta` (absent on
+    * indexes built before meta existed) and `tombstones` (absent until a
+    * delete). */
+  private def copyIfPresent(
+      spark: SparkSession, fs: FileSystem, indexDir: String, tmp: Path, name: String): Unit =
+    if (fs.exists(new Path(s"$indexDir/$name"))) copyTable(spark, indexDir, tmp, name)
 
   /** Erased vec_ids persisted in the index so later appends/rebuilds cannot
     * resurrect them (GDPR deletes must stick even if the corpus row is
@@ -116,14 +127,6 @@ object VectorIndex {
     val t = StoreCommit.readableRoot(StoreCommit.fsOf(spark, t0), t0) // non-mutating
     if (StoreCommit.fsOf(spark, t).exists(t)) spark.read.parquet(t.toString)
     else spark.range(0).select(col("id").as("vec_id"))
-  }
-
-  private def copyTombstonesIfPresent(
-      spark: SparkSession, fs: FileSystem, indexDir: String, tmp: Path): Unit = {
-    val t = new Path(s"$indexDir/tombstones")
-    if (fs.exists(t))
-      spark.read.parquet(t.toString)
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/tombstones")
   }
 
   /** Record erase requests as tombstones WITHOUT touching the data tables —
@@ -215,10 +218,7 @@ object VectorIndex {
       val cells = kmeansAssign(e, c2).select(col("vec_id"), col("cent_id").as("cell")).cache()
       val em = notTombstoned(
         microEmbeddings(spark, sfDir).filter(col("vec_id") < trainBound), tombstones)
-      val resid = em.join(cells, "vec_id")
-        .join(broadcast(c2.select(col("cent_id").as("cell"), col("cmm"))), "cell")
-        .select(col("vec_id"), zip_with(col("xm"), col("cmm"), (x, c) => x - c).as("xm"))
-        .cache()
+      val resid = residuals(em.join(cells, "vec_id"), c2, "vec_id").cache()
       val subs = subVectors(resid).cache()
       val pqc1 = pqCodebook(subs, resid).cache()
       val assigned = pqAssign(subs, pqc1).cache()
@@ -234,17 +234,21 @@ object VectorIndex {
     }
   }
 
-  /** One bounded collect over the already-cached code assignment: the
-    * effective training boundary and the base slice's error stats, written
-    * as the one-row meta table. Guards the empty-train-slice case (null
-    * max → bound 0, stats 0) instead of writing a null row. */
+  /** One bounded collect over the already-cached encoded slice: the
+    * effective training boundary and, where the encoding records a
+    * quantization error (the PQ assignment's `dist`), the base slice's
+    * error stats (row count + total error), written as the one-row meta
+    * table; binary and SQ8 codes record none, so their stats are 0. Guards
+    * the empty-train-slice case (null max → bound 0, stats 0) instead of
+    * writing a null row. */
   private def writeIndexMeta(
-      spark: SparkSession, tmp: Path, assigned: DataFrame,
+      spark: SparkSession, tmp: Path, encoded: DataFrame,
       trainBound: Long, flavor: String): Unit = {
-    val s = assigned.agg(
+    val hasErr = encoded.columns.contains("dist")
+    val s = encoded.agg(
       coalesce(least(lit(trainBound), max(col("vec_id")) + 1L), lit(0L)),
-      count(lit(1)),
-      coalesce(sum(col("dist")), lit(0L))).head()
+      if (hasErr) count(lit(1)) else lit(0L),
+      if (hasErr) coalesce(sum(col("dist")), lit(0L)) else lit(0L)).head()
     spark.range(1).select(
         lit(s.getLong(0)).as("train_bound"),
         lit(flavor).as("flavor"),
@@ -292,10 +296,10 @@ object VectorIndex {
     * identical delta instead of doubling it. */
   def appendIvfPqRows(
       spark: SparkSession, rows: DataFrame, indexDir: String, minVecId: Long): Unit = {
+    val flavor = requireIvf(spark, indexDir, "appendIvfPq")
     val dir = new Path(indexDir)
     val fs = StoreCommit.fsOf(spark, dir)
     StoreCommit.publish(fs, dir) { tmp =>
-      val flavor = flavorOf(spark, indexDir)
       val tombstones = tombstonesOf(spark, indexDir).cache()
       val coarse = spark.read.parquet(s"$indexDir/coarse").cache()
       val pqc1 = spark.read.parquet(s"$indexDir/pq_codebook").cache()
@@ -313,10 +317,7 @@ object VectorIndex {
       val em = notTombstoned(
         microEmbeddingRows(rows).filter(col("vec_id") >= minVecId), tombstones)
       val subs = flavor match {
-        case FlavorResidual =>
-          subVectors(em.join(newCells, "vec_id")
-            .join(broadcast(coarse.select(col("cent_id").as("cell"), col("cmm"))), "cell")
-            .select(col("vec_id"), zip_with(col("xm"), col("cmm"), (x, c) => x - c).as("xm")))
+        case FlavorResidual => subVectors(residuals(em.join(newCells, "vec_id"), coarse, "vec_id"))
         case _ => subVectors(em)
       }
       val newCodes = pqAssign(subs, pqc1).select("vec_id", "m", "cent_id")
@@ -325,8 +326,8 @@ object VectorIndex {
       pqc1.write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
       oldCells.unionByName(newCells).write.mode(SaveMode.Overwrite).parquet(s"$tmp/cells")
       oldCodes.unionByName(newCodes).write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-      copyMetaIfPresent(spark, fs, indexDir, tmp)
-      copyTombstonesIfPresent(spark, fs, indexDir, tmp)
+      copyIfPresent(spark, fs, indexDir, tmp, "meta")
+      copyIfPresent(spark, fs, indexDir, tmp, "tombstones")
       Seq(coarse, pqc1, newCells, tombstones).foreach(_.unpersist())
     }
   }
@@ -346,40 +347,24 @@ object VectorIndex {
       nQueries: Int = 5,
       nprobe: Int = 3,
       k: Int = 5): DataFrame = {
-    requireFlavor(spark, indexDir, FlavorPlain, "searchIvfPq")
+    requireFlavor(spark, indexDir, "searchIvfPq", FlavorPlain)
     val idx = readRootOf(spark, indexDir)
-    val coarse = spark.read.parquet(s"$idx/coarse")
-    val cells = spark.read.parquet(s"$idx/cells")
-    val pqc1 = spark.read.parquet(s"$idx/pq_codebook")
-    val codes = spark.read.parquet(s"$idx/codes")
-
-    val wProbe = Window.partitionBy("query_id").orderBy(desc("csim"), asc("cent_id"))
-    val probes = normalizedEmbeddings(spark, sfDir).filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-      .crossJoin(broadcast(coarse.select(col("cent_id"), col("cemb"))))
-      .select(col("query_id"), col("cent_id"),
-        round(graft.functions.VectorFunctions.dot(col("qemb"), col("cemb")), 6).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("cent_id").as("cell"))
-    val qTable = subVectors(microEmbeddings(spark, sfDir))
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("m"), col("sub"))
-      .join(broadcast(pqc1), "m")
-      .select(col("query_id"), col("m"), col("cent_id"),
-        subDist(col("sub"), col("cm")).as("qdist"))
-    val w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    cells.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select("query_id", "vec_id")
-      .join(codes, "vec_id")
-      .join(broadcast(qTable), Seq("query_id", "m", "cent_id"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum("qdist").as("adc_dist"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .orderBy("query_id", "rn")
+    adcTopK(
+      ivfPqDistances(
+        spark.read.parquet(s"$idx/cells"), storedProbes(spark, sfDir, idx, nQueries, nprobe),
+        spark.read.parquet(s"$idx/codes"),
+        querySubs(subVectors(microEmbeddings(spark, sfDir)), nQueries),
+        spark.read.parquet(s"$idx/pq_codebook")),
+      k)
   }
+
+  /** The first `nQueries` corpus vectors' `nprobe` nearest cells of the
+    * stored coarse codebook under read root `idx`. */
+  private def storedProbes(
+      spark: SparkSession, sfDir: String, idx: String, nQueries: Int, nprobe: Int,
+      carry: String*): DataFrame =
+    probeCells(queryVectors(normalizedEmbeddings(spark, sfDir), nQueries),
+      spark.read.parquet(s"$idx/coarse"), nprobe, carry: _*)
 
   /** Serve a residual-PQ search from an index built by
     * [[buildIvfPqResidual]] — identical ranking semantics to
@@ -392,48 +377,16 @@ object VectorIndex {
       nQueries: Int = 5,
       nprobe: Int = 3,
       k: Int = 5): DataFrame = {
-    requireFlavor(spark, indexDir, FlavorResidual, "searchIvfPqResidual")
+    requireFlavor(spark, indexDir, "searchIvfPqResidual", FlavorResidual)
     val idx = readRootOf(spark, indexDir)
-    val coarse = spark.read.parquet(s"$idx/coarse")
-    val cells = spark.read.parquet(s"$idx/cells")
-    val pqc1 = spark.read.parquet(s"$idx/pq_codebook")
-    val codes = spark.read.parquet(s"$idx/codes")
-
-    val wProbe = Window.partitionBy("query_id").orderBy(desc("csim"), asc("cent_id"))
-    val probes = normalizedEmbeddings(spark, sfDir).filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-      .crossJoin(broadcast(coarse.select(col("cent_id"), col("cemb"))))
-      .select(col("query_id"), col("cent_id"),
-        round(graft.functions.VectorFunctions.dot(col("qemb"), col("cemb")), 6).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("cent_id").as("cell"))
-    val qResid = probes
-      .join(microEmbeddings(spark, sfDir).filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"), col("xm").as("qxm")), "query_id")
-      .join(broadcast(coarse.select(col("cent_id").as("cell"), col("cmm"))), "cell")
-      .select(col("query_id"), col("cell"),
-        zip_with(col("qxm"), col("cmm"), (x, c) => x - c).as("xm"))
-    val qSubs = qResid.select(
-        col("query_id"), col("cell"),
-        posexplode(transform(
-          sequence(lit(0), lit(PqM - 1)),
-          m => slice(col("xm"), m * PqSubDim + 1, lit(PqSubDim)))))
-      .toDF("query_id", "cell", "m", "sub")
-    val qTable = qSubs.join(broadcast(pqc1), "m")
-      .select(col("query_id"), col("cell"), col("m"), col("cent_id"),
-        subDist(col("sub"), col("cm")).as("qdist"))
-    val w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    cells.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select("query_id", "cell", "vec_id")
-      .join(codes, "vec_id")
-      .join(broadcast(qTable), Seq("query_id", "cell", "m", "cent_id"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum("qdist").as("adc_dist"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .orderBy("query_id", "rn")
+    adcTopK(
+      ivfPqResidualDistances(
+        spark.read.parquet(s"$idx/cells"), storedProbes(spark, sfDir, idx, nQueries, nprobe),
+        spark.read.parquet(s"$idx/codes"),
+        microEmbeddings(spark, sfDir).filter(col("vec_id") < nQueries)
+          .select(col("vec_id").as("query_id"), col("xm")),
+        spark.read.parquet(s"$idx/coarse"), spark.read.parquet(s"$idx/pq_codebook")),
+      k)
   }
 
   /** Two-stage stored-index search: ADC shortlist of `kPrime`, then exact
@@ -450,8 +403,9 @@ object VectorIndex {
       nprobe: Int = 3,
       k: Int = 5,
       kPrime: Int = graft.queries.QuantQueries.RerankKPrime): DataFrame =
-    refine(spark, sfDir,
-      searchIvfPq(spark, sfDir, indexDir, nQueries, nprobe, kPrime), nQueries, k)
+    refine(normalizedEmbeddings(spark, sfDir),
+      searchIvfPq(spark, sfDir, indexDir, nQueries, nprobe, kPrime)
+        .select(col("query_id"), col("neighbor_id")), nQueries, k)
 
   /** The full FAISS-default serving stack: residual ADC shortlist
     * ([[searchIvfPqResidual]] over a [[buildIvfPqResidual]] index) refined
@@ -464,41 +418,22 @@ object VectorIndex {
       nprobe: Int = 3,
       k: Int = 5,
       kPrime: Int = graft.queries.QuantQueries.RerankKPrime): DataFrame =
-    refine(spark, sfDir,
-      searchIvfPqResidual(spark, sfDir, indexDir, nQueries, nprobe, kPrime), nQueries, k)
-
-  /** Exact re-rank of an ADC shortlist: the (k' x queries)-row shortlist
-    * broadcasts into one pass over the raw vectors; only shortlisted
-    * vectors are ever decoded. */
-  private def refine(
-      spark: SparkSession, sfDir: String, shortlistRanked: DataFrame,
-      nQueries: Int, k: Int): DataFrame = {
-    val shortlist = shortlistRanked.select(col("query_id"), col("neighbor_id"))
-    val e = normalizedEmbeddings(spark, sfDir)
-    val qv = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-    val w = Window.partitionBy("query_id").orderBy(desc("score"), asc("neighbor_id"))
-    e.select(col("vec_id").as("neighbor_id"), col("emb"))
-      .join(broadcast(shortlist), "neighbor_id")
-      .join(broadcast(qv), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(graft.functions.VectorFunctions.dot(col("emb"), col("qemb")), 6).as("score"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .orderBy("query_id", "rn")
-  }
+    refine(normalizedEmbeddings(spark, sfDir),
+      searchIvfPqResidual(spark, sfDir, indexDir, nQueries, nprobe, kPrime)
+        .select(col("query_id"), col("neighbor_id")), nQueries, k)
 
   /** Radius search served from the stored index (FAISS `range_search` over
     * a persisted IVF): every probed-cell vector whose exact cosine to the
     * query clears `threshold` — row-identical to `q_sim_range`, which
-    * trains inline so the oracle can replay the lifecycle. Works on BOTH
-    * flavors: radius search verifies with exact cosines against raw
-    * vectors, so the PQ codes (the only flavor-dependent tables) are never
-    * touched — only `coarse` for probing and `cells` for candidate
-    * selection. Scale shape: probes broadcast, candidates are the probed
-    * nprobe/NCells slice of `cells`, and the raw-vector join keys on
-    * vec_id — linear in candidates, no window at all (a pure filter,
-    * cheaper than top-k: no per-query ranking state). */
+    * trains inline so the oracle can replay the lifecycle. Works on both
+    * IVF flavors (plain and residual): radius search verifies with exact
+    * cosines against raw vectors, so the PQ codes (the only
+    * flavor-dependent tables) are never touched — only `coarse` for
+    * probing and `cells` for candidate selection. Scale shape: probes
+    * broadcast, candidates are the probed nprobe/NCells slice of `cells`,
+    * and the raw-vector join keys on vec_id — linear in candidates, no
+    * window at all (a pure filter, cheaper than top-k: no per-query
+    * ranking state). */
   def rangeSearchIndex(
       spark: SparkSession,
       sfDir: String,
@@ -506,26 +441,13 @@ object VectorIndex {
       nQueries: Int = 5,
       nprobe: Int = 3,
       threshold: Double = 0.3): DataFrame = {
+    requireIvf(spark, indexDir, "rangeSearchIndex")
     val idx = readRootOf(spark, indexDir)
-    val coarse = spark.read.parquet(s"$idx/coarse")
-    val cells = spark.read.parquet(s"$idx/cells")
-    val e = normalizedEmbeddings(spark, sfDir)
-    val wProbe = Window.partitionBy("query_id").orderBy(desc("csim"), asc("cent_id"))
-    val probes = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-      .crossJoin(broadcast(coarse.select(col("cent_id"), col("cemb"))))
-      .select(col("query_id"), col("qemb"), col("cent_id"),
-        round(graft.functions.VectorFunctions.dot(col("qemb"), col("cemb")), 6).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("qemb"), col("cent_id").as("cell"))
-    cells.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(e.select(col("vec_id"), col("emb")), "vec_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(graft.functions.VectorFunctions.dot(col("emb"), col("qemb")), 6).as("score"))
-      .filter(col("score") >= threshold)
-      .orderBy("query_id", "neighbor_id")
+    radiusSearch(
+      probedCandidates(spark.read.parquet(s"$idx/cells"),
+          storedProbes(spark, sfDir, idx, nQueries, nprobe, "qemb"))
+        .join(normalizedEmbeddings(spark, sfDir).select(col("vec_id"), col("emb")), "vec_id"),
+      threshold)
   }
 
   /** Cluster-balanced subsampling served from the stored index — the
@@ -537,17 +459,8 @@ object VectorIndex {
     * [[rangeSearchIndex]]. */
   def sampleFromIndex(
       spark: SparkSession, indexDir: String, cap: Int = 40): DataFrame = {
-    val cells = spark.read.parquet(s"${readRootOf(spark, indexDir)}/cells")
-    val w = Window.partitionBy("cell").orderBy("h", "vec_id")
-    cells
-      .withColumn("h",
-        col("vec_id") % lit(1000003L) * lit(2654435761L) % lit(4294967296L))
-      .withColumn("rn", row_number().over(w))
-      .groupBy("cell")
-      .agg(
-        count(lit(1)).as("n_members"),
-        sum(when(col("rn") <= cap, 1L).otherwise(0L)).as("n_kept"))
-      .orderBy("cell")
+    requireIvf(spark, indexDir, "sampleFromIndex")
+    sampleCells(spark.read.parquet(s"${readRootOf(spark, indexDir)}/cells"), cap)
   }
 
   /** Distribution-outlier filter served from the stored index — the
@@ -563,14 +476,9 @@ object VectorIndex {
   def outliersFromIndex(
       spark: SparkSession, sfDir: String, indexDir: String,
       threshold: Double = 0.04): DataFrame = {
-    val coarse = spark.read.parquet(s"${readRootOf(spark, indexDir)}/coarse")
-    val e = normalizedEmbeddings(spark, sfDir)
-    graft.functions.VectorFunctions
-      .nearestCentroid(e, coarse.select(col("cent_id"), col("cemb")))
-      .select(col("vec_id"), col("cent_id").as("nearest_cell"),
-        col("csim").as("max_cos"))
-      .withColumn("is_outlier", col("max_cos") < threshold)
-      .orderBy("vec_id")
+    requireIvf(spark, indexDir, "outliersFromIndex")
+    outlierVerdicts(normalizedEmbeddings(spark, sfDir),
+      spark.read.parquet(s"${readRootOf(spark, indexDir)}/coarse"), threshold)
   }
 
   // ---------------------------------------------------------------------
@@ -593,25 +501,34 @@ object VectorIndex {
     * Returns the number of vectors actually removed. */
   def deleteFromIndex(
       spark: SparkSession, indexDir: String, vecIds: Seq[Long]): Long = {
+    requireIvf(spark, indexDir, "deleteFromIndex")
+    deleteRows(spark, indexDir, vecIds,
+      data = Seq("cells", "codes"), copied = Seq("coarse", "pq_codebook"))
+  }
+
+  /** The delete steps every index kind shares: recover a crashed swap,
+    * count the requested ids present in the first `data` table, record
+    * tombstones only when none is (see [[persistTombstoneRequests]]), else
+    * republish with the ids anti-joined out of every `data` table, the
+    * `copied` tables (codebooks, calibration) and meta carried through,
+    * and the ids added to the tombstones. Returns the number removed. */
+  private def deleteRows(
+      spark: SparkSession, indexDir: String, vecIds: Seq[Long],
+      data: Seq[String], copied: Seq[String]): Long = {
     import spark.implicits._
     val dir = new Path(indexDir)
     val fs = StoreCommit.fsOf(spark, dir)
     StoreCommit.recover(fs, dir) // before the nDead read and the tombstone-only path
     val requested = vecIds.toDF("vec_id")
-    val oldCells = spark.read.parquet(s"$indexDir/cells")
-    val nDead = oldCells.join(broadcast(requested), Seq("vec_id"), "left_semi").count()
+    def survivors(t: String) =
+      spark.read.parquet(s"$indexDir/$t").join(broadcast(requested), Seq("vec_id"), "left_anti")
+    val nDead = spark.read.parquet(s"$indexDir/${data.head}")
+      .join(broadcast(requested), Seq("vec_id"), "left_semi").count()
     if (nDead == 0L) { persistTombstoneRequests(spark, fs, indexDir, requested); return 0L }
     StoreCommit.publish(fs, dir) { tmp =>
-      spark.read.parquet(s"$indexDir/coarse")
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/coarse")
-      spark.read.parquet(s"$indexDir/pq_codebook")
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
-      oldCells.join(broadcast(requested), Seq("vec_id"), "left_anti")
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/cells")
-      spark.read.parquet(s"$indexDir/codes")
-        .join(broadcast(requested), Seq("vec_id"), "left_anti")
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-      copyMetaIfPresent(spark, fs, indexDir, tmp)
+      copied.foreach(copyTable(spark, indexDir, tmp, _))
+      data.foreach(t => survivors(t).write.mode(SaveMode.Overwrite).parquet(s"$tmp/$t"))
+      copyIfPresent(spark, fs, indexDir, tmp, "meta")
       tombstonesOf(spark, indexDir).select("vec_id").unionByName(requested)
         .distinct()
         .write.mode(SaveMode.Overwrite).parquet(s"$tmp/tombstones")
@@ -629,19 +546,18 @@ object VectorIndex {
     * so searches before and after are identical. Run it on the same cadence
     * as table compaction. */
   def vacuumIndex(spark: SparkSession, indexDir: String, targetFiles: Int = 4): Unit = {
+    requireIvf(spark, indexDir, "vacuumIndex")
     val dir = new Path(indexDir)
     val fs = StoreCommit.fsOf(spark, dir)
     StoreCommit.publish(fs, dir) { tmp =>
-      spark.read.parquet(s"$indexDir/coarse")
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/coarse")
-      spark.read.parquet(s"$indexDir/pq_codebook")
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/pq_codebook")
+      copyTable(spark, indexDir, tmp, "coarse")
+      copyTable(spark, indexDir, tmp, "pq_codebook")
       spark.read.parquet(s"$indexDir/cells").repartition(targetFiles)
         .write.mode(SaveMode.Overwrite).parquet(s"$tmp/cells")
       spark.read.parquet(s"$indexDir/codes").repartition(targetFiles)
         .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-      copyMetaIfPresent(spark, fs, indexDir, tmp)
-      copyTombstonesIfPresent(spark, fs, indexDir, tmp)
+      copyIfPresent(spark, fs, indexDir, tmp, "meta")
+      copyIfPresent(spark, fs, indexDir, tmp, "tombstones")
     }
   }
 
@@ -669,9 +585,7 @@ object VectorIndex {
         val coarse = spark.read.parquet(s"${readRootOf(spark, indexDir)}/coarse")
         val e = normalizedEmbeddings(spark, sfDir).filter(pred)
         val cells = kmeansAssign(e, coarse).select(col("vec_id"), col("cent_id").as("cell"))
-        subVectors(em.join(cells, "vec_id")
-          .join(broadcast(coarse.select(col("cent_id").as("cell"), col("cmm"))), "cell")
-          .select(col("vec_id"), zip_with(col("xm"), col("cmm"), (x, c) => x - c).as("xm")))
+        subVectors(residuals(em.join(cells, "vec_id"), coarse, "vec_id"))
       case _ => subVectors(em)
     }
   }
@@ -689,7 +603,7 @@ object VectorIndex {
     * Returns 1.0 when there is no delta. */
   def driftRatio(
       spark: SparkSession, sfDir: String, indexDir: String, minVecId: Long): Double = {
-    val flavor = flavorOf(spark, indexDir)
+    val flavor = requireIvf(spark, indexDir, "driftRatio")
     val pqc1 = spark.read.parquet(s"${readRootOf(spark, indexDir)}/pq_codebook")
     val baseStats = readMetaOpt(spark, indexDir).flatMap { r =>
       for (n <- metaLongOpt(r, "base_n"); err <- metaLongOpt(r, "base_total_err"))
@@ -741,13 +655,7 @@ object VectorIndex {
       val bits = binaryCodes(notTombstoned(
         normalizedEmbeddings(spark, sfDir).filter(col("vec_id") < bound), tombstones)).cache()
       bits.write.mode(SaveMode.Overwrite).parquet(s"$tmp/bits")
-      val effBound = bits.agg(coalesce(max(col("vec_id")) + 1L, lit(0L))).head().getLong(0)
-      spark.range(1).select(
-          lit(effBound).as("train_bound"),
-          lit(FlavorBinary).as("flavor"),
-          lit(0L).as("base_n"),
-          lit(0L).as("base_total_err"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/meta")
+      writeIndexMeta(spark, tmp, bits, bound, FlavorBinary)
       writeTombstonesIfAny(spark, fs, tmp, tombstones)
       Seq(bits, tombstones).foreach(_.unpersist())
     }
@@ -767,7 +675,7 @@ object VectorIndex {
     * instead of re-scanning the corpus directory per micro-batch. */
   def appendBinaryRows(
       spark: SparkSession, rows: DataFrame, indexDir: String, minVecId: Long): Unit = {
-    requireFlavor(spark, indexDir, FlavorBinary, "appendBinary")
+    requireFlavor(spark, indexDir, "appendBinary", FlavorBinary)
     val dir = new Path(indexDir)
     val fs = StoreCommit.fsOf(spark, dir)
     StoreCommit.publish(fs, dir) { tmp =>
@@ -776,7 +684,7 @@ object VectorIndex {
       val newBits = binaryCodes(notTombstoned(
         normalizedEmbeddingRows(rows).filter(col("vec_id") >= minVecId), tombstones))
       oldBits.unionByName(newBits).write.mode(SaveMode.Overwrite).parquet(s"$tmp/bits")
-      copyMetaIfPresent(spark, fs, indexDir, tmp)
+      copyIfPresent(spark, fs, indexDir, tmp, "meta")
       writeTombstonesIfAny(spark, fs, tmp, tombstones)
       tombstones.unpersist()
     }
@@ -789,7 +697,7 @@ object VectorIndex {
   def searchBinary(
       spark: SparkSession, sfDir: String, indexDir: String,
       nQueries: Int = 5, shortlistK: Int = 20, k: Int = 5): DataFrame = {
-    requireFlavor(spark, indexDir, FlavorBinary, "searchBinary")
+    requireFlavor(spark, indexDir, "searchBinary", FlavorBinary)
     binarySearch(
       spark.read.parquet(s"${readRootOf(spark, indexDir)}/bits"),
       normalizedEmbeddings(spark, sfDir),
@@ -825,13 +733,7 @@ object VectorIndex {
       val codes = sq8Encode(e, spark.read.parquet(s"$tmp/calib"))
         .select("vec_id", "qe").cache()
       codes.write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-      val effBound = codes.agg(coalesce(max(col("vec_id")) + 1L, lit(0L))).head().getLong(0)
-      spark.range(1).select(
-          lit(effBound).as("train_bound"),
-          lit(FlavorSq8).as("flavor"),
-          lit(0L).as("base_n"),
-          lit(0L).as("base_total_err"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/meta")
+      writeIndexMeta(spark, tmp, codes, bound, FlavorSq8)
       writeTombstonesIfAny(spark, fs, tmp, tombstones)
       Seq(codes, tombstones).foreach(_.unpersist())
     }
@@ -852,7 +754,7 @@ object VectorIndex {
     * instead of re-scanning the corpus directory per micro-batch. */
   def appendSq8Rows(
       spark: SparkSession, rows: DataFrame, indexDir: String, minVecId: Long): Unit = {
-    requireFlavor(spark, indexDir, FlavorSq8, "appendSq8")
+    requireFlavor(spark, indexDir, "appendSq8", FlavorSq8)
     val dir = new Path(indexDir)
     val fs = StoreCommit.fsOf(spark, dir)
     StoreCommit.publish(fs, dir) { tmp =>
@@ -866,7 +768,7 @@ object VectorIndex {
         calib).select("vec_id", "qe")
       oldCodes.unionByName(newCodes).write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
       calib.write.mode(SaveMode.Overwrite).parquet(s"$tmp/calib")
-      copyMetaIfPresent(spark, fs, indexDir, tmp)
+      copyIfPresent(spark, fs, indexDir, tmp, "meta")
       writeTombstonesIfAny(spark, fs, tmp, tombstones)
       tombstones.unpersist()
     }
@@ -879,7 +781,7 @@ object VectorIndex {
   def searchSq8(
       spark: SparkSession, indexDir: String,
       nQueries: Int = 5, k: Int = 5): DataFrame = {
-    requireFlavor(spark, indexDir, FlavorSq8, "searchSq8")
+    requireFlavor(spark, indexDir, "searchSq8", FlavorSq8)
     // NOT cached: the query side's vec_id filter pushes to the codes scan
     // (no corpus-wide agg feeds both sides here, unlike the in-query path),
     // and a cache would serve stale rows after delete/append republishes —
@@ -897,26 +799,8 @@ object VectorIndex {
     * Returns the number of vectors actually removed. */
   def deleteFromSq8(
       spark: SparkSession, indexDir: String, vecIds: Seq[Long]): Long = {
-    requireFlavor(spark, indexDir, FlavorSq8, "deleteFromSq8")
-    import spark.implicits._
-    val dir = new Path(indexDir)
-    val fs = StoreCommit.fsOf(spark, dir)
-    StoreCommit.recover(fs, dir) // before the nDead read and the tombstone-only path
-    val requested = vecIds.toDF("vec_id")
-    val oldCodes = spark.read.parquet(s"$indexDir/codes")
-    val nDead = oldCodes.join(broadcast(requested), Seq("vec_id"), "left_semi").count()
-    if (nDead == 0L) { persistTombstoneRequests(spark, fs, indexDir, requested); return 0L }
-    StoreCommit.publish(fs, dir) { tmp =>
-      oldCodes.join(broadcast(requested), Seq("vec_id"), "left_anti")
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/codes")
-      spark.read.parquet(s"$indexDir/calib")
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/calib")
-      copyMetaIfPresent(spark, fs, indexDir, tmp)
-      tombstonesOf(spark, indexDir).select("vec_id").unionByName(requested)
-        .distinct()
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/tombstones")
-    }
-    nDead
+    requireFlavor(spark, indexDir, "deleteFromSq8", FlavorSq8)
+    deleteRows(spark, indexDir, vecIds, data = Seq("codes"), copied = Seq("calib"))
   }
 
   /** GDPR delete on a binary index: drop the packed rows and persist the
@@ -924,23 +808,7 @@ object VectorIndex {
     * Returns the number of vectors actually removed. */
   def deleteFromBinary(
       spark: SparkSession, indexDir: String, vecIds: Seq[Long]): Long = {
-    requireFlavor(spark, indexDir, FlavorBinary, "deleteFromBinary")
-    import spark.implicits._
-    val dir = new Path(indexDir)
-    val fs = StoreCommit.fsOf(spark, dir)
-    StoreCommit.recover(fs, dir) // before the nDead read and the tombstone-only path
-    val requested = vecIds.toDF("vec_id")
-    val oldBits = spark.read.parquet(s"$indexDir/bits")
-    val nDead = oldBits.join(broadcast(requested), Seq("vec_id"), "left_semi").count()
-    if (nDead == 0L) { persistTombstoneRequests(spark, fs, indexDir, requested); return 0L }
-    StoreCommit.publish(fs, dir) { tmp =>
-      oldBits.join(broadcast(requested), Seq("vec_id"), "left_anti")
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/bits")
-      copyMetaIfPresent(spark, fs, indexDir, tmp)
-      tombstonesOf(spark, indexDir).select("vec_id").unionByName(requested)
-        .distinct()
-        .write.mode(SaveMode.Overwrite).parquet(s"$tmp/tombstones")
-    }
-    nDead
+    requireFlavor(spark, indexDir, "deleteFromBinary", FlavorBinary)
+    deleteRows(spark, indexDir, vecIds, data = Seq("bits"), copied = Nil)
   }
 }

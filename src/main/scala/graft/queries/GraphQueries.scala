@@ -29,8 +29,9 @@ object GraphQueries {
     * BPE trainer. The final top-20 is TakeOrderedAndProject under a total
     * order (rank desc, node), never a global sort. The DuckDB oracle is
     * GENERATED from the same Scala loop, so the two engines necessarily
-    * run the identical recurrence. */
-  /** The distributed pagerank pipeline: (top-20 frame, the cached frames
+    * run the identical recurrence.
+    *
+    * Returns the distributed pipeline: (top-20 frame, the cached frames
     * the caller must unpersist once the result is materialized). Exposed
     * for PlansSpec, which pins the distributed plan's shape. */
   private[graft] def pagerankFrames(
@@ -143,8 +144,9 @@ object GraphQueries {
     * (documented knob, same plan shape). The tiny (orderkey % 1000003)
     * pre-reduction keeps the 64-bit product overflow-safe under ANSI at
     * any replication. Output is bounded: per-node triangle counts top-20
-    * under a total order plus the global total. */
-  /** The distributed triangle pipeline: (top-20 frame, cached frames the
+    * under a total order plus the global total.
+    *
+    * Returns the distributed pipeline: (top-20 frame, cached frames the
     * caller must unpersist once materialized). Exposed for PlansSpec,
     * which pins that every candidate step is an equi-join. */
   private[graft] def triangleFrames(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import Tables.t
@@ -21,7 +21,8 @@ object QuantQueries {
 
   import graft.functions.VectorFunctions.{dot, l2Normalize, nearestCentroid}
 
-  private def rawEmbeddings(s: SparkSession, d: String): DataFrame =
+  /** The embeddings table as (vec_id, de: array<double>). */
+  private[graft] def rawEmbeddings(s: SparkSession, d: String): DataFrame =
     t(s, d, "embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("de"))
 
   /** Row-based twin of [[normalizedEmbeddings]]: `rows` carries the
@@ -31,6 +32,9 @@ object QuantQueries {
     rows.select(col("vec_id"), col("embedding").cast("array<double>").as("de"))
       .select(col("vec_id"), l2Normalize(col("de")).as("emb"))
 
+  /** Vectors L2-normalized ONCE at scan, (vec_id, emb): the cosine of a
+    * candidate pair is then a single codegen'd dot-product kernel call
+    * instead of dot + two norms per pair. */
   private[graft] def normalizedEmbeddings(s: SparkSession, d: String): DataFrame =
     normalizedEmbeddingRows(t(s, d, "embeddings"))
 
@@ -64,11 +68,11 @@ object QuantQueries {
 
   /** Corpus as int8 codes (array<long> — parquet/arrow has no unsigned
     * byte; the 8-bit range is the memory story: 64 bytes/vector instead of
-    * 512) PLUS the midpoint reconstruction used for scoring. Dequantization
-    * happens once per VECTOR against the broadcast calibration row — never
-    * per candidate pair — so pair scoring stays one codegen'd dot kernel. */
-  /** int8 codes against an explicit (possibly stored) calibration row,
-    * carrying the calibration through as `mm` — the encode step
+    * 512) against an explicit (possibly stored) calibration row, carrying
+    * the calibration through as `mm` for the midpoint reconstruction
+    * ([[sq8WithDq]]). Dequantization happens once per VECTOR against the
+    * broadcast calibration row — never per candidate pair — so pair
+    * scoring stays one codegen'd dot kernel. The encode step
     * [[graft.operators.VectorIndex.appendSq8]] shares, so appended vectors
     * use the calibration TRAINED AT BUILD TIME (FAISS SQ semantics;
     * out-of-range components clamp to the trained range). */
@@ -107,11 +111,7 @@ object QuantQueries {
       .select(
         col("query_id"), col("vec_id").as("neighbor_id"),
         round(dot(col("dq"), col("qdq")), 6).as("score"))
-    val w = Window.partitionBy("query_id").orderBy(desc("score"), asc("neighbor_id"))
-    scored
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .orderBy("query_id", "rn")
+    topK(scored, k, desc("score"), asc("neighbor_id"))
   }
 
   /** Top-5 neighbors for 5 query vectors over the int8-quantized corpus,
@@ -217,6 +217,100 @@ object QuantQueries {
   private[graft] def trainedCodebook(e: DataFrame): DataFrame =
     lloydStep(kmeansAssign(e, lloydStep(kmeansAssign(e, CentroidSeed.seeds(e)))))
 
+  // ---------------------------------------------------------------------------
+  // IVF search stages: one body each, called by the declared queries with
+  // their inline-trained frames and by graft.operators.VectorIndex with the
+  // frames it reads from a stored index (QuantSpec pins the twins row-identical)
+  // ---------------------------------------------------------------------------
+
+  /** The first `n` vectors of a normalized (vec_id, emb) frame as queries
+    * (query_id, qemb). */
+  private[graft] def queryVectors(e: DataFrame, n: Int): DataFrame =
+    e.filter(col("vec_id") < n).select(col("vec_id").as("query_id"), col("emb").as("qemb"))
+
+  /** Each query's `nprobe` nearest cells: the (tiny) codebook broadcasts
+    * into the query side, ranked by round(dot, 6) with a centroid-id
+    * tiebreak. `queries` carries (query_id, qemb, carry...); the output is
+    * (query_id, carry..., cell). */
+  private[graft] def probeCells(
+      queries: DataFrame, cents: DataFrame, nprobe: Int, carry: String*): DataFrame = {
+    val keep = col("query_id") +: carry.map(col)
+    val wProbe = Window.partitionBy("query_id").orderBy(desc("csim"), asc("cent_id"))
+    queries.crossJoin(broadcast(cents.select(col("cent_id"), col("cemb"))))
+      .select(keep ++ Seq(col("cent_id"), round(dot(col("qemb"), col("cemb")), 6).as("csim")): _*)
+      .withColumn("rn", row_number().over(wProbe))
+      .filter(col("rn") <= nprobe)
+      .select(keep :+ col("cent_id").as("cell"): _*)
+  }
+
+  /** Corpus rows of a (vec_id, cell, ...) frame that sit in a probed cell,
+    * each paired with its probing query (never with itself): the corpus
+    * meets the queries only through this cell equi-join. */
+  private[graft] def probedCandidates(cells: DataFrame, probes: DataFrame): DataFrame =
+    cells.join(broadcast(probes), Seq("cell")).filter(col("vec_id") =!= col("query_id"))
+
+  /** Exact cosine (normalized dot, rounded to 6) of each candidate's `emb`
+    * against its query's `qemb`, named `score`. */
+  private[graft] def exactScores(cands: DataFrame, score: String): DataFrame =
+    cands.select(col("query_id"), col("vec_id").as("neighbor_id"),
+      round(dot(col("emb"), col("qemb")), 6).as(score))
+
+  /** The first `k` rows per query in `order`, numbered `rn` (bigint). */
+  private[graft] def topK(scored: DataFrame, k: Int, order: Column*): DataFrame =
+    scored
+      .withColumn("rn",
+        row_number().over(Window.partitionBy("query_id").orderBy(order: _*)).cast("long"))
+      .filter(col("rn") <= k)
+      .orderBy("query_id", "rn")
+
+  /** Flat-IVF top-k: exact cosine over the probed cells of an assigned
+    * (vec_id, emb, cell) corpus. */
+  private[graft] def cosineTopK(assigned: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    topK(exactScores(probedCandidates(assigned, probes), "cos_sim"), k,
+      desc("cos_sim"), asc("neighbor_id"))
+
+  /** Radius search: every candidate whose exact cosine clears `threshold`. */
+  private[graft] def radiusSearch(cands: DataFrame, threshold: Double): DataFrame =
+    exactScores(cands, "score")
+      .filter(col("score") >= threshold)
+      .orderBy("query_id", "neighbor_id")
+
+  /** Exact re-rank of a (query_id, neighbor_id) shortlist to `k` (FAISS
+    * `IndexRefineFlat`): the shortlist and the query vectors broadcast into
+    * one pass over the normalized corpus `e`; only shortlisted vectors are
+    * ever decoded. */
+  private[graft] def refine(e: DataFrame, shortlist: DataFrame, nQueries: Int, k: Int): DataFrame =
+    topK(
+      e.select(col("vec_id").as("neighbor_id"), col("emb"))
+        .join(broadcast(shortlist), "neighbor_id")
+        .join(broadcast(queryVectors(e, nQueries)), "query_id")
+        .select(col("query_id"), col("neighbor_id"),
+          round(dot(col("emb"), col("qemb")), 6).as("score")),
+      k, desc("score"), asc("neighbor_id"))
+
+  /** Cluster-balanced sampling of a (vec_id, cell) assignment: keep at most
+    * `cap` vectors per cell by an RNG-free multiplicative id-hash rank
+    * (reshuffle-stable), reported per cell. */
+  private[graft] def sampleCells(cells: DataFrame, cap: Int): DataFrame = {
+    val w = Window.partitionBy("cell").orderBy("h", "vec_id")
+    cells
+      .withColumn("h", col("vec_id") % lit(1000003L) * lit(2654435761L) % lit(4294967296L))
+      .withColumn("rn", row_number().over(w))
+      .groupBy("cell")
+      .agg(
+        count(lit(1)).as("n_members"),
+        sum(when(col("rn") <= cap, 1L).otherwise(0L)).as("n_kept"))
+      .orderBy("cell")
+  }
+
+  /** Per-vector nearest centroid, its cosine, and the below-`threshold`
+    * outlier flag. */
+  private[graft] def outlierVerdicts(e: DataFrame, cents: DataFrame, threshold: Double): DataFrame =
+    nearestCentroid(e, cents.select(col("cent_id"), col("cemb")))
+      .select(col("vec_id"), col("cent_id").as("nearest_cell"), col("csim").as("max_cos"))
+      .withColumn("is_outlier", col("max_cos") < threshold)
+      .orderBy("vec_id")
+
   /** Two Lloyd iterations from a fixed-size deterministic seed sample,
     * then a final assignment; output is the trained codebook summary —
     * cell id, member count, and the exact integer squared norm of the
@@ -268,23 +362,7 @@ object QuantQueries {
       val c2 = trainedCodebook(e).cache()
       val assigned = kmeansAssign(e, c2)
         .select(col("vec_id"), col("emb"), col("cent_id").as("cell"))
-      val wProbe = Window.partitionBy("query_id").orderBy(desc("csim"), asc("cent_id"))
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-        .crossJoin(broadcast(c2.select(col("cent_id"), col("cemb"))))
-        .select(col("query_id"), col("qemb"), col("cent_id"),
-          round(dot(col("qemb"), col("cemb")), 6).as("csim"))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") <= 3) // nprobe
-        .select(col("query_id"), col("qemb"), col("cent_id").as("cell"))
-      val w = Window.partitionBy("query_id").orderBy(desc("cos_sim"), asc("neighbor_id"))
-      assigned.join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(dot(col("emb"), col("qemb")), 6).as("cos_sim"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 5)
-        .orderBy("query_id", "rn")
+      cosineTopK(assigned, probeCells(queryVectors(e, 5), c2, 3, "qemb"), 5)
     },
     Some(s"""WITH $sqlNormalized,
       dd AS (SELECT unnest(range(1, ${Dim + 1})) AS d),
@@ -328,14 +406,13 @@ object QuantQueries {
       col("vec_id"),
       transform(col("emb"), x => floor((x + lit(2.0)) * lit(1000000.0)).cast("long")).as("xm"))
 
-  /** One row per (vector, subspace): the 8-dim micro sub-vector. */
-  private[graft] def subVectors(e: DataFrame): DataFrame =
+  /** One row per (`key`, subspace): the 8-dim micro sub-vector of `xm`. */
+  private[graft] def subVectors(e: DataFrame, key: Seq[String] = Seq("vec_id")): DataFrame =
     e.select(
-        col("vec_id"),
-        posexplode(transform(
+        key.map(col) :+ posexplode(transform(
           sequence(lit(0), lit(PqM - 1)),
-          m => slice(col("xm"), m * PqSubDim + 1, lit(PqSubDim)))))
-      .toDF("vec_id", "m", "sub")
+          m => slice(col("xm"), m * PqSubDim + 1, lit(PqSubDim)))): _*)
+      .toDF(key ++ Seq("m", "sub"): _*)
 
   /** Exact integer squared L2 between two micro sub-vectors. r19: was the
     * declarative fold `aggregate(zip_with(a,b,(x,y)->(x-y)*(x-y)), 0L, +)` —
@@ -343,7 +420,7 @@ object QuantQueries {
     * an interpreted per-element lambda walk; the codegen'd kernel is one
     * JIT'd loop (both sides are fixed [[PqSubDim]]-wide slices, so
     * zip_with's unequal-length null-padding cannot arise). */
-  private[graft] def subDist(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+  private[graft] def subDist(a: Column, b: Column) =
     graft.functions.VectorFunctions.l2sqDist(a, b)
 
   /** Argmin assignment of every (vector, subspace) to its nearest
@@ -407,6 +484,58 @@ object QuantQueries {
     pqStep(pqAssign(subs, c0))
   }
 
+  /** Residual micro vectors: `xm` minus the exact micro centroid (`cmm`)
+    * of the row's `cell` — exact BIGINT math, output (keep..., xm). */
+  private[graft] def residuals(withCell: DataFrame, coarse: DataFrame, keep: String*): DataFrame =
+    withCell.join(broadcast(coarse.select(col("cent_id").as("cell"), col("cmm"))), "cell")
+      .select(keep.map(col) :+ zip_with(col("xm"), col("cmm"), (x, c) => x - c).as("xm"): _*)
+
+  /** The first `n` vectors' sub-vectors as ADC queries (query_id, m, sub). */
+  private[graft] def querySubs(subs: DataFrame, n: Int): DataFrame =
+    subs.filter(col("vec_id") < n).select(col("vec_id").as("query_id"), col("m"), col("sub"))
+
+  /** ADC distance table: every query sub-vector's exact integer distance
+    * to every sub-centroid of its subspace, keyed by `key` (the query, or
+    * the query and a probed cell for residuals). */
+  private[graft] def adcTable(qSubs: DataFrame, pqc1: DataFrame, key: String*): DataFrame =
+    qSubs.join(broadcast(pqc1), "m")
+      .select(key.map(col) ++ Seq(col("m"), col("cent_id"),
+        subDist(col("sub"), col("cm")).as("qdist")): _*)
+
+  /** IVF-PQ ADC distances (query_id, neighbor_id, adc_dist): probed-cell
+    * candidates read their PQ codes and sum the broadcast table lookups. */
+  private[graft] def adcDistances(
+      cells: DataFrame, probes: DataFrame, codes: DataFrame,
+      qTable: DataFrame, key: String*): DataFrame =
+    probedCandidates(cells, probes)
+      .select((key :+ "vec_id").map(col): _*)
+      .join(codes, "vec_id")
+      .join(broadcast(qTable), key ++ Seq("m", "cent_id"))
+      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
+      .agg(sum("qdist").as("adc_dist"))
+
+  /** Plain IVF-PQ (FAISS by_residual=false): one distance table per query
+    * from its (query_id, m, sub) rows. */
+  private[graft] def ivfPqDistances(
+      cells: DataFrame, probes: DataFrame, codes: DataFrame,
+      qSubs: DataFrame, pqc1: DataFrame): DataFrame =
+    adcDistances(cells, probes, codes, adcTable(qSubs, pqc1, "query_id"), "query_id")
+
+  /** Residual IVF-PQ (FAISS by_residual=true): the query residual differs
+    * per probed cell, so each (query, cell) gets its own distance table,
+    * built from the query's (query_id, xm) micro vector. */
+  private[graft] def ivfPqResidualDistances(
+      cells: DataFrame, probes: DataFrame, codes: DataFrame,
+      qxm: DataFrame, coarse: DataFrame, pqc1: DataFrame): DataFrame = {
+    val key = Seq("query_id", "cell")
+    val qSubs = subVectors(residuals(probes.join(qxm, "query_id"), coarse, key: _*), key)
+    adcDistances(cells, probes, codes, adcTable(qSubs, pqc1, key: _*), key: _*)
+  }
+
+  /** ADC ranking: smallest summed distance first, neighbor-id tiebreak. */
+  private[graft] def adcTopK(dists: DataFrame, k: Int): DataFrame =
+    topK(dists, k, col("adc_dist"), col("neighbor_id"))
+
   /** Product quantization + asymmetric-distance (ADC) top-k — the memory
     * layout of every billion-vector index (FAISS IVFPQ's PQ half,
     * Jégou et al., TPAMI 2011): each vector stores only M sub-cell codes
@@ -430,19 +559,12 @@ object QuantQueries {
       val subs = subVectors(e).cache()
       val c1 = pqCodebook(subs, e).cache()
       val codes = pqAssign(subs, c1).select("vec_id", "m", "cent_id")
-      val qTable = subs.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("m"), col("sub"))
-        .join(broadcast(c1), "m")
-        .select(col("query_id"), col("m"), col("cent_id"),
-          subDist(col("sub"), col("cm")).as("qdist"))
-      val w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-      codes.join(broadcast(qTable), Seq("m", "cent_id"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-        .agg(sum("qdist").as("adc_dist"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 5)
-        .orderBy("query_id", "rn")
+      adcTopK(
+        codes.join(broadcast(adcTable(querySubs(subs, 5), c1, "query_id")), Seq("m", "cent_id"))
+          .filter(col("vec_id") =!= col("query_id"))
+          .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
+          .agg(sum("qdist").as("adc_dist")),
+        5)
     },
     Some(s"""WITH $sqlNormalized,
       em AS (SELECT vec_id,
@@ -507,35 +629,14 @@ object QuantQueries {
       val e = normalizedEmbeddings(s, d).cache()
       val c2 = trainedCodebook(e).cache()
       val cells = kmeansAssign(e, c2).select(col("vec_id"), col("cent_id").as("cell"))
-      val wProbe = Window.partitionBy("query_id").orderBy(desc("csim"), asc("cent_id"))
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-        .crossJoin(broadcast(c2.select(col("cent_id"), col("cemb"))))
-        .select(col("query_id"), col("cent_id"),
-          round(dot(col("qemb"), col("cemb")), 6).as("csim"))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") <= 3) // nprobe
-        .select(col("query_id"), col("cent_id").as("cell"))
       val em = microEmbeddings(s, d)
       val subs = subVectors(em).cache()
       val pqc1 = pqCodebook(subs, em).cache()
       val codes = pqAssign(subs, pqc1).select("vec_id", "m", "cent_id")
-      val qTable = subs.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("m"), col("sub"))
-        .join(broadcast(pqc1), "m")
-        .select(col("query_id"), col("m"), col("cent_id"),
-          subDist(col("sub"), col("cm")).as("qdist"))
-      val w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-      cells.join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select("query_id", "vec_id")
-        .join(codes, "vec_id")
-        .join(broadcast(qTable), Seq("query_id", "m", "cent_id"))
-        .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-        .agg(sum("qdist").as("adc_dist"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 5)
-        .orderBy("query_id", "rn")
+      adcTopK(
+        ivfPqDistances(cells, probeCells(queryVectors(e, 5), c2, 3), codes,
+          querySubs(subs, 5), pqc1),
+        5)
     },
     Some(s"""WITH $sqlNormalized,
       dd AS (SELECT unnest(range(1, ${Dim + 1})) AS d),
@@ -621,49 +722,20 @@ object QuantQueries {
       val e = normalizedEmbeddings(s, d).cache()
       val c2 = trainedCodebook(e).cache()
       val cells = kmeansAssign(e, c2).select(col("vec_id"), col("cent_id").as("cell"))
-      val wProbe = Window.partitionBy("query_id").orderBy(desc("csim"), asc("cent_id"))
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-        .crossJoin(broadcast(c2.select(col("cent_id"), col("cemb"))))
-        .select(col("query_id"), col("cent_id"),
-          round(dot(col("qemb"), col("cemb")), 6).as("csim"))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") <= 3) // nprobe
-        .select(col("query_id"), col("cent_id").as("cell"))
       val em = microEmbeddings(s, d)
       val subs = subVectors(em).cache()
       val pqc1 = pqCodebook(subs, em).cache()
       val codes = pqAssign(subs, pqc1).select("vec_id", "m", "cent_id")
-      val qTable = subs.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("m"), col("sub"))
-        .join(broadcast(pqc1), "m")
-        .select(col("query_id"), col("m"), col("cent_id"),
-          subDist(col("sub"), col("cm")).as("qdist"))
       // stage 1: ADC shortlist of k' candidates per query
       val wAdc = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-      val shortlist = cells.join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select("query_id", "vec_id")
-        .join(codes, "vec_id")
-        .join(broadcast(qTable), Seq("query_id", "m", "cent_id"))
-        .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-        .agg(sum("qdist").as("adc_dist"))
-        .withColumn("arn", row_number().over(wAdc))
-        .filter(col("arn") <= RerankKPrime)
-        .select("query_id", "neighbor_id")
-      // stage 2: exact re-rank — the (k' x queries)-row shortlist broadcasts
-      // into one pass over the raw vectors; only shortlisted vectors decode
-      val qv = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-      val w = Window.partitionBy("query_id").orderBy(desc("score"), asc("neighbor_id"))
-      e.select(col("vec_id").as("neighbor_id"), col("emb"))
-        .join(broadcast(shortlist), "neighbor_id")
-        .join(broadcast(qv), "query_id")
-        .select(col("query_id"), col("neighbor_id"),
-          round(dot(col("emb"), col("qemb")), 6).as("score"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 5)
-        .orderBy("query_id", "rn")
+      val shortlist =
+        ivfPqDistances(cells, probeCells(queryVectors(e, 5), c2, 3), codes,
+            querySubs(subs, 5), pqc1)
+          .withColumn("arn", row_number().over(wAdc))
+          .filter(col("arn") <= RerankKPrime)
+          .select("query_id", "neighbor_id")
+      // stage 2: exact re-rank over the shortlisted raw vectors only
+      refine(e, shortlist, 5, 5)
     },
     Some(s"""WITH $sqlNormalized,
       dd AS (SELECT unnest(range(1, ${Dim + 1})) AS d),
@@ -761,52 +833,18 @@ object QuantQueries {
       // cached: feeds BOTH the residual encode and the probed-cell candidate
       // join — uncached, the argmax window would evaluate once per branch
       val assigned = kmeansAssign(e, c2).select(col("vec_id"), col("cent_id").as("cell")).cache()
-      val wProbe = Window.partitionBy("query_id").orderBy(desc("csim"), asc("cent_id"))
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-        .crossJoin(broadcast(c2.select(col("cent_id"), col("cemb"))))
-        .select(col("query_id"), col("cent_id"),
-          round(dot(col("qemb"), col("cemb")), 6).as("csim"))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") <= 3) // nprobe
-        .select(col("query_id"), col("cent_id").as("cell"))
       // cached: the micro frame feeds both the corpus-residual branch and
       // the per-probed-cell query-residual branch
       val em = microEmbeddings(s, d).cache()
       // corpus residuals vs the OWN assigned cell's exact micro centroid
-      val resid = em.join(assigned, "vec_id")
-        .join(broadcast(c2.select(col("cent_id").as("cell"), col("cmm"))), "cell")
-        .select(col("vec_id"), zip_with(col("xm"), col("cmm"), (x, c) => x - c).as("xm"))
-        .cache()
+      val resid = residuals(em.join(assigned, "vec_id"), c2, "vec_id").cache()
       val subs = subVectors(resid).cache()
       val pqc1 = pqCodebook(subs, resid).cache()
       val codes = pqAssign(subs, pqc1).select("vec_id", "m", "cent_id")
-      // query residual is PER PROBED CELL: one distance table per (query, cell)
-      val qResid = probes
-        .join(em.select(col("vec_id").as("query_id"), col("xm").as("qxm")), "query_id")
-        .join(broadcast(c2.select(col("cent_id").as("cell"), col("cmm"))), "cell")
-        .select(col("query_id"), col("cell"),
-          zip_with(col("qxm"), col("cmm"), (x, c) => x - c).as("xm"))
-      val qSubs = qResid.select(
-          col("query_id"), col("cell"),
-          posexplode(transform(
-            sequence(lit(0), lit(PqM - 1)),
-            m => slice(col("xm"), m * PqSubDim + 1, lit(PqSubDim)))))
-        .toDF("query_id", "cell", "m", "sub")
-      val qTable = qSubs.join(broadcast(pqc1), "m")
-        .select(col("query_id"), col("cell"), col("m"), col("cent_id"),
-          subDist(col("sub"), col("cm")).as("qdist"))
-      val w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-      assigned.join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select("query_id", "cell", "vec_id")
-        .join(codes, "vec_id")
-        .join(broadcast(qTable), Seq("query_id", "cell", "m", "cent_id"))
-        .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-        .agg(sum("qdist").as("adc_dist"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 5)
-        .orderBy("query_id", "rn")
+      adcTopK(
+        ivfPqResidualDistances(assigned, probeCells(queryVectors(e, 5), c2, 3), codes,
+          em.select(col("vec_id").as("query_id"), col("xm")), c2, pqc1),
+        5)
     },
     Some(s"""WITH $sqlNormalized,
       dd AS (SELECT unnest(range(1, ${Dim + 1})) AS d),
@@ -975,21 +1013,8 @@ object QuantQueries {
       val c2 = trainedCodebook(e).cache()
       val assigned = kmeansAssign(e, c2)
         .select(col("vec_id"), col("emb"), col("cent_id").as("cell"))
-      val wProbe = Window.partitionBy("query_id").orderBy(desc("csim"), asc("cent_id"))
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-        .crossJoin(broadcast(c2.select(col("cent_id"), col("cemb"))))
-        .select(col("query_id"), col("qemb"), col("cent_id"),
-          round(dot(col("qemb"), col("cemb")), 6).as("csim"))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") <= 3) // nprobe
-        .select(col("query_id"), col("qemb"), col("cent_id").as("cell"))
-      assigned.join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(dot(col("emb"), col("qemb")), 6).as("score"))
-        .filter(col("score") >= 0.3)
-        .orderBy("query_id", "neighbor_id")
+      radiusSearch(
+        probedCandidates(assigned, probeCells(queryVectors(e, 5), c2, 3, "qemb")), 0.3)
     },
     Some(s"""WITH $sqlNormalized,
       dd AS (SELECT unnest(range(1, ${Dim + 1})) AS d),
@@ -1085,20 +1110,9 @@ object QuantQueries {
   private val sampleClusters = Q(
     "q_sample_clusters",
     (s, d) => {
-      val cap = 40
       val e = normalizedEmbeddings(s, d).cache()
       val c2 = trainedCodebook(e).cache()
-      val assigned = kmeansAssign(e, c2)
-        .select(col("vec_id"), col("cent_id").as("cell"))
-        .withColumn("h", col("vec_id") % lit(1000003L) * lit(2654435761L) % lit(4294967296L))
-      val w = Window.partitionBy("cell").orderBy("h", "vec_id")
-      assigned
-        .withColumn("rn", row_number().over(w))
-        .groupBy("cell")
-        .agg(
-          count(lit(1)).as("n_members"),
-          sum(when(col("rn") <= cap, 1L).otherwise(0L)).as("n_kept"))
-        .orderBy("cell")
+      sampleCells(kmeansAssign(e, c2).select(col("vec_id"), col("cent_id").as("cell")), 40)
     },
     Some(s"""WITH $sqlNormalized,
       dd AS (SELECT unnest(range(1, ${Dim + 1})) AS d),
@@ -1122,13 +1136,13 @@ object QuantQueries {
   // q_sim_binary — 1-bit binary quantization + Hamming shortlist + exact rerank
   // ---------------------------------------------------------------------------
 
-  /** Sign-bit binary codes: dimension j contributes bit j iff its component
+  /** Adds the packed sign words (w0, w1) to any frame carrying an `emb`
+    * column — the narrow fold rides whatever scan produced the frame.
+    * Sign-bit binary codes: dimension j contributes bit j iff its component
     * is positive, packed into two 32-bit words held in BIGINTs (a single
     * 64-bit word would need 2^63 — an ANSI overflow; two halves keep every
     * partial sum positive). 8 bytes/vector — the 64x compression floor of
     * the quantization family (SQ8 = 64 B, PQ = 8 B codes + codebook). */
-  /** Adds the packed sign words (w0, w1) to any frame carrying an `emb`
-    * column — the narrow fold rides whatever scan produced the frame. */
   private[graft] def withBinaryWords(df: DataFrame): DataFrame =
     // codegen'd sign-words kernel (r19): the two aggregate folds
     // interpreted 64 lambda steps per row (bit-parity pinned in
@@ -1158,17 +1172,13 @@ object QuantQueries {
         (expr("bit_count(w0 ^ q0)") + expr("bit_count(w1 ^ q1)")).cast("long").as("hamming"))
     val wh = Window.partitionBy("query_id").orderBy(asc("hamming"), asc("neighbor_id"))
     val short = cand.withColumn("hrn", row_number().over(wh)).filter(col("hrn") <= shortlistK)
-    val qe = broadcast(e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("emb").as("qemb")))
-    val wr = Window.partitionBy("query_id").orderBy(desc("cos_sim"), asc("neighbor_id"))
-    broadcast(short)
-      .join(e, short("neighbor_id") === e("vec_id"))
-      .join(qe, "query_id")
-      .select(col("query_id"), col("neighbor_id"), col("hamming"),
-        round(dot(col("emb"), col("qemb")), 6).as("cos_sim"))
-      .withColumn("rn", row_number().over(wr).cast("long"))
-      .filter(col("rn") <= k)
-      .orderBy("query_id", "rn")
+    topK(
+      broadcast(short)
+        .join(e, short("neighbor_id") === e("vec_id"))
+        .join(broadcast(queryVectors(e, nQueries)), "query_id")
+        .select(col("query_id"), col("neighbor_id"), col("hamming"),
+          round(dot(col("emb"), col("qemb")), 6).as("cos_sim")),
+      k, desc("cos_sim"), asc("neighbor_id"))
   }
 
   /** Binary-quantized ANN (the FAISS IndexBinaryFlat + refine shape): top-5
@@ -1235,24 +1245,14 @@ object QuantQueries {
         nearestCentroid(e, centroids)
           .select(col("vec_id"), col("emb"), col("cent_id").as("cell")))
         .select("vec_id", "cell", "w0", "w1")
-      val wProbe = Window.partitionBy("query_id").orderBy(desc("csim"), asc("cent_id"))
-      val probes = withBinaryWords(e.filter(col("vec_id") < 5))
+      val queries = withBinaryWords(e.filter(col("vec_id") < 5))
         .select(col("vec_id").as("query_id"), col("emb").as("qemb"),
           col("w0").as("q0"), col("w1").as("q1"))
-        .crossJoin(broadcast(centroids))
-        .select(col("query_id"), col("q0"), col("q1"), col("cent_id"),
-          round(dot(col("qemb"), col("cemb")), 6).as("csim"))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") <= 4)
-        .select(col("query_id"), col("q0"), col("q1"), col("cent_id").as("cell"))
-      val w = Window.partitionBy("query_id").orderBy(asc("hamming"), asc("neighbor_id"))
-      packed.join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell"),
-          (expr("bit_count(w0 ^ q0)") + expr("bit_count(w1 ^ q1)")).cast("long").as("hamming"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 5)
-        .orderBy("query_id", "rn")
+      topK(
+        probedCandidates(packed, probeCells(queries, centroids, 4, "q0", "q1"))
+          .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell"),
+            (expr("bit_count(w0 ^ q0)") + expr("bit_count(w1 ^ q1)")).cast("long").as("hamming")),
+        5, asc("hamming"), asc("neighbor_id"))
     },
     Some(s"""WITH $sqlNormalized,
       ${CentroidSeed.sqlSeedCte("cent")},
@@ -1302,12 +1302,7 @@ object QuantQueries {
     "q_sim_outliers",
     (s, d) => {
       val e = normalizedEmbeddings(s, d).cache()
-      val c2 = trainedCodebook(e).cache()
-      nearestCentroid(e, c2.select(col("cent_id"), col("cemb")))
-        .select(col("vec_id"), col("cent_id").as("nearest_cell"),
-          col("csim").as("max_cos"))
-        .withColumn("is_outlier", col("max_cos") < 0.04)
-        .orderBy("vec_id")
+      outlierVerdicts(e, trainedCodebook(e).cache(), 0.04)
     },
     Some(s"""WITH $sqlNormalized,
       dd AS (SELECT unnest(range(1, ${Dim + 1})) AS d),

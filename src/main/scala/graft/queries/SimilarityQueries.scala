@@ -43,6 +43,8 @@ import Tables.t
 object SimilarityQueries {
 
   import graft.functions.VectorFunctions.{dot, l2Normalize, nearestCentroid}
+  import QuantQueries.{cosineTopK, exactScores, normalizedEmbeddings, probeCells,
+    probedCandidates, queryVectors, rawEmbeddings}
 
   /** Exact all-pairs audits read only vec_id < this: 2M candidate pairs at
     * most, regardless of corpus size. At the driver's verify scales
@@ -50,15 +52,6 @@ object SimilarityQueries {
     * the unbounded round-2 queries there. */
   private val ExactAuditBound = 2000L
 
-  private def embeddings(s: SparkSession, d: String): DataFrame =
-    t(s, d, "embeddings").select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-
-  /** Vectors L2-normalized ONCE at scan, so cosine of a candidate pair is a
-    * single codegen'd dot-product kernel call (graft.functions.VectorOps.dot)
-    * instead of dot + two norms per pair — the difference between 1 and 3
-    * array passes on every one of the O(n*k) or O(n^2) candidate pairs. */
-  private def normalizedEmbeddings(s: SparkSession, d: String): DataFrame =
-    embeddings(s, d).select(col("vec_id"), l2Normalize(col("emb")).as("emb"))
 
   // ---------------------------------------------------------------------------
   // Mirrored-algorithm oracle plumbing: the DuckDB twin of the LSH pipeline.
@@ -256,16 +249,6 @@ object SimilarityQueries {
       FROM tb x JOIN tb y ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id < y.vec_id
       ORDER BY cos_sim DESC, id_a, id_b LIMIT 20"""))
 
-  /** Embedding-cosine near-dedup keep-list — EXACT audit baseline: bounded
-    * corpus slice, all-pairs verify at cos >= 0.45, transitive-closure
-    * canonicalization (graft.operators.Closure — a chain A~B~C now collapses
-    * to one canonical; the DuckDB twin computes the unbounded closure with a
-    * recursive CTE, so the 6-round propagation bound is itself
-    * oracle-checked). Threshold 0.45 sits >=1e-4 away from every pair in the
-    * synthetic data, so engine FP noise cannot flip membership. */
-  /** The bounded-exact keep-list (vec_id, canonical_id, is_dup) —
-    * q_dedup_embed IS this ordered; q_dedup_cluster_stats consumes it the
-    * way a production pipeline would (semi join back against the corpus). */
   /** The bounded all-pairs candidate stage of the exact embedding audit —
     * exposed (package-private) so PlansSpec can pin that the vec_id bound
     * reaches the parquet scan: the final q_dedup_embed plan cannot show the
@@ -284,6 +267,9 @@ object SimilarityQueries {
       .select(col("id_a").as("src"), col("id_b").as("dst"))
   }
 
+  /** The bounded-exact keep-list (vec_id, canonical_id, is_dup) —
+    * q_dedup_embed IS this ordered; q_dedup_cluster_stats consumes it the
+    * way a production pipeline would (semi join back against the corpus). */
   private def embedKeepList(s: SparkSession, d: String): DataFrame = {
     val e = normalizedEmbeddings(s, d).filter(col("vec_id") < ExactAuditBound)
     val pairs = embedAuditPairs(s, d)
@@ -293,6 +279,13 @@ object SimilarityQueries {
       .withColumn("is_dup", col("canonical_id") < col("vec_id"))
   }
 
+  /** Embedding-cosine near-dedup keep-list — EXACT audit baseline: bounded
+    * corpus slice, all-pairs verify at cos >= 0.45, transitive-closure
+    * canonicalization (graft.operators.Closure — a chain A~B~C now collapses
+    * to one canonical; the DuckDB twin computes the unbounded closure with a
+    * recursive CTE, so the 6-round propagation bound is itself
+    * oracle-checked). Threshold 0.45 sits >=1e-4 away from every pair in the
+    * synthetic data, so engine FP noise cannot flip membership. */
   private val embedDedup = Q(
     "q_dedup_embed",
     (s, d) => embedKeepList(s, d).orderBy("vec_id"),
@@ -452,23 +445,7 @@ object SimilarityQueries {
       val centroids = CentroidSeed.seeds(e)
       val assigned = nearestCentroid(e, centroids)
         .select(col("vec_id"), col("emb"), col("cent_id").as("cell"))
-      val wProbe = Window.partitionBy("query_id").orderBy(desc("csim"), asc("cent_id"))
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-        .crossJoin(broadcast(centroids))
-        .select(col("query_id"), col("qemb"), col("cent_id"),
-          round(dot(col("qemb"), col("cemb")), 6).as("csim"))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") <= 4) // nprobe
-        .select(col("query_id"), col("qemb"), col("cent_id").as("cell"))
-      val w = Window.partitionBy("query_id").orderBy(desc("cos_sim"), asc("neighbor_id"))
-      assigned.join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(dot(col("emb"), col("qemb")), 6).as("cos_sim"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 5)
-        .orderBy("query_id", "rn")
+      cosineTopK(assigned, probeCells(queryVectors(e, 5), centroids, 4, "qemb"), 5)
     },
     Some(s"""WITH $sqlNormalized,
       ${CentroidSeed.sqlSeedCte("cent")},
@@ -512,17 +489,17 @@ object SimilarityQueries {
   /** FILTERED ANN — approximate search under a metadata predicate, the
     * vector-DB capability every retrieval stack names (Qdrant/Milvus/
     * pgvector "filtered search"): top-k neighbors restricted to vectors
-    * with an even label. Strategy is PRE-FILTER: the predicate applies at
-    * the SCAN (plan-pinned: `label` reaches PushedFilters), the codebook
-    * seeds from the eligible segment, and candidate generation never
-    * touches an ineligible vector — at selectivity like this (~50%) the
-    * right choice, vs post-filter (rank then discard), which under-fills
-    * top-k whenever a cell is predicate-sparse. Same scale shape as
-    * `q_sim_ivf_ann`: corpus meets queries only through the cell equi-join,
-    * assignment is broadcast-argmax, zero vec_id exchanges. */
-  /** PRE-filter ANN body, predicate `label % labelMod = 0` — shared by the
-    * declared `q_sim_ann_filtered` (labelMod 2) and the OperatorsSpec
-    * selectivity-crossover pin (sparse labelMod). */
+    * with label `% labelMod = 0`. This PRE-filter body is shared by the
+    * declared `q_sim_ann_filtered` (labelMod 2, an even label) and the
+    * OperatorsSpec selectivity-crossover pin (sparse labelMod). The
+    * predicate applies at the SCAN (plan-pinned: `label` reaches
+    * PushedFilters), the codebook seeds from the eligible segment, and
+    * candidate generation never touches an ineligible vector — at
+    * selectivity like this (~50%) the right choice, vs post-filter (rank
+    * then discard), which under-fills top-k whenever a cell is
+    * predicate-sparse. Same scale shape as `q_sim_ivf_ann`: corpus meets
+    * queries only through the cell equi-join, assignment is
+    * broadcast-argmax, zero vec_id exchanges. */
   private[graft] def annPreFilterFrame(s: SparkSession, d: String, labelMod: Int): DataFrame = {
     val all = t(s, d, "embeddings")
       .select(col("vec_id"),
@@ -533,23 +510,7 @@ object SimilarityQueries {
     val centroids = CentroidSeed.seeds(corpus)
     val assigned = nearestCentroid(corpus, centroids)
       .select(col("vec_id"), col("emb"), col("cent_id").as("cell"))
-    val wProbe = Window.partitionBy("query_id").orderBy(desc("csim"), asc("cent_id"))
-    val probes = all.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-      .crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("qemb"), col("cent_id"),
-        round(dot(col("qemb"), col("cemb")), 6).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= 4) // nprobe
-      .select(col("query_id"), col("qemb"), col("cent_id").as("cell"))
-    val w = Window.partitionBy("query_id").orderBy(desc("cos_sim"), asc("neighbor_id"))
-    assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("emb"), col("qemb")), 6).as("cos_sim"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 5)
-      .orderBy("query_id", "rn")
+    cosineTopK(assigned, probeCells(queryVectors(all, 5), centroids, 4, "qemb"), 5)
   }
 
   private val annFiltered = Q(
@@ -601,20 +562,9 @@ object SimilarityQueries {
     val centroids = CentroidSeed.seeds(corpus)
     val assigned = nearestCentroid(corpus, centroids)
       .select(col("vec_id"), col("emb"), col("cent_id").as("cell"))
-    val wProbe = Window.partitionBy("query_id").orderBy(desc("csim"), asc("cent_id"))
-    val probes = all.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-      .crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("qemb"), col("cent_id"),
-        round(dot(col("qemb"), col("cemb")), 6).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= 4) // nprobe
-      .select(col("query_id"), col("qemb"), col("cent_id").as("cell"))
+    val probes = probeCells(queryVectors(all, 5), centroids, 4, "qemb")
     val wFetch = Window.partitionBy("query_id").orderBy(desc("cos_sim"), asc("neighbor_id"))
-    val fetched = assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("emb"), col("qemb")), 6).as("cos_sim"))
+    val fetched = exactScores(probedCandidates(assigned, probes), "cos_sim")
       .withColumn("rn_fetch", row_number().over(wFetch))
       .filter(col("rn_fetch") <= overFetch)
     val labels = t(s, d, "embeddings").select(col("vec_id"), col("label"))
@@ -958,9 +908,9 @@ object SimilarityQueries {
   private val adaptive = Q(
     "q_sim_adaptive",
     (s, d) => {
-      val vecs = embeddings(s, d).select(col("vec_id"),
-        l2Normalize(col("emb")).as("nemb"),
-        l2Normalize(slice(col("emb"), 1, 32)).as("emb32"))
+      val vecs = rawEmbeddings(s, d).select(col("vec_id"),
+        l2Normalize(col("de")).as("nemb"),
+        l2Normalize(slice(col("de"), 1, 32)).as("emb32"))
       val q = broadcast(vecs.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("nemb").as("qemb"), col("emb32").as("qemb32")))
@@ -1153,8 +1103,8 @@ object SimilarityQueries {
     "q_sim_matryoshka",
     (s, d) => {
       val full = normalizedEmbeddings(s, d)
-      val trunc = embeddings(s, d)
-        .select(col("vec_id"), l2Normalize(slice(col("emb"), 1, 16)).as("temb"))
+      val trunc = rawEmbeddings(s, d)
+        .select(col("vec_id"), l2Normalize(slice(col("de"), 1, 16)).as("temb"))
       val q = broadcast(trunc.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("temb").as("qtemb")))
       val wT = Window.partitionBy("query_id").orderBy(desc("cos_trunc"), asc("neighbor_id"))

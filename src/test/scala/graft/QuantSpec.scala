@@ -585,6 +585,37 @@ class QuantSpec extends AnyFunSuite with SparkSuite {
     assert(sampleStored.nonEmpty && sampleStored == sampleInline)
   }
 
+  test("IVF-only operations refuse binary and sq8 indexes with the flavor message") {
+    import graft.operators.VectorIndex
+    val baseDir = java.nio.file.Files.createTempDirectory("graft_ivf_only").toString
+    val rows = spark.read.parquet(s"$sf/embeddings.parquet")
+    val built = Seq[(String, String => Unit, String => Seq[String])](
+      ("binary", VectorIndex.buildBinary(spark, sf, _),
+        idx => VectorIndex.searchBinary(spark, sf, idx).collect().map(_.toString).toSeq),
+      ("sq8", VectorIndex.buildSq8(spark, sf, _),
+        idx => VectorIndex.searchSq8(spark, idx).collect().map(_.toString).toSeq))
+    built.foreach { case (flavor, build, search) =>
+      val idx = s"$baseDir/$flavor"
+      build(idx)
+      val before = search(idx)
+      val ops = Seq[(String, () => Any)](
+        "appendIvfPq" -> (() => VectorIndex.appendIvfPq(spark, sf, idx, minVecId = 300)),
+        "appendIvfPqRows" -> (() => VectorIndex.appendIvfPqRows(spark, rows, idx, minVecId = 300)),
+        "deleteFromIndex" -> (() => VectorIndex.deleteFromIndex(spark, idx, Seq(1L))),
+        "vacuumIndex" -> (() => VectorIndex.vacuumIndex(spark, idx)),
+        "rangeSearchIndex" -> (() => VectorIndex.rangeSearchIndex(spark, sf, idx)),
+        "sampleFromIndex" -> (() => VectorIndex.sampleFromIndex(spark, idx)),
+        "outliersFromIndex" -> (() => VectorIndex.outliersFromIndex(spark, sf, idx)),
+        "driftRatio" -> (() => VectorIndex.driftRatio(spark, sf, idx, minVecId = 300)))
+      ops.foreach { case (op, call) =>
+        val err = intercept[IllegalArgumentException](call())
+        assert(err.getMessage.contains(s"index flavor is '$flavor'"), s"$op on $flavor: $err")
+      }
+      // refused before any write: the index still serves what it served
+      assert(before.nonEmpty && search(idx) == before)
+    }
+  }
+
   test("trainBoundOpt tolerates legacy indexes; trainBoundOf diagnoses them") {
     val baseDir = java.nio.file.Files.createTempDirectory("graft_legacy").toString
     val idx = s"$baseDir/index"

@@ -469,6 +469,17 @@ class StoreCommitSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("guard: the IVF probe and the residual encode each have one body, in QuantQueries") {
+    val files = sources(new java.io.File("src/main/scala"))
+    assert(files.size > 20, "source tree not found - is the working dir the repo root?")
+    Seq("orderBy(desc(\"csim\"), asc(\"cent_id\"))" -> "probeCells",
+        "zip_with(col(\"xm\"), col(\"cmm\")" -> "residuals").foreach { case (needle, stage) =>
+      val hits = files.map(f => f.getName -> count(f, needle)).filter(_._2 > 0).toMap
+      assert(hits == Map("QuantQueries.scala" -> 1), s"$needle in $hits - call the shared " +
+        s"QuantQueries.$stage, so the declared queries and VectorIndex run one stage")
+    }
+  }
+
   /** Expression classes allowed to hand-write generated code, and why a
     * `Kernels` binding (StaticInvoke) cannot express each. */
   private val CodegenAllowList = Map(
