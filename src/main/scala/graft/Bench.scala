@@ -138,6 +138,29 @@ object Bench {
         n(_.isInstanceOf[org.apache.spark.sql.execution.CollectLimitExec]))
   }
 
+  /** The fingerprint Bench records for one declared query. The physical
+    * plan is executed DIRECTLY (RDD count over the executed plan — same
+    * full-column evaluation as the noop write, same codegen units compiled,
+    * no driver-side data) so the final ADAPTIVE plan is synchronously in
+    * hand afterwards — a QueryExecutionListener would race its async bus,
+    * and a fresh df.queryExecution after a noop write never links to the
+    * executed AQE state. A query with a planProxy fingerprints that
+    * DISTRIBUTED stand-in instead (the pre-collect frame, or the same
+    * pipeline) with AQE's empty-relation collapse excluded, so an
+    * sf-dependent empty result cannot zero the signature (r17 verdict
+    * task 2). */
+  private[graft] def planFingerprint(spark: SparkSession, sfDir: String, name: String): PlanFp = {
+    val proxy = SparkEntry.planProxies.get(name)
+    val excluded = "spark.sql.adaptive.optimizer.excludedRules"
+    if (proxy.isDefined)
+      spark.conf.set(excluded, "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
+    try {
+      val qe = proxy.getOrElse(SparkEntry.queries(name))(spark, sfDir).queryExecution
+      qe.executedPlan.execute().count()
+      fingerprintOf(qe.executedPlan)
+    } finally if (proxy.isDefined) spark.conf.unset(excluded)
+  }
+
   /** The round-over-round plan-shape diff, extracted pure so the guard can
     * be GUARDED (r16 verdict task 6: `plan_regressed` had only ever been
     * empty — BenchSpec injects a real regression through this function and
@@ -241,39 +264,19 @@ object Bench {
     calibrate(spark)
     val calibPre = calibrate(spark)
     System.err.println(f"[bench] calibration pre-suite: $calibPre%.2f s, loadavg $loadPre%.1f")
-    // The warmup pass doubles as the PLAN-FINGERPRINT pass (r15 task 2): the
-    // physical plan is executed DIRECTLY (RDD count over the executed plan —
-    // same full-column evaluation as the noop write, same codegen units
-    // compiled, no driver-side data) so the final ADAPTIVE plan is
-    // synchronously in hand afterwards — a QueryExecutionListener would race
-    // its async bus against the loop, and a fresh df.queryExecution after a
-    // noop write never links to the executed AQE state.
+    // The warmup pass doubles as the PLAN-FINGERPRINT pass (r15 task 2,
+    // [[planFingerprint]]); the TIMED passes below still run the real query
+    // unchanged
     val planFps = collection.mutable.LinkedHashMap[String, PlanFp]()
-    // queries with a planProxy fingerprint their DISTRIBUTED stand-in (the
-    // pre-collect frame, or the same pipeline re-run with AQE's
-    // empty-relation collapse excluded so an sf-dependent empty result
-    // cannot zero the signature — r17 verdict task 2); the TIMED passes
-    // below still run the real query unchanged
     val proxies = SparkEntry.planProxies
-    val emptyRule = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
     ordered.foreach { case (name, fn) =>
       try {
         spark.catalog.clearCache()
-        proxies.get(name) match {
-          case Some(proxy) =>
-            spark.conf.set("spark.sql.adaptive.optimizer.excludedRules", emptyRule)
-            try {
-              val qe = proxy(spark, sfDir).queryExecution
-              qe.executedPlan.execute().count()
-              planFps(name) = fingerprintOf(qe.executedPlan)
-            } finally spark.conf.unset("spark.sql.adaptive.optimizer.excludedRules")
-            // the real query still warms up (codegen units, one-time setup)
-            spark.catalog.clearCache()
-            fn(spark, sfDir).queryExecution.executedPlan.execute().count()
-          case None =>
-            val qe = fn(spark, sfDir).queryExecution
-            qe.executedPlan.execute().count()
-            planFps(name) = fingerprintOf(qe.executedPlan)
+        planFps(name) = planFingerprint(spark, sfDir, name)
+        if (proxies.contains(name)) {
+          // the real query still warms up (codegen units, one-time setup)
+          spark.catalog.clearCache()
+          fn(spark, sfDir).queryExecution.executedPlan.execute().count()
         }
       } catch { case e: Throwable => System.err.println(s"[bench] warmup $name failed: $e") }
     }

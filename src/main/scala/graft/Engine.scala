@@ -87,7 +87,9 @@ object Engine {
     * lexer treats a backslash inside backticks as a literal character, so
     * tracking it as an escape would misalign on a trailing-backslash
     * identifier — r17 ADVICE: an apostrophe or comment-opener inside a
-    * backtick identifier must not flip the scanner's idea of what is code). */
+    * backtick identifier must not flip the scanner's idea of what is code).
+    * Each rewrite is one [[rewrite]] walk; [[group]] is the one
+    * balanced-paren walker both use for argument lists. */
   private[graft] final class SqlScan(val query: String) {
     val n: Int = query.length
     def isIdent(c: Char): Boolean = c.isLetterOrDigit || c == '_'
@@ -147,8 +149,49 @@ object Engine {
       while (k < n && isIdent(query.charAt(k))) k += 1
       if (k > i && !query.charAt(i).isDigit) Some((query.substring(i, k), k)) else None
     }
+    /** The query with each span `at` claims replaced: at every code position
+      * i, `at(i)` returns Some((replacement, end)) to emit `replacement` in
+      * place of [i, end), or None to copy the character. Quoted regions and
+      * comments are copied verbatim and never offered to `at`. */
+    def rewrite(at: Int => Option[(String, Int)]): String = {
+      val out = new StringBuilder
+      var i = 0
+      while (i < n) {
+        val c = query.charAt(i)
+        val skip = if (isQuote(c)) skipQuoted(i) else commentEnd(i)
+        if (skip > i) { out.append(query.substring(i, skip)); i = skip }
+        else at(i) match {
+          case Some((replacement, end)) => out.append(replacement); i = end
+          case None => out.append(c); i += 1
+        }
+      }
+      out.toString
+    }
+    /** The parenthesised group opening at `open`: its top-level
+      * comma-separated items, trimmed, and the index just past its closing
+      * paren; None when no '(' is at `open` or it never closes. Each
+      * comment inside becomes one space, so an item spliced into generated
+      * text cannot turn that text's tail into a `--` comment. */
+    def group(open: Int): Option[(Seq[String], Int)] = {
+      if (open >= n || query.charAt(open) != '(') return None
+      val items = Seq.newBuilder[String]
+      val item = new StringBuilder
+      var depth = 1; var k = open + 1
+      while (k < n && depth > 0) {
+        val c = query.charAt(k)
+        val ce = commentEnd(k)
+        if (isQuote(c)) { val e = skipQuoted(k); item.append(query.substring(k, e)); k = e }
+        else if (ce > k) { item.append(' '); k = ce }
+        else {
+          if (c == '(') depth += 1 else if (c == ')') depth -= 1
+          if (depth == 1 && c == ',') { items += item.toString.trim; item.clear() }
+          else if (depth > 0) item.append(c)
+          k += 1
+        }
+      }
+      if (depth > 0) None else { items += item.toString.trim; Some((items.result(), k)) }
+    }
   }
-
 
   /** Pre-parse rewrite of the Presto `UNNEST` table-reference forms — the
     * most common Athena spellings a migrating reference user types over
@@ -168,13 +211,16 @@ object Engine {
     *       -- with a map and stays the map rewrite (deviation: use the
     *       -- direct multi-arg form for 2-field rows)
     *
-    * become the exact Spark equivalents:
+    * Only `UNNEST(<args>) [WITH ORDINALITY]` is replaced, in place, by a
+    * Spark generator in table-function position, `LATERAL <generator>`;
+    * the comma or join keyword and the `[AS] t(cols)` alias stay where
+    * they were written, so the unnest may sit anywhere in FROM (before a
+    * further join or comma relation too). Catalyst plans the lateral
+    * generator as the same `Generate` node a `LATERAL VIEW` gives. The
+    * column count only picks the generator:
     *
-    *   - simple array/map: `LATERAL VIEW explode(<expr>) t AS cols` (inner:
-    *     empty/NULL arrays produce no rows — Presto's CROSS JOIN / comma
-    *     UNNEST drop them, as does LATERAL VIEW without OUTER); the
-    *     LEFT ... ON TRUE form gets `LATERAL VIEW OUTER` (empty/NULL arrays
-    *     keep the row with NULL columns on both engines);
+    *   - simple array/map: `explode(<expr>)` (inner: empty/NULL arrays
+    *     produce no rows — Presto's CROSS JOIN / comma UNNEST drop them);
     *   - WITH ORDINALITY: `inline(transform(<expr>, (e, i) -> struct(e,
     *     CAST(i + 1 AS BIGINT))))` — transform's 0-based index shifted to
     *     Presto's 1-based BIGINT ordinal (maps go through map_entries);
@@ -196,6 +242,13 @@ object Engine {
     *     idiom) are unaffected; bind a non-deterministic argument in a
     *     subquery/CTE first.
     *
+    * The outer form `LEFT [OUTER] JOIN UNNEST(...) t(x) ON TRUE` becomes
+    * `CROSS JOIN LATERAL explode_outer(...) t(x)` (`inline_outer` for the
+    * inline shapes) with `ON TRUE` dropped: empty/NULL arrays keep the row
+    * with NULL columns on both engines. A `LEFT JOIN LATERAL ... ON TRUE`
+    * would be decorrelated into an aggregate plus an outer join; the
+    * generator's own outer flag plans as one `Generate`.
+    *
     * The scanner is quote-aware (no rewriting inside '...' literals or
     * "..." identifiers, with both doubled-quote and backslash escapes
     * tracked — Spark's lexer processes \' escapes, so the scanner mirrors
@@ -215,161 +268,83 @@ object Engine {
     * pins the rewrites and the loud failures. */
   private[graft] def rewriteUnnest(query: String): String = {
     val sc = new SqlScan(query)
-    import sc.{n, isQuote, skipQuoted, commentEnd, kwAt, skipWs, ident}
-    /** Parse `UNNEST ( e1 [, e2 ...] ) [WITH ORDINALITY] [AS] alias
-      * ( col [, col ...] )` starting at the UNNEST keyword; None when the
-      * shape is not a rewritable form (malformed tail, or a column count
-      * that fits no arity — see the arity table in [[lateralView]]).
-      * Returns (args, ordinality, alias, cols, endIndex). */
-    def unnestTail(at: Int): Option[(Seq[String], Boolean, String, Seq[String], Int)] = {
-      if (!kwAt(at, "UNNEST")) return None
-      var k = skipWs(at + 6)
-      if (k >= n || query.charAt(k) != '(') return None
-      // balance parens for the arguments; top-level commas split the
-      // multi-array zip form's argument list
-      val argStart = k + 1
-      var depth = 1; var k2 = argStart
-      val splits = scala.collection.mutable.ArrayBuffer[Int]()
-      while (k2 < n && depth > 0) {
-        val ch = query.charAt(k2)
-        if (isQuote(ch)) k2 = skipQuoted(k2)
-        else {
-          val ce = commentEnd(k2)
-          if (ce > k2) k2 = ce
-          else {
-            if (ch == '(') depth += 1
-            else if (ch == ')') depth -= 1
-            else if (ch == ',' && depth == 1) splits += k2
-            k2 += 1
-          }
-        }
-      }
-      if (depth != 0) return None
-      // each argument: [start, its closing comma) — the last runs to the ')'
-      val starts = argStart +: splits.map(_ + 1).toSeq
-      val ends = splits.toSeq :+ (k2 - 1)
-      val args = starts.zip(ends).map { case (a, b) => query.substring(a, b).trim }
-      if (args.exists(_.isEmpty)) return None
-      var k3 = skipWs(k2)
-      var ordinality = false
-      if (kwAt(k3, "WITH")) {
-        val kk = skipWs(k3 + 4)
-        if (!kwAt(kk, "ORDINALITY")) return None
-        ordinality = true
-        k3 = skipWs(kk + 10)
-      }
-      if (kwAt(k3, "AS")) k3 = skipWs(k3 + 2)
-      ident(k3) match {
-        case Some((alias, k4)) =>
-          val k5 = skipWs(k4)
-          if (k5 >= n || query.charAt(k5) != '(') None
-          else {
-            var k6 = skipWs(k5 + 1)
-            val cols = scala.collection.mutable.ArrayBuffer[String]()
-            var ok = true; var done = false
-            while (ok && !done) {
-              ident(k6) match {
-                case Some((cn, k7)) =>
-                  cols += cn
-                  val k8 = skipWs(k7)
-                  if (k8 < n && query.charAt(k8) == ',') k6 = skipWs(k8 + 1)
-                  else if (k8 < n && query.charAt(k8) == ')') { k6 = k8 + 1; done = true }
-                  else ok = false
-                case None => ok = false
-              }
-            }
-            if (ok && cols.nonEmpty) Some((args, ordinality, alias, cols.toSeq, k6))
-            else None
-          }
-        case None => None
-      }
-    }
-    /** The Spark generator expression for one parsed UNNEST tail, or None
-      * when the (args, ordinality, cols) arity fits no rewritable shape.
-      * Arity table: 1 arg → 1 col (array) / 2 cols (map), +1 col with
-      * ordinality; k≥2 args (arrays only) → exactly k cols, +1 with
-      * ordinality. */
-    def lateralView(
-        outer: Boolean, args: Seq[String], ordinality: Boolean,
-        alias: String, cols: Seq[String]): Option[String] = {
-      val prefix = s"LATERAL VIEW ${if (outer) "OUTER " else ""}"
-      val suffix = s" $alias AS ${cols.mkString(", ")}"
+    import sc.{kwAt, skipWs, ident, group}
+    /** The Spark generator for one UNNEST, or None when the (args,
+      * ordinality, cols) arity fits no rewritable shape. Arity table:
+      * 1 arg → 1 col (array) / 2 cols (map) / >= 3 cols (array of rows),
+      * +1 col with ordinality; k ≥ 2 args (arrays only) → exactly k cols,
+      * +1 with ordinality. */
+    def generator(outer: Boolean, args: Seq[String], ordinality: Boolean, cols: Int): Option[String] = {
+      val o = if (outer) "_outer" else ""
       def ord = "CAST(graft_i + 1 AS BIGINT)"
-      val gen: Option[String] = (args.size, ordinality, cols.size) match {
-        case (1, false, 1) | (1, false, 2) => Some(s"explode(${args.head})")
+      (args.size, ordinality, cols) match {
+        case (1, false, 1) | (1, false, 2) => Some(s"explode$o(${args.head})")
         // single argument, >= 3 columns: Presto's array-of-ROWS expansion
         // (each row's fields become columns — the `UNNEST(zip(...))`
         // idiom); unambiguous at >= 3 because a map is always exactly 2.
         // A TWO-field row array cannot be told apart from a map without
         // types, so 2 columns stays the map rewrite (deviation: spell a
         // 2-field row unnest as the direct multi-arg `UNNEST(a, b)`).
-        case (1, false, c) if c >= 3 => Some(s"inline(${args.head})")
+        case (1, false, c) if c >= 3 => Some(s"inline$o(${args.head})")
         case (1, true, 2) => Some(
-          s"inline(transform(${args.head}, (graft_e, graft_i) -> struct(graft_e, $ord)))")
+          s"inline$o(transform(${args.head}, (graft_e, graft_i) -> struct(graft_e, $ord)))")
         case (1, true, 3) => Some( // map entries + ordinal
-          s"inline(transform(map_entries(${args.head}), (graft_e, graft_i) -> " +
+          s"inline$o(transform(map_entries(${args.head}), (graft_e, graft_i) -> " +
             s"struct(graft_e.key, graft_e.value, $ord)))")
-        case (k, o, c) if k >= 2 && c == k + (if (o) 1 else 0) =>
+        case (k, ordered, c) if k >= 2 && c == k + (if (ordered) 1 else 0) =>
           // lockstep zip, padded to the longest argument with NULLs:
           // try_element_at is 1-based and NULLs past-the-end AND on NULL
           // arrays (ANSI-safe); the slice keeps sequence() ascending when
           // every array is empty or NULL
           val len = args.map(a => s"coalesce(size($a), 0)").mkString("greatest(", ", ", ", 0)")
           val fields = args.map(a => s"try_element_at($a, graft_i)") ++
-            (if (o) Seq("CAST(graft_i AS BIGINT)") else Nil)
-          Some(s"inline(transform(slice(sequence(1, greatest($len, 1)), 1, $len), " +
+            (if (ordered) Seq("CAST(graft_i AS BIGINT)") else Nil)
+          Some(s"inline$o(transform(slice(sequence(1, greatest($len, 1)), 1, $len), " +
             s"graft_i -> struct(${fields.mkString(", ")})))")
         case _ => None
       }
-      gen.map(g => s"$prefix$g$suffix")
     }
-    val out = new StringBuilder
-    var i = 0
-    while (i < n) {
-      val c = query.charAt(i)
-      val attempt: Option[(String, Int)] =
-        if (isQuote(c) || commentEnd(i) > i) None
-        else if (c == ',') {
-          // implicit-join comma form: `, UNNEST(e) [AS] t(x)` — the comma
-          // itself is replaced (LATERAL VIEW attaches without a join)
-          unnestTail(skipWs(i + 1)).flatMap { case (args, ord, alias, cols, end) =>
-            lateralView(outer = false, args, ord, alias, cols).map(lv => (" " + lv, end))
-          }
-        } else if (kwAt(i, "CROSS")) {
-          val k = skipWs(i + 5)
-          if (!kwAt(k, "JOIN")) None
-          else unnestTail(skipWs(k + 4)).flatMap { case (args, ord, alias, cols, end) =>
-            lateralView(outer = false, args, ord, alias, cols).map((_, end))
-          }
-        } else if (kwAt(i, "LEFT")) {
-          var k = skipWs(i + 4)
-          if (kwAt(k, "OUTER")) k = skipWs(k + 5)
-          if (!kwAt(k, "JOIN")) None
-          else unnestTail(skipWs(k + 4)).flatMap { case (args, ord, alias, cols, end) =>
+    /** `UNNEST ( args ) [WITH ORDINALITY] [AS] alias ( cols )` at `at`:
+      * (`LATERAL <generator>`, end of the `UNNEST … [ORDINALITY]` span it
+      * replaces, end of the alias), or None when the shape is not a
+      * rewritable form. */
+    def unnest(at: Int, outer: Boolean): Option[(String, Int, Int)] = for {
+      (args, argsEnd) <- if (kwAt(at, "UNNEST")) group(skipWs(at + 6)) else None
+      w = skipWs(argsEnd)
+      ordinality = kwAt(w, "WITH")
+      genEnd <- if (!ordinality) Some(argsEnd)
+                else Some(skipWs(w + 4)).filter(kwAt(_, "ORDINALITY")).map(_ + 10)
+      as = skipWs(genEnd)
+      (_, aliasEnd) <- ident(if (kwAt(as, "AS")) skipWs(as + 2) else as)
+      (cols, end) <- group(skipWs(aliasEnd))
+      if !args.exists(_.isEmpty) && !cols.exists(_.isEmpty)
+      gen <- generator(outer, args, ordinality, cols.size)
+    } yield (s"LATERAL $gen", genEnd, end)
+    def joinAt(k: Int) = if (kwAt(k, "JOIN")) Some(k + 4) else None
+    sc.rewrite { i =>
+      val comma = query.charAt(i) == ','
+      if (comma || kwAt(i, "CROSS")) {
+        // the inner forms keep everything up to UNNEST (the comma or CROSS
+        // JOIN and any comments after it)
+        (if (comma) Some(i + 1) else joinAt(skipWs(i + 5))).flatMap { k =>
+          val u = skipWs(k)
+          unnest(u, outer = false).map { case (gen, genEnd, _) => (query.substring(i, u) + gen, genEnd) }
+        }
+      } else if (kwAt(i, "LEFT")) {
+        val o = skipWs(i + 4)
+        joinAt(if (kwAt(o, "OUTER")) skipWs(o + 5) else o).flatMap { k =>
+          val u = skipWs(k)
+          unnest(u, outer = true).flatMap { case (gen, genEnd, end) =>
             // Presto requires ON TRUE on an outer unnest join; anything
             // else is not this form — leave verbatim (loud downstream)
-            val k9 = skipWs(end)
-            if (!kwAt(k9, "ON")) None
-            else {
-              val k10 = skipWs(k9 + 2)
-              if (!kwAt(k10, "TRUE")) None
-              else lateralView(outer = true, args, ord, alias, cols).map((_, k10 + 4))
-            }
+            val on = skipWs(end)
+            val t = skipWs(on + 2)
+            if (!kwAt(on, "ON") || !kwAt(t, "TRUE")) None
+            else Some((s"CROSS JOIN${query.substring(k, u)}$gen${query.substring(genEnd, end)}", t + 4))
           }
-        } else None
-      attempt match {
-        case Some((replacement, end)) => out.append(replacement); i = end
-        case None =>
-          if (isQuote(c)) {
-            val e = skipQuoted(i); out.append(query.substring(i, e)); i = e
-          } else {
-            val ce = commentEnd(i)
-            if (ce > i) { out.append(query.substring(i, ce)); i = ce }
-            else { out.append(c); i += 1 }
-          }
-      }
+        }
+      } else None
     }
-    out.toString
   }
 
   /** Pre-parse rewrite of Presto's ORDER BY-inside-array_agg —
@@ -405,11 +380,10 @@ object Engine {
     * register here the same way). */
   private[graft] def rewriteOrderedArrayAgg(query: String): String = {
     val sc = new SqlScan(query)
-    import sc.{n, isQuote, skipQuoted, commentEnd, kwAt, skipWs}
+    import sc.{kwAt, skipWs, group}
     /** Parse one sort item's tail flags from `spec`, already split. */
     def parseItem(item: String): Option[(String, Boolean, Boolean)] = {
       // returns (key expr text, descending, nullsFirst)
-      val it = new SqlScan(item)
       var end = item.length
       var desc = false
       var nullsExplicit: Option[Boolean] = None
@@ -418,7 +392,7 @@ object Engine {
       end = trimEnd(end)
       def lastWord(e: Int): (String, Int) = {
         var s2 = e
-        while (s2 > 0 && it.isIdent(item.charAt(s2 - 1))) s2 -= 1
+        while (s2 > 0 && sc.isIdent(item.charAt(s2 - 1))) s2 -= 1
         (item.substring(s2, e), s2)
       }
       val (w1, s1) = lastWord(end)
@@ -436,95 +410,44 @@ object Engine {
       if (key.isEmpty) None
       else Some((key, desc, nullsExplicit.getOrElse(desc))) // default: nulls largest
     }
-    val out = new StringBuilder
-    var i = 0
-    while (i < n) {
-      val c = query.charAt(i)
-      val attempt: Option[(String, Int)] =
-        if (isQuote(c) || commentEnd(i) > i) None
-        else if (kwAt(i, "ARRAY_AGG")) {
-          val k = skipWs(i + 9)
-          if (k >= n || query.charAt(k) != '(') None
+    sc.rewrite { i =>
+      if (!kwAt(i, "ARRAY_AGG")) None
+      else group(skipWs(i + 9)).flatMap { case (args, end) =>
+        // `x ORDER BY k1` is the first top-level item, further keys the
+        // rest; the ORDER is the first one outside a nested group or quote
+        val head = new SqlScan(args.head)
+        @annotation.tailrec def orderAt(j: Int): Int =
+          if (j >= head.n || head.kwAt(j, "ORDER")) j
+          else if (head.isQuote(head.query.charAt(j))) orderAt(head.skipQuoted(j))
+          else if (head.query.charAt(j) == '(') orderAt(head.group(j).fold(head.n)(_._2))
+          else orderAt(j + 1)
+        val order = orderAt(0)
+        val by = head.skipWs(order + 5)
+        val exprText = args.head.substring(0, order).trim
+        if (order >= head.n || !head.kwAt(by, "BY") || exprText.isEmpty ||
+            exprText.toUpperCase.startsWith("DISTINCT ")) None
+        else {
+          val parsed = (args.head.substring(by + 2) +: args.tail).map(parseItem)
+          if (parsed.exists(_.isEmpty)) None
           else {
-            // balance parens; note the top-level ORDER keyword if present
-            var depth = 1; var k2 = k + 1; var orderAt = -1
-            while (k2 < n && depth > 0) {
-              val ch = query.charAt(k2)
-              if (isQuote(ch)) k2 = skipQuoted(k2)
-              else {
-                val ce = commentEnd(k2)
-                if (ce > k2) k2 = ce
-                else {
-                  if (ch == '(') depth += 1
-                  else if (ch == ')') depth -= 1
-                  else if (depth == 1 && orderAt < 0 && kwAt(k2, "ORDER")) orderAt = k2
-                  k2 += 1
-                }
-              }
-            }
-            if (depth != 0 || orderAt < 0) None
-            else {
-              val afterOrder = skipWs(orderAt + 5)
-              if (!kwAt(afterOrder, "BY")) None
-              else {
-                val exprText = query.substring(k + 1, orderAt).trim
-                val specText = query.substring(skipWs(afterOrder + 2), k2 - 1)
-                // split the sort spec on top-level commas
-                val items = scala.collection.mutable.ArrayBuffer[String]()
-                val si = new SqlScan(specText)
-                var d2 = 0; var j = 0; var last = 0
-                while (j < specText.length) {
-                  val ch = specText.charAt(j)
-                  if (si.isQuote(ch)) j = si.skipQuoted(j)
-                  else {
-                    val ce = si.commentEnd(j)
-                    if (ce > j) j = ce
-                    else {
-                      if (ch == '(') d2 += 1
-                      else if (ch == ')') d2 -= 1
-                      else if (ch == ',' && d2 == 0) { items += specText.substring(last, j); last = j + 1 }
-                      j += 1
-                    }
-                  }
-                }
-                items += specText.substring(last)
-                val parsed = items.map(parseItem)
-                if (exprText.isEmpty || parsed.exists(_.isEmpty) ||
-                    exprText.toUpperCase.startsWith("DISTINCT ")) None
-                else {
-                  val keys = parsed.map(_.get)
-                  val fields = ("'graft_v', " + exprText) +:
-                    keys.zipWithIndex.map { case ((kx, _, _), ix) => s"'graft_k${ix + 1}', $kx" }
-                  val cmp = keys.zipWithIndex.map { case ((_, desc, nullsFirst), ix) =>
-                    val a = s"graft_a.graft_k${ix + 1}"
-                    val b = s"graft_b.graft_k${ix + 1}"
-                    val nf = if (nullsFirst) -1 else 1
-                    val dr = if (desc) -1 else 1
-                    s"WHEN $a IS NULL AND $b IS NOT NULL THEN $nf " +
-                      s"WHEN $a IS NOT NULL AND $b IS NULL THEN ${-nf} " +
-                      s"WHEN $a < $b THEN ${-dr} WHEN $a > $b THEN $dr"
-                  }.mkString(" ")
-                  val gen = s"transform(array_sort(array_agg(named_struct(${fields.mkString(", ")})), " +
-                    s"(graft_a, graft_b) -> CASE $cmp ELSE 0 END), graft_s -> graft_s.graft_v)"
-                  Some((gen, k2))
-                }
-              }
-            }
+            val keys = parsed.map(_.get)
+            val fields = ("'graft_v', " + exprText) +:
+              keys.zipWithIndex.map { case ((kx, _, _), ix) => s"'graft_k${ix + 1}', $kx" }
+            val cmp = keys.zipWithIndex.map { case ((_, desc, nullsFirst), ix) =>
+              val a = s"graft_a.graft_k${ix + 1}"
+              val b = s"graft_b.graft_k${ix + 1}"
+              val nf = if (nullsFirst) -1 else 1
+              val dr = if (desc) -1 else 1
+              s"WHEN $a IS NULL AND $b IS NOT NULL THEN $nf " +
+                s"WHEN $a IS NOT NULL AND $b IS NULL THEN ${-nf} " +
+                s"WHEN $a < $b THEN ${-dr} WHEN $a > $b THEN $dr"
+            }.mkString(" ")
+            Some((s"transform(array_sort(array_agg(named_struct(${fields.mkString(", ")})), " +
+              s"(graft_a, graft_b) -> CASE $cmp ELSE 0 END), graft_s -> graft_s.graft_v)", end))
           }
-        } else None
-      attempt match {
-        case Some((replacement, end)) => out.append(replacement); i = end
-        case None =>
-          if (isQuote(c)) {
-            val e = skipQuoted(i); out.append(query.substring(i, e)); i = e
-          } else {
-            val ce = commentEnd(i)
-            if (ce > i) { out.append(query.substring(i, ce)); i = ce }
-            else { out.append(c); i += 1 }
-          }
+        }
       }
     }
-    out.toString
   }
 
   /** Full reference-client compatibility: register the events table under

@@ -57,21 +57,28 @@ object Compaction {
       settledMs: Long = 2 * 60 * 1000): Seq[(String, Int, Int)] = {
     val root = new Path(eventsDir)
     val fs = FileSystem.get(root.toUri, spark.sparkContext.hadoopConfiguration)
-    val cutoff = System.currentTimeMillis() - settledMs
+    settledPartitions(fs, root, System.currentTimeMillis() - settledMs).flatMap { part =>
+      val (before, after) = compactPartition(spark, part.toString, targetBytes)
+      if (before != after) Some((part.toString, before, after)) else None
+    }
+  }
 
+  /** The leaf partition directories under `root` whose NEWEST file is older
+    * than `cutoffMs` — the settled partitions compaction and retention act
+    * on. Any write inside the window keeps the whole partition out; empty
+    * leaves are not data partitions; `_`/`.`-prefixed directories are
+    * skipped. Empty when `root` does not exist yet. */
+  private[graft] def settledPartitions(fs: FileSystem, root: Path, cutoffMs: Long): Seq[Path] = {
     def leafPartitions(p: Path): Seq[Path] = {
       val children = fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
         .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
       if (children.isEmpty) Seq(p)
       else children.toSeq.flatMap(leafPartitions)
     }
-
-    leafPartitions(root).filter(_ != root).flatMap { part =>
-      val newest = fs.listStatus(part).filter(_.isFile).map(_.getModificationTime)
-      if (newest.nonEmpty && newest.max < cutoff) {
-        val (before, after) = compactPartition(spark, part.toString, targetBytes)
-        if (before != after) Some((part.toString, before, after)) else None
-      } else None
+    if (!fs.exists(root)) Seq.empty
+    else leafPartitions(root).filter(_ != root).filter { part =>
+      val mtimes = fs.listStatus(part).filter(_.isFile).map(_.getModificationTime)
+      mtimes.nonEmpty && mtimes.max < cutoffMs
     }
   }
 }

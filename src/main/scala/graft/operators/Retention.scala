@@ -75,19 +75,8 @@ object Retention {
     }
     sweepLeftovers(root)
 
-    def leafPartitions(p: Path): Seq[Path] = {
-      val cs = children(p).filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
-      if (cs.isEmpty) Seq(p) else cs.toSeq.flatMap(leafPartitions)
-    }
-
-    val expired = leafPartitions(root).filter(_ != root).flatMap { part =>
-      val files = fs.listStatus(part).filter(_.isFile).map(_.getModificationTime)
-      // empty leaves are not data partitions; age = NEWEST file, so any
-      // write inside the window keeps the whole partition alive
-      if (files.nonEmpty && files.max < cutoff && expirePartition(spark, part.toString))
-        Some(part.toString)
-      else None
-    }
+    val expired = Compaction.settledPartitions(fs, root, cutoff)
+      .filter(part => expirePartition(spark, part.toString)).map(_.toString)
 
     // prune ancestors emptied by the expiry, bottom-up, never the root
     def prune(p: Path): Unit = {

@@ -3245,12 +3245,12 @@ object Relational {
     * common Athena spelling a migrating reference user types
     * (`CROSS JOIN UNNEST(arr) AS t(x)`; README.md:116 "any valid Presto
     * SQL"). Spark's grammar rejects UNNEST outright, so [[graft.Engine.sql]]
-    * pre-parse-rewrites the simple single-array form to
-    * `LATERAL VIEW explode` — this row drives that path end-to-end (the
-    * rewrite mechanics, quote-awareness and loud-failure edges are pinned
-    * in EngineSpec). DISTINCT makes row order unique for the compare; the
-    * generator inlines into the scan projection, no join, no exchange
-    * beyond the aggregate. */
+    * pre-parse-rewrites the simple single-array form to `CROSS JOIN
+    * LATERAL explode(...) AS t(w)` — this row drives that path end-to-end
+    * (the rewrite mechanics, quote-awareness and loud-failure edges are
+    * pinned in EngineSpec). DISTINCT makes row order unique for the
+    * compare; the lateral generator plans as a `Generate` over the scan,
+    * no join, no exchange beyond the aggregate. */
   private val unnestPresto = Q(
     "q_unnest_presto",
     (s, d) => {
@@ -3267,10 +3267,11 @@ object Relational {
   /** The OUTER half of the Presto unnest-join contract, verbatim —
     * `LEFT JOIN UNNEST(arr) AS t(x) ON TRUE` keeps rows whose array is
     * empty (NULL element column) where the CROSS JOIN form drops them.
-    * Engine.sql rewrites it to `LATERAL VIEW OUTER explode`; every 7th
-    * part gets an empty array so the outer semantics are actually load-
-    * bearing in the hash (1/7 of output rows exist ONLY because of
-    * OUTER). The oracle is DuckDB's own outer lateral unnest — an
+    * Engine.sql rewrites it to `CROSS JOIN LATERAL explode_outer(arr) AS
+    * t(w)`, ON TRUE dropped (the generator's outer flag, not a join);
+    * every 7th part gets an empty array so the outer semantics are
+    * actually load-bearing in the hash (1/7 of output rows exist ONLY
+    * because of OUTER). The oracle is DuckDB's own outer lateral unnest — an
     * independent third implementation of the same contract. Generator
     * inlines into the scan, no join, no exchange beyond the sort. */
   private val unnestOuter = Q(
@@ -3295,7 +3296,7 @@ object Relational {
 
   /** `UNNEST ... WITH ORDINALITY`, verbatim (r16 verdict missing #2) — the
     * Athena spelling for array-position joins. Engine.sql rewrites it to
-    * `inline(transform(arr, (e, i) -> struct(e, CAST(i + 1 AS BIGINT))))`
+    * `LATERAL inline(transform(arr, (e, i) -> struct(e, CAST(i + 1 AS BIGINT))))`
     * — the 0-based index of Spark's transform shifted to Presto's 1-based
     * BIGINT ordinal (the posexplode trap the r16 verdict names). The
     * oracle rebuilds the ordinal from DuckDB's lockstep unnest of the
@@ -3319,7 +3320,7 @@ object Relational {
   /** Presto's multi-array zip `UNNEST(a, b)`, verbatim (r16 verdict missing
     * #4) — LOCKSTEP expansion padded with NULL to the LONGEST argument,
     * with a NULL array behaving as empty (still padded against the other).
-    * Engine.sql rewrites to `inline(transform(slice(sequence(...)),
+    * Engine.sql rewrites to `LATERAL inline(transform(slice(sequence(...)),
     * i -> struct(try_element_at(a, i), try_element_at(b, i), ...)))` —
     * try_element_at is 1-based and NULLs past-the-end, which IS the pad
     * contract (ANSI-safe where a bare subscript would throw). Every 5th
@@ -3353,7 +3354,7 @@ object Relational {
       FROM i ORDER BY p_partkey, ord"""))
 
   /** Presto's `UNNEST(zip(...))` idiom — an array of ROWS whose fields
-    * UNNEST expands into columns. The rewrite is `inline` — unambiguous at
+    * UNNEST expands into columns. The rewrite is `LATERAL inline` — unambiguous at
     * >= 3 columns (a map is always exactly 2; the 2-field-row case is the
     * documented deviation in Engine.rewriteUnnest's scaladoc). The row
     * builds the rows array with the VANILLA arrays_zip spelling so it runs

@@ -68,17 +68,11 @@ class BenchSpec extends AnyFunSuite with SparkSuite {
       "q_agg_heavy_hitters", "q_privacy_kanon", "q_privacy_ldiversity", "q_text_redact")
     assert(proxied.forall(proxies.contains),
       s"missing planProxy entries: ${proxied.filterNot(proxies.contains)}")
-    val emptyRule = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
     def proxyFp(name: String): Bench.PlanFp = {
-      // exactly the Bench warmup discipline: proxy frame, empty-propagation
+      // exactly the Bench warmup pass: proxy frame, empty-propagation
       // excluded, fingerprint the executed plan
       spark.catalog.clearCache()
-      spark.conf.set("spark.sql.adaptive.optimizer.excludedRules", emptyRule)
-      try {
-        val qe = proxies(name)(spark, sf).queryExecution
-        qe.executedPlan.execute().count()
-        Bench.fingerprintOf(qe.executedPlan)
-      } finally spark.conf.unset("spark.sql.adaptive.optimizer.excludedRules")
+      Bench.planFingerprint(spark, sf, name)
     }
     val fps = proxied.map(n => n -> proxyFp(n)).toMap
     fps.foreach { case (n, fp) =>

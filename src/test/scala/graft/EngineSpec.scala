@@ -793,7 +793,7 @@ FROM "defenda_data_lake"."events"
     // scanner must treat ` as a quote)
     val bt = "SELECT `it's--tricky` FROM t CROSS JOIN UNNEST(xs) AS u(x)"
     val rw = graft.Engine.rewritePresto(bt)
-    assert(rw.contains("`it's--tricky`") && rw.contains("LATERAL VIEW explode(xs) u AS x"), rw)
+    assert(rw.contains("`it's--tricky`") && rw.contains("CROSS JOIN LATERAL explode(xs) AS u(x)"), rw)
     val bt2 = "SELECT `a``UNNEST(b)` FROM t"
     assert(graft.Engine.rewritePresto(bt2) == bt2, "doubled-backtick escape must not rewrite")
   }
@@ -868,24 +868,24 @@ FROM "defenda_data_lake"."events"
     // pure-function pins
     assert(Engine.rewriteUnnest(
       "SELECT a, x FROM t CROSS JOIN UNNEST(arr) AS u(x)") ==
-      "SELECT a, x FROM t LATERAL VIEW explode(arr) u AS x")
+      "SELECT a, x FROM t CROSS JOIN LATERAL explode(arr) AS u(x)")
     assert(Engine.rewriteUnnest(
       "SELECT a FROM t cross join unnest(split(s, ',')) u(x, y)") ==
-      "SELECT a FROM t LATERAL VIEW explode(split(s, ',')) u AS x, y")
+      "SELECT a FROM t cross join LATERAL explode(split(s, ',')) u(x, y)")
     // the implicit-join comma form — Athena's most common spelling
     assert(Engine.rewriteUnnest(
       "SELECT a, x FROM t, UNNEST(arr) AS u(x) WHERE a > 0") ==
-      "SELECT a, x FROM t LATERAL VIEW explode(arr) u AS x WHERE a > 0")
+      "SELECT a, x FROM t, LATERAL explode(arr) AS u(x) WHERE a > 0")
     // a comma NOT followed by UNNEST is untouched (projection lists, args)
     assert(Engine.rewriteUnnest("SELECT a, b FROM t, s") ==
       "SELECT a, b FROM t, s")
-    // LEFT [OUTER] JOIN UNNEST ... ON TRUE -> LATERAL VIEW OUTER explode
+    // LEFT [OUTER] JOIN UNNEST ... ON TRUE -> CROSS JOIN LATERAL explode_outer
     assert(Engine.rewriteUnnest(
       "SELECT a, x FROM t LEFT JOIN UNNEST(arr) AS u(x) ON TRUE") ==
-      "SELECT a, x FROM t LATERAL VIEW OUTER explode(arr) u AS x")
+      "SELECT a, x FROM t CROSS JOIN LATERAL explode_outer(arr) AS u(x)")
     assert(Engine.rewriteUnnest(
       "SELECT a FROM t left outer join unnest(m) u(k, v) on true") ==
-      "SELECT a FROM t LATERAL VIEW OUTER explode(m) u AS k, v")
+      "SELECT a FROM t CROSS JOIN LATERAL explode_outer(m) u(k, v)")
     // a LEFT JOIN UNNEST with any other ON condition is left verbatim
     val badOn = "SELECT a FROM t LEFT JOIN UNNEST(arr) AS u(x) ON a = 1"
     assert(Engine.rewriteUnnest(badOn) == badOn)
@@ -898,15 +898,15 @@ FROM "defenda_data_lake"."events"
     // BIGINT ordinal (posexplode's position is 0-based — the one trap)
     assert(Engine.rewriteUnnest(
       "SELECT * FROM t CROSS JOIN UNNEST(a) WITH ORDINALITY AS u(x, o)") ==
-      "SELECT * FROM t LATERAL VIEW inline(transform(a, (graft_e, graft_i) -> " +
-        "struct(graft_e, CAST(graft_i + 1 AS BIGINT)))) u AS x, o")
+      "SELECT * FROM t CROSS JOIN LATERAL inline(transform(a, (graft_e, graft_i) -> " +
+        "struct(graft_e, CAST(graft_i + 1 AS BIGINT)))) AS u(x, o)")
     // multi-array zip rewrites to the lockstep pad-to-longest form
     assert(Engine.rewriteUnnest(
       "SELECT * FROM t CROSS JOIN UNNEST(a, b) AS u(x, y)") ==
-      "SELECT * FROM t LATERAL VIEW inline(transform(slice(sequence(1, " +
+      "SELECT * FROM t CROSS JOIN LATERAL inline(transform(slice(sequence(1, " +
         "greatest(greatest(coalesce(size(a), 0), coalesce(size(b), 0), 0), 1)), 1, " +
         "greatest(coalesce(size(a), 0), coalesce(size(b), 0), 0)), graft_i -> " +
-        "struct(try_element_at(a, graft_i), try_element_at(b, graft_i)))) u AS x, y")
+        "struct(try_element_at(a, graft_i), try_element_at(b, graft_i)))) AS u(x, y)")
     // a zip whose column count fits no arity (e.g. a map argument would
     // contribute 2 columns) is left verbatim — loud downstream
     val zipBad = "SELECT * FROM t CROSS JOIN UNNEST(a, m) AS u(x, k, v)"
@@ -920,7 +920,7 @@ FROM "defenda_data_lake"."events"
     assert(Engine.rewriteUnnest(cmtBlock) == cmtBlock)
     assert(Engine.rewriteUnnest(
       "SELECT a, x FROM t CROSS JOIN /* flatten */ UNNEST(arr) AS u(x)") ==
-      "SELECT a, x FROM t LATERAL VIEW explode(arr) u AS x")
+      "SELECT a, x FROM t CROSS JOIN /* flatten */ LATERAL explode(arr) AS u(x)")
     // backslash-escaped quote inside a literal: the scanner mirrors
     // Spark's lexer, so the UNNEST-shaped text stays inside the literal
     val esc = "SELECT 'don\\'t, CROSS JOIN UNNEST(a) AS t(x)' AS s FROM t"
@@ -986,6 +986,25 @@ FROM "defenda_data_lake"."events"
       "SELECT * FROM unnest_probe CROSS JOIN UNNEST(arr, m) AS t(x, k, v)").collect())
   }
 
+  test("UNNEST anywhere in FROM, and comments inside rewritten argument lists") {
+    // the generator replaces UNNEST in place, so a join or a further comma
+    // relation may follow it; a `--` comment inside an argument list must
+    // not comment out the generated text after it
+    spark.sql("SELECT 1 AS id, array('p', 'q') AS arr").createOrReplaceTempView("unnest_pos")
+    spark.sql("SELECT 1 AS id2, 'r' AS tag").createOrReplaceTempView("unnest_pos2")
+    def rows(q: String) = Engine.sql(spark, q).collect().map(_.mkString("|")).toSeq
+    assert(rows("""SELECT x, tag FROM unnest_pos CROSS JOIN UNNEST(arr) AS t(x)
+                   JOIN unnest_pos2 ON id = id2 ORDER BY x""") == Seq("p|r", "q|r"))
+    assert(rows("""SELECT x, tag FROM unnest_pos, UNNEST(arr) AS t(x), unnest_pos2
+                   WHERE id = id2 ORDER BY x""") == Seq("p|r", "q|r"))
+    assert(rows("SELECT x FROM unnest_pos CROSS JOIN UNNEST(arr -- note\n) AS t(x) ORDER BY x") ==
+      Seq("p", "q"))
+    Seq("-- by key", "-- newest first").foreach { c =>
+      val q = s"SELECT array_agg(x ORDER BY k DESC $c\n) FROM VALUES ('a', 1), ('b', 2) AS t(x, k)"
+      assert(Engine.sql(spark, q).collect()(0).getSeq[String](0) == Seq("b", "a"), q)
+    }
+  }
+
   test("presto_split / presto_regexp_extract pin the SILENT dialect traps (deviations #11/#12)") {
     val r = spark.sql(
       """SELECT split('a.b.c', '.') AS spark_split,
@@ -1039,7 +1058,7 @@ FROM "defenda_data_lake"."events"
     // columns — unambiguous at >= 3 columns, rewritten to inline
     assert(Engine.rewriteUnnest(
       "SELECT * FROM t CROSS JOIN UNNEST(zip(a, b, c)) AS u(x, y, z)") ==
-      "SELECT * FROM t LATERAL VIEW inline(zip(a, b, c)) u AS x, y, z")
+      "SELECT * FROM t CROSS JOIN LATERAL inline(zip(a, b, c)) AS u(x, y, z)")
     spark.sql("SELECT array(10, 20) AS a, array('p', 'q', 'r') AS b, array(1.5D) AS c")
       .createOrReplaceTempView("zip_rows_probe")
     val rows = Engine.sql(spark,

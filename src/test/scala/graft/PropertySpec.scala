@@ -182,7 +182,7 @@ class PropertySpec extends AnyFunSuite {
     // and a rewritable form embedded among the same noise still rewrites
     val withUnnest = "SELECT a, 'x,y' FROM t, UNNEST(split(s, ',')) u(w) ORDER BY 1, 2"
     assert(graft.Engine.rewriteUnnest(withUnnest) ==
-      "SELECT a, 'x,y' FROM t LATERAL VIEW explode(split(s, ',')) u AS w ORDER BY 1, 2")
+      "SELECT a, 'x,y' FROM t, LATERAL explode(split(s, ',')) u(w) ORDER BY 1, 2")
   }
 
   test("sortedIntersectCount: merge walk equals set intersection on sorted distinct ids") {

@@ -328,6 +328,15 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(afterRows == beforeRows)
   }
 
+  test("compaction and retention over a not-yet-created events directory do nothing") {
+    // a maintenance run can fire before the first micro-batch has written
+    // the table; both settled-partition sweeps return empty, not throw
+    val missing = s"$base/never_written"
+    assert(graft.operators.Compaction.compactSettledPartitions(spark, missing, settledMs = -1000).isEmpty)
+    assert(graft.operators.Retention.expireSettledPartitions(spark, missing, maxAgeMs = 0).isEmpty)
+    assert(!Files.exists(Paths.get(missing)))
+  }
+
   test("compaction recovers a partition stranded in its crash aside by a mid-swap crash") {
     val landing = s"$base/crash_compact"
     Files.createDirectories(Paths.get(landing))
